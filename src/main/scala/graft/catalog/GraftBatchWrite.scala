@@ -1,19 +1,9 @@
 package graft.catalog
 
-import java.util.UUID
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
 
 import graft.store.GraftTable
 
@@ -25,13 +15,13 @@ import graft.store.GraftTable
   * exists for it; verified in the shipped bytecode, r5 COVERAGE §2.1).
   *
   * Executors write immutable files straight into the table's
-  * `data/<uuid8>` write directory via the same `FileFormat` writer
-  * Spark's own parquet sink uses (schema + field-id metadata +
-  * compression + bloom options all baked into the serialized job conf
-  * on the driver, exactly `FileFormatWriter`'s contract); the driver
-  * then adopts them through [[GraftTable]]'s single commit loop — one
-  * stats pass, one atomic commit, WAP/vacuum/conflict semantics
-  * unchanged. The write-time cluster spec is enforced Spark-natively:
+  * `data/<uuid8>` write directory through the store's one file writer
+  * ([[graft.store.GraftFileWriter]] — the same writer and stats every
+  * store write uses); each task reports its file's stats in its commit
+  * message, and the driver adopts exactly those files through
+  * [[GraftTable]]'s single commit loop — no read-back, one atomic
+  * commit, WAP/vacuum/conflict semantics unchanged. The write-time
+  * cluster spec is enforced Spark-natively:
   * [[RequiresDistributionAndOrdering]] asks for an ordered (range)
   * distribution + in-partition sort on the cluster columns, so Catalyst
   * plans the same range-shuffle + sort `writeFilesWith` does — but
@@ -108,130 +98,26 @@ private[catalog] final class GraftWrite(gt: GraftTable, truncate: Boolean, dynam
 private[catalog] final class GraftBatchWrite(gt: GraftTable, truncate: Boolean, dynamic: Boolean)
   extends BatchWrite {
 
-  private val subdir = gt.newBatchWriteDir()
+  private val subdir = gt.newWriteDir()
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    // The table's own schema (WITH parquet.field.id metadata — Spark's
-    // output resolver aligns the query to this order but strips field
-    // metadata; without the ids a post-rename read could no longer
-    // match these files). prepareWrite bakes schema, codec, field-id
-    // and timezone settings into the job conf, reading them from the
-    // session — the same driver-side capture FileFormatWriter does.
-    val sch = gt.schema
-    val hconf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    // SQL-conf overlay (fieldId.write, session timezone, ...): the
-    // session's hadoop-conf view, as every file-format writer expects
-    for ((k, v) <- spark.conf.getAll if k.startsWith("spark.sql.")) hconf.set(k, v)
-    val opts = gt.batchWriterOptions
-    for ((k, v) <- opts) hconf.set(k, v)
-    val job = Job.getInstance(hconf)
-    val fmt = gt.format match {
-      case "orc" => new OrcFileFormat()
-      case _ => new ParquetFileFormat()
-    }
-    val factory = fmt.prepareWrite(spark, job, opts, sch)
-    new GraftDataWriterFactory(factory,
-      new SerializableHadoopConf(job.getConfiguration), sch, s"${gt.root}/$subdir")
-  }
+  // The table's own schema (WITH parquet.field.id metadata — Spark's
+  // output resolver aligns the query to this order but strips field
+  // metadata; without the ids a post-rename read could no longer match
+  // these files), captured once on the driver with the session's codec,
+  // field-id and timezone settings.
+  private lazy val factory = gt.fileWriterFactory(subdir, gt.schema)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
     // adopt ONLY the files the committed task attempts reported: a task
     // attempt that died mid-write never runs abort() (Spark's contract —
     // JVM crashes skip it), so its torn/duplicate file can be sitting in
     // the write directory next to the retried attempt's committed one.
     // Directory listing is NOT the source of truth; the messages are.
-    val committed = messages.collect {
-      case GraftFileMessage(file, _) if file.nonEmpty => file
-    }
     gt.adoptBatchWrite(subdir, truncate = truncate, dynamicPartitions = dynamic,
-      committedFiles = committed.toSeq)
-  }
+      written = factory.committed(messages.toSeq))
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // best-effort sweep of the whole write directory (covers committed
-    // tasks' files AND dead attempts' leftovers); a crashed driver's
-    // leftovers fall to vacuum's unreferenced-file grace sweep
-    val dir = java.nio.file.Paths.get(gt.root, subdir)
-    if (java.nio.file.Files.isDirectory(dir)) {
-      val leftovers = java.nio.file.Files.list(dir)
-      try {
-        leftovers.forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } finally leftovers.close()
-      java.nio.file.Files.deleteIfExists(dir)
-    }
-  }
-}
-
-private[catalog] final case class GraftFileMessage(file: String, rows: Long)
-  extends WriterCommitMessage
-
-private[catalog] final class GraftDataWriterFactory(owf: OutputWriterFactory,
-                                                    conf: SerializableHadoopConf,
-                                                    sch: StructType,
-                                                    absDir: String)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(owf, conf.value, sch, absDir, partitionId, taskId)
-}
-
-/** One task = at most one file (zero rows write no file — empty range
-  * partitions must not fan small files out to the partition count). */
-private[catalog] final class GraftDataWriter(owf: OutputWriterFactory, conf: Configuration,
-                                             sch: StructType, absDir: String,
-                                             partitionId: Int, taskId: Long)
-  extends DataWriter[InternalRow] {
-
-  private var writer: OutputWriter = _
-  private var fileName: String = _
-  private var rows = 0L
-
-  private def ensureOpen(): Unit = if (writer == null) {
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), (taskId & 0x7fffffff).toInt)
-    val ctx = new TaskAttemptContextImpl(conf, attempt)
-    fileName = s"part-$partitionId-${UUID.randomUUID().toString.take(12)}${owf.getFileExtension(ctx)}"
-    writer = owf.newInstance(s"$absDir/$fileName", sch, ctx)
-  }
-
-  override def write(record: InternalRow): Unit = {
-    ensureOpen()
-    writer.write(record)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) { writer.close(); writer = null }
-    GraftFileMessage(if (fileName == null) "" else fileName, rows)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) {
-      try writer.close() catch { case _: Exception => () }
-      writer = null
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$absDir/$fileName"))
-    }
-  }
-
-  override def close(): Unit =
-    if (writer != null) { writer.close(); writer = null }
-}
-
-/** Hadoop Configuration is not Serializable; ship it the way Spark's
-  * own `SerializableConfiguration` (private) does — via its
-  * Writable encoding. */
-private[catalog] final class SerializableHadoopConf(@transient private var conf: Configuration)
-  extends Serializable {
-  def value: Configuration = conf
-
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new Configuration(false)
-    conf.readFields(in)
-  }
+  // covers committed tasks' files AND dead attempts' leftovers
+  override def abort(messages: Array[WriterCommitMessage]): Unit = factory.removeDir()
 }

@@ -20,10 +20,11 @@ import graft.store.{FileStat, GraftTable}
   * `spark.sql.sources.v2.bucketing.enabled`, set by GraftSession).
   *
   * Mechanics: every data file of a bucketed table records its single
-  * bucket id in the commit-log stats (`__bucket`, written by
-  * GraftTable.collectStats). The scan groups live files by bucket, one
-  * InputPartition per occupied bucket, each reporting its bucket id via
-  * [[HasPartitionKey]]; `outputPartitioning` declares
+  * bucket id in the commit-log stats (`__bucket`, computed by the write
+  * task itself — graft.store.GraftFileWriter). The scan groups live
+  * files by bucket, one InputPartition per occupied bucket, each
+  * reporting its bucket id via [[HasPartitionKey]];
+  * `outputPartitioning` declares
   * `KeyGroupedPartitioning(bucket(n, col), #buckets)`. Catalyst
   * resolves the `bucket` transform through the catalog's V2
   * FunctionCatalog ([[GraftBucketFunction]]) — both sides of a join

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, GraftSparkInternals, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Exists, ExprId, Expression, GetStructField, In, InSubquery, ListQuery, Literal, ScalarSubquery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, CommonExpressionRef, Exists, ExprId, Expression, GetStructField, In, InSubquery, ListQuery, Literal, RuntimeReplaceable, ScalarSubquery, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -380,13 +380,35 @@ private[catalog] object GraftDmlExprs {
     }
   }
 
+  /** Spark plans some forms (`BETWEEN`, ...) as a RuntimeReplaceable
+    * whose replacement shares one input through a `With` common
+    * expression. The by-name re-resolution in [[translate]] cannot
+    * re-analyze a `With` whose definitions became unresolved references
+    * (it fails with "Invalid call to dataType on unresolved object"), so
+    * such forms lower to their replacement with every reference inlined
+    * as its definition — the same value, since a definition must be
+    * deterministic to be evaluated more than once. */
+  private def inlineCommonExprs(e: Expression): Expression =
+    e.transformDown {
+      case r: RuntimeReplaceable if r.replacement.exists(_.isInstanceOf[With]) => r.replacement
+    }.transformUp {
+      case w: With =>
+        w.defs.find(!_.child.deterministic).foreach { d =>
+          throw new UnsupportedOperationException(
+            s"graft DML cannot evaluate the nondeterministic '${d.child.sql}' more than " +
+              "once per row; compute it in a subquery or a MERGE source instead")
+        }
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        w.child.transform { case ref: CommonExpressionRef => defs(ref.id) }
+    }
+
   /** Resolved expression → by-name Column in the store's namespace,
     * materializing uncorrelated subqueries (see class doc) through the
     * per-statement [[Materializer]]. */
   def translate(session: SparkSession, raw: RawExpr,
                 tgt: Map[ExprId, String], src: Map[ExprId, String],
                 mat: Materializer): Column = {
-    val folded = mat.fold(raw.e)
+    val folded = inlineCommonExprs(mat.fold(raw.e))
     folded.foreach {
       case s: SubqueryExpression => throw new UnsupportedOperationException(
         s"unsupported subquery form in graft DML: ${s.getClass.getSimpleName}")

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   *
   * Every operation is a distributed dataflow:
   *  - writes land as immutable Parquet file sets; per-file min/max/null
-  *    stats are computed in ONE extra distributed pass over the freshly
-  *    written files (grouped by `input_file_name`), never on the driver;
+  *    stats are computed by the write tasks themselves as rows go by
+  *    ([[GraftFileWriter]]) and arrive in their commit messages — no
+  *    file is read back, and no row reaches the driver;
   *  - reads resolve a snapshot (metadata-only log replay) and prune
   *    files by stats before Spark ever lists them — the same
   *    manifest-pruning shape Iceberg uses, so a 100 TB table with a
@@ -325,11 +326,16 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * table schema WITH its field metadata — projections and CASE
     * rewrites drop column metadata, and without the `parquet.field.id`
     * entries the writer would emit id-less files that an id-resolving
-    * read (post-rename) could no longer match. */
-  /** `applyClusterSpec = false` is for callers that already shaped the
+    * read (post-rename) could no longer match.
+    *
+    * `applyClusterSpec = false` is for callers that already shaped the
     * frame themselves (compact's explicit clusterBy/zorderBy layouts —
     * re-ranging here would silently destroy a Z-order tiling and
-    * override the caller's file-count choice). */
+    * override the caller's file-count choice).
+    *
+    * ONE Spark job writes the files and computes their stats; an empty
+    * frame (or empty partition) writes no file, so an empty rewrite
+    * returns Nil without a separate emptiness probe. */
   private def writeFilesWith(df: DataFrame, sch: StructType,
                              applyClusterSpec: Boolean = true): Seq[FileStat] = {
     val dfm0 = df.select(sch.fields.map(f =>
@@ -355,93 +361,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
             .sortWithinPartitions(names.map(col): _*)
         case None => dfm0
       }
-    val sub = s"data/${UUID.randomUUID().toString.take(8)}"
-    val dir = s"$root/$sub"
-    val base = dfm.write.format(format)
-    val writer =
-      if (bloomFilterCols.isEmpty) base
-      else if (format == "parquet")
-        bloomFilterCols.foldLeft(base)((w, c) =>
-          w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-      else base.option("orc.bloom.filter.columns", bloomFilterCols.mkString(","))
-    writer.save(dir)
-    collectStats(dir, sub, sch)
-  }
-
-  /** One distributed pass: per-file min/max/nullCount over every
-    * atomic column. Only file-count rows reach the driver. `onlyFiles`
-    * restricts the pass to exactly those file names (the DSv2 adoption
-    * path, where the task commit messages — not a directory listing —
-    * are the source of truth). */
-  private def collectStats(absDir: String, relDir: String, sch: StructType,
-                           onlyFiles: Option[Seq[String]] = None): Seq[FileStat] = {
-    val statCols = sch.fields.filter(f => StatsPruner.comparable(f.dataType))
-    // TIMESTAMP stats as epoch micros: a cast-to-string renders in the
-    // session timezone, which the pruner cannot know at read time —
-    // numeric stats are timezone-independent. (NTZ/date strings are
-    // wall-clock and already safe.)
-    def render(c: Column, dt: DataType): Column = dt match {
-      case TimestampType => unix_micros(c).cast(StringType)
-      case _ => c.cast(StringType)
-    }
-    // bucketed tables: record the file's bucket id (pmod(murmur3(col),
-    // n) — repartition's partition id function) as a "__bucket"
-    // pseudo-column stat, but ONLY when the whole file sits in one
-    // bucket (min == max). Writes that bypass the bucket layout
-    // (compact's explicit re-layouts) produce straddling files with no
-    // __bucket stat, and the storage-partitioned scan falls back to
-    // the ordinary path — a performance downgrade, never a wrong
-    // answer. NULL keys hash to the seed like everything else, so a
-    // null-keyed row has a bucket too.
-    val bucketAggs = bucketSpec.toSeq.flatMap { case (id, n) =>
-      val name = fieldNameOf(id, sch)
-      Seq(min(pmod(hash(col(name)), lit(n))).cast(StringType).as("__graft_bmin"),
-        max(pmod(hash(col(name)), lit(n))).cast(StringType).as("__graft_bmax"))
-    }
-    val aggs =
-      count(lit(1)).as("__rows") +:
-        (statCols.flatMap { f =>
-          Seq(render(min(col(f.name)), f.dataType).as(s"__min_${f.name}"),
-            render(max(col(f.name)), f.dataType).as(s"__max_${f.name}"),
-            sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-        } ++ bucketAggs)
-    val rows = readData(onlyFiles.fold(Seq(absDir))(_.map(n => s"$absDir/$n")), sch)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    rows.map { r =>
-      val fileAbs = r.getAs[String]("__file")
-      val fileName = fileAbs.substring(fileAbs.lastIndexOf('/') + 1)
-      val rel = s"$relDir/$fileName"
-      val bytes =
-        try Files.size(Paths.get(absDir, fileName)) catch { case _: Exception => 0L }
-      // string bounds are TRUNCATED (StatsPruner.StringBoundLen) so a
-      // long-text column cannot bloat the commit log; lower bounds
-      // prefix-truncate, upper bounds increment-truncate, and an
-      // un-incrementable upper bound is dropped (pruner keeps the file)
-      def bound(f: StructField, v: String, lower: Boolean): Option[String] = f.dataType match {
-        case StringType =>
-          if (lower) Some(StatsPruner.truncateLower(v)) else StatsPruner.truncateUpper(v)
-        case _ => Some(v)
-      }
-      val bucketStat: Option[String] =
-        if (bucketSpec.isEmpty) None
-        else (Option(r.getAs[String]("__graft_bmin")), Option(r.getAs[String]("__graft_bmax"))) match {
-          case (Some(lo), Some(hi)) if lo == hi => Some(lo)
-          case _ => None // straddles buckets: no __bucket stat, scan falls back
-        }
-      FileStat(
-        path = rel,
-        rows = r.getAs[Long]("__rows"),
-        bytes = bytes,
-        min = statCols.flatMap(f => Option(r.getAs[String](s"__min_${f.name}"))
-          .flatMap(bound(f, _, lower = true)).map(f.name -> _)).toMap ++
-          bucketStat.map(GraftTable.BucketStatKey -> _),
-        max = statCols.flatMap(f => Option(r.getAs[String](s"__max_${f.name}"))
-          .flatMap(bound(f, _, lower = false)).map(f.name -> _)).toMap ++
-          bucketStat.map(GraftTable.BucketStatKey -> _),
-        nullCount = statCols.map(f => f.name -> r.getAs[Long](s"__nulls_${f.name}")).toMap)
-    }.toSeq
+    GraftFileWriter.write(dfm, fileWriterFactory(newWriteDir(), sch))
   }
 
   /** Newest commit whose op satisfies `domain` — reverse scan from the
@@ -691,27 +611,36 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     commitRetry("overwrite", writeFiles(aligned(df)), Nil, InheritSchema(schema.json))
 
   // ------------------------------------------------------------------
-  // DSv2 batch-write adoption (files written by executor DataWriters)
+  // the file writer, and DSv2 batch-write adoption
   // ------------------------------------------------------------------
-  /** Allocate the per-write directory for one DSv2 batch write — same
-    * `data/<uuid8>` layout every write path uses, so vacuum's
-    * unreferenced-file sweep covers crashed DSv2 writes for free. */
-  private[graft] def newBatchWriteDir(): String =
+  /** Allocate the per-write directory — one `data/<uuid8>` per write on
+    * every path, so vacuum's unreferenced-file sweep covers crashed
+    * writes for free. */
+  private[graft] def newWriteDir(): String =
     s"data/${UUID.randomUUID().toString.take(8)}"
 
-  /** Writer options a DSv2 DataWriter must carry so executor-written
-    * files match [[writeFilesWith]]'s (per-file bloom filters). */
-  private[graft] def batchWriterOptions: Map[String, String] =
-    if (bloomFilterCols.isEmpty) Map.empty
-    else if (format == "parquet")
-      bloomFilterCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
-    else Map("orc.bloom.filter.columns" -> bloomFilterCols.mkString(","))
+  /** The table's file writer for one write of `sch`-shaped rows into
+    * `subdir`: the table's format, per-file bloom filters, and the
+    * bucket column whose ids the write tasks record. Shared by
+    * [[writeFilesWith]] and the catalog's DSv2 batch write, so both
+    * write identical files with identical stats. */
+  private[graft] def fileWriterFactory(subdir: String, sch: StructType): GraftFileWriterFactory = {
+    val options =
+      if (bloomFilterCols.isEmpty) Map.empty[String, String]
+      else if (format == "parquet")
+        bloomFilterCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
+      else Map("orc.bloom.filter.columns" -> bloomFilterCols.mkString(","))
+    GraftFileWriter.factory(spark, root, subdir, format, sch, options,
+      bucketSpec.map { case (id, n) => (fieldNameOf(id, sch), n) })
+  }
 
   /** Adopt executor-written files under `subdir` as ONE atomic commit —
     * the driver-side half of the DSv2 [[org.apache.spark.sql.connector.write.BatchWrite]]:
-    * the stats pass and the commit loop are the SAME code every other
-    * write path uses, so WAP vacuum semantics, stats pruning, and
-    * concurrent-writer retries all apply unchanged.
+    * the files come from the same [[GraftFileWriter]] and go through the
+    * same commit loop every other write path uses, so WAP vacuum
+    * semantics, stats pruning, and concurrent-writer retries all apply
+    * unchanged. `written` are the committed tasks' files with their
+    * stats ([[GraftFileWriterFactory.committed]]).
     *
     * `dynamicPartitions = false`: plain append, or (with `truncate`)
     * the static INSERT OVERWRITE (snapshot = exactly the new files).
@@ -731,7 +660,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * classify it correctly by shape. */
   private[graft] def adoptBatchWrite(subdir: String, truncate: Boolean,
                                      dynamicPartitions: Boolean,
-                                     committedFiles: Seq[String]): Long = {
+                                     written: Seq[FileStat]): Long = {
     val sch = schema
     val absDir = s"$root/$subdir"
     // The COMMIT MESSAGES are the source of truth, not the directory: a
@@ -739,11 +668,12 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     // on JVM crashes), so the directory can hold its torn or duplicate
     // file next to the retried attempt's committed one — and a ZOMBIE
     // attempt on a partitioned executor can drop one in at any moment.
-    // The stats pass and the partition-tuple scan therefore read
-    // EXACTLY the reported files (never a directory listing); the purge
-    // of unreported files is hygiene, not load-bearing. A reported file
+    // The commit and the partition-tuple scan therefore use EXACTLY the
+    // reported files (never a directory listing); the purge of
+    // unreported files is hygiene, not load-bearing. A reported file
     // missing from disk fails loudly — silently dropping it would lose
     // committed rows.
+    val committedFiles = written.map(f => f.path.substring(f.path.lastIndexOf('/') + 1))
     val allowed = committedFiles.toSet
     if (Files.isDirectory(Paths.get(absDir))) {
       val s = Files.list(Paths.get(absDir))
@@ -757,9 +687,6 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     require(missing.isEmpty,
       s"batch write $subdir: committed file(s) vanished before adoption " +
         s"(${missing.take(3).mkString(",")}); aborting instead of losing rows")
-    val written =
-      if (allowed.nonEmpty) collectStats(absDir, subdir, sch, Some(committedFiles))
-      else Nil
     // BUCKETED dynamic overwrite (round-12 review finding: the generic
     // branch below would have replaced the WHOLE table): the partition
     // identity is the bucket — replace exactly the buckets this write
@@ -781,11 +708,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       val unstatted = candidates.filter(!_.min.contains(GraftTable.BucketStatKey))
       val survivors =
         if (unstatted.isEmpty) Nil
-        else {
-          val surv = readData(unstatted.map(f => s"$root/${f.path}"), sch)
-            .filter(!pmod(hash(col(name)), lit(n)).isin(touched.toSeq: _*))
-          if (surv.isEmpty) Nil else writeFiles(surv)
-        }
+        else writeFiles(readData(unstatted.map(f => s"$root/${f.path}"), sch)
+          .filter(!pmod(hash(col(name)), lit(n)).isin(touched.toSeq: _*)))
       return commitRetry("overwrite-dynamic", written ++ survivors,
         candidates.map(_.path), SameSchema(sch.json), basedOn = base)
     }
@@ -802,8 +726,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     // the distinct partition tuples this write touches — metadata-sized
     // (the number of partitions in one batch, not the row count); the
     // scan is COLUMN-PRUNED to the cluster columns (parquet reads just
-    // those pages), so this second pass is cheap next to the full-width
-    // stats pass above
+    // those pages). Min/max stats cannot stand in for it: a file's
+    // range may span partitions it holds no row of.
     val tuples = readData(committedFiles.map(n => s"$absDir/$n"), sch)
       .select(parts.map(col): _*).distinct().collect()
     require(tuples.length <= 1000,
@@ -818,11 +742,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val (base, victims) = matchingFiles(cond)
     val survivors =
       if (victims.isEmpty) Nil
-      else {
-        val surv = readData(victims.map(p => s"$root/$p"), sch)
-          .filter(!coalesce(cond, lit(false)))
-        if (surv.isEmpty) Nil else writeFiles(surv)
-      }
+      else writeFiles(readData(victims.map(p => s"$root/$p"), sch)
+        .filter(!coalesce(cond, lit(false))))
     commitRetry("overwrite-dynamic", written ++ survivors, victims,
       SameSchema(sch.json), basedOn = base)
   }
@@ -920,9 +841,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     // DELETE removes rows where cond is TRUE; rows where it evaluates
     // NULL must SURVIVE (plain !cond would drop them: !NULL is NULL,
     // which filter treats as false).
-    val survivors = readData(victims.map(p => s"$root/$p"), sch)
-      .filter(!coalesce(cond, lit(false)))
-    val added = if (survivors.isEmpty) Nil else writeFiles(survivors)
+    val added = writeFiles(readData(victims.map(p => s"$root/$p"), sch)
+      .filter(!coalesce(cond, lit(false))))
     commitRetry("delete", added, victims, SameSchema(sch.json), basedOn = base)
   }
 

@@ -359,6 +359,65 @@ class GraftCatalogSpec extends SparkSpec {
     assert(sql("SELECT v FROM gcat.db15.t WHERE id = 9").head().isNullAt(0))
   }
 
+  test("UPDATE with BETWEEN changes exactly the rows in the range") {
+    sql("CREATE NAMESPACE gcat.dbbtw1")
+    sql("CREATE TABLE gcat.dbbtw1.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbbtw1.t SELECT id, concat('v', id) FROM range(20)")
+    sql("UPDATE gcat.dbbtw1.t SET v = 'hit' WHERE id BETWEEN 5 AND 8")
+    sql("UPDATE gcat.dbbtw1.t SET v = 'out' WHERE id NOT BETWEEN 2 AND 17")
+    val got = sql("SELECT id, v FROM gcat.dbbtw1.t ORDER BY id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    val want = (0L until 20L).map { i =>
+      i -> (if (i >= 5 && i <= 8) "hit" else if (i < 2 || i > 17) "out" else s"v$i")
+    }
+    assert(got == want)
+  }
+
+  test("DELETE with BETWEEN removes exactly the rows in the range") {
+    sql("CREATE NAMESPACE gcat.dbbtw2")
+    sql("CREATE TABLE gcat.dbbtw2.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbbtw2.t SELECT id, concat('v', id) FROM range(20)")
+    sql("DELETE FROM gcat.dbbtw2.t WHERE id BETWEEN 10 AND 14")
+    sql("DELETE FROM gcat.dbbtw2.t WHERE id NOT BETWEEN 1 AND 18")
+    val got = sql("SELECT id, v FROM gcat.dbbtw2.t ORDER BY id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(got == ((1L until 10L) ++ (15L until 19L)).map(i => i -> s"v$i"))
+    val gt = GraftTable.load(spark, s"$warehouse/dbbtw2/t")
+    assert(gt.history.map(_.op).count(_ == "delete") == 2)
+  }
+
+  test("work counts: INSERT, UPDATE and DELETE run no read-back stats job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    // counts of work, not time: each write is ONE job that writes the
+    // files and computes their stats; a returning stats pass (a re-read
+    // of the written files plus a shuffle) raises every count below
+    sql("CREATE NAMESPACE gcat.dbwork")
+    sql("CREATE TABLE gcat.dbwork.t (id BIGINT, v STRING, score DOUBLE)")
+    sql("INSERT INTO gcat.dbwork.t SELECT id, concat('v', id), id * 1.0 FROM range(0, 40, 1, 1)")
+    val sc = spark.sparkContext
+    def work(stmt: String): (Int, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val stages = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      }
+      org.apache.spark.ListenerDrain(sc)
+      sc.addSparkListener(l)
+      try { sql(stmt); org.apache.spark.ListenerDrain(sc) }
+      finally sc.removeSparkListener(l)
+      (jobs.get, stages.get)
+    }
+    val counts = Seq(
+      "INSERT" -> work("INSERT INTO gcat.dbwork.t SELECT id, 'n', 0.5 FROM range(40, 50, 1, 1)"),
+      "UPDATE" -> work("UPDATE gcat.dbwork.t SET score = -1.0 WHERE id >= 10 AND id <= 19"),
+      "DELETE" -> work("DELETE FROM gcat.dbwork.t WHERE id >= 30 AND id <= 34"))
+    assert(counts == Seq("INSERT" -> (1, 1), "UPDATE" -> (3, 3), "DELETE" -> (3, 3)),
+      counts.map { case (k, (j, s)) => s"$k: $j jobs, $s stages" }.mkString("; "))
+    assert(sql("SELECT count(*), sum(CASE WHEN score = -1.0 THEN 1 ELSE 0 END) " +
+      "FROM gcat.dbwork.t").head().toSeq == Seq(45L, 10L))
+  }
+
   test("correlated UPDATE assignments compute per-row SET values via the merge lowering") {
     sql("CREATE NAMESPACE gcat.db28")
     sql("CREATE TABLE gcat.db28.t (id BIGINT, v STRING, total DOUBLE)")
@@ -753,7 +812,7 @@ class GraftCatalogSpec extends SparkSpec {
     // simulate a dead attempt's leftover: a DUPLICATE of a real file
     // (complete parquet — the worst case, silently doubling rows) in a
     // fresh batch-write dir, alongside one genuinely committed file
-    val dir = gt.newBatchWriteDir()
+    val dir = gt.newWriteDir()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(warehouse, "db25", "t", dir))
     def plant(name: String): String = {
       java.nio.file.Files.copy(
@@ -764,7 +823,7 @@ class GraftCatalogSpec extends SparkSpec {
     val real = plant("part-0-real.parquet")
     plant("part-1-orphan.parquet")
     gt.adoptBatchWrite(dir, truncate = false, dynamicPartitions = false,
-      committedFiles = Seq(real))
+      written = Seq(committedStat.copy(path = s"$dir/$real")))
     // only the reported file's rows landed (one copy, not two)
     assert(sql("SELECT count(*) FROM gcat.db25.t").head().getLong(0)
       == 10 + committedStat.rows)

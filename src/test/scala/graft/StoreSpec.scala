@@ -755,4 +755,114 @@ class StoreSpec extends SparkSpec {
     assert(t.read().count() == 5)
     assert(GraftTable.load(spark, root).history.size == 5)
   }
+
+  /** The per-file stats oracle: ONE aggregate query over `files`, grouped
+    * by `input_file_name()` — how the store computed stats before the
+    * write tasks did. Same rendering (Cast to string, TIMESTAMP as epoch
+    * micros) and the same string-bound truncation. */
+  private def aggregateStats(root: String, t: GraftTable,
+                             files: Seq[graft.store.FileStat]): Map[String, graft.store.FileStat] = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.types._
+    val sch = t.schema
+    val statCols = sch.fields.filter(f => StatsPruner.comparable(f.dataType))
+    def render(c: Column, dt: DataType): Column = dt match {
+      case TimestampType => unix_micros(c).cast(StringType)
+      case _ => c.cast(StringType)
+    }
+    val bucketAggs = t.bucketColumn.zip(t.bucketCount).toSeq.flatMap { case (name, n) =>
+      Seq(min(pmod(hash(col(name)), lit(n))).cast(StringType).as("__bmin"),
+        max(pmod(hash(col(name)), lit(n))).cast(StringType).as("__bmax"))
+    }
+    val aggs = count(lit(1)).as("__rows") +: (statCols.flatMap { f =>
+      Seq(render(min(col(f.name)), f.dataType).as(s"__min_${f.name}"),
+        render(max(col(f.name)), f.dataType).as(s"__max_${f.name}"),
+        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
+    } ++ bucketAggs)
+    val rows = spark.read.schema(sch).format(t.format)
+      .load(files.map(f => s"$root/${f.path}"): _*)
+      .groupBy(input_file_name().as("__file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+    rows.map { r =>
+      val abs = r.getAs[String]("__file")
+      val rel = files.map(_.path).find(p => abs.endsWith("/" + p)).get
+      def bound(f: StructField, v: String, lower: Boolean): Option[String] = f.dataType match {
+        case StringType =>
+          if (lower) Some(StatsPruner.truncateLower(v)) else StatsPruner.truncateUpper(v)
+        case _ => Some(v)
+      }
+      val bucket = if (bucketAggs.isEmpty) None else {
+        val (lo, hi) = (r.getAs[String]("__bmin"), r.getAs[String]("__bmax"))
+        if (lo == hi) Some(GraftTable.BucketStatKey -> lo) else None
+      }
+      rel -> graft.store.FileStat(rel, r.getAs[Long]("__rows"),
+        Files.size(java.nio.file.Paths.get(root, rel)),
+        statCols.flatMap(f => Option(r.getAs[String](s"__min_${f.name}"))
+          .flatMap(bound(f, _, lower = true)).map(f.name -> _)).toMap ++ bucket,
+        statCols.flatMap(f => Option(r.getAs[String](s"__max_${f.name}"))
+          .flatMap(bound(f, _, lower = false)).map(f.name -> _)).toMap ++ bucket,
+        statCols.map(f => f.name -> r.getAs[Long](s"__nulls_${f.name}")).toMap)
+    }.toMap
+  }
+
+  test("write-task file stats equal the per-file aggregate, on every write path") {
+    val tz0 = spark.conf.get("spark.sql.session.timeZone")
+    val warehouse = Files.createTempDirectory("graft_stats_wh").toString
+    spark.conf.set("spark.sql.catalog.gstats", classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gstats.warehouse", warehouse)
+    // timestamps render as epoch micros, date/NTZ as wall-clock strings:
+    // a non-UTC session must not move either
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val long = "w" * 80
+      // every StatsPruner.comparable type, NaN, a string past the bound
+      // length, an all-null column and a sparsely-null one
+      val df = spark.range(0, 60, 1, 4).select(
+        col("id").cast("int").as("i"),
+        (col("id") * 1000003L).as("l"),
+        when(col("id") % 7 === 3, lit(Double.NaN)).otherwise(col("id") * 1.5).as("d"),
+        (col("id") / 4).cast("float").as("f"),
+        (col("id") / 3).cast("decimal(12,3)").as("dec"),
+        concat(lit(long), col("id").cast("string")).as("s"),
+        expr("date_add(DATE'2024-02-27', CAST(id AS INT))").as("dt"),
+        expr("timestamp_micros(1700000000000000 + id * 3600000123)").as("ts"),
+        expr("CAST(timestamp_micros(1700000000000000 + id * 60000001) AS TIMESTAMP_NTZ)").as("ntz"),
+        (col("id") % 3 === 0).as("b"),
+        lit(null).cast("int").as("nul"),
+        when(col("id") % 5 === 0, lit(null)).otherwise(col("id") - 30).as("sparse"))
+      df.createOrReplaceTempView("stats_src")
+      def check(root: String): Unit = {
+        val t = GraftTable.load(spark, root)
+        val written = t.history.flatMap(_.added)
+        assert(written.nonEmpty)
+        val oracle = aggregateStats(root, t, written)
+        assert(oracle.keySet == written.map(_.path).toSet)
+        written.foreach(f => assert(f == oracle(f.path), s"${f.path}: $f != ${oracle(f.path)}"))
+        // the all-null column has no bounds; the NaN column's max is NaN
+        assert(written.forall(f => !f.min.contains("nul") && f.nullCount("nul") == f.rows))
+        assert(written.exists(_.max.get("d").contains("NaN")))
+      }
+      // store path: create + append
+      val plain = freshRoot
+      GraftTable.create(spark, plain, df).append(df)
+      check(plain)
+      val bucketed = freshRoot
+      val bt = GraftTable.create(spark, bucketed, df, bucketBy = Some(("l", 4)))
+      bt.append(df)
+      check(bucketed)
+      assert(bt.history.flatMap(_.added).forall(_.min.contains(GraftTable.BucketStatKey)))
+      // catalog path: SQL INSERT through the DSv2 batch write
+      spark.sql("CREATE NAMESPACE gstats.db")
+      spark.sql("CREATE TABLE gstats.db.t AS SELECT * FROM stats_src WHERE false")
+      spark.sql("INSERT INTO gstats.db.t SELECT * FROM stats_src")
+      check(s"$warehouse/db/t")
+      spark.sql("CREATE TABLE gstats.db.b PARTITIONED BY (bucket(4, l)) " +
+        "AS SELECT * FROM stats_src WHERE false")
+      spark.sql("INSERT INTO gstats.db.b SELECT * FROM stats_src")
+      check(s"$warehouse/db/b")
+      assert(GraftTable.load(spark, s"$warehouse/db/b").history.flatMap(_.added)
+        .forall(_.min.contains(GraftTable.BucketStatKey)))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz0)
+  }
 }
