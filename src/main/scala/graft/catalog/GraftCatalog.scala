@@ -4,8 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
@@ -13,11 +12,11 @@ import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, Proced
 import org.apache.spark.sql.connector.read.LocalScan
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -46,15 +45,14 @@ import graft.store.GraftTable
   * catalog does is metadata-sized (directory listings, commit-log
   * reads); data stays distributed.
   *
-  * Read path: scans go through a [[V1Scan]] bridge (the same public
-  * connector seam Spark's own JDBC source uses). Pruned columns and the
-  * translatable filter subset are handed to [[GraftTable.read]], so
-  * file-level stats pruning AND parquet row-group pushdown both still
-  * fire inside the bridged DataFrame; Spark re-evaluates every filter
-  * above the scan, so the translation is an IO optimization, never a
-  * correctness dependency. At 100 TB the expensive part of a scan is
-  * the IO the pruning avoids — the per-row V1 Row conversion is the
-  * accepted bridge cost (identical trade to Spark's JDBC connector).
+  * Read path: every table, in either format, is read by one native
+  * DSv2 scan, [[GraftScan]]. The scan builder plans the snapshot's
+  * files once ([[GraftTable.planFiles]]: commit-log stats pruning plus
+  * bucket pruning for the translatable filter subset), and Spark's own
+  * Parquet/ORC reader reads them with the pruned columns and row-group
+  * pushdown — no second DataFrame, no Row conversion. Spark
+  * re-evaluates every filter above the scan, so the translation is an
+  * IO optimization, never a correctness dependency.
   *
   * Write path: native DSv2 BATCH_WRITE ([[GraftBatchWrite]]) —
   * INSERT INTO appends, INSERT OVERWRITE truncates (static) or
@@ -69,7 +67,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
 
   // V2 FunctionCatalog: one function, the bucket transform — what
   // Catalyst resolves a bucketed scan's reported KeyGroupedPartitioning
-  // against (storage-partitioned joins; see GraftBucketScan)
+  // against (storage-partitioned joins; see GraftScan)
   override def listFunctions(namespace: Array[String])
       : Array[org.apache.spark.sql.connector.catalog.Identifier] =
     if (namespace.isEmpty)
@@ -178,7 +176,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
     // directory layout (the Iceberg hidden-partitioning idea, with
     // range clustering as the one transform)
     // bucket(n, col) transforms map to the store's HASH-BUCKET spec
-    // (storage-partitioned joins, GraftBucketScan); identity transforms
+    // (storage-partitioned joins, GraftScan); identity transforms
     // keep mapping to the write-time range-cluster spec
     val bucketSpecs = partitions.toSeq.collect {
       case t if t.name == "bucket" =>
@@ -566,14 +564,14 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   override def truncateTable(): Boolean = { gt.truncate(); true }
 }
 
-/** Column pruning + filter pushdown into the GraftTable read.
+/** Column pruning + filter pushdown into the [[GraftScan]].
   *
   * Pushdown contract: `pushFilters` returns ALL filters (Spark keeps
   * re-evaluating them above the scan); the translatable subset is
-  * reported via `pushedFilters` and handed to the store, where it
-  * drives commit-log stats pruning (skip whole files) and, inside the
-  * bridged DataFrame, parquet row-group pushdown. Double evaluation of
-  * a cheap predicate is noise; skipped IO at 100 TB is the win.
+  * reported via `pushedFilters`, drives commit-log stats and bucket
+  * pruning (skip whole files) in [[GraftTable.planFiles]], and reaches
+  * the file reader for row-group pushdown. Double evaluation of a cheap
+  * predicate is noise; skipped IO at 100 TB is the win.
   */
 private[catalog] final class GraftScanBuilder(gt: GraftTable, version: Long,
                                               fullSchema: StructType)
@@ -582,16 +580,7 @@ private[catalog] final class GraftScanBuilder(gt: GraftTable, version: Long,
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
 
-  // TOP-LEVEL pruning only: Spark's nested-schema pruning hands a
-  // narrowed struct (e.g. meta<score> of meta<lang,score>) — but the
-  // V1 bridge's RDD[Row] carries full structs, and the row-encoder
-  // boundary trusts readSchema(), so advertising the narrowed struct
-  // corrupts the conversion (String-where-Double crash on the first
-  // struct read through the catalog). Re-widen every required field to
-  // its full type; Spark re-extracts the nested field above the scan
-  // (the standard V1 contract — V1 file sources do the same).
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = StructType(requiredSchema.fields.map(f => fullSchema(f.name)))
+  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f => GraftScanBuilder.toColumn(f, fullSchema).isDefined)
@@ -601,73 +590,8 @@ private[catalog] final class GraftScanBuilder(gt: GraftTable, version: Long,
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
-    val req = required
     val filterCols = pushed.flatMap(f => GraftScanBuilder.toColumn(f, fullSchema)).toSeq
-    // Storage-partitioned path (round 12): a bucketed parquet table
-    // whose every live file carries a __bucket stat gets the native
-    // batch scan that reports KeyGroupedPartitioning — co-bucketed
-    // joins then plan with ZERO exchanges. Any other state (not
-    // bucketed, straddling files from an explicit re-layout, ORC)
-    // falls through to the V1 bridge below.
-    if (gt.bucketSpec.isDefined && gt.format == "parquet") {
-      gt.bucketedFileGroups(version, filterCols) match {
-        case Some(groups) if groups.nonEmpty =>
-          // static bucket pruning: equality/IN on the bucket key keeps
-          // only the buckets those values hash into (stats can't prune
-          // here — every bucket spans the key range by construction)
-          val keep = GraftBucketScan.bucketsFor(pushed,
-            gt.bucketColumnAt(version).get, gt.bucketCount.get)
-          val pruned = keep.fold(groups)(ks => groups.filter { case (b, _) => ks(b) })
-          if (pruned.nonEmpty)
-            return new GraftBucketScan(gt.spark, gt, version, req, pushed, pruned)
-          // bucket pruning proved the result EMPTY (the key's bucket
-          // holds no live files): statically zero rows — falling to
-          // the V1 path would scan every file min/max can't exclude,
-          // which on the bucket key is all of them (review finding)
-          return new V1Scan {
-            override def readSchema(): StructType = req
-            override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
-              new BaseRelation with TableScan {
-                override def sqlContext: SQLContext = ctx
-                override def schema: StructType = req
-                override def buildScan(): RDD[Row] =
-                  ctx.sparkContext.emptyRDD[Row]
-              }.asInstanceOf[T]
-          }
-        case _ => // empty snapshot or unbucketed files: V1 path
-      }
-    }
-    new V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-      override def readSchema(): StructType = req
-
-      /** Commit-log FileStats, after pruning with the pushed filters —
-        * metadata-only, no file IO. Caveat, verified in
-        * GraftCatalogSpec: Spark's V1ScanWrapper hides this interface
-        * from STATIC join selection (same for its own JDBC source), so
-        * the static plan sizes the table at the V2 default; what
-        * actually converts small-side joins to broadcast is AQE's
-        * runtime shuffle sizing. The stats stay implemented for any
-        * consumer that reads the Scan directly. */
-      override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-        val (rows, bytes) = gt.snapshotStats(version, filterCols)
-        new org.apache.spark.sql.connector.read.Statistics {
-          override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-          override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
-        }
-      }
-      override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = ctx
-          override def schema: StructType = req
-          override def buildScan(): RDD[Row] = {
-            val df = gt.read(asOfVersion = Some(version), filters = filterCols)
-            val projected =
-              if (req.isEmpty) df.select() // count(*): zero-column rows
-              else df.select(req.fieldNames.toIndexedSeq.map(col): _*)
-            projected.rdd
-          }
-        }.asInstanceOf[T]
-    }
+    new GraftScan(gt, version, required, pushed, gt.planFiles(version, filterCols))
   }
 }
 

@@ -98,7 +98,12 @@ object GraphOps {
           ((lit(1.0) - lit(damping)) / col("n") +
             lit(damping) * coalesce(col("cs"), lit(0.0))).as("rank"))
     }
-    rank
+    // computed eagerly into a checkpoint, the result no longer reads the
+    // three caches, so they are released before returning: a long-lived
+    // session keeps no cache entry per call
+    val out = rank.localCheckpoint()
+    Seq(ed, nodes, nodesN).foreach(_.unpersist())
+    out
   }
 
   val entries: Seq[QueryEntry] = Seq(

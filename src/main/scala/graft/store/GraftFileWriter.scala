@@ -9,7 +9,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, Murmur3HashFunction}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
 import org.apache.spark.sql.execution.SQLExecution
@@ -158,10 +158,8 @@ final class GraftFileWriter private[store] (f: GraftFileWriterFactory,
       i += 1
     }
     if (bucketOrd >= 0) {
-      // a NULL key hashes to the seed, like Spark's own hash()
       val key = if (row.isNullAt(bucketOrd)) null else row.get(bucketOrd, bucketType)
-      val h = Murmur3HashFunction.hash(key, bucketType, 42L).toInt
-      val b = ((h % bucketN) + bucketN) % bucketN
+      val b = GraftTable.bucketOf(key, bucketN)
       if (b < bucketLo) bucketLo = b
       if (b > bucketHi) bucketHi = b
     }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Versioned table over immutable Parquet/ORC files + a JSON commit log —
   * the engine's stand-in for walden's Iceberg-on-Nessie tables
@@ -86,7 +87,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * payoff is the STORAGE-PARTITIONED JOIN: two tables bucketed the
     * same way join with ZERO exchanges — at 100 TB the difference
     * between shuffling both fact tables and streaming co-located
-    * buckets (see GraftBucketScan). Tracked by FIELD ID like the
+    * buckets (see graft.catalog.GraftScan). Tracked by FIELD ID like the
     * cluster spec: rename follows, drop is refused. */
   lazy val bucketSpec: Option[(Long, Int)] = GraftTable.bucketSpecOf(root)
 
@@ -183,19 +184,17 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   def truncate(): Long = commitRetry("overwrite", Nil, Nil, InheritSchema(schema.json))
 
   /** Snapshot read (optionally time-travel to `asOfVersion` or a named
-    * branch/tag), with file-level stats pruning for `filters`. The
-    * filters are ALSO re-applied by Spark (parquet row-group pushdown +
-    * codegen), so pruning is purely an IO optimization — never a
-    * correctness dependency.
+    * branch/tag), reading only the files [[planFiles]] keeps for
+    * `filters`. The filters are ALSO re-applied by Spark (parquet
+    * row-group pushdown + codegen), so pruning is purely an IO
+    * optimization — never a correctness dependency.
     */
   def read(asOfVersion: Option[Long] = None,
            ref: Option[String] = None,
            filters: Seq[Column] = Nil): DataFrame = {
     val v = resolveVersion(asOfVersion, ref)
-    val files = log.snapshotFiles(v)
     val sch = schemaAt(v)
-    val resolved = resolve(filters, sch)
-    val kept = bucketPruneFiles(StatsPruner.prune(files, resolved, sch), resolved, v)
+    val kept = planFiles(v, filters)
     val df =
       if (kept.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
@@ -203,20 +202,34 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     filters.foldLeft(df)(_ filter _)
   }
 
-  /** Direct-load twin of the catalog scan's static bucket pruning
-    * (GraftBucketScan.bucketsFor): equality/IN conjuncts on the bucket
-    * column keep only the value-buckets' files. min/max stats CANNOT
-    * prune a hash layout — each bucket's key values span the whole
-    * range by construction — so without this `read(filters)` scanned
-    * every file a catalog query would skip (round 13, the IVF
-    * inverted-list serving path). No-op when the table isn't bucketed
-    * or any live file lacks the __bucket stat (explicit re-layout:
-    * fall back to the full scan, same answers). */
+  /** The files a read of snapshot `v` under `filters` must open:
+    * the snapshot's live files, minus those whose min/max/null stats
+    * exclude a filter ([[StatsPruner]]), minus — on a bucketed table —
+    * those outside the buckets an equality/IN filter on the bucket key
+    * hashes into. Metadata-only (commit-log FileStats, no file IO); the
+    * one file-planning step behind [[read]], [[snapshotStats]] and the
+    * catalog scan. */
+  def planFiles(v: Long, filters: Seq[Column] = Nil): Seq[FileStat] = {
+    val files = log.snapshotFiles(v)
+    if (filters.isEmpty) files
+    else {
+      val sch = schemaAt(v)
+      val resolved = resolve(filters, sch)
+      bucketPruneFiles(StatsPruner.prune(files, resolved, sch), resolved, v)
+    }
+  }
+
+  /** Bucket pruning: equality/IN conjuncts on the bucket column keep
+    * only the value-buckets' files. min/max stats CANNOT prune a hash
+    * layout — each bucket's key values span the whole range by
+    * construction. No-op when the table isn't bucketed or any live file
+    * lacks the __bucket stat (explicit re-layout: fall back to the full
+    * scan, same answers). */
   private def bucketPruneFiles(kept: Seq[FileStat], resolved: Seq[Expression],
                                v: Long): Seq[FileStat] =
     (bucketSpec, bucketColumnAt(v)) match {
       case (Some((_, n)), Some(colName))
-          if resolved.nonEmpty && kept.forall(_.min.contains(GraftTable.BucketStatKey)) =>
+          if kept.forall(_.min.contains(GraftTable.BucketStatKey)) =>
         val targetSets = resolved.flatMap(e => bucketTargets(e, colName, n))
         if (targetSets.isEmpty) kept
         else {
@@ -231,53 +244,37 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * None = no usable conjunct (no pruning from this expression). */
   private def bucketTargets(e: Expression, colName: String, n: Int): Option[Set[Int]] = {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, In, InSet}
+    def key(v0: Any, dt: DataType): Option[Int] = dt match {
+      case IntegerType | LongType => Some(GraftTable.bucketOf(v0, n))
+      case _ => None
+    }
+    def all(bs: Seq[Option[Int]]): Option[Set[Int]] =
+      if (bs.forall(_.isDefined)) Some(bs.flatten.toSet) else None
     e match {
       case And(l, r) =>
         (bucketTargets(l, colName, n), bucketTargets(r, colName, n)) match {
           case (Some(a), Some(b)) => Some(a intersect b)
           case (a, b) => a.orElse(b)
         }
-      case EqualTo(a: AttributeReference, Literal(v0, _)) if a.name == colName =>
-        graft.catalog.GraftBucketScan.bucketOf(v0, n).map(Set(_))
-      case EqualTo(Literal(v0, _), a: AttributeReference) if a.name == colName =>
-        graft.catalog.GraftBucketScan.bucketOf(v0, n).map(Set(_))
+      case EqualTo(a: AttributeReference, Literal(v0, dt)) if a.name == colName =>
+        key(v0, dt).map(Set(_))
+      case EqualTo(Literal(v0, dt), a: AttributeReference) if a.name == colName =>
+        key(v0, dt).map(Set(_))
       case In(a: AttributeReference, vs) if a.name == colName &&
           vs.forall(_.isInstanceOf[Literal]) =>
-        val bs = vs.map(l => graft.catalog.GraftBucketScan.bucketOf(
-          l.asInstanceOf[Literal].value, n))
-        if (bs.forall(_.isDefined)) Some(bs.flatten.toSet) else None
+        all(vs.map { case Literal(v0, dt) => key(v0, dt) })
       case InSet(a: AttributeReference, set) if a.name == colName =>
-        val bs = set.toSeq.map(v0 => graft.catalog.GraftBucketScan.bucketOf(v0, n))
-        if (bs.forall(_.isDefined)) Some(bs.flatten.toSet) else None
+        all(set.toSeq.map(v0 => key(v0, a.dataType)))
       case _ => None
     }
   }
 
   def history: Seq[Commit] = log.versions.map(log.read)
 
-  /** For the storage-partitioned scan: snapshot `v`'s live files after
-    * stats-pruning `filters`, grouped by bucket id — or None when the
-    * table isn't bucketed or ANY live file lacks a `__bucket` stat
-    * (e.g. written by an explicit compact re-layout), in which case
-    * the caller must take the ordinary scan path. Metadata-only. */
-  private[graft] def bucketedFileGroups(v: Long, filters: Seq[Column] = Nil)
-      : Option[Map[Int, Seq[FileStat]]] =
-    bucketSpec.flatMap { _ =>
-      val sch = schemaAt(v)
-      val kept = StatsPruner.prune(log.snapshotFiles(v), resolve(filters, sch), sch)
-      if (kept.exists(f => !f.min.contains(GraftTable.BucketStatKey))) None
-      else Some(kept.groupBy(_.min(GraftTable.BucketStatKey).toInt))
-    }
-
-  /** (rows, bytes) of snapshot `v` after stats-pruning `filters` —
-    * metadata-only (commit-log FileStats, no file IO). Feeds the DSv2
-    * catalog's `SupportsReportStatistics` (see the caveat there on
-    * Spark's V1ScanWrapper hiding it from static join selection). */
+  /** (rows, bytes) of the files [[planFiles]] keeps for snapshot `v`
+    * under `filters` — metadata-only (commit-log FileStats, no file IO). */
   def snapshotStats(v: Long, filters: Seq[Column] = Nil): (Long, Long) = {
-    val files = log.snapshotFiles(v)
-    val kept =
-      if (filters.isEmpty) files
-      else StatsPruner.prune(files, resolve(filters, schemaAt(v)), schemaAt(v))
+    val kept = planFiles(v, filters)
     (kept.map(_.rows).sum, kept.map(_.bytes).sum)
   }
 
@@ -1592,6 +1589,22 @@ object GraftTable {
 
   /** Stats pseudo-column recording a data file's single hash bucket. */
   val BucketStatKey = "__bucket"
+
+  /** Bucket id of one INT/BIGINT bucket-key value (NULL allowed) among
+    * `n` buckets: `pmod(murmur3_hash(key, seed 42), n)`, Spark's
+    * `pmod(hash(key), n)` and the partition id of
+    * `df.repartition(n, key)`. The one definition the write tasks, bucket
+    * pruning and the catalog's `bucket` function all use. */
+  def bucketOf(key: Any, n: Int): Int = {
+    val h = key match {
+      case null => 42 // Spark's hash() of NULL is the seed
+      case l: Long => Murmur3_x86_32.hashLong(l, 42)
+      case i: Int => Murmur3_x86_32.hashInt(i, 42)
+      case other => throw new IllegalArgumentException(
+        s"bucket keys are INT or BIGINT, got ${other.getClass.getName}")
+    }
+    ((h % n) + n) % n
+  }
 
   private[store] def bucketSpecOf(root: String): Option[(Long, Int)] =
     for (id <- propOf(root, "bucketId"); n <- propOf(root, "bucketN"))

@@ -21,8 +21,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * Nothing else may live here: every other Spark touchpoint in the repo
   * goes through the public DataFrame/DSv2/extension APIs — with ONE
   * sibling exception, [[org.apache.spark.sql.execution.datasources
-  * .GraftParquetReadShim]] (round 12), which re-exports the per-file
-  * parquet reader the storage-partitioned bucket scan needs.
+  * .GraftParquetReadShim]], which re-exports the per-file Parquet/ORC
+  * reader and the file-split packing the catalog's native scan
+  * (graft.catalog.GraftScan) needs.
   */
 object GraftSparkInternals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

@@ -2,30 +2,42 @@ package org.apache.spark.sql.execution.datasources
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** The one `private[sql]` seam graft's storage-partitioned (bucketed)
-  * scan needs, re-exported from inside the package (same shim pattern
-  * as [[org.apache.spark.sql.GraftSparkInternals]], which documents the
-  * rule: every other Spark touchpoint goes through public APIs).
+/** The one `private[sql]` seam graft's catalog scan (graft.catalog
+  * .GraftScan) needs, re-exported from inside the package (same shim
+  * pattern as [[org.apache.spark.sql.GraftSparkInternals]], which
+  * documents the rule: every other Spark touchpoint goes through public
+  * APIs). Two pieces of `FileSourceScanExec`'s machinery:
   *
-  * [[ParquetFileFormat.buildReaderWithPartitionValues]] is exactly the
-  * machinery `FileSourceScanExec` ships to executors: built ON THE
-  * DRIVER (it captures SQLConf — field-id resolution, rebase modes,
-  * vectorization — at build time), the returned closure is serializable
-  * and reads one file with column pruning + parquet row-group filter
-  * pushdown. Graft's native DSv2 bucket scan (GraftBucketScan) needs a
-  * per-file InternalRow reader because a V1Scan bridge cannot report
-  * `KeyGroupedPartitioning` — and re-implementing a parquet decoder
-  * would be both slower and wrong.
+  *  - [[buildReader]]: the format's (Parquet or ORC `FileFormat`)
+  *    `buildReaderWithPartitionValues`, built ON THE DRIVER (it captures
+  *    SQLConf — field-id resolution, rebase modes, vectorization — at
+  *    build time); the returned closure is serializable and reads one
+  *    file split with column pruning (nested fields included) and
+  *    row-group/stripe filter pushdown. Re-implementing a decoder would
+  *    be both slower and wrong.
+  *  - [[filePartitions]]: Spark's own split + bin-packing of a file list
+  *    into read tasks (`FilePartition.maxSplitBytes` +
+  *    `getFilePartitions`), so a catalog scan plans exactly as many
+  *    tasks as a plain file read of the same files.
   */
 object GraftParquetReadShim {
+
+  private def fileFormat(format: String): FileFormat = format match {
+    case "parquet" => new ParquetFileFormat()
+    case "orc" => new OrcFileFormat()
+    case other => throw new IllegalArgumentException(s"unsupported graft file format '$other'")
+  }
 
   /** Build the serializable per-file reader. When the session's
     * vectorized reader is enabled the closure yields ColumnarBatch
@@ -33,12 +45,12 @@ object GraftParquetReadShim {
     * whole-stage codegen exploits); this wrapper unwraps them back to
     * rows, so callers always see true InternalRows. */
   def buildReader(spark: SparkSession,
+                  format: String,
                   dataSchema: StructType,
                   requiredSchema: StructType,
                   filters: Seq[Filter]): PartitionedFile => Iterator[InternalRow] = {
-    val fmt = new ParquetFileFormat()
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val readFile = fmt.buildReaderWithPartitionValues(
+    val readFile = fileFormat(format).buildReaderWithPartitionValues(
       sparkSession = classic,
       dataSchema = dataSchema,
       partitionSchema = new StructType(),
@@ -56,6 +68,27 @@ object GraftParquetReadShim {
       }
   }
 
+  /** Read tasks for `(absolute path, length)` files, planned the way
+    * `FileSourceScanExec` plans a non-bucketed read: files split at
+    * `maxSplitBytes` when the format allows, largest first, packed by
+    * `getFilePartitions`. */
+  def filePartitions(spark: SparkSession, format: String,
+                     files: Seq[(String, Long)]): Seq[FilePartition] = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val statuses = files.map { case (p, len) =>
+      FileStatusWithMetadata(new FileStatus(len, false, 0, 0L, 0L, new Path(p)))
+    }
+    val maxSplitBytes =
+      FilePartition.maxSplitBytes(classic, Seq(PartitionDirectory(InternalRow.empty, statuses)))
+    val fmt = fileFormat(format)
+    val splits = statuses.flatMap { st =>
+      PartitionedFileUtil.splitFiles(st, st.getPath,
+        fmt.isSplitable(classic, Map.empty, st.getPath), maxSplitBytes, InternalRow.empty)
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(classic, splits, maxSplitBytes)
+  }
+
+  /** One whole file as a read split. */
   def mkFile(path: String, length: Long): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
       0L, length, Array.empty, 0L, length)

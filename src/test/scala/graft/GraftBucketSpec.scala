@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr}
 
+import graft.store.GraftTable
+
 /** Bucketed GraftTables + storage-partitioned joins (round 12): two
   * tables hash-bucketed on the same key must JOIN WITH ZERO EXCHANGES
   * (Spark SPJ over the catalog's bucket transform + the scan's
@@ -57,7 +59,7 @@ class GraftBucketSpec extends SparkSpec {
       // is not the join's): no hash-partitioned exchange anywhere
       assert(!p.contains("Exchange hashpartitioning"),
         s"SPJ join must not hash-shuffle:\n${p.take(3000)}")
-      assert(p.contains("GraftBucketScan"), s"expected the bucketed scan:\n${p.take(1500)}")
+      assert(p.contains("occupied buckets"), s"expected the bucketed scan layout:\n${p.take(1500)}")
       val got = joined.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sortBy(_._1)
       val want = (1L to 500L).map(i => i * 3).filter(_ <= 2000)
         .map(id => (id, id * 1.5, s"t${(id / 3) % 7}")).sortBy(_._1)
@@ -119,7 +121,6 @@ class GraftBucketSpec extends SparkSpec {
 
   test("DELETE rewrites keep bucketing; compact degrades to fallback, same answers") {
     setupTables
-    import graft.store.GraftTable
     sql("DELETE FROM bkt.db.facts WHERE id = 1000")
     noBroadcast {
       val joined = sql("""SELECT COUNT(*) AS n FROM bkt.db.facts f
@@ -173,6 +174,18 @@ class GraftBucketSpec extends SparkSpec {
         .select(col("id"), expr("pmod(hash(id), 4)").as("b")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       val touched = Set(bucketOf(7L), bucketOf(8L))
+      // the store's one bucket-id function is Spark's pmod(hash(k), n)
+      // on both key types, including the edge values and NULL
+      val longKeys = Seq(Some(0L), Some(7L), Some(-1L), Some(-42L),
+        Some(Long.MinValue), Some(Long.MaxValue), None)
+      val intKeys = Seq(Some(0), Some(7), Some(-1), Some(-42),
+        Some(Int.MinValue), Some(Int.MaxValue), None)
+      for (n <- Seq(4, 7)) {
+        val sparkLong = longKeys.toDF("k").select(expr(s"pmod(hash(k), $n)")).collect().map(_.getInt(0))
+        val sparkInt = intKeys.toDF("k").select(expr(s"pmod(hash(k), $n)")).collect().map(_.getInt(0))
+        assert(sparkLong.toSeq == longKeys.map(k => GraftTable.bucketOf(k.getOrElse(null), n)), s"BIGINT, n=$n")
+        assert(sparkInt.toSeq == intKeys.map(k => GraftTable.bucketOf(k.getOrElse(null), n)), s"INT, n=$n")
+      }
       val survivors = orig.filter { case (i, _) => !touched(bucketOf(i)) }
       val got = sql("SELECT id, v FROM bkt.dyn.t").collect()
         .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)

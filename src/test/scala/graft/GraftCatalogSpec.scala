@@ -106,7 +106,8 @@ class GraftCatalogSpec extends SparkSpec {
     sql("INSERT INTO gcat.db5.t SELECT id, 'c' FROM range(200, 210)")
     val out = sql("SELECT v FROM gcat.db5.t WHERE id >= 200").distinct().collect()
     assert(out.map(_.getString(0)).toSeq == Seq("c"))
-    // pushdown is visible in the physical plan (V1 bridge reports PushedFilters)
+    // pushdown is visible in the physical plan (the GraftScan description
+    // lists its PushedFilters)
     val plan = sql("SELECT v FROM gcat.db5.t WHERE id >= 200")
       .queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThanOrEqual(id,200)"), plan)
@@ -135,10 +136,11 @@ class GraftCatalogSpec extends SparkSpec {
     val q = sql("""SELECT d.name, sum(f.v) AS s
                    FROM gcat.db9.fact f JOIN gcat.db9.dim d ON f.id = d.id
                    GROUP BY d.name""")
+    // static planning sees the scan's commit-log statistics: the
+    // non-adaptive physical plan already broadcasts the 50-row dim
+    val staticPlan = q.queryExecution.sparkPlan.toString
+    assert(staticPlan.contains("BroadcastHashJoin"), staticPlan)
     assert(q.collect().length == 50) // materialize THIS execution's adaptive plan
-    // static planning can't see the scan stats (V1ScanWrapper hides
-    // SupportsReportStatistics — documented in GraftScanBuilder), but
-    // AQE's runtime shuffle sizing must still broadcast the 50-row dim
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
   }
@@ -985,5 +987,58 @@ class GraftCatalogSpec extends SparkSpec {
     sql("ALTER TABLE gcat.db6.old_name RENAME TO db6.new_name")
     assert(sql("SELECT id FROM gcat.db6.new_name").head().getLong(0) == 7)
     assert(!sql("SHOW TABLES IN gcat.db6").collect().map(_.getString(1)).contains("old_name"))
+  }
+
+  test("ORC tables read through the catalog scan: pruning, ADD COLUMN, time travel, buckets") {
+    sql("CREATE NAMESPACE gcat.dborc")
+    sql("CREATE TABLE gcat.dborc.t (id BIGINT, v STRING) TBLPROPERTIES('format'='orc')")
+    sql("INSERT INTO gcat.dborc.t SELECT id, 'a' FROM range(0, 10)") // v2
+    sql("INSERT INTO gcat.dborc.t SELECT id, 'b' FROM range(100, 110)") // v3
+    val gt = GraftTable.load(spark, s"$warehouse/dborc/t")
+    assert(gt.format == "orc")
+    // stats pruning: only the second commit's files are planned
+    val q = sql("SELECT v FROM gcat.dborc.t WHERE id >= 100")
+    assert(q.distinct().collect().map(_.getString(0)).toSeq == Seq("b"))
+    val secondCommit = gt.commitInfo(3).added.size
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftScan(") && plan.contains(s"orc, $secondCommit files,"), plan)
+    assert(secondCommit < gt.planFiles(gt.currentVersion).size)
+    // pre-evolution ORC files read the added column as NULL
+    sql("ALTER TABLE gcat.dborc.t ADD COLUMN note STRING") // v4
+    sql("INSERT INTO gcat.dborc.t VALUES (200, 'c', 'x')") // v5
+    assert(sql("SELECT count(*) FROM gcat.dborc.t WHERE note IS NULL").head().getLong(0) == 20)
+    assert(sql("SELECT note FROM gcat.dborc.t WHERE id = 200").head().getString(0) == "x")
+    // time travel to each commit
+    assert(sql("SELECT count(*) FROM gcat.dborc.t VERSION AS OF 2").head().getLong(0) == 10)
+    assert(sql("SELECT count(*) FROM gcat.dborc.t VERSION AS OF 3").head().getLong(0) == 20)
+    assert(!sql("SELECT * FROM gcat.dborc.t VERSION AS OF 3").columns.contains("note"))
+    // a bucketed ORC table: a point read on the key opens one bucket
+    sql("""CREATE TABLE gcat.dborc.b (id BIGINT, v DOUBLE)
+           PARTITIONED BY (bucket(4, id)) TBLPROPERTIES('format'='orc')""")
+    sql("INSERT INTO gcat.dborc.b SELECT id, id * 0.5 FROM range(1, 201)")
+    val point = sql("SELECT id, v FROM gcat.dborc.b WHERE id = 42")
+    assert(point.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((42L, 21.0)))
+    val pointPlan = point.queryExecution.executedPlan.toString
+    assert(pointPlan.contains("1 occupied buckets"), pointPlan)
+  }
+
+  test("catalog scan plans as many read tasks as GraftTable.read of the same snapshot") {
+    sql("CREATE NAMESPACE gcat.dbsplit")
+    sql("CREATE TABLE gcat.dbsplit.t (id BIGINT, v STRING)")
+    val nFiles = spark.sparkContext.defaultParallelism * 3 + 1
+    sql(s"INSERT INTO gcat.dbsplit.t SELECT id, concat('v', id) FROM range(0, 4000, 1, $nFiles)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbsplit/t")
+    assert(gt.planFiles(gt.currentVersion).size == nFiles)
+    // the default open cost puts each small file in its own task; a
+    // one-byte open cost makes Spark pack several files per task
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.get(key)
+    try for (openCost <- Seq(prev, "1")) {
+      spark.conf.set(key, openCost)
+      val viaCatalog = sql("SELECT * FROM gcat.dbsplit.t").rdd.getNumPartitions
+      val viaStore = gt.read().rdd.getNumPartitions
+      assert(viaCatalog == viaStore, s"$key=$openCost: catalog $viaCatalog vs read $viaStore tasks")
+      if (openCost == "1") assert(viaCatalog < nFiles, s"$viaCatalog tasks for $nFiles files")
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -38,4 +38,14 @@ class GraphSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("iterations"))
   }
+
+  test("pageRank releases its caches: no CacheManager entry outlives the call") {
+    def entries = org.apache.spark.sql.CacheEntries(spark)
+    val before = entries
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 2L)).toDF("src", "dst")
+    val r = graft.operators.GraphOps.pageRank(edges, 3, 0.85).collect()
+    assert(r.length == 3)
+    assert(math.abs(r.map(_.getDouble(1)).sum - 1.0) < 1e-9)
+    assert(entries == before, s"pageRank left ${entries - before} cache entries behind")
+  }
 }

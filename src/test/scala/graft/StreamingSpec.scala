@@ -268,7 +268,11 @@ class StreamingSpec extends SparkSpec {
     assert(table.read().count() == 4)
     // every committed file carries its single-bucket stat — the
     // storage-partitioned scan stays available after any batch count
-    val groups = table.bucketedFileGroups(table.currentVersion)
+    val files = table.planFiles(table.currentVersion)
+    val groups =
+      if (files.forall(_.min.contains(graft.store.GraftTable.BucketStatKey)))
+        Some(files.groupBy(_.min(graft.store.GraftTable.BucketStatKey)))
+      else None
     assert(groups.isDefined, "streamed files must keep the bucket layout")
     assert(groups.get.values.flatten.size >= 2)
   }
