@@ -549,8 +549,10 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   /** `DELETE FROM graft.db.t WHERE ...` — only predicates the store can
     * evaluate are accepted (Spark falls back to an analysis error for
     * the rest, never a partial delete); the delete itself is
-    * GraftTable's copy-on-write: stats-pruned scan for matching files,
-    * rewrite only those, one atomic commit. */
+    * GraftTable's copy-on-write: ONE job over the stats- and
+    * bucket-pruned candidate files, in which each task probes its files
+    * for a matching row and rewrites only those that hold one, then one
+    * atomic commit. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     !timeTravel && filters.forall(f => GraftScanBuilder.toColumn(f, schema()).isDefined)
 

@@ -42,8 +42,9 @@ import graft.store.{GraftTable, MergeWhen}
   * literal, `[NOT] IN (SELECT ...)` → a value-list `In` (SQL
   * three-valued NULL semantics preserved by the `In` expression),
   * `[NOT] EXISTS` → boolean literal — and the folded condition then
-  * drives BOTH the store's stats-based victim-file discovery and the
-  * row-level rewrite: one subquery evaluation, reused everywhere,
+  * drives the store's one-job copy-on-write rewrite (stats-pruned
+  * candidates, each probed and rewritten by its own task): one
+  * subquery evaluation, reused everywhere,
   * and literal/value-list predicates prune files by min/max stats
   * exactly like hand-written ones. A subquery over the target table
   * itself reads the pre-update snapshot (evaluate-then-commit — the
@@ -456,7 +457,8 @@ private[catalog] object GraftDmlExprs {
 }
 
 /** `UPDATE <graft table> SET ... [WHERE ...]` → one copy-on-write
-  * commit via [[GraftTable.update]] (stats-pruned victim files only).
+  * commit via [[GraftTable.update]] (one job over the stats-pruned
+  * candidate files; only files holding a match are rewritten).
   * A CORRELATED subquery in the condition (r6 verdict #3) lowers onto
   * [[GraftTable.mergeInto]]: the matched-row set (computed by Spark's
   * own decorrelation over the pre-update snapshot) is the USING
@@ -499,7 +501,7 @@ final case class GraftUpdateCommand(gt: GraftTable, cond: Option[RawExpr],
 
 /** `DELETE FROM <graft table> WHERE <condition with subqueries>` → one
   * copy-on-write commit via [[GraftTable.delete]]; the folded condition
-  * (subqueries materialized once) drives stats-pruned victim discovery
+  * (subqueries materialized once) prunes and probes the candidate files
   * exactly like the predicate-only path. Correlated conditions lower
   * onto a row-identity merge with one WHEN MATCHED DELETE clause
   * (see [[GraftUpdateCommand]]). */

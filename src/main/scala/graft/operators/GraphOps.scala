@@ -28,6 +28,22 @@ object GraphOps {
     * the edges first (the t30 entry does). Returns (node, rank). */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"iterations in [1,50], got $iterations")
+    val (ed, nodes, nodesN) = pageRankInputs(edges)
+    var rank = nodesN.select(col("node"), (lit(1.0) / col("n")).as("rank"))
+    for (_ <- 1 to iterations) rank = pageRankRound(ed, nodesN, rank, damping)
+    // computed eagerly into a checkpoint, the result no longer reads the
+    // three caches, so they are released before returning: a long-lived
+    // session keeps no cache entry per call
+    val out = rank.localCheckpoint()
+    Seq(ed, nodes, nodesN).foreach(_.unpersist())
+    out
+  }
+
+  /** The loop-invariant inputs of [[pageRank]], persisted and
+    * materialized: `ed(src, dst, outdeg)` hash-partitioned on src,
+    * `nodes(node)` and `nodesN(node, n)` hash-partitioned on node. The
+    * caller unpersists all three. */
+  private[graft] def pageRankInputs(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // localCheckpoint the loop-invariant relations ONCE (same policy as
     // t14's label propagation): edges carry outdeg inline — the
     // per-round work is then exactly ONE join (rank onto edges) + ONE
@@ -78,32 +94,29 @@ object GraphOps {
     // isFinalPlan=false, whose output partitioning the outer planner
     // cannot trust — the loop's plans would re-shuffle it every round.
     ed.count(); nodesN.count()
-    var rank = nodesN.select(col("node"), (lit(1.0) / col("n")).as("rank"))
-    for (_ <- 1 to iterations) {
-      // SHUFFLE_HASH on the rank/contribution sides (guide §3.1): the
-      // per-round joins are fact-fact (checkpointed RDDs report no
-      // stats, so the planner falls back to sort-merge — nothing is
-      // broadcastable at scale anyway), but hash joins stream the edge
-      // side with ZERO sorts; the r14 before-plan carried 12
-      // SortMergeJoins / 10 Sorts for 3 rounds, every one re-sorting a
-      // relation that is hashed on the join key anyway. Rows identical:
-      // join strategy only.
-      val contribs = ed
-        .join(rank.withColumnRenamed("node", "src").hint("SHUFFLE_HASH"), "src")
-        .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
-      rank = nodesN
-        .join(contribs.groupBy("node").agg(sum(col("c")).as("cs"))
-          .hint("SHUFFLE_HASH"), Seq("node"), "left")
-        .select(col("node"),
-          ((lit(1.0) - lit(damping)) / col("n") +
-            lit(damping) * coalesce(col("cs"), lit(0.0))).as("rank"))
-    }
-    // computed eagerly into a checkpoint, the result no longer reads the
-    // three caches, so they are released before returning: a long-lived
-    // session keeps no cache entry per call
-    val out = rank.localCheckpoint()
-    Seq(ed, nodes, nodesN).foreach(_.unpersist())
-    out
+    (ed, nodes, nodesN)
+  }
+
+  /** One PageRank round: `rank(node, rank)` → the next round's ranks. */
+  private[graft] def pageRankRound(ed: DataFrame, nodesN: DataFrame, rank: DataFrame,
+                                   damping: Double): DataFrame = {
+    // SHUFFLE_HASH on the rank/contribution sides (guide §3.1): the
+    // per-round joins are fact-fact (checkpointed RDDs report no
+    // stats, so the planner falls back to sort-merge — nothing is
+    // broadcastable at scale anyway), but hash joins stream the edge
+    // side with ZERO sorts; the r14 before-plan carried 12
+    // SortMergeJoins / 10 Sorts for 3 rounds, every one re-sorting a
+    // relation that is hashed on the join key anyway. Rows identical:
+    // join strategy only.
+    val contribs = ed
+      .join(rank.withColumnRenamed("node", "src").hint("SHUFFLE_HASH"), "src")
+      .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
+    nodesN
+      .join(contribs.groupBy("node").agg(sum(col("c")).as("cs"))
+        .hint("SHUFFLE_HASH"), Seq("node"), "left")
+      .select(col("node"),
+        ((lit(1.0) - lit(damping)) / col("n") +
+          lit(damping) * coalesce(col("cs"), lit(0.0))).as("rank"))
   }
 
   val entries: Seq[QueryEntry] = Seq(

@@ -206,8 +206,21 @@ object GraftFileWriter {
     * into `root/subdir`. `options` are format writer options (bloom
     * filters); `bucket` is the bucket column's name and count. */
   private[store] def factory(spark: SparkSession, root: String, subdir: String,
-                             format: String, sch: StructType, options: Map[String, String],
+                             format: String, tableSch: StructType, options: Map[String, String],
                              bucket: Option[(String, Int)]): GraftFileWriterFactory = {
+    // files declare every column optional, as Spark's own file writes
+    // do: a NOT NULL table column (a frame created from non-null
+    // expressions) still receives NULLs from later appends and updates,
+    // and a required Parquet column given a NULL is written as a corrupt
+    // page that only a later read notices
+    def optional(dt: DataType): DataType = dt match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = optional(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(optional(e), containsNull = true)
+      case MapType(k, v, _) => MapType(optional(k), optional(v), valueContainsNull = true)
+      case other => other
+    }
+    val sch = optional(tableSch).asInstanceOf[StructType]
     val hconf = new Configuration(spark.sparkContext.hadoopConfiguration)
     // SQL-conf overlay (fieldId.write, session timezone, codec, ...):
     // the session's hadoop-conf view, as every file-format writer expects

@@ -24,9 +24,10 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *    files by stats before Spark ever lists them — the same
   *    manifest-pruning shape Iceberg uses, so a 100 TB table with a
   *    selective predicate touches only matching files;
-  *  - row-level DML is copy-on-write: ONE scan finds the files that
-  *    contain matching rows, only those files are rewritten, the commit
-  *    swaps them atomically. Unmatched files are never read twice.
+  *  - row-level DML is copy-on-write in ONE job: each task probes its
+  *    stats-pruned candidate files for a matching row and rewrites only
+  *    the files that hold one; the commit swaps them atomically.
+  *    Candidates without a match are read once, never rewritten.
   *  - commits race via atomic rename; losers retry on a fresh snapshot
   *    (optimistic concurrency, same contract as Iceberg/Nessie).
   */
@@ -196,8 +197,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val sch = schemaAt(v)
     val kept = planFiles(v, filters)
     val df =
-      if (kept.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+      if (kept.isEmpty) emptyFrame(sch)
       else readData(kept.map(f => s"$root/${f.path}"), sch)
     filters.foldLeft(df)(_ filter _)
   }
@@ -278,13 +278,17 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     (kept.map(_.rows).sum, kept.map(_.bytes).sum)
   }
 
+  /** A frame of `sch` with no rows and no files: the relation user
+    * Columns are analyzed against. */
+  private def emptyFrame(sch: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+
   /** Resolve user Columns to Catalyst expressions against `sch` via the
     * analyzer (public API only: analyze a Filter over an empty relation
     * and take its condition). */
   private def resolve(filters: Seq[Column], sch: StructType): Seq[Expression] = {
     if (filters.isEmpty) return Nil
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+    val empty = emptyFrame(sch)
     filters.map { c =>
       empty.filter(c).queryExecution.analyzed.collectFirst {
         case f: logical.Filter => f.condition
@@ -648,10 +652,10 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * the write-time cluster spec (the table's only partition notion —
     * SQL `PARTITIONED BY` lands there); with no spec the table is
     * unpartitioned and dynamic mode degenerates to the full overwrite,
-    * Hive/Spark semantics. Victim discovery is stats-pruned (the spec
+    * Hive/Spark semantics. The replaced partitions' rows are deleted
+    * from the live files by [[rewriteMatching]] (stats-pruned — the spec
     * range-clusters every file on exactly these columns, so pruning is
-    * partition-grade); victims rewrite copy-on-write minus the
-    * replaced partitions' rows; ONE commit adds written + survivor
+    * partition-grade — and one job); ONE commit adds written + survivor
     * files and removes victims — rewrite-shaped (`removed` non-empty),
     * so CDC diffs, incremental views, and the streaming source all
     * classify it correctly by shape. */
@@ -736,13 +740,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
         if (r.isNullAt(i)) col(p).isNull else col(p) === lit(r.get(i))
       }.reduce(_ && _)
     }.reduce(_ || _)
-    val (base, victims) = matchingFiles(cond)
-    val survivors =
-      if (victims.isEmpty) Nil
-      else writeFiles(readData(victims.map(p => s"$root/$p"), sch)
-        .filter(!coalesce(cond, lit(false))))
-    commitRetry("overwrite-dynamic", written ++ survivors, victims,
-      SameSchema(sch.json), basedOn = base)
+    val r = rewriteMatching(cond, None)
+    commitRetry("overwrite-dynamic", written ++ r.added, r.victims,
+      SameSchema(r.schema.json), basedOn = r.base)
   }
 
   /** Labeled, exactly-once MULTISET replace: remove one target-row
@@ -817,43 +817,126 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   // ------------------------------------------------------------------
   // row-level DML (copy-on-write)
   // ------------------------------------------------------------------
-  /** Paths (relative) of live files containing >=1 row matching cond —
-    * stats-pruned scan; only file names are collected. */
-  private def matchingFiles(cond: Column): (Long, Seq[String]) = {
+  /** A copy-on-write rewrite computed against snapshot `base` (schema
+    * `schema`): the `victims` to remove and the files `added` in their
+    * place, ready for one commit. */
+  private final case class Rewrite(base: Long, schema: StructType,
+                                   victims: Seq[String], added: Seq[FileStat])
+
+  /** The copy-on-write core of DELETE (`assign` None), UPDATE (`assign`
+    * = the SET map) and the clustered dynamic overwrite: ONE Spark job,
+    * one stage, no shuffle ([[RewriteTask]]).
+    *
+    * Driver: candidates are [[planFiles]]' (stats + bucket pruning);
+    * `cond` — and for UPDATE the `CASE WHEN cond THEN v ELSE col`
+    * columns — are analyzed and optimized over an empty relation of the
+    * table schema and bound to its attributes; the Parquet/ORC readers
+    * come from GraftParquetReadShim (this session's SQLConf, field-id
+    * resolution). Whole candidate files are packed into tasks, never
+    * split: Spark's packing on a plain table, one task per file on a
+    * bucketed or clustered one, so each output keeps its victim's single
+    * `__bucket`, sort order and key range.
+    *
+    * Task: probe each file for a row where `cond` is TRUE; rewrite the
+    * files that hit — DELETE keeps the rows where `NOT coalesce(cond,
+    * false)` (rows where `cond` is NULL survive), UPDATE writes the
+    * projected rows. A candidate without a hit is neither removed nor
+    * rewritten.
+    *
+    * An UPDATE that assigns the bucket column or a cluster column moves
+    * rows across the layout: the job only probes, and the victims
+    * rewrite through [[writeFilesWith]], whose layout shuffle places the
+    * moved rows. A `cond` or assignment holding a subquery, or anything
+    * else a task cannot evaluate, fails before any file is written. */
+  private def rewriteMatching(cond: Column, assign: Option[Map[String, Column]]): Rewrite = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression, Unevaluable}
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.execution.datasources.{GraftParquetReadShim, PartitionedFile}
     val base = currentVersion
-    val sch = schema
-    val candidates =
-      StatsPruner.prune(log.snapshotFiles(base), resolve(Seq(cond), sch), sch)
-    if (candidates.isEmpty) return (base, Nil)
-    val hit = readData(candidates.map(f => s"$root/${f.path}"), sch)
-      .filter(cond)
-      .select(input_file_name().as("f")).distinct().collect().map(_.getString(0))
-    (base, victimPaths(hit.toSeq, candidates))
-  }
-
-  def delete(cond: Column): Long = {
-    val (base, victims) = matchingFiles(cond)
-    if (victims.isEmpty) return currentVersion
-    val sch = schema
-    // DELETE removes rows where cond is TRUE; rows where it evaluates
-    // NULL must SURVIVE (plain !cond would drop them: !NULL is NULL,
-    // which filter treats as false).
-    val added = writeFiles(readData(victims.map(p => s"$root/$p"), sch)
-      .filter(!coalesce(cond, lit(false))))
-    commitRetry("delete", added, victims, SameSchema(sch.json), basedOn = base)
-  }
-
-  def update(cond: Column, set: Map[String, Column]): Long = {
-    val (base, victims) = matchingFiles(cond)
-    if (victims.isEmpty) return currentVersion
-    val sch = schema
-    val src = readData(victims.map(p => s"$root/$p"), sch)
-    val rewritten = src.select(sch.fieldNames.map { n =>
+    val sch = schemaAt(base)
+    val updated = assign.map(set => sch.fieldNames.toSeq.map { n =>
       set.get(n)
         .map(v => when(cond, v.cast(sch(n).dataType)).otherwise(col(n)).as(n))
         .getOrElse(col(n))
-    }.toIndexedSeq: _*)
-    commitRetry("update", writeFiles(rewritten), victims, SameSchema(sch.json), basedOn = base)
+    })
+    val frame = emptyFrame(sch)
+      .select(cond +: updated.getOrElse(Seq(!coalesce(cond, lit(false)))): _*)
+    if (frame.queryExecution.analyzed.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression])))
+      throw new UnsupportedOperationException(
+        s"copy-on-write DML at $root cannot evaluate a subquery in its condition or " +
+          "assignments; compute its value first (SQL DML does this itself)")
+    val (exprs, attrs) = frame.queryExecution.optimizedPlan match {
+      case logical.Project(list, child) =>
+        (list.map { case a: Alias => a.child; case e => e }, child.output)
+      case other => throw new IllegalStateException(s"unexpected rewrite plan:\n$other")
+    }
+    val bound = exprs.map(BindReferences.bindReference(_, attrs))
+    bound.flatMap(_.find(_.isInstanceOf[Unevaluable])).headOption.foreach { e =>
+      throw new UnsupportedOperationException(
+        s"copy-on-write DML at $root cannot evaluate '${e.sql}' inside a write task")
+    }
+    val candidates = planFiles(base, Seq(cond))
+    if (candidates.isEmpty) return Rewrite(base, sch, Nil, Nil)
+
+    val layoutCols = bucketColumnAt(base).toSeq ++ clusterSpecNames(sch)
+    val moves = assign.exists(_.keySet.exists(layoutCols.contains))
+    val probeAttrs = attrs.filter(exprs.head.references.contains)
+    val probeSchema = StructType(sch.fields.filter(f => probeAttrs.exists(_.name == f.name)))
+    val writer = if (moves) None else Some(fileWriterFactory(newWriteDir(), sch))
+    val task = new RewriteTask(
+      GraftParquetReadShim.buildReader(spark, format, sch, probeSchema,
+        GraftParquetReadShim.pushableFilters(exprs.head)),
+      GraftParquetReadShim.buildReader(spark, format, sch, sch, Nil),
+      BindReferences.bindReference(exprs.head, probeAttrs),
+      if (assign.isEmpty) Left(bound(1)) else Right(bound.tail),
+      writer)
+
+    val files = candidates.map(f => f.path -> GraftParquetReadShim.mkFile(s"$root/${f.path}", f.bytes))
+    val groups =
+      if (bucketSpec.isDefined || clusterFieldIds.nonEmpty) files.map(Seq(_))
+      else {
+        val relOf = files.map { case (rel, pf) => pf.filePath -> rel }.toMap
+        GraftParquetReadShim.filePartitions(spark, format,
+          candidates.map(f => (s"$root/${f.path}", f.bytes)), split = false)
+          .map(_.files.toSeq.map(pf => relOf(pf.filePath) -> pf))
+      }
+    val sc = spark.sparkContext
+    val results =
+      try sc.runJob(sc.parallelize(groups, groups.size),
+        (ctx: TaskContext, it: Iterator[Seq[(String, PartitionedFile)]]) =>
+          task.run(ctx, it.next())).toSeq
+      catch {
+        case t: Throwable =>
+          writer.foreach(_.removeDir())
+          throw t
+      }
+    val victims = results.flatMap(_.victims)
+    val added = writer match {
+      case Some(w) => w.committed(results.map(_.written))
+      case None if victims.isEmpty => Nil
+      case None => writeFilesWith(
+        readData(victims.map(p => s"$root/$p"), sch).select(updated.get: _*), sch)
+    }
+    Rewrite(base, sch, victims, added)
+  }
+
+  /** `DELETE ... WHERE cond`: copy-on-write over the files holding a
+    * row where `cond` is TRUE ([[rewriteMatching]]), one commit. Rows
+    * where `cond` is NULL survive (SQL semantics). */
+  def delete(cond: Column): Long = {
+    val r = rewriteMatching(cond, None)
+    if (r.victims.isEmpty) return currentVersion
+    commitRetry("delete", r.added, r.victims, SameSchema(r.schema.json), basedOn = r.base)
+  }
+
+  /** `UPDATE ... SET set WHERE cond`: copy-on-write over the files
+    * holding a row where `cond` is TRUE ([[rewriteMatching]]), one
+    * commit. `set` maps column names to new values (cast to the
+    * column's type); every value sees the pre-update row. */
+  def update(cond: Column, set: Map[String, Column]): Long = {
+    val r = rewriteMatching(cond, Some(set))
+    if (r.victims.isEmpty) return currentVersion
+    commitRetry("update", r.added, r.victims, SameSchema(r.schema.json), basedOn = r.base)
   }
 
   /** MERGE keyed on equality of `keyCols`: matched target rows take the
@@ -1058,8 +1141,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val afterFiles = log.snapshotFiles(toVersion).map(_.path).toSet
     val sch = schemaAt(toVersion)
     def readOrEmpty(paths: Set[String], readSch: StructType): DataFrame =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSch)
+      if (paths.isEmpty) emptyFrame(readSch)
       else readData(paths.toSeq.map(p => s"$root/$p"), readSch)
     // align the before side to the AFTER schema: match columns by FIELD
     // ID when both schemas carry them (so a rename between the versions

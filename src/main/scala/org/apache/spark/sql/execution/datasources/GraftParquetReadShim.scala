@@ -3,9 +3,12 @@ package org.apache.spark.sql.execution.datasources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -13,11 +16,13 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** The one `private[sql]` seam graft's catalog scan (graft.catalog
-  * .GraftScan) needs, re-exported from inside the package (same shim
-  * pattern as [[org.apache.spark.sql.GraftSparkInternals]], which
-  * documents the rule: every other Spark touchpoint goes through public
-  * APIs). Two pieces of `FileSourceScanExec`'s machinery:
+/** The one `private[sql]` seam graft's file reads need — the catalog
+  * scan (graft.catalog.GraftScan) and the store's copy-on-write rewrite
+  * (graft.store.GraftTable's DML) — re-exported from inside the package
+  * (same shim pattern as [[org.apache.spark.sql.GraftSparkInternals]],
+  * which documents the rule: every other Spark touchpoint goes through
+  * public APIs). Pieces of `FileSourceScanExec`/`FileScanRDD`'s
+  * machinery:
   *
   *  - [[buildReader]]: the format's (Parquet or ORC `FileFormat`)
   *    `buildReaderWithPartitionValues`, built ON THE DRIVER (it captures
@@ -30,6 +35,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *    into read tasks (`FilePartition.maxSplitBytes` +
   *    `getFilePartitions`), so a catalog scan plans exactly as many
   *    tasks as a plain file read of the same files.
+  *  - [[pushableFilters]]: the data-source filters a predicate's
+  *    conjuncts translate to (`DataSourceStrategy.translateFilter`).
+  *  - [[withInputMetrics]]: a task's reads counted in its input metrics
+  *    the way `FileScanRDD` counts them.
   */
 object GraftParquetReadShim {
 
@@ -70,10 +79,11 @@ object GraftParquetReadShim {
 
   /** Read tasks for `(absolute path, length)` files, planned the way
     * `FileSourceScanExec` plans a non-bucketed read: files split at
-    * `maxSplitBytes` when the format allows, largest first, packed by
+    * `maxSplitBytes` when the format allows (and `split` is on; off,
+    * every file stays whole), largest first, packed by
     * `getFilePartitions`. */
   def filePartitions(spark: SparkSession, format: String,
-                     files: Seq[(String, Long)]): Seq[FilePartition] = {
+                     files: Seq[(String, Long)], split: Boolean = true): Seq[FilePartition] = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val statuses = files.map { case (p, len) =>
       FileStatusWithMetadata(new FileStatus(len, false, 0, 0L, 0L, new Path(p)))
@@ -83,7 +93,8 @@ object GraftParquetReadShim {
     val fmt = fileFormat(format)
     val splits = statuses.flatMap { st =>
       PartitionedFileUtil.splitFiles(st, st.getPath,
-        fmt.isSplitable(classic, Map.empty, st.getPath), maxSplitBytes, InternalRow.empty)
+        split && fmt.isSplitable(classic, Map.empty, st.getPath), maxSplitBytes,
+        InternalRow.empty)
     }.sortBy(_.length)(Ordering[Long].reverse)
     FilePartition.getFilePartitions(classic, splits, maxSplitBytes)
   }
@@ -92,4 +103,30 @@ object GraftParquetReadShim {
   def mkFile(path: String, length: Long): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
       0L, length, Array.empty, 0L, length)
+
+  /** The data-source filters the deterministic conjuncts of `cond` (a
+    * predicate over top-level attributes) translate to — what a reader
+    * may push down without changing which rows satisfy `cond`. */
+  def pushableFilters(cond: Expression): Seq[Filter] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    conjuncts(cond).filter(_.deterministic)
+      .flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = false))
+  }
+
+  /** Run a task's file reads (`body`) and add them to the task's input
+    * metrics as `FileScanRDD` does: the bytes read on this thread
+    * (Hadoop FileSystem statistics) and the rows of every read `body`
+    * passes through the counter it is handed. InputMetrics' setters are
+    * `private[spark]`. */
+  def withInputMetrics[T](ctx: TaskContext)(
+      body: (Iterator[InternalRow] => Iterator[InternalRow]) => T): T = {
+    val in = ctx.taskMetrics().inputMetrics
+    val before = in.bytesRead
+    val bytesOnThread = SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
+    try body(_.map { r => in.incRecordsRead(1); r })
+    finally in.setBytesRead(before + bytesOnThread())
+  }
 }

@@ -388,36 +388,71 @@ class GraftCatalogSpec extends SparkSpec {
     assert(gt.history.map(_.op).count(_ == "delete") == 2)
   }
 
+  /** Jobs, stages, tasks, shuffle-write bytes and input bytes of one
+    * statement — counts of work, not time, read after draining the
+    * listener bus. */
+  private def work(stmt: String): (Int, Int, Int, Long, Long) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val input = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (e.taskMetrics != null) {
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+          input.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+        }
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { sql(stmt); org.apache.spark.ListenerDrain(sc) }
+    finally sc.removeSparkListener(l)
+    (jobs.get, stages.get, tasks.get, shuffled.get, input.get)
+  }
+
   test("work counts: INSERT, UPDATE and DELETE run no read-back stats job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-    // counts of work, not time: each write is ONE job that writes the
-    // files and computes their stats; a returning stats pass (a re-read
-    // of the written files plus a shuffle) raises every count below
+    // each write is ONE job: INSERT writes the files and computes their
+    // stats; UPDATE and DELETE probe their candidate files and rewrite
+    // the matching ones in the same tasks. A returning stats pass or a
+    // separate victim scan raises the counts below
     sql("CREATE NAMESPACE gcat.dbwork")
     sql("CREATE TABLE gcat.dbwork.t (id BIGINT, v STRING, score DOUBLE)")
     sql("INSERT INTO gcat.dbwork.t SELECT id, concat('v', id), id * 1.0 FROM range(0, 40, 1, 1)")
-    val sc = spark.sparkContext
-    def work(stmt: String): (Int, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
-      }
-      org.apache.spark.ListenerDrain(sc)
-      sc.addSparkListener(l)
-      try { sql(stmt); org.apache.spark.ListenerDrain(sc) }
-      finally sc.removeSparkListener(l)
-      (jobs.get, stages.get)
-    }
     val counts = Seq(
       "INSERT" -> work("INSERT INTO gcat.dbwork.t SELECT id, 'n', 0.5 FROM range(40, 50, 1, 1)"),
       "UPDATE" -> work("UPDATE gcat.dbwork.t SET score = -1.0 WHERE id >= 10 AND id <= 19"),
       "DELETE" -> work("DELETE FROM gcat.dbwork.t WHERE id >= 30 AND id <= 34"))
-    assert(counts == Seq("INSERT" -> (1, 1), "UPDATE" -> (3, 3), "DELETE" -> (3, 3)),
+      .map { case (k, (j, s, _, _, _)) => k -> (j, s) }
+    assert(counts == Seq("INSERT" -> (1, 1), "UPDATE" -> (1, 1), "DELETE" -> (1, 1)),
       counts.map { case (k, (j, s)) => s"$k: $j jobs, $s stages" }.mkString("; "))
     assert(sql("SELECT count(*), sum(CASE WHEN score = -1.0 THEN 1 ELSE 0 END) " +
       "FROM gcat.dbwork.t").head().toSeq == Seq(45L, 10L))
+  }
+
+  test("work counts: DELETE on a bucketed table shuffles nothing; a point DELETE is one task; reads are counted") {
+    sql("CREATE NAMESPACE gcat.dbworkb")
+    sql("CREATE TABLE gcat.dbworkb.t (id BIGINT, v STRING) PARTITIONED BY (bucket(4, id))")
+    sql("INSERT INTO gcat.dbworkb.t SELECT id, concat('v', id) FROM range(0, 80)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbworkb/t")
+    // one file per bucket: the point DELETE's bucket holds one file
+    assert(gt.planFiles(gt.currentVersion).size == 4)
+    val (rJobs, rStages, _, rShuffled, rInput) = work("DELETE FROM gcat.dbworkb.t WHERE id >= 10 AND id <= 29")
+    assert((rJobs, rStages, rShuffled) == (1, 1, 0L), s"range DELETE: $rJobs jobs, $rStages stages, $rShuffled shuffle bytes")
+    val (pJobs, pStages, pTasks, pShuffled, pInput) = work("DELETE FROM gcat.dbworkb.t WHERE id = 42")
+    assert((pJobs, pStages, pTasks, pShuffled) == (1, 1, 1, 0L),
+      s"point DELETE: $pJobs jobs, $pStages stages, $pTasks tasks, $pShuffled shuffle bytes")
+    // the rewrite tasks' probe and full reads count as task input, the
+    // way a file scan's do
+    assert(rInput > 0 && pInput > 0, s"input bytes: range $rInput, point $pInput")
+    assert(gt.planFiles(gt.currentVersion).forall(_.min.contains(GraftTable.BucketStatKey)))
+    assert(sql("SELECT count(*) FROM gcat.dbworkb.t").head().getLong(0) == 59L)
   }
 
   test("correlated UPDATE assignments compute per-row SET values via the merge lowering") {

@@ -556,4 +556,44 @@ class PlanSpec extends SparkSpec {
         s"$q: lateral degenerated to a nested-loop join:\n${p.take(2000)}")
     }
   }
+
+  test("t30 pageRank rounds join the cached edge and node sets without re-shuffling them") {
+    // GraftSession pins canChangeCachedPlanOutputPartitioning=false: a
+    // cached relation keeps its repartition()'s HashPartitioning, so a
+    // round exchanges only the new rank/contribution data. Under Spark's
+    // default (true) the planner must re-shuffle above the cached scans
+    // every round; the second half shows that this check sees it.
+    import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.operators.GraphOps
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val edges = spark.range(0, 60)
+      .select((col("id") % 17).as("src"), ((col("id") * 7 + 3) % 17).as("dst"))
+    // a cached scan, reached from an exchange through unary nodes only
+    // (filters, projections): that exchange re-shuffles the cache itself
+    def readsCache(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case _: ShuffleExchangeExec => false
+      case u: UnaryExecNode => readsCache(u.child)
+      case _ => false
+    }
+    def cacheShuffles(): Int = {
+      val (ed, nodes, nodesN) = GraphOps.pageRankInputs(edges)
+      try {
+        val rank0 = nodesN.select(col("node"), (lit(1.0) / col("n")).as("rank"))
+        val plan = GraphOps.pageRankRound(ed, nodesN, rank0, 0.85).queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case other => other
+        }
+        plan.collect { case e: ShuffleExchangeExec if readsCache(e.child) => e }.size
+      } finally Seq(ed, nodes, nodesN).foreach(_.unpersist())
+    }
+    assert(spark.conf.get(key) == "false", s"the session no longer pins $key")
+    assert(cacheShuffles() == 0)
+    spark.conf.set(key, "true")
+    try assert(cacheShuffles() > 0, s"$key=true should re-shuffle the cached inputs")
+    finally spark.conf.set(key, "false")
+  }
 }

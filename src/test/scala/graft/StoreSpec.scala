@@ -653,6 +653,138 @@ class StoreSpec extends SparkSpec {
     assert(t.read().collect().map(_.getLong(0)).toSet == Set(2L, 3L))
   }
 
+  /** Every data file under the table root, commit-log-relative. */
+  private def filesOnDisk(root: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val dataDir = java.nio.file.Paths.get(root, "data")
+    val walk = Files.walk(dataDir)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.matches("[._].*"))
+      .map(p => java.nio.file.Paths.get(root).relativize(p).toString).toSet
+    finally walk.close()
+  }
+
+  test("copy-on-write: a stats candidate without a matching row is neither removed nor rewritten") {
+    val root = freshRoot
+    // two files whose id ranges overlap: evens 0..100 and odds 1..99 —
+    // stats keep both for any id in [1, 99], only one can hold it
+    val t = GraftTable.create(spark, root,
+      spark.range(0, 101, 2).select(col("id"), col("id").cast("string").as("v")).coalesce(1))
+    t.append(spark.range(1, 100, 2).select(col("id"), col("id").cast("string").as("v")).coalesce(1))
+    val Seq(evens, odds) = t.history.map(_.added.map(_.path).head)
+    t.delete(col("id") === 51L)
+    val c = t.history.last
+    assert(c.op == "delete" && c.removed == Seq(odds), c)
+    assert(c.added.map(_.rows) == Seq(49L))
+    // no uncommitted file: every file on disk is referenced by a commit
+    assert(filesOnDisk(root) == t.history.flatMap(_.added).map(_.path).toSet)
+    // both files are candidates again and neither holds a match: no job
+    // output, no commit, no file
+    val before = t.currentVersion
+    assert(t.update(col("id") === 51L, Map("v" -> lit("x"))) == before)
+    assert(t.delete(col("id") === 51L) == before)
+    assert(t.currentVersion == before)
+    assert(filesOnDisk(root) == t.history.flatMap(_.added).map(_.path).toSet)
+    // an UPDATE rewrites only the file holding its match; rows whose
+    // condition is NULL are left as they are. (v was created NOT NULL
+    // from a cast of a non-null column; the NULL appended here must
+    // still land in a readable file.)
+    assert(!t.schema("v").nullable)
+    t.append(Seq((200L, null: String)).toDF("id", "v"))
+    t.update(col("v") === "40" || col("v").isNull && lit(null).cast("boolean"),
+      Map("v" -> lit("forty")))
+    val u = t.history.last
+    assert(u.op == "update" && u.removed == Seq(evens), u)
+    val rows = t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows.size == 101 && rows(40L) == "forty" && rows(200L) == null && rows(42L) == "42")
+  }
+
+  test("copy-on-write: a DELETE that empties a file removes it and adds nothing (parquet, orc)") {
+    for (format <- Seq("parquet", "orc")) {
+      val root = freshRoot
+      val t = GraftTable.create(spark, root,
+        Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1), format = format)
+      t.append(Seq((10L, "x"), (11L, "y")).toDF("id", "v").coalesce(1))
+      val first = t.history.head.added.map(_.path)
+      t.delete(col("id") <= 3L)
+      val c = t.history.last
+      assert(c.op == "delete" && c.removed == first && c.added.isEmpty, s"$format: $c")
+      assert(t.read().collect().map(_.getLong(0)).toSet == Set(10L, 11L), format)
+      assert(filesOnDisk(root) == t.history.flatMap(_.added).map(_.path).toSet, format)
+      // an UPDATE with no condition probes no column at all
+      t.update(lit(true), Map("v" -> upper(col("v"))))
+      assert(t.history.last.removed == t.history(1).added.map(_.path), format)
+      assert(t.read().orderBy("id").select("v").as[String].collect().toSeq == Seq("X", "Y"), format)
+    }
+  }
+
+  test("copy-on-write DML after renameColumn (field ids) and addColumn (old files read NULL)") {
+    import org.apache.spark.sql.types.StringType
+    val root = freshRoot
+    val t = GraftTable.create(spark, root,
+      Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("id", "name", "score").coalesce(1))
+    t.renameColumn("name", "label")
+    t.delete(col("label") === "b")
+    t.update(col("label") === "c", Map("score" -> lit(33.0)))
+    t.addColumn("note", StringType)
+    // the pre-addColumn file reads NULL for note: the probe and the
+    // rewrite both see it
+    t.update(col("note").isNull && col("id") === 1L, Map("note" -> lit("n1")))
+    assert(t.history.last.op == "update" && t.history.last.added.map(_.rows) == Seq(2L))
+    // the rewritten files carry field ids: a second rename still reads them
+    t.renameColumn("label", "tag")
+    val rows = t.read().orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getString(3))).toSeq
+    assert(rows == Seq((1L, "a", 1.0, "n1"), (3L, "c", 33.0, null)))
+    t.delete(col("tag") === "a")
+    assert(t.read().select("id").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("copy-on-write on a bucketed table: DELETE keeps one bucket per file, an UPDATE of the key re-buckets") {
+    val root = freshRoot
+    val n = 4
+    val t = GraftTable.create(spark, root,
+      spark.range(1, 41).select(col("id"), (col("id") * 10).as("v")), bucketBy = Some(("id", n)))
+    def bucketOfFiles: Seq[Int] = t.planFiles(t.currentVersion).map(_.min(GraftTable.BucketStatKey).toInt)
+    val filesBefore = t.planFiles(t.currentVersion).size
+    t.delete(col("id") === 7L || col("id") === 8L)
+    val d = t.history.last
+    // one task per victim file: each output keeps its victim's bucket
+    assert(d.removed.size == d.added.size && d.removed.size <= 2, d)
+    assert(d.added.forall(f => f.min.get(GraftTable.BucketStatKey) == f.max.get(GraftTable.BucketStatKey) &&
+      f.min.contains(GraftTable.BucketStatKey)), d.added)
+    assert(bucketOfFiles.size == filesBefore && bucketOfFiles.distinct.size == filesBefore)
+    // moving keys across buckets goes through the bucketed write
+    t.update(col("id") <= 5L, Map("id" -> (col("id") + 1000L)))
+    assert(t.planFiles(t.currentVersion).forall(_.min.contains(GraftTable.BucketStatKey)))
+    val moved = (1001L to 1005L)
+    moved.foreach { k =>
+      val kept = t.planFiles(t.currentVersion, Seq(col("id") === k))
+      assert(kept.nonEmpty && kept.forall(_.min(GraftTable.BucketStatKey).toInt == GraftTable.bucketOf(k, n)),
+        s"key $k planned into ${kept.map(_.min(GraftTable.BucketStatKey))}")
+      assert(t.read(filters = Seq(col("id") === k)).select("v").as[Long].collect().toSeq == Seq((k - 1000L) * 10))
+    }
+    val ids = t.read().select("id").as[Long].collect().toSet
+    assert(ids == ((6L to 40L).toSet -- Set(7L, 8L)) ++ moved)
+  }
+
+  test("copy-on-write: a Column holding a subquery fails before anything is written") {
+    val root = freshRoot
+    val t = GraftTable.create(spark, root, Seq((1L, 1.0), (2L, 2.0)).toDF("id", "score"))
+    val v = t.currentVersion
+    val files = filesOnDisk(root)
+    val e1 = intercept[UnsupportedOperationException] {
+      t.delete(expr("id = (SELECT max(id) FROM range(3))"))
+    }
+    assert(e1.getMessage.contains("subquery"), e1.getMessage)
+    val e2 = intercept[UnsupportedOperationException] {
+      t.update(col("id") === 1L, Map("score" -> expr("(SELECT 9.0)")))
+    }
+    assert(e2.getMessage.contains("subquery"), e2.getMessage)
+    assert(t.currentVersion == v && filesOnDisk(root) == files)
+    assert(t.read().count() == 2)
+  }
+
   test("merge rejects duplicate source keys instead of duplicating rows") {
     val root = freshRoot
     val t = GraftTable.create(spark, root, Seq((1L, "a")).toDF("id", "v"))
