@@ -130,8 +130,10 @@ final case class GraftBucketPartition(bucketId: Int, files: Array[PartitionedFil
   override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](bucketId))
 }
 
-/** Reads a partition of either layout: its files, one after another. */
-final class GraftReaderFactory(readFile: PartitionedFile => Iterator[InternalRow])
+/** Reads a partition of either layout: its files, one after another,
+  * each file's reader closed before the next opens (as `FileScanRDD`
+  * does) and the open one closed with the partition reader. */
+final class GraftReaderFactory(readFile: PartitionedFile => GraftParquetReadShim.FileRows)
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -140,11 +142,20 @@ final class GraftReaderFactory(readFile: PartitionedFile => Iterator[InternalRow
       case bp: GraftBucketPartition => bp.files
     }
     new PartitionReader[InternalRow] {
-      private val it = files.iterator.flatMap(readFile)
+      private val pending = files.iterator
+      private var rows: GraftParquetReadShim.FileRows = _
       private var cur: InternalRow = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
+      override def next(): Boolean = {
+        while (rows == null || !rows.hasNext) {
+          close()
+          if (!pending.hasNext) return false
+          rows = readFile(pending.next())
+        }
+        cur = rows.next()
+        true
+      }
       override def get(): InternalRow = cur
-      override def close(): Unit = ()
+      override def close(): Unit = if (rows != null) { rows.close(); rows = null }
     }
   }
 }

@@ -18,7 +18,8 @@ private[store] final case class RewriteResult(victims: Seq[String], written: Wri
 /** The task side of GraftTable's copy-on-write DML: for each candidate
   * file of the task, in order,
   *  1. probe: read only the condition's columns (`probeRead`, filters
-  *     pushed down) and stop at the first row where `probeCond` is TRUE;
+  *     pushed down), stop at the first row where `probeCond` is TRUE
+  *     and close the read;
   *  2. on a hit, stream the whole file (`fullRead`, nothing pushed) into
   *     the task's one output file — DELETE keeps the rows `rewrite`'s
   *     `Left` predicate accepts, UPDATE writes its `Right` projection.
@@ -27,8 +28,8 @@ private[store] final case class RewriteResult(victims: Seq[String], written: Wri
   * schema (`probeCond`) and to the table schema (`rewrite`); both reads
   * count in the task's input metrics. */
 private[store] final class RewriteTask(
-    probeRead: PartitionedFile => Iterator[InternalRow],
-    fullRead: PartitionedFile => Iterator[InternalRow],
+    probeRead: PartitionedFile => GraftParquetReadShim.FileRows,
+    fullRead: PartitionedFile => GraftParquetReadShim.FileRows,
     probeCond: Expression,
     rewrite: Either[Expression, Seq[Expression]],
     writer: Option[GraftFileWriterFactory]) extends Serializable {
@@ -39,7 +40,10 @@ private[store] final class RewriteTask(
       hit.initialize(ctx.partitionId())
       val victims = ArrayBuffer.empty[String]
       val matched = files.iterator.filter { case (rel, f) =>
-        val found = counted(probeRead(f)).exists(hit.eval)
+        val rows = probeRead(f)
+        // a hit stops the probe early: release its reader before the
+        // next file opens
+        val found = try counted(rows).exists(hit.eval) finally rows.close()
         if (found) victims += rel
         found
       }

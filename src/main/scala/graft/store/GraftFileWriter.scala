@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.{GraftParquetReadShim, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
@@ -209,18 +209,10 @@ object GraftFileWriter {
                              format: String, tableSch: StructType, options: Map[String, String],
                              bucket: Option[(String, Int)]): GraftFileWriterFactory = {
     // files declare every column optional, as Spark's own file writes
-    // do: a NOT NULL table column (a frame created from non-null
-    // expressions) still receives NULLs from later appends and updates,
-    // and a required Parquet column given a NULL is written as a corrupt
-    // page that only a later read notices
-    def optional(dt: DataType): DataType = dt match {
-      case s: StructType =>
-        StructType(s.fields.map(f => f.copy(dataType = optional(f.dataType), nullable = true)))
-      case ArrayType(e, _) => ArrayType(optional(e), containsNull = true)
-      case MapType(k, v, _) => MapType(optional(k), optional(v), valueContainsNull = true)
-      case other => other
-    }
-    val sch = optional(tableSch).asInstanceOf[StructType]
+    // do: a required Parquet column given a NULL (a NOT NULL table
+    // column that a later append or update filled with one) is written
+    // as a corrupt page that only a later read notices
+    val sch = GraftParquetReadShim.asNullable(tableSch)
     val hconf = new Configuration(spark.sparkContext.hadoopConfiguration)
     // SQL-conf overlay (fieldId.write, session timezone, codec, ...):
     // the session's hadoop-conf view, as every file-format writer expects

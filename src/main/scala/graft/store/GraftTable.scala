@@ -6,6 +6,7 @@ import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.execution.datasources.GraftParquetReadShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -279,9 +280,13 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   }
 
   /** A frame of `sch` with no rows and no files: the relation user
-    * Columns are analyzed against. */
+    * Columns are analyzed against. Every column is nullable, as in
+    * [[readData]]'s frames: a stored NOT NULL is not enforced on the
+    * data, and the optimizer would otherwise fold `IsNull` over such a
+    * column to false and bind it as never NULL. */
   private def emptyFrame(sch: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      GraftParquetReadShim.asNullable(sch))
 
   /** Resolve user Columns to Catalyst expressions against `sch` via the
     * analyzer (public API only: analyze a Filter over an empty relation
@@ -830,7 +835,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * Driver: candidates are [[planFiles]]' (stats + bucket pruning);
     * `cond` — and for UPDATE the `CASE WHEN cond THEN v ELSE col`
     * columns — are analyzed and optimized over an empty relation of the
-    * table schema and bound to its attributes; the Parquet/ORC readers
+    * table schema, every column nullable ([[emptyFrame]]: a NOT NULL
+    * column can hold NULLs), and bound to its attributes; the readers
     * come from GraftParquetReadShim (this session's SQLConf, field-id
     * resolution). Whole candidate files are packed into tasks, never
     * split: Spark's packing on a plain table, one task per file on a
@@ -851,12 +857,14 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   private def rewriteMatching(cond: Column, assign: Option[Map[String, Column]]): Rewrite = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression, Unevaluable}
     import org.apache.spark.TaskContext
-    import org.apache.spark.sql.execution.datasources.{GraftParquetReadShim, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
     val base = currentVersion
     val sch = schemaAt(base)
+    // the rows as the files hold them: every column nullable
+    val fileSch = GraftParquetReadShim.asNullable(sch)
     val updated = assign.map(set => sch.fieldNames.toSeq.map { n =>
       set.get(n)
-        .map(v => when(cond, v.cast(sch(n).dataType)).otherwise(col(n)).as(n))
+        .map(v => when(cond, v.cast(fileSch(n).dataType)).otherwise(col(n)).as(n))
         .getOrElse(col(n))
     })
     val frame = emptyFrame(sch)
@@ -881,12 +889,12 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val layoutCols = bucketColumnAt(base).toSeq ++ clusterSpecNames(sch)
     val moves = assign.exists(_.keySet.exists(layoutCols.contains))
     val probeAttrs = attrs.filter(exprs.head.references.contains)
-    val probeSchema = StructType(sch.fields.filter(f => probeAttrs.exists(_.name == f.name)))
+    val probeSchema = StructType(fileSch.fields.filter(f => probeAttrs.exists(_.name == f.name)))
     val writer = if (moves) None else Some(fileWriterFactory(newWriteDir(), sch))
     val task = new RewriteTask(
-      GraftParquetReadShim.buildReader(spark, format, sch, probeSchema,
+      GraftParquetReadShim.buildReader(spark, format, fileSch, probeSchema,
         GraftParquetReadShim.pushableFilters(exprs.head)),
-      GraftParquetReadShim.buildReader(spark, format, sch, sch, Nil),
+      GraftParquetReadShim.buildReader(spark, format, fileSch, fileSch, Nil),
       BindReferences.bindReference(exprs.head, probeAttrs),
       if (assign.isEmpty) Left(bound(1)) else Right(bound.tail),
       writer)

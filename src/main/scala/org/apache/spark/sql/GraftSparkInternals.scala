@@ -22,9 +22,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * goes through the public DataFrame/DSv2/extension APIs — with ONE
   * sibling exception, [[org.apache.spark.sql.execution.datasources
   * .GraftParquetReadShim]], which re-exports the per-file Parquet/ORC
-  * reader, the file-split packing and the task input metrics that the
-  * catalog's native scan (graft.catalog.GraftScan) and the store's
-  * copy-on-write rewrite need.
+  * reader, the file-split packing, the task input metrics and the
+  * nullable file schema that the catalog's native scan
+  * (graft.catalog.GraftScan) and the store's file reads and writes need.
   */
 object GraftSparkInternals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.execution.datasources
 
+import java.io.Closeable
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -15,6 +17,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.util.NextIterator
 
 /** The one `private[sql]` seam graft's file reads need — the catalog
   * scan (graft.catalog.GraftScan) and the store's copy-on-write rewrite
@@ -29,8 +32,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *    SQLConf — field-id resolution, rebase modes, vectorization — at
   *    build time); the returned closure is serializable and reads one
   *    file split with column pruning (nested fields included) and
-  *    row-group/stripe filter pushdown. Re-implementing a decoder would
-  *    be both slower and wrong.
+  *    row-group/stripe filter pushdown, as a [[FileRows]] its caller
+  *    closes. Re-implementing a decoder would be both slower and wrong.
   *  - [[filePartitions]]: Spark's own split + bin-packing of a file list
   *    into read tasks (`FilePartition.maxSplitBytes` +
   *    `getFilePartitions`), so a catalog scan plans exactly as many
@@ -39,6 +42,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *    conjuncts translate to (`DataSourceStrategy.translateFilter`).
   *  - [[withInputMetrics]]: a task's reads counted in its input metrics
   *    the way `FileScanRDD` counts them.
+  *  - [[asNullable]]: a table schema as its data files hold it.
   */
 object GraftParquetReadShim {
 
@@ -48,16 +52,40 @@ object GraftParquetReadShim {
     case other => throw new IllegalArgumentException(s"unsupported graft file format '$other'")
   }
 
-  /** Build the serializable per-file reader. When the session's
-    * vectorized reader is enabled the closure yields ColumnarBatch
-    * objects disguised as InternalRow (the FileFormat contract that
-    * whole-stage codegen exploits); this wrapper unwraps them back to
-    * rows, so callers always see true InternalRows. */
+  /** `sch` with every column, element and value nullable: a stored NOT
+    * NULL is not enforced on the data (later appends and updates can
+    * write NULL there), so data files declare every column optional and
+    * everything that reads or evaluates over their rows sees it
+    * nullable, as `spark.read.schema` does. */
+  def asNullable(sch: StructType): StructType = sch.asNullable
+
+  /** The rows of one file read. `close` releases the file's reader
+    * (stream, footer, batch) the way `FileScanRDD` does between files;
+    * a read that runs to its end has already released it. */
+  final class FileRows private[GraftParquetReadShim] (raw: Iterator[_])
+      extends Iterator[InternalRow] with Closeable {
+    // a vectorized read may hand ColumnarBatch objects disguised as
+    // InternalRow (the FileFormat contract whole-stage codegen
+    // exploits); unwrap them, so callers always see true InternalRows
+    private val rows = raw.flatMap {
+      case b: ColumnarBatch => b.rowIterator().asScala
+      case r: InternalRow => Iterator.single(r)
+    }
+    override def hasNext: Boolean = rows.hasNext
+    override def next(): InternalRow = rows.next()
+    override def close(): Unit = raw match {
+      case it: NextIterator[_] => it.closeIfNeeded()
+      case c: Closeable => c.close()
+      case _ => ()
+    }
+  }
+
+  /** Build the serializable per-file reader. */
   def buildReader(spark: SparkSession,
                   format: String,
                   dataSchema: StructType,
                   requiredSchema: StructType,
-                  filters: Seq[Filter]): PartitionedFile => Iterator[InternalRow] = {
+                  filters: Seq[Filter]): PartitionedFile => FileRows = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val readFile = fileFormat(format).buildReaderWithPartitionValues(
       sparkSession = classic,
@@ -70,11 +98,7 @@ object GraftParquetReadShim {
       // it just hands rows off the batch)
       options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       hadoopConf = classic.sessionState.newHadoopConfWithOptions(Map.empty))
-    file =>
-      readFile(file).flatMap {
-        case b: ColumnarBatch => b.rowIterator().asScala
-        case r: InternalRow => Iterator.single(r)
-      }
+    file => new FileRows(readFile(file))
   }
 
   /** Read tasks for `(absolute path, length)` files, planned the way

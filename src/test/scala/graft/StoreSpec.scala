@@ -785,6 +785,39 @@ class StoreSpec extends SparkSpec {
     assert(t.read().count() == 2)
   }
 
+  test("copy-on-write over NOT NULL columns holding NULL: DELETE finds the NULLs, UPDATE keeps them (parquet, orc)") {
+    for (format <- Seq("parquet", "orc")) {
+      val root = freshRoot
+      // every column NOT NULL: created from non-null expressions
+      val t = GraftTable.create(spark, root,
+        spark.range(0, 3).select(col("id"), (col("id") * 10).as("n"), col("id").cast("string").as("v")),
+        format = format)
+      assert(t.schema.fields.forall(!_.nullable), s"$format: ${t.schema}")
+      // one file holding NULLs in both NOT NULL columns next to a row
+      // without any
+      t.append(Seq[(Long, Option[Long], Option[String])]((10L, None, None), (11L, Some(5L), Some("eleven")))
+        .toDF("id", "n", "v").coalesce(1))
+      val nullFile = t.history.last.added.map(_.path)
+      def rows: Map[Long, (Any, Any)] =
+        t.read().collect().map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
+      // UPDATEs of the other row rewrite the NULL row through col(...)
+      t.update(col("id") === 11L, Map("v" -> lit("ELEVEN")))
+      assert(t.history.last.removed == nullFile, s"$format: ${t.history.last}")
+      t.update(col("id") === 11L, Map("id" -> lit(12L)))
+      assert(rows == Map(0L -> (0L, "0"), 1L -> (10L, "1"), 2L -> (20L, "2"),
+        10L -> (null, null), 12L -> (5L, "ELEVEN")), format)
+      // a coalesce fallback over the NOT NULL column is kept
+      t.update(col("n").isNull, Map("n" -> coalesce(col("n"), lit(-1L))))
+      assert(rows(10L) == ((-1L, null)), format)
+      // DELETE WHERE v IS NULL removes the row instead of nothing
+      t.delete(col("v").isNull)
+      assert(t.history.last.op == "delete", s"$format: ${t.history.last}")
+      assert(rows == Map(0L -> (0L, "0"), 1L -> (10L, "1"), 2L -> (20L, "2"), 12L -> (5L, "ELEVEN")),
+        format)
+      assert(t.schema.fields.forall(!_.nullable), s"$format: ${t.schema}")
+    }
+  }
+
   test("merge rejects duplicate source keys instead of duplicating rows") {
     val root = freshRoot
     val t = GraftTable.create(spark, root, Seq((1L, "a")).toDF("id", "v"))
