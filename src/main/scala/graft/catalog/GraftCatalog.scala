@@ -59,6 +59,8 @@ import graft.store.GraftTable
   * replaces exactly the written partitions (dynamic mode, Iceberg
   * parity); executors write the files, the driver lands ONE GraftTable
   * commit, keeping the store's atomic-rename optimistic concurrency.
+  * Row-level DML (`DELETE`, `UPDATE`, `MERGE INTO`) takes one route for
+  * every verb: [[GraftDmlRule]].
   */
 final class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog
   with org.apache.spark.sql.connector.catalog.FunctionCatalog {
@@ -483,7 +485,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
 private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
                                           pinned: Long, timeTravel: Boolean)
   extends Table with SupportsRead with SupportsWrite
-  with org.apache.spark.sql.connector.catalog.SupportsDelete {
+  with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
   /** Store handle + pin state for the SQL DML rule (GraftDml). */
   private[catalog] def underlying: GraftTable = gt
@@ -546,23 +548,9 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
     new GraftWriteBuilder(gt)
   }
 
-  /** `DELETE FROM graft.db.t WHERE ...` — only predicates the store can
-    * evaluate are accepted (Spark falls back to an analysis error for
-    * the rest, never a partial delete); the delete itself is
-    * GraftTable's copy-on-write: ONE job over the stats- and
-    * bucket-pruned candidate files, in which each task probes its files
-    * for a matching row and rewrites only those that hold one, then one
-    * atomic commit. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !timeTravel && filters.forall(f => GraftScanBuilder.toColumn(f, schema()).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val conds = filters.flatMap(f => GraftScanBuilder.toColumn(f, schema()))
-    // an unfiltered DELETE is a truncate: one metadata commit, no scan
-    if (conds.isEmpty) gt.truncate()
-    else gt.delete(conds.reduce(_ && _))
-  }
-
+  /** `TRUNCATE TABLE`: one metadata commit. Row-level `DELETE`,
+    * `UPDATE` and `MERGE` never reach the table object: [[GraftDmlRule]]
+    * turns them into commands over the store's copy-on-write engine. */
   override def truncateTable(): Boolean = { gt.truncate(); true }
 }
 

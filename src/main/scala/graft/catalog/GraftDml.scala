@@ -11,22 +11,25 @@ import org.apache.spark.sql.functions.lit
 
 import graft.store.{GraftTable, MergeWhen}
 
-/** SQL `UPDATE` / `MERGE INTO` for graft catalog tables — the last
-  * walden DML verb not reachable from SQL (DML is a SQL-level surface
-  * there: `allow_dml` `tf/superset/superset.tf:57`; Iceberg row-level
-  * DML pinned `tf/main.tf:94`).
+/** SQL `DELETE`, `UPDATE` and `MERGE INTO` for graft catalog tables
+  * (walden's row-level DML is a SQL-level surface: `allow_dml`
+  * `tf/superset/superset.tf:57`; Iceberg row-level DML pinned
+  * `tf/main.tf:94`). All three verbs accept the same predicates.
   *
-  * Route: an injected analyzer resolution rule (the public
-  * `SparkSessionExtensions.injectResolutionRule` seam) rewrites the
-  * RESOLVED `UpdateTable` / `MergeIntoTable` statements over a
-  * [[GraftV2Table]] relation into runnable commands that call the
-  * store's copy-on-write engine directly ([[GraftTable.update]] /
-  * [[GraftTable.mergeInto]]). This route — rather than DSv2
+  * Route — one for every verb: an injected analyzer resolution rule
+  * (the public `SparkSessionExtensions.injectResolutionRule` seam)
+  * rewrites the RESOLVED `DeleteFromTable` / `UpdateTable` /
+  * `MergeIntoTable` statement over a [[GraftV2Table]] relation into a
+  * runnable command that calls the store's copy-on-write engine
+  * ([[GraftTable.delete]] / [[GraftTable.update]] /
+  * [[GraftTable.mergeInto]]), then re-caches the relation so a cached
+  * table sees the commit. This route — rather than DSv2
   * `SupportsRowLevelOperations` — keeps the store's stats-pruned
   * victim-file discovery: Spark's group-based ReplaceData plan rewrites
   * every scanned group, while the store rewrites ONLY files that
   * contain matching rows, which at 100 TB is the difference between a
   * full-table rewrite and a handful of files for a selective UPDATE.
+  * A time-travelled snapshot is read-only: the rule refuses it.
   *
   * Expression hand-off: the statement's expressions arrive resolved
   * against the relation's attribute ids. At command RUN time they are
@@ -34,35 +37,34 @@ import graft.store.{GraftTable, MergeWhen}
   * MERGE source attributes to [[GraftTable.MergeSourcePrefix]]-prefixed
   * names (the store's mergeInto namespace contract) — into fresh
   * by-name references, so they re-resolve inside the store's own
-  * DataFrames.
+  * DataFrames. Any expression the store can evaluate per row therefore
+  * works in every verb: arithmetic, functions, nested fields.
   *
-  * UNCORRELATED subqueries in conditions and assignments (r5 verdict
-  * #5: `UPDATE ... WHERE k IN (SELECT ...)`, `MERGE ... ON ... AND t.v
-  * > (SELECT avg ...)`) are MATERIALIZED ONCE at run time — scalar →
-  * literal, `[NOT] IN (SELECT ...)` → a value-list `In` (SQL
-  * three-valued NULL semantics preserved by the `In` expression),
-  * `[NOT] EXISTS` → boolean literal — and the folded condition then
-  * drives the store's one-job copy-on-write rewrite (stats-pruned
-  * candidates, each probed and rewritten by its own task): one
-  * subquery evaluation, reused everywhere,
-  * and literal/value-list predicates prune files by min/max stats
-  * exactly like hand-written ones. A subquery over the target table
-  * itself reads the pre-update snapshot (evaluate-then-commit — the
-  * standard SQL DML ordering).
+  * UNCORRELATED subqueries in conditions and assignments (`UPDATE ...
+  * WHERE k IN (SELECT ...)`, `MERGE ... ON ... AND t.v > (SELECT avg
+  * ...)`) are MATERIALIZED ONCE at run time — scalar → literal, `[NOT]
+  * IN (SELECT ...)` → a value-list `In` (SQL three-valued NULL
+  * semantics preserved by the `In` expression), `[NOT] EXISTS` →
+  * boolean literal — and the folded condition then drives the store's
+  * one-job copy-on-write rewrite (stats-pruned candidates, each probed
+  * and rewritten by its own task): one subquery evaluation, reused
+  * everywhere, and literal/value-list predicates prune files by min/max
+  * stats exactly like hand-written ones. A subquery over the target
+  * table itself reads the pre-update snapshot (evaluate-then-commit —
+  * the standard SQL DML ordering).
   *
-  * CORRELATED subqueries in UPDATE/DELETE conditions (r6 verdict #3)
-  * lower onto the merge engine: Spark's own decorrelation evaluates
-  * `Filter(cond, target)` into the matched-row set, which becomes the
-  * `MERGE USING` source with row-value identity (null-safe equality
-  * over all columns — sound because DML semantics are functions of row
-  * values) as the ON clause. Correlated subqueries in UPDATE
-  * ASSIGNMENTS (round 7) ride the same lowering: each SET value
-  * becomes a projected column over the matched rows (decorrelated in
-  * the same pre-update pass), and the merge's SET reads it back from
-  * the source namespace.
+  * CORRELATED subqueries in UPDATE/DELETE conditions lower onto the
+  * merge engine: Spark's own decorrelation evaluates `Filter(cond,
+  * target)` into the matched-row set, which becomes the `MERGE USING`
+  * source with row-value identity (null-safe equality over all columns
+  * — sound because DML semantics are functions of row values) as the ON
+  * clause. Correlated subqueries in UPDATE ASSIGNMENTS ride the same
+  * lowering: each SET value becomes a projected column over the matched
+  * rows (decorrelated in the same pre-update pass), and the merge's SET
+  * reads it back from the source namespace.
   *
-  * Correlated subqueries inside MERGE WHEN clauses (round 8, r7
-  * verdict #3) ride two lowerings, by where the correlation sits:
+  * Correlated subqueries inside MERGE WHEN clauses ride two lowerings,
+  * by where the correlation sits:
   *
   *  - only in `WHEN NOT MATCHED` (insert) clauses: those expressions
   *    may reference SOURCE columns alone (SQL rule, enforced by the
@@ -79,15 +81,14 @@ import graft.store.{GraftTable, MergeWhen}
   *    apply (duplicate target rows transform alike; identical-valued
   *    multiple source matches collapse instead of raising the
   *    cardinality error — documented delta from the row-id path).
-  *
-  *  - in `WHEN NOT MATCHED BY SOURCE` clauses (round 9, r8 verdict #5;
-  *    may reference TARGET columns only — SQL rule): the pair set
-  *    widens to a FULL OUTER join, so unmatched target rows ride along
-  *    as (target, null-source) rows with a source-presence marker;
-  *    their correlated flags project over the target side (Spark
-  *    decorrelates, same shape as an UPDATE condition) and each NMBS
-  *    clause re-enters the store merge as a matched clause gated on
-  *    marker-NULL. Row-VALUE semantics as above.
+  *  - in `WHEN NOT MATCHED BY SOURCE` clauses (may reference TARGET
+  *    columns only — SQL rule): the pair set widens to a FULL OUTER
+  *    join, so unmatched target rows ride along as (target,
+  *    null-source) rows with a source-presence marker; their correlated
+  *    flags project over the target side (Spark decorrelates, same
+  *    shape as an UPDATE condition) and each NMBS clause re-enters the
+  *    store merge as a matched clause gated on marker-NULL. Row-VALUE
+  *    semantics as above.
   *
   *  The one remaining loud error: a correlated subquery in the MERGE
   *  ON condition itself (no lowering — move it into a WHEN clause).
@@ -103,8 +104,8 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         GraftUpdateCommand(g.underlying, u.condition.map(RawExpr), set, tgt, rel)
       }
 
-    // MERGE WITH SCHEMA EVOLUTION (r6 verdict #4) needs no graft-side
-    // lowering: Spark's ResolveMergeIntoSchemaEvolution computes the
+    // MERGE WITH SCHEMA EVOLUTION needs no graft-side lowering: Spark's
+    // ResolveMergeIntoSchemaEvolution computes the
     // additive TableChanges from the source schema and applies them
     // through TableCatalog.alterTable BEFORE the statement resolves —
     // that is our ALTER TABLE path (fresh field ids, metadata-only
@@ -135,15 +136,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           tgt, src, rel)
       }
 
-    // DELETE stays on the native DSv2 SupportsDelete path (stats-pruned
-    // copy-on-write) EXCEPT when the condition carries a subquery
-    // ANYWHERE in its tree — V1 Filters cannot express one, so Spark's
-    // path dead-ends in an analysis error. Those route through the same
-    // materialize-once machinery as UPDATE/MERGE (Trino/Iceberg parity:
-    // `DELETE FROM t WHERE k IN (SELECT ...)`), or the correlated
-    // lowering when the subquery references target columns.
-    case dft: DeleteFromTable if dft.resolved &&
-        dft.condition.exists(c => c.exists(_.isInstanceOf[SubqueryExpression])) =>
+    case dft: DeleteFromTable if dft.resolved =>
       graftRelation(dft.table).fold(plan) { case (rel, g) =>
         require(!g.isTimeTravel, s"cannot DELETE from a time-travelled snapshot of ${g.name()}")
         GraftDeleteCommand(g.underlying, RawExpr(dft.condition), byId(rel.output), rel)
@@ -169,7 +162,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     attrs.map(a => a.exprId -> a.name).toMap
 
   /** Assignment key → (target column, struct path). `SET s.f = expr`
-    * (r5 verdict #6) peels the resolved `GetStructField` chain down to
+    * peels the resolved `GetStructField` chain down to
     * the base attribute; the command rebuilds the struct copy-on-write
     * with `Column.withField`, so sibling fields and the schema's
     * field-id metadata are untouched (the commit is schema-preserving).
@@ -232,8 +225,21 @@ private[catalog] object GraftDmlExprs {
     case _ => false
   }
 
+  /** Reserved name prefix for computed columns the correlated lowerings
+    * project onto their sources (`__graft_set_N`, `__graft_when_*`,
+    * `__graft_s_*`, `__graft_t_present`). A real column already using
+    * the prefix would make source-namespace resolution ambiguous in the
+    * merge — reject loudly up front. */
+  val ReservedPrefix = "__graft_"
+  def requireNoReserved(attrs: Seq[Attribute], what: String): Unit = {
+    val bad = attrs.map(_.name).filter(_.startsWith(ReservedPrefix))
+    if (bad.nonEmpty) throw new UnsupportedOperationException(
+      s"$what columns may not start with the reserved prefix '$ReservedPrefix' " +
+        s"when a correlated DML lowering is in play: ${bad.mkString(",")}")
+  }
+
   /** The matched-row set of a correlated UPDATE/DELETE condition,
-    * evaluated by SPARK'S OWN subquery machinery (r6 verdict #3): a
+    * evaluated by SPARK'S OWN subquery machinery: a
     * `Filter(cond, relation)` plan is exactly `SELECT * FROM t WHERE
     * <cond>`, which the optimizer decorrelates into the usual
     * semi/anti-join plans — no hand-rolled decorrelation, arbitrary
@@ -243,7 +249,7 @@ private[catalog] object GraftDmlExprs {
     * sound because a DML condition and its SET clauses are functions
     * of row values alone — equal rows match and transform equally.
     *
-    * `setValues` (round 7) extends the same machinery to correlated
+    * `setValues` extends the same machinery to correlated
     * ASSIGNMENTS: each SET value expression rides as a projected
     * column over the matched rows — correlated scalar subqueries are
     * legal under Project, so Spark decorrelates them into left outer
@@ -252,19 +258,6 @@ private[catalog] object GraftDmlExprs {
     * SAME pre-update-snapshot pass as the condition. The computed
     * columns are deterministic functions of row values, so the
     * row-value distinct stays sound. */
-  /** Reserved name prefix for computed columns the correlated lowerings
-    * project onto their sources (`__graft_set_N`, `__graft_when_*`,
-    * `__graft_s_*`, `__graft_t_present`). A real column already using
-    * the prefix would make source-namespace resolution ambiguous in the
-    * merge — reject loudly up front (ADVICE r7 #4). */
-  val ReservedPrefix = "__graft_"
-  def requireNoReserved(attrs: Seq[Attribute], what: String): Unit = {
-    val bad = attrs.map(_.name).filter(_.startsWith(ReservedPrefix))
-    if (bad.nonEmpty) throw new UnsupportedOperationException(
-      s"$what columns may not start with the reserved prefix '$ReservedPrefix' " +
-        s"when a correlated DML lowering is in play: ${bad.mkString(",")}")
-  }
-
   def correlatedMatches(session: SparkSession, rel: LogicalPlan,
                         cond: Expression,
                         setValues: Seq[Expression] = Nil): org.apache.spark.sql.DataFrame = {
@@ -311,9 +304,8 @@ private[catalog] object GraftDmlExprs {
     * appearing in a MERGE condition plus several WHEN clauses (or in
     * both condition and assignment) is evaluated once and every
     * occurrence folds to the identical result — a statement can never
-    * observe two snapshots of a concurrently-committed table
-    * (ADVICE r6; this is what "once per statement" in the class doc
-    * promises). */
+    * observe two snapshots of a concurrently-committed table (this is
+    * what "once per statement" in the class doc promises). */
   final class Materializer(session: SparkSession) {
     private val memo =
       scala.collection.mutable.HashMap[(String, LogicalPlan), Expression]()
@@ -357,7 +349,7 @@ private[catalog] object GraftDmlExprs {
         In(in.values.head,
           rowsOnce(q, MaxInValues).toSeq.map(r => Literal.create(r.get(0), elemType)))
       case in: InSubquery =>
-        // multi-column `(a,b) IN (SELECT x,y ...)` (r7 verdict #4):
+        // multi-column `(a,b) IN (SELECT x,y ...)`:
         // folded to an OR-chain of per-column conjunctions rather than
         // an `In` over structs — Spark's struct equality treats NULL
         // fields as equal values (ordering comparison), which breaks
@@ -456,10 +448,27 @@ private[catalog] object GraftDmlExprs {
     }
 }
 
+/** What the three DML commands share: no output rows, and after the
+  * store's commit every cached plan over the target table is re-cached
+  * by the table's name — as Spark's own DSv2 DELETE does — so a `CACHE
+  * TABLE`d graft table serves the new snapshot instead of the rows it
+  * held before the statement. */
+sealed trait GraftDmlCommand extends LeafRunnableCommand {
+  def rel: DataSourceV2Relation
+  protected def write(session: SparkSession): Unit
+  override def output: Seq[Attribute] = Nil
+  override def run(session: SparkSession): Seq[Row] = {
+    write(session)
+    for (c <- rel.catalog; id <- rel.identifier)
+      GraftSparkInternals.recacheTable(session, c.name +: id.namespace.toSeq :+ id.name)
+    Seq.empty
+  }
+}
+
 /** `UPDATE <graft table> SET ... [WHERE ...]` → one copy-on-write
   * commit via [[GraftTable.update]] (one job over the stats-pruned
   * candidate files; only files holding a match are rewritten).
-  * A CORRELATED subquery in the condition (r6 verdict #3) lowers onto
+  * A CORRELATED subquery in the condition or an assignment lowers onto
   * [[GraftTable.mergeInto]]: the matched-row set (computed by Spark's
   * own decorrelation over the pre-update snapshot) is the USING
   * source, row-value identity the ON clause, and the SET map the one
@@ -468,10 +477,9 @@ private[catalog] object GraftDmlExprs {
 final case class GraftUpdateCommand(gt: GraftTable, cond: Option[RawExpr],
                                     set: Seq[DmlAssign],
                                     tgt: Map[ExprId, String],
-                                    rel: LogicalPlan)
-  extends LeafRunnableCommand {
-  override def output: Seq[Attribute] = Nil
-  override def run(session: SparkSession): Seq[Row] = {
+                                    rel: DataSourceV2Relation)
+  extends GraftDmlCommand {
+  override protected def write(session: SparkSession): Unit = {
     val mat = new GraftDmlExprs.Materializer(session)
     val corrAssigns = set.exists(a => GraftDmlExprs.hasCorrelated(a.value.e))
     if (corrAssigns || cond.exists(c => GraftDmlExprs.hasCorrelated(c.e))) {
@@ -495,39 +503,38 @@ final case class GraftUpdateCommand(gt: GraftTable, cond: Option[RawExpr],
     } else
       gt.update(cond.map(mat.translate(_, tgt, Map.empty)).getOrElse(lit(true)),
         mat.buildSet(set, tgt, Map.empty))
-    Seq.empty
   }
 }
 
-/** `DELETE FROM <graft table> WHERE <condition with subqueries>` → one
-  * copy-on-write commit via [[GraftTable.delete]]; the folded condition
-  * (subqueries materialized once) prunes and probes the candidate files
-  * exactly like the predicate-only path. Correlated conditions lower
-  * onto a row-identity merge with one WHEN MATCHED DELETE clause
-  * (see [[GraftUpdateCommand]]). */
+/** `DELETE FROM <graft table> [WHERE ...]`, by the condition's form:
+  *  - literal TRUE (no WHERE): [[GraftTable.truncate]], one metadata
+  *    commit that reads no file;
+  *  - a CORRELATED subquery: a row-identity merge with one WHEN MATCHED
+  *    DELETE clause (see [[GraftUpdateCommand]]);
+  *  - anything else: [[GraftTable.delete]] of the translated condition
+  *    (subqueries materialized once) — the same translation UPDATE
+  *    uses, so DELETE accepts exactly the conditions UPDATE accepts. */
 final case class GraftDeleteCommand(gt: GraftTable, cond: RawExpr,
                                     tgt: Map[ExprId, String],
-                                    rel: LogicalPlan)
-  extends LeafRunnableCommand {
-  override def output: Seq[Attribute] = Nil
-  override def run(session: SparkSession): Seq[Row] = {
-    if (GraftDmlExprs.hasCorrelated(cond.e)) {
-      val matches = GraftDmlExprs.correlatedMatches(session, rel, cond.e)
-      gt.mergeInto(matches, GraftDmlExprs.rowIdentityOn(gt.schema),
-        Seq(MergeWhen(None, None)), Nil, Nil, "delete")
-    } else
+                                    rel: DataSourceV2Relation)
+  extends GraftDmlCommand {
+  override protected def write(session: SparkSession): Unit = cond.e match {
+    case Literal.TrueLiteral => gt.truncate()
+    case c if GraftDmlExprs.hasCorrelated(c) =>
+      gt.mergeInto(GraftDmlExprs.correlatedMatches(session, rel, c),
+        GraftDmlExprs.rowIdentityOn(gt.schema), Seq(MergeWhen(None, None)), Nil, Nil, "delete")
+    case _ =>
       gt.delete(new GraftDmlExprs.Materializer(session).translate(cond, tgt, Map.empty))
-    Seq.empty
   }
 }
 
 /** `MERGE INTO <graft table> USING <source> ON ... WHEN ...` → one
   * atomic merge commit via [[GraftTable.mergeInto]]. The USING source's
   * analyzed plan rides along and materializes at run time. Correlated
-  * subqueries in WHEN clauses take one of two lowerings (class doc of
-  * [[GraftDmlRule]]): source-side flag projection when only insert
-  * clauses correlate; the row-identity pair-set merge when matched
-  * clauses do. */
+  * subqueries in WHEN clauses (class doc of [[GraftDmlRule]]): when
+  * only insert clauses correlate, their expressions become flag columns
+  * projected onto the source; when matched or not-matched-by-source
+  * clauses do, the merge runs over the row-identity pair set. */
 final case class GraftMergeCommand(gt: GraftTable, source: LogicalPlan,
                                    condition: RawExpr,
                                    matched: Seq[RawMergeWhen],
@@ -535,10 +542,9 @@ final case class GraftMergeCommand(gt: GraftTable, source: LogicalPlan,
                                    notMatchedBySource: Seq[RawMergeWhen],
                                    tgt: Map[ExprId, String],
                                    src: Map[ExprId, String],
-                                   rel: LogicalPlan)
-  extends LeafRunnableCommand {
+                                   rel: DataSourceV2Relation)
+  extends GraftDmlCommand {
   import GraftDmlExprs._
-  override def output: Seq[Attribute] = Nil
 
   private def whenCorr(w: RawMergeWhen): Boolean =
     w.cond.exists(c => hasCorrelated(c.e)) ||
@@ -562,43 +568,34 @@ final case class GraftMergeCommand(gt: GraftTable, source: LogicalPlan,
     }
   }
 
-  override def run(session: SparkSession): Seq[Row] = {
+  override protected def write(session: SparkSession): Unit =
     if (matched.exists(whenCorr) || notMatchedBySource.exists(whenCorr))
       runRowIdentity(session)
-    else if (notMatched.exists(whenCorr)) runSourceFlags(session)
     else runDirect(session)
-    Seq.empty
-  }
 
+  /** The merge as written, over the real source rows (multiplicity
+    * preserved, every clause kind intact). A correlated subquery in an
+    * insert clause references source columns alone (analyzer-enforced
+    * SQL rule), so it rides as a computed column projected onto the
+    * source plan — Spark decorrelates under Project — and the clause
+    * reads it back; only then does the source carry extra columns, and
+    * only then must its own names stay clear of the reserved prefix. */
   private def runDirect(session: SparkSession): Unit = {
-    val mat = new Materializer(session)
-    def tr(r: RawExpr): Column = mat.translate(r, tgt, src)
-    def when(w: RawMergeWhen): MergeWhen =
-      MergeWhen(w.cond.map(tr), w.assigns.map(mat.buildSet(_, tgt, src)))
-    gt.mergeInto(GraftSparkInternals.ofRows(session, source),
-      tr(condition), matched.map(when), notMatched.map(when),
-      notMatchedBySource.map(when))
-  }
-
-  /** Correlation ONLY in insert clauses: those expressions reference
-    * source columns alone (analyzer-enforced SQL rule), so each rides
-    * as a computed column projected onto the source plan — Spark
-    * decorrelates under Project — and the merge is otherwise the
-    * direct one: real rows, multiplicity preserved, every clause kind
-    * intact. */
-  private def runSourceFlags(session: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.expressions.Alias
-    requireNoReserved(source.output, "merge source")
     val proj = new Projector("__graft_when_i")
-    val ins2 = notMatched.map(proj.lower)
-    val src2 = Project(
-      source.output ++ proj.cols.map { case (e, n) => Alias(e, n)() }, source)
+    val ins = notMatched.map(proj.lower)
+    val srcPlan =
+      if (proj.cols.isEmpty) source
+      else {
+        requireNoReserved(source.output, "merge source")
+        Project(source.output ++ proj.cols.map { case (e, n) => Alias(e, n)() }, source)
+      }
     val mat = new Materializer(session)
     def tr(r: RawExpr): Column = mat.translate(r, tgt, src)
     def when(w: RawMergeWhen): MergeWhen =
       MergeWhen(w.cond.map(tr), w.assigns.map(mat.buildSet(_, tgt, src)))
-    gt.mergeInto(GraftSparkInternals.ofRows(session, src2),
-      tr(condition), matched.map(when), ins2.map(when),
+    gt.mergeInto(GraftSparkInternals.ofRows(session, srcPlan),
+      tr(condition), matched.map(when), ins.map(when),
       notMatchedBySource.map(when))
   }
 
@@ -615,7 +612,7 @@ final case class GraftMergeCommand(gt: GraftTable, source: LogicalPlan,
     * comparable columns, so map-typed columns on either side are
     * rejected loudly.
     *
-    * Correlated `WHEN NOT MATCHED BY SOURCE` (round 9, r8 verdict #5)
+    * Correlated `WHEN NOT MATCHED BY SOURCE`
     * rides the SAME pair-set machinery with the join widened to FULL
     * OUTER: target rows with no ON-partner surface as (target,
     * null-source) rows carrying a source-presence marker NULL — their
@@ -673,7 +670,7 @@ final case class GraftMergeCommand(gt: GraftTable, source: LogicalPlan,
     // marker name must sit OUTSIDE the __graft_s_<col> rename image: a
     // source column literally named 'present' renames to
     // __graft_s_present, which would duplicate the marker and make its
-    // gate reference ambiguous (ADVICE r9 #4)
+    // gate reference ambiguous
     val sPresent = "__graft_srcmark"
     val (rightPlan, sMarker) =
       if (nmbsCorr) {

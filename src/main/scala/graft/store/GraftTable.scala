@@ -241,13 +241,19 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     }
 
   /** Bucket set a resolved predicate confines the bucket column to:
-    * EqualTo/In/InSet on the column (literal side only), And-composed.
-    * None = no usable conjunct (no pruning from this expression). */
+    * EqualTo/In/InSet on the column (literal side only — a literal the
+    * analyzer wrapped in a Cast folds, as in [[StatsPruner]]),
+    * And-composed. None = no usable conjunct (no pruning from this
+    * expression). */
   private def bucketTargets(e: Expression, colName: String, n: Int): Option[Set[Int]] = {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, In, InSet}
     def key(v0: Any, dt: DataType): Option[Int] = dt match {
       case IntegerType | LongType => Some(GraftTable.bucketOf(v0, n))
       case _ => None
+    }
+    def keyOf(v: Expression): Option[Int] = v match {
+      case Literal(v0, dt) => key(v0, dt)
+      case _ => StatsPruner.Lit.unapply(v).flatMap(key(_, v.dataType))
     }
     def all(bs: Seq[Option[Int]]): Option[Set[Int]] =
       if (bs.forall(_.isDefined)) Some(bs.flatten.toSet) else None
@@ -257,13 +263,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           case (Some(a), Some(b)) => Some(a intersect b)
           case (a, b) => a.orElse(b)
         }
-      case EqualTo(a: AttributeReference, Literal(v0, dt)) if a.name == colName =>
-        key(v0, dt).map(Set(_))
-      case EqualTo(Literal(v0, dt), a: AttributeReference) if a.name == colName =>
-        key(v0, dt).map(Set(_))
-      case In(a: AttributeReference, vs) if a.name == colName &&
-          vs.forall(_.isInstanceOf[Literal]) =>
-        all(vs.map { case Literal(v0, dt) => key(v0, dt) })
+      case EqualTo(a: AttributeReference, v) if a.name == colName => keyOf(v).map(Set(_))
+      case EqualTo(v, a: AttributeReference) if a.name == colName => keyOf(v).map(Set(_))
+      case In(a: AttributeReference, vs) if a.name == colName => all(vs.map(keyOf))
       case InSet(a: AttributeReference, set) if a.name == colName =>
         all(set.toSeq.map(v0 => key(v0, a.dataType)))
       case _ => None
@@ -383,8 +385,17 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * the schema and its tryCommit. A retry must never replay a captured
     * pre-DDL schema json: that would silently drop the racer's new
     * column from the head (and its name is then permanently retired).
-    *  - [[PinSchema]]: the op IS a schema change (altschema, rollback) —
+    *  - [[PinSchema]]: the op restores a known schema (rollback) —
     *    publish exactly this json.
+    *  - [[EvolveSchema]]: the op IS a schema change (altschema) — derive
+    *    the next schema from the PARENT's on every attempt. A stale
+    *    payload must never be replayed after a racing DDL commit lands:
+    *    two concurrent addColumns would otherwise both base on the same
+    *    parent, the loser's retry would drop the winner's column, and
+    *    both could mint the SAME field id, binding one column's name to
+    *    the other's bytes under id resolution. All validation (name
+    *    clashes, retired names, id allocation) therefore lives inside
+    *    `next`, where it sees every previously-landed change.
     *  - [[InheritSchema]]: additive data commits (appends, overwrite) —
     *    re-read the PARENT's schema on every attempt; the op's files
     *    simply predate any concurrently-added column (read as NULL by
@@ -393,8 +404,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     *    change means the rewrite was computed under a stale column set
     *    (a concurrently-added column's values in victim files would be
     *    silently dropped), so drift fails loudly like a file conflict. */
-  private sealed trait SchemaMode { def captured: String }
+  private sealed trait SchemaMode
   private final case class PinSchema(captured: String) extends SchemaMode
+  private final case class EvolveSchema(next: StructType => StructType) extends SchemaMode
   private final case class InheritSchema(captured: String) extends SchemaMode
   private final case class SameSchema(captured: String) extends SchemaMode
 
@@ -446,6 +458,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       }
       val schemaJson = schema match {
         case PinSchema(j) => j
+        case EvolveSchema(next) => next(schemaAt(parent)).json
         case InheritSchema(j) => if (parent == 0L) j else log.schemaJsonAt(parent)
         case SameSchema(j) =>
           val now = if (parent == 0L) j else log.schemaJsonAt(parent)
@@ -470,11 +483,18 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
                           schema: SchemaMode, basedOn: Long = -1L): Long =
     commitOnce(op, added, removed, schema, basedOn, None)._1
 
-  /** Map absolute scanned file names back to commit-log-relative paths
-    * (file names are UUID-part-named — unique per table). */
-  private def victimPaths(hitAbs: Seq[String], live: Seq[FileStat]): Seq[String] = {
+  /** The live files of `tgt` (a read of snapshot files `live`) holding
+    * a row that `cond` joins to a row of `other`: ONE semi join (AQE /
+    * broadcast pick the strategy) collecting file NAMES, not rows,
+    * mapped back to commit-log-relative paths (file names are
+    * UUID-part-named — unique per table). */
+  private def filesJoining(tgt: DataFrame, other: DataFrame, cond: Column,
+                           live: Seq[FileStat]): Seq[String] = {
+    val hitAbs = tgt.withColumn("__f", input_file_name())
+      .join(other, cond, "left_semi")
+      .select("__f").distinct().collect().map(_.getString(0))
     val byName = live.map(f => f.path.split('/').last -> f.path).toMap
-    hitAbs.flatMap(a => byName.get(a.substring(a.lastIndexOf('/') + 1)))
+    hitAbs.toSeq.flatMap(a => byName.get(a.substring(a.lastIndexOf('/') + 1)))
   }
 
   /** Align an incoming frame to the table schema: columns resolve by
@@ -794,10 +814,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           val tgt = read(asOfVersion = Some(base))
           val delP = del.select(sch.fieldNames.map(n => col(n).as(s"__del_$n")).toIndexedSeq: _*)
           val joinCond = sch.fieldNames.map(n => col(n) <=> col(s"__del_$n")).reduce(_ && _)
-          val hitAbs = tgt.withColumn("__f", input_file_name())
-            .join(delP, joinCond, "left_semi")
-            .select("__f").distinct().collect().map(_.getString(0))
-          victimPaths(hitAbs.toSeq, live)
+          filesJoining(tgt, delP, joinCond, live)
         }
       val survivorFiles =
         if (victims.isEmpty) Nil
@@ -948,9 +965,10 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   }
 
   /** MERGE keyed on equality of `keyCols`: matched target rows take the
-    * source's values (upsert); unmatched source rows are inserted.
-    * Copy-on-write on the matched files only; the not-matched-insert
-    * side is ONE anti-join against the full target.
+    * source's values (upsert); unmatched source rows are inserted. One
+    * [[mergeInto]] with `===` on every key — so a NULL key never
+    * matches and its source row inserts — one WHEN MATCHED UPDATE of
+    * every column and one WHEN NOT MATCHED INSERT of every column.
     */
   def merge(source: DataFrame, keyCols: Seq[String]): Long =
     merge(source, keyCols, "merge")
@@ -959,39 +977,18 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * hook for streaming upsert sinks (the label records the batch id,
     * exactly like [[appendAs]] for append sinks). */
   private[graft] def merge(source: DataFrame, keyCols: Seq[String], op: String): Long = {
-    val base = currentVersion
-    val sch = schema
-    val tgt = read(asOfVersion = Some(base))
-    val srcK = source.select(sch.fieldNames.map(col).toIndexedSeq: _*)
-    val keyIn = keyCols.map(k => col(k))
+    import GraftTable.MergeSourcePrefix
+    val names = schema.fieldNames.toSeq
+    val srcK = source.select(names.map(col): _*)
     // SQL/Iceberg MERGE errors when one target row matches several
-    // source rows; a blind left join would silently duplicate it.
-    val dupKeys = srcK.groupBy(keyIn: _*).count().filter(col("count") > 1).limit(1).count()
+    // source rows; checked on the source alone, before any target read
+    val dupKeys = srcK.groupBy(keyCols.map(col): _*).count()
+      .filter(col("count") > 1).limit(1).count()
     require(dupKeys == 0,
       s"merge source has duplicate keys on (${keyCols.mkString(",")}); deduplicate first")
-    // files containing rows whose key appears in source (broadcast the
-    // source keys when small; Catalyst/AQE picks the join strategy)
-    val hitAbs = tgt.withColumn("__f", input_file_name())
-      .join(srcK.select(keyIn: _*).distinct(), keyCols, "left_semi")
-      .select("__f").distinct().collect().map(_.getString(0))
-    val victims = victimPaths(hitAbs.toSeq, log.snapshotFiles(base))
-
-    val updatedVictims =
-      if (victims.isEmpty) None
-      else {
-        val vdf = readData(victims.map(p => s"$root/$p"), sch)
-        // matched -> source row wins; unmatched-in-victim-file -> keep
-        val srcRenamed = srcK.select(sch.fieldNames.map(n => col(n).as(s"__s_$n")).toIndexedSeq: _*)
-        val joinCond = keyCols.map(k => vdf(k) === srcRenamed(s"__s_$k")).reduce(_ && _)
-        // matched iff every source key col is non-null after the left join
-        val matched = keyCols.map(k => col(s"__s_$k").isNotNull).reduce(_ && _)
-        Some(vdf.join(srcRenamed, joinCond, "left").select(
-          sch.fieldNames.map(n =>
-            when(matched, col(s"__s_$n")).otherwise(col(n)).as(n)).toIndexedSeq: _*))
-      }
-    val inserts = srcK.join(tgt.select(keyIn: _*).distinct(), keyCols, "left_anti")
-    val toWrite = (updatedVictims.toSeq :+ inserts).reduce(_ unionByName _)
-    commitRetry(op, writeFiles(toWrite), victims, SameSchema(sch.json), basedOn = base)
+    val every = Some(names.map(n => n -> col(MergeSourcePrefix + n)).toMap)
+    mergeInto(srcK, keyCols.map(k => col(k) === col(MergeSourcePrefix + k)).reduce(_ && _),
+      Seq(MergeWhen(None, every)), Seq(MergeWhen(None, every)), Nil, op)
   }
 
   /** General MERGE with ordered WHEN clauses — the engine behind SQL
@@ -1073,10 +1070,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       if (notMatchedBySource.nonEmpty) live.map(_.path)
       else if (matched.isEmpty) Nil // insert-only merge never rewrites
       else {
-        val hitAbs = tgt.withColumn("__f", input_file_name())
-          .join(srcP, condition, "left_semi")
-          .select("__f").distinct().collect().map(_.getString(0))
-        victimPaths(hitAbs.toSeq, live)
+        filesJoining(tgt, srcP, condition, live)
       }
 
     // ---- rewrite the victim files
@@ -1351,31 +1345,6 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     log.versions.exists(v => DataType.fromJson(log.schemaJsonAt(v))
       .asInstanceOf[StructType].fieldNames.contains(name))
 
-  /** Schema-evolution commit loop: `build` derives the next schema from
-    * the CURRENT head schema and is RE-RUN on every retry — a stale
-    * payload must never be replayed after a racing DDL commit lands
-    * (two concurrent addColumns would otherwise both base on the same
-    * parent: the loser's retry would drop the winner's column, and two
-    * columns could mint the SAME field id, binding one column's name to
-    * the other's bytes under id resolution). All validation (name
-    * clashes, retired names, id allocation) therefore lives inside
-    * `build`, where it sees every previously-landed change. */
-  private def commitSchemaChange(build: StructType => StructType): Long = {
-    var attempts = 0
-    while (attempts < 20) {
-      val parent = log.latestVersion
-      val next = build(schemaAt(parent))
-      val c = Commit(parent + 1, parent, "altschema", Nil, Nil, next.json,
-        System.currentTimeMillis())
-      if (log.tryCommit(c)) {
-        log.setRef("main", parent + 1)
-        return parent + 1
-      }
-      attempts += 1
-    }
-    throw new IllegalStateException(s"commit conflict not resolved after $attempts attempts: $root")
-  }
-
   /** Safe schema evolution: append a nullable column (Iceberg
     * `ALTER TABLE ... ADD COLUMN` parity). Metadata-only commit — no
     * data files are touched; files written before the change read the
@@ -1384,7 +1353,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * the historical watermark. Retired names are refused (stats are
     * name-keyed; see [[nameEverUsed]]). */
   def addColumn(name: String, dataType: DataType): Long =
-    commitSchemaChange { sch =>
+    commitRetry("altschema", Nil, Nil, EvolveSchema { sch =>
       require(!sch.fieldNames.contains(name), s"column $name already exists")
       require(!nameEverUsed(name),
         s"column name '$name' was used earlier in this table's history (dropped or " +
@@ -1397,7 +1366,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
         else base.copy(metadata = new MetadataBuilder()
           .putLong(GraftTable.FieldIdKey, maxFieldIdEver + 1L).build())
       StructType(sch.fields :+ field)
-    }
+    })
 
   /** Rename a column in ONE metadata commit (Iceberg `ALTER TABLE ...
     * RENAME COLUMN` parity, pinned in walden via `tf/main.tf:94`).
@@ -1411,7 +1380,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * resumes as files are rewritten (compact or DML); correctness never
     * depends on it. */
   def renameColumn(oldName: String, newName: String): Long =
-    commitSchemaChange { sch =>
+    commitRetry("altschema", Nil, Nil, EvolveSchema { sch =>
       require(format == "parquet",
         "column rename needs parquet field-id resolution; ORC tables cannot rename " +
           "(drop + add states the true semantics there)")
@@ -1424,7 +1393,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           "are name-keyed, so reusing it could mis-prune — pick a fresh name")
       StructType(sch.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
-    }
+    })
 
   /** Drop a column (metadata-only commit — Iceberg `ALTER TABLE ...
     * DROP COLUMN` parity). Data files keep the bytes; reads resolve
@@ -1433,7 +1402,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * name and field id are both retired for good ([[addColumn]] /
     * [[maxFieldIdEver]]). */
   def dropColumn(name: String): Long =
-    commitSchemaChange { sch =>
+    commitRetry("altschema", Nil, Nil, EvolveSchema { sch =>
       require(sch.fieldNames.contains(name), s"no column $name")
       require(sch.fields.length > 1, "cannot drop the only column")
       // a cluster column cannot be dropped: every write resolves the
@@ -1446,7 +1415,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       require(dropped.forall(id => !bucketSpec.exists(_._1 == id)),
         s"column $name is the table's bucket column; it cannot be dropped")
       StructType(sch.fields.filterNot(_.name == name))
-    }
+    })
 
   /** Delete data files no longer referenced by any version >= the
     * oldest retained ref (vacuum/GC). Returns removed file count.

@@ -76,7 +76,7 @@ object StatsPruner {
 
   /** Literal or constant-foldable subexpression (the analyzer wraps
     * literals in Casts when types differ — fold them here). */
-  private object Lit {
+  private[store] object Lit {
     def unapply(e: Expression): Option[Any] = e match {
       case Literal(v, _) => Option(v)
       case _ if e.foldable && e.references.isEmpty =>

@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Two `private[sql]` seams graft's SQL DML rewrite needs, re-exported
+/** The classic-API internals graft needs, re-exported
   * from inside the `org.apache.spark.sql` package (the standard shim
   * pattern connector libraries use for classic-API internals):
   *
@@ -12,7 +12,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    source plan into the store's merge input without re-parsing SQL;
   *  - [[column]]: wrap a Catalyst Expression as a public Column — how
   *    translated assignment/condition expressions cross back into the
-  *    public DataFrame API the store is built on.
+  *    public DataFrame API the store is built on;
+  *  - [[recacheTable]]: re-cache every cached plan that reads a
+  *    catalog table (by its qualified name parts, time-travelled reads
+  *    excepted) — what the SQL DML commands do after their commit,
+  *    exactly as Spark's own DSv2 DELETE does;
   *  - [[asStreamingBatch]]: re-tag a batch DataFrame as streaming — the
   *    one thing a V1 streaming `Source.getBatch` result must carry
   *    (MicroBatchExecution asserts `isStreaming`); Delta's DeltaSource
@@ -31,6 +35,11 @@ object GraftSparkInternals {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def recacheTable(spark: SparkSession, nameParts: Seq[String]): Unit = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    cs.sharedState.cacheManager.recacheTableOrView(cs, nameParts, false)
+  }
 
   def asStreamingBatch(df: DataFrame): DataFrame = {
     val cs = df.sparkSession.asInstanceOf[classic.SparkSession]

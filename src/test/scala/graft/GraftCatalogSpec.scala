@@ -388,6 +388,103 @@ class GraftCatalogSpec extends SparkSpec {
     assert(gt.history.map(_.op).count(_ == "delete") == 2)
   }
 
+  test("DELETE accepts every condition UPDATE accepts: arithmetic, function, nested field, modulo") {
+    sql("CREATE NAMESPACE gcat.dbdelx")
+    for (t <- Seq("u", "d")) {
+      sql(s"CREATE TABLE gcat.dbdelx.$t (id BIGINT, v STRING, s STRUCT<f: INT>, hit BOOLEAN)")
+      sql(s"INSERT INTO gcat.dbdelx.$t SELECT id, concat('v', id), " +
+        "named_struct('f', CAST(id % 10 AS INT)), false FROM range(20)")
+    }
+    val gt = GraftTable.load(spark, s"$warehouse/dbdelx/d")
+    val conds = Seq("id + 1 > 18", "upper(v) = 'V4'", "s.f = 6", "id % 7 = 0")
+    for (c <- conds) {
+      sql(s"UPDATE gcat.dbdelx.u SET hit = true WHERE $c")
+      val before = gt.currentVersion
+      sql(s"DELETE FROM gcat.dbdelx.d WHERE $c")
+      assert(gt.currentVersion == before + 1 && gt.commitInfo(gt.currentVersion).op == "delete", c)
+      val kept = sql("SELECT id FROM gcat.dbdelx.d ORDER BY id").collect().map(_.getLong(0)).toSeq
+      val unhit = sql("SELECT id FROM gcat.dbdelx.u WHERE NOT hit ORDER BY id")
+        .collect().map(_.getLong(0)).toSeq
+      assert(kept == unhit, s"after DELETE WHERE $c")
+    }
+    assert(sql("SELECT id FROM gcat.dbdelx.d ORDER BY id").collect().map(_.getLong(0)).toSeq ==
+      (0L until 20L).filterNot(Set(18L, 19L, 4L, 6L, 16L, 0L, 7L, 14L)))
+  }
+
+  test("DELETE FROM with no WHERE empties the table in one metadata commit, no Spark job") {
+    sql("CREATE NAMESPACE gcat.dbdelall")
+    sql("CREATE TABLE gcat.dbdelall.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbdelall.t SELECT id, concat('v', id) FROM range(0, 30, 1, 3)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbdelall/t")
+    val before = gt.currentVersion
+    val (jobs, stages, _, _, input) = work("DELETE FROM gcat.dbdelall.t")
+    assert((jobs, stages, input) == (0, 0, 0L), s"$jobs jobs, $stages stages, $input input bytes")
+    assert(gt.currentVersion == before + 1)
+    assert(gt.commitInfo(gt.currentVersion).added.isEmpty)
+    assert(gt.planFiles(gt.currentVersion).isEmpty)
+    assert(sql("SELECT count(*) FROM gcat.dbdelall.t").head().getLong(0) == 0)
+    assert(sql(s"SELECT count(*) FROM gcat.dbdelall.t VERSION AS OF $before").head().getLong(0) == 30)
+  }
+
+  test("a cached table sees each DML verb's change: UPDATE, MERGE, DELETE, subquery DELETE") {
+    sql("CREATE NAMESPACE gcat.dbcache")
+    sql("CREATE TABLE gcat.dbcache.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbcache.t SELECT id, 'a' FROM range(20)")
+    sql("CREATE TABLE gcat.dbcache.picks (id BIGINT)")
+    sql("INSERT INTO gcat.dbcache.picks VALUES (1), (2), (3)")
+    sql("CACHE TABLE gcat.dbcache.t")
+    try {
+      def cached(q: String): Long = {
+        val df = sql(q)
+        assert(df.queryExecution.withCachedData.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+          s"not served from the cache: $q")
+        df.head().getLong(0)
+      }
+      val count = "SELECT count(*) FROM gcat.dbcache.t"
+      assert(cached(count) == 20)
+      sql("UPDATE gcat.dbcache.t SET v = 'x' WHERE id < 5")
+      assert(cached("SELECT count(*) FROM gcat.dbcache.t WHERE v = 'x'") == 5)
+      sql("""MERGE INTO gcat.dbcache.t AS t
+             USING (SELECT * FROM VALUES (CAST(100 AS BIGINT), 'm') AS x(id, v)) AS s
+             ON t.id = s.id
+             WHEN NOT MATCHED THEN INSERT *""")
+      assert(cached(count) == 21)
+      sql("DELETE FROM gcat.dbcache.t WHERE id >= 15")
+      assert(cached(count) == 15)
+      sql("DELETE FROM gcat.dbcache.t WHERE id IN (SELECT id FROM gcat.dbcache.picks)")
+      assert(cached(count) == 12)
+      assert(cached("SELECT count(*) FROM gcat.dbcache.t WHERE v = 'x'") == 2)
+    } finally sql("UNCACHE TABLE gcat.dbcache.t")
+  }
+
+  test("DELETE on a time-travelled snapshot fails and leaves the table as it was") {
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    sql("CREATE NAMESPACE gcat.dbdeltt")
+    sql("CREATE TABLE gcat.dbdeltt.t (id BIGINT)")
+    sql("INSERT INTO gcat.dbdeltt.t VALUES (1), (2)")
+    sql("INSERT INTO gcat.dbdeltt.t VALUES (3)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbdeltt/t")
+    val head = gt.currentVersion
+    // SQL has no spelling for a DELETE on `VERSION AS OF`; the statement
+    // is built over the relation a time-travelled read resolves to
+    val cat = new graft.catalog.GraftCatalog
+    cat.initialize("gcat", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      Map("warehouse" -> warehouse).asJava))
+    val ident = Identifier.of(Array("dbdeltt"), "t")
+    val rel = DataSourceV2Relation.create(cat.loadTable(ident, "2"), Some(cat), Some(ident))
+    val e = intercept[Exception] {
+      org.apache.spark.sql.GraftSparkInternals.ofRows(spark,
+        DeleteFromTable(rel, EqualTo(rel.output.head, Literal(1L)))).collect()
+    }
+    assert(e.getMessage.contains("time-travelled"), e.getMessage)
+    assert(gt.currentVersion == head)
+    assert(sql("SELECT count(*) FROM gcat.dbdeltt.t").head().getLong(0) == 3)
+  }
+
   /** Jobs, stages, tasks, shuffle-write bytes and input bytes of one
     * statement — counts of work, not time, read after draining the
     * listener bus. */
@@ -517,7 +614,8 @@ class GraftCatalogSpec extends SparkSpec {
     assert(got.toSeq == Seq((1L, "a", None), (2L, "B", Some(20.0)), (3L, "c", Some(30.0))), got.toSeq)
     // Spark's ResolveMergeIntoSchemaEvolution routed the change through
     // our ALTER path: one metadata-only altschema commit (fresh field
-    // id, SchemaMode Pin), then ONE merge commit — atomic, auditable
+    // id, schema derived from the parent's), then ONE merge commit —
+    // atomic, auditable
     assert(gt.history.map(_.op) == Seq("create", "append", "altschema", "merge"),
       gt.history.map(_.op))
     val f = gt.schema.fields.find(_.name == "score").get
@@ -635,9 +733,8 @@ class GraftCatalogSpec extends SparkSpec {
     sql("UPDATE gcat.db23.t SET score = -1 WHERE id IN " +
       "(SELECT id FROM gcat.db23.t WHERE score >= 18)")
     assert(sql("SELECT count(*) FROM gcat.db23.t WHERE score = -1").head().getLong(0) == 2)
-    // DELETE with a subquery condition: the native SupportsDelete path
-    // cannot express it as V1 filters — routes through the same
-    // materialize-once machinery, one copy-on-write delete commit
+    // DELETE with a subquery condition: the same materialize-once
+    // machinery as UPDATE, one copy-on-write delete commit
     sql("DELETE FROM gcat.db23.t WHERE id IN (SELECT id FROM gcat.db23.picks)")
     assert(sql("SELECT count(*) FROM gcat.db23.t").head().getLong(0) == 18)
     assert(sql("SELECT count(*) FROM gcat.db23.t WHERE id IN (12, 15)").head().getLong(0) == 0)

@@ -99,6 +99,16 @@ class StoreSpec extends SparkSpec {
     assert(t.history.last.op == "merge")
   }
 
+  test("merge matches keys with ===: a NULL key never matches, its source row inserts") {
+    val root = freshRoot
+    val t = GraftTable.create(spark, root,
+      Seq((None: Option[Long], "n0"), (Some(1L), "a")).toDF("id", "v"))
+    t.merge(Seq((None: Option[Long], "n1"), (Some(1L), "A")).toDF("id", "v"), Seq("id"), "keyed")
+    val rows = t.read().collect().map(r => (Option(r.get(0)), r.getString(1))).toSet
+    assert(rows == Set((None, "n0"), (None, "n1"), (Some(1L), "A")), rows)
+    assert(t.history.last.op == "keyed")
+  }
+
   test("compact + vacuum") {
     val root = freshRoot
     val t = GraftTable.create(spark, root, spark.range(0, 100).repartition(8).toDF())
