@@ -59,7 +59,7 @@ import org.apache.spark.sql.types._
   * work): the previous `mutable.LongMap[Long]` boxed every VALUE (one
   * `java.lang.Long` allocation per update — values past the small-int
   * cache are fresh objects) and `compress()` snapshotted ids through
-  * boxed `ArrayBuffer[Long]`s; measured with ProbeF22, `Buf.add` ran
+  * boxed `ArrayBuffer[Long]`s; measured with the f22 probe, `Buf.add` ran
   * ~1.6 µs/row (1.0 s single-threaded for sf0.1's 600k lineitem rows),
   * all of it allocation/GC. This map is two primitive arrays — zero
   * allocation per operation.
@@ -232,7 +232,8 @@ object Qdigest {
       * appends it to the d-1 bucket, which is exactly the set the
       * per-depth rescan used to discover.
       *
-      * r14 rewrite (guide §1.2 step 2, measured with ProbeF22): the
+      * r14 rewrite (guide §1.2 step 2, measured with the f22 probe,
+      * 18f3aca:src/main/scala/graft/tools/ProbeF22.scala): the
       * hash-map spelling of this fold paid ~4 RANDOM map probes per
       * cascade step (own count, sibling, parent, update/remove) — with
       * sparse values and a small fold threshold a 262k-entry snapshot

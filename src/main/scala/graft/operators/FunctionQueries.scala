@@ -469,7 +469,7 @@ object FunctionQueries {
     // engine-specific -> rows-only; FunctionsSpec pins the error
     // envelope and the union-vs-direct consistency property.
     // Exact-below-saturation device, HLL edition (r12 verdict #7,
-    // probed round 13 — Probe14 `hllexact`): DataSketches HLL starts
+    // SCALE.md (y)): DataSketches HLL starts
     // in exact coupon LIST/SET modes and at lgK=21 stays EXACT through
     // every probed rung up to 16k distinct (64k is past the SET->HLL
     // promotion: 64003), including through hll_union_agg of the
@@ -482,7 +482,7 @@ object FunctionQueries {
     // correctness gate at sf1 (~100k distinct customers) would make
     // this entry fail against its own oracle. That failure mode is
     // THIS note, not a regression; if the gate SF ever rises past
-    // sf0.1, re-derive the rung (Probe14 hllexact) or demote f19 to
+    // sf0.1, re-derive the rung (SCALE.md (y)) or demote f19 to
     // the envelope check. The
     // saturated estimator regime stays FunctionsSpec's envelope (the
     // default-lgK path asserted there). Spark-native

@@ -49,7 +49,8 @@ object GraphOps {
     // per-round work is then exactly ONE join (rank onto edges) + ONE
     // aggregation on dst + ONE left join back onto nodes. Without
     // this, round k replays k copies of the distinct/groupBy lineage —
-    // quadratic in iterations. NOTE (r14, ProbeCkpt): under AQE a
+    // quadratic in iterations. NOTE (measured with
+    // 18f3aca:src/main/scala/graft/tools/ProbeCkpt.scala): under AQE a
     // localCheckpoint reports UnknownPartitioning, so the repartition
     // below does NOT let later rounds skip the edge-side exchange — it
     // only sizes the checkpointed RDD's partitions. The per-round edge

@@ -108,8 +108,8 @@ object VectorOps {
     // floor was TRIED and reverted — the band join re-derives hash
     // exchanges anyway, so the explicit repartition is not a net extra
     // stage but the shared materialization point both join sides reuse;
-    // without it each side re-scanned and re-folded (ProbeV04 full
-    // 1.87 s -> 3.39 s).
+    // without it each side re-scanned and re-folded (v04 full 1.87 s
+    // -> 3.39 s, measured with 18f3aca:src/main/scala/graft/tools/ProbeV04.scala).
     Tables(s, d, "embeddings")
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"),
@@ -189,23 +189,8 @@ object VectorOps {
     * every geometry: one signature fold reused across both join sides,
     * SHUFFLE_HASH everywhere, never a broadcast (PlanSpec-gated at the
     * default). */
-  /** r14 ProbeV04 prefixes: the signature fold, the candidate join,
-    * and the quantized prescore stage of [[annPairs]] as standalone
-    * pipelines (same code path — built by annPairs internally). */
-  private[graft] def probeSigv(s: SparkSession, d: String, nPlanes: Int, bandBits: Int): DataFrame =
-    sigvFor(s, d, nPlanes, bandBits)
-  private[graft] def probeCand(s: SparkSession, d: String, nPlanes: Int, bandBits: Int): DataFrame =
-    annPairsStage(s, d, nPlanes, bandBits, 0.35, stage = 1)
-  private[graft] def probePre(s: SparkSession, d: String, nPlanes: Int, bandBits: Int,
-                              threshold: Double): DataFrame =
-    annPairsStage(s, d, nPlanes, bandBits, threshold, stage = 2)
-
   def annPairs(s: SparkSession, d: String, nPlanes: Int, bandBits: Int,
-               threshold: Double): DataFrame =
-    annPairsStage(s, d, nPlanes, bandBits, threshold, stage = 3)
-
-  private def annPairsStage(s: SparkSession, d: String, nPlanes: Int, bandBits: Int,
-               threshold: Double, stage: Int): DataFrame = {
+               threshold: Double): DataFrame = {
     require(nPlanes % bandBits == 0,
       s"nPlanes ($nPlanes) must be a multiple of bandBits ($bandBits)")
     val nBands = nPlanes / bandBits
@@ -251,7 +236,6 @@ object VectorOps {
       .filter(col("id_a") < col("id_b"))
       .filter(expr(firstMatch))
       .select("id_a", "id_b")
-    if (stage == 1) return cand
     // QUANTIZED PRE-SCORE (VERDICT r6 #1): the candidate attach was the
     // dominant stage at scale — every candidate carried two full float
     // vectors (~512 B/pair) through the verify joins. Candidates now
@@ -297,7 +281,6 @@ object VectorOps {
           " + CAST(length(qca) AS DOUBLE) / 4.0D) / (SQRT(na2) * SQRT(nb2)) + 1e-9D" +
           s" >= $threshold"))
       .select("id_a", "id_b")
-    if (stage == 2) return pre
     val e = vecs(s, d)
     pre
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va"), col("n2").as("na2"))
@@ -574,10 +557,10 @@ object VectorOps {
 
   /** v08's ASSIGNMENT stage alone — every vector scored against the
     * k = [[dedupCellsFor]] broadcast centroids, argmax cell per vector.
-    * Named so the entry and the round-9 attribution probe (Probe9
-    * `v08a`, r8 verdict #4) time the SAME plan: assignment is the
-    * N·k = N·sqrt(N/5) term of the SemDeDup law, and the probe splits
-    * its wall from the pair join's. The argmax is the map-side
+    * Named so the entry and the round-9 attribution probe (mode `v08a`
+    * of 18f3aca:src/main/scala/graft/tools/Probe9.scala) time the SAME
+    * plan: assignment is the N·k = N·sqrt(N/5) term of the SemDeDup
+    * law, and the probe splits its wall from the pair join's. The argmax is the map-side
     * [[argmaxCell]] `max_by` (r12 verdict #3) — no exploded shuffle,
     * no per-vector sort. */
   private[graft] def semanticDedupAssigned(s: SparkSession, d: String): DataFrame = {

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Async SQL execution service — the engine-side equivalent of walden's
   * Superset SQL Lab async path (browser -> Celery queue -> worker ->
@@ -23,6 +24,16 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * `onUserSession` runs once per user to install per-user views /
   * row filters, and the result cache is keyed per user so one user's
   * results are never served to another.
+  *
+  * User sessions share generated code. Spark gives each
+  * artifact-isolated session its own executor classloader, and that
+  * classloader is part of the code cache's key, so isolated user
+  * sessions would each compile every statement shape again. User
+  * sessions are therefore created with artifact isolation off and run
+  * on the one shared classloader (the embedder's base session and
+  * Spark Connect sessions stay isolated). An artifact added there would
+  * reach every user, so impersonated users may not run `ADD JAR`,
+  * `ADD FILE`, `ADD ARCHIVE` or `CREATE FUNCTION ... USING`.
   *
   * Results are collected only up to `maxResultRows` (BI-shaped
   * consumption); full-size outputs should INSERT/CTAS instead — same
@@ -149,6 +160,9 @@ final class QueryService(
           if (again != null) again
           else {
             val s = spark.newSession()
+            // before anything runs: the session's artifact state is
+            // fixed on first use (see the class doc)
+            s.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
             s.conf.set(PolicyEnforcement.UserConf, user)
             // point the child session at THIS service's catalog-table
             // policies BEFORE onUserSession: any SQL the embedder runs
@@ -401,9 +415,14 @@ final class QueryService(
     n
   }
 
+  /** Statements that add a jar, file or archive to the session. */
+  private val artifactStatement =
+    "(add (jar|file|archive)|create (or replace )?(temporary )?function .* using (jar|file|archive)\\b)".r
+
   /** Classify a mainStatement(classify(...))-normalized statement. */
   private def ddlKind(n: String): Option[String] = {
-    if (n.startsWith("create table") && n.contains(" as ")) Some("ctas")
+    if (artifactStatement.findPrefixOf(n).isDefined) Some("artifact")
+    else if (n.startsWith("create table") && n.contains(" as ")) Some("ctas")
     else if (n.startsWith("create view") || n.startsWith("create or replace view") ||
       n.startsWith("create temp view") || n.startsWith("create or replace temp view")) Some("cvas")
     else if (n.startsWith("update ") || n.startsWith("delete ") || n.startsWith("merge ") ||
@@ -528,6 +547,9 @@ final class QueryService(
         case "ctas" if !allowCtas => throw new IllegalStateException("CTAS disabled (allow_ctas=false)")
         case "cvas" if !allowCvas => throw new IllegalStateException("CVAS disabled (allow_cvas=false)")
         case "dml" if !allowDml => throw new IllegalStateException("DML disabled (allow_dml=false)")
+        case "artifact" if user != "anonymous" => throw new IllegalStateException(
+          "ADD JAR/FILE/ARCHIVE and CREATE FUNCTION ... USING are refused for impersonated " +
+            "users: user sessions share one classloader, so the artifact would reach every user")
         case _ =>
       }
       // conditional transition: a queued-cancel that won the race
@@ -560,7 +582,10 @@ final class QueryService(
       // must never serve another's even for an identical plan.
       // Length-prefixed so no (user, key) pair can collide.
       val cacheable = readPrefixes.exists(main.startsWith)
-      val df: DataFrame = sess.sql(sql)
+      // the limited Dataset is the one that runs: its optimized plan is
+      // both the fingerprint's input and what collect() executes, so the
+      // statement is optimized once
+      val df: DataFrame = sess.sql(sql).limit(maxResultRows)
       val key = if (cacheable) s"${user.length}:$user:${planFingerprint(df, sql)}" else ""
       if (cacheable) {
         val hit = cache.get(key)
@@ -612,7 +637,7 @@ final class QueryService(
         return
       }
       executions.incrementAndGet()
-      val rows = df.limit(maxResultRows).collect().toSeq
+      val rows = df.collect().toSeq
       // a side-effecting statement (DDL/DML/CTAS/CVAS — everything
       // non-cacheable) invalidates this user's cached reads: a
       // replaced temp view or mutated table must not keep serving
@@ -646,7 +671,7 @@ final class QueryService(
   private def runAndCache(df: DataFrame, key: String, user: String,
       sess: SparkSession, t0: Long): Finished = {
     executions.incrementAndGet()
-    val rows = df.limit(maxResultRows).collect().toSeq
+    val rows = df.collect().toSeq
     val fin = Finished(rows, df.columns.toSeq,
       (System.nanoTime() - t0) / 1000000L, fromCache = false)
     if (stillResident(user, sess))

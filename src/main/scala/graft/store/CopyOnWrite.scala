@@ -25,8 +25,10 @@ private[store] final case class RewriteResult(victims: Seq[String], written: Wri
   *     `Left` predicate accepts, UPDATE writes its `Right` projection.
   * A file with no hit is neither rewritten nor reported. With no
   * `writer` the task only probes. Expressions arrive bound to the probe
-  * schema (`probeCond`) and to the table schema (`rewrite`); both reads
-  * count in the task's input metrics. */
+  * schema (`probeCond`) and to the table schema (`rewrite`), their
+  * literals lifted ([[graft.engine.ParamLiteral.lift]]) so the compiled
+  * classes are shared by every statement of one shape; both reads count
+  * in the task's input metrics. */
 private[store] final class RewriteTask(
     probeRead: PartitionedFile => GraftParquetReadShim.FileRows,
     fullRead: PartitionedFile => GraftParquetReadShim.FileRows,

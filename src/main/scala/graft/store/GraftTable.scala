@@ -895,7 +895,11 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
         (list.map { case a: Alias => a.child; case e => e }, child.output)
       case other => throw new IllegalStateException(s"unexpected rewrite plan:\n$other")
     }
-    val bound = exprs.map(BindReferences.bindReference(_, attrs))
+    // the task-side expressions carry their comparison and arithmetic
+    // literals as ParamLiterals: every statement of one shape then
+    // reuses the same compiled predicate and projection classes
+    val lifted = exprs.map(graft.engine.ParamLiteral.lift)
+    val bound = lifted.map(BindReferences.bindReference(_, attrs))
     bound.flatMap(_.find(_.isInstanceOf[Unevaluable])).headOption.foreach { e =>
       throw new UnsupportedOperationException(
         s"copy-on-write DML at $root cannot evaluate '${e.sql}' inside a write task")
@@ -912,7 +916,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       GraftParquetReadShim.buildReader(spark, format, fileSch, probeSchema,
         GraftParquetReadShim.pushableFilters(exprs.head)),
       GraftParquetReadShim.buildReader(spark, format, fileSch, fileSch, Nil),
-      BindReferences.bindReference(exprs.head, probeAttrs),
+      BindReferences.bindReference(lifted.head, probeAttrs),
       if (assign.isEmpty) Left(bound(1)) else Right(bound.tail),
       writer)
 
@@ -975,8 +979,12 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
 
   /** As [[merge]], with a caller-chosen commit label — the idempotence
     * hook for streaming upsert sinks (the label records the batch id,
-    * exactly like [[appendAs]] for append sinks). */
-  private[graft] def merge(source: DataFrame, keyCols: Seq[String], op: String): Long = {
+    * exactly like [[appendAs]] for append sinks) — and a caller-chosen
+    * per-key match condition over the key's target and prefixed source
+    * columns (streaming upserts match NULL keys too). */
+  private[graft] def merge(source: DataFrame, keyCols: Seq[String], op: String,
+                           keyMatch: String => Column =
+                             k => col(k) === col(GraftTable.MergeSourcePrefix + k)): Long = {
     import GraftTable.MergeSourcePrefix
     val names = schema.fieldNames.toSeq
     val srcK = source.select(names.map(col): _*)
@@ -987,7 +995,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     require(dupKeys == 0,
       s"merge source has duplicate keys on (${keyCols.mkString(",")}); deduplicate first")
     val every = Some(names.map(n => n -> col(MergeSourcePrefix + n)).toMap)
-    mergeInto(srcK, keyCols.map(k => col(k) === col(MergeSourcePrefix + k)).reduce(_ && _),
+    mergeInto(srcK, keyCols.map(keyMatch).reduce(_ && _),
       Seq(MergeWhen(None, every)), Seq(MergeWhen(None, every)), Nil, op)
   }
 

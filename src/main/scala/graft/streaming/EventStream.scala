@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -558,7 +558,7 @@ object EventStream {
     * re-cluster the assignments layout on cent_id and compact the
     * codes buckets — because each micro-batch lands its own files and
     * probe-time file pruning decays with the append count (measured:
-    * Probe15 annmaint). Maintenance is idempotent and versioned like
+    * SCALE.md (ab)). Maintenance is idempotent and versioned like
     * any commit, so a replayed batch that skips its append also skips
     * the re-layout. */
   def indexVectorsStream(
@@ -901,7 +901,7 @@ object EventStream {
   }
 
   /** STREAMING SKETCH-STATS TABLE: maintain the per-day sketch-column
-    * table (the Probe13 / SCALE.md (u) reporting pattern) AT INGEST —
+    * table (the SCALE.md (u) reporting pattern) AT INGEST —
     * one streaming aggregation whose per-day state IS the mergeable
     * sketches (qdigest of `valueCol`, setdigest of `idCol`, row count),
     * upserted into a versioned GraftTable after every trigger. Readers
@@ -911,8 +911,9 @@ object EventStream {
     *
     * Runs in UPDATE output mode: each trigger emits only the days whose
     * sketches changed, and the merge-by-day replaces exactly those rows
-    * (the same exactly-once BatchMark discipline as [[upsertGraftTable]]
-    * — a replayed batch finds its label and skips). No watermark by
+    * (the same exactly-once BatchMark discipline and NULL-safe key rule
+    * as [[upsertGraftTable]] — a replayed batch finds its label and
+    * skips; a NULL day is one row). No watermark by
     * design: a late fact must still fold into its day's sketch, so the
     * aggregation state is O(days × sketch size) — bounded by the
     * calendar, not the stream (document: ~1 MB/day at the default ks).
@@ -950,12 +951,17 @@ object EventStream {
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!mark.alreadyCommitted(batchId) && !batch.isEmpty) {
-          table.merge(batch, Seq("day"), s"$prefix$batchId")
+          table.merge(batch, Seq("day"), s"$prefix$batchId", upsertKeyMatch)
           mark.advance(batchId)
         }
       }
       .start()
   }
+
+  /** The key rule of the streaming upsert sinks: target key `k` matches
+    * the prefixed source key NULL-safely (`<=>`). */
+  private def upsertKeyMatch(k: String): Column =
+    col(k) <=> col(graft.store.GraftTable.MergeSourcePrefix + k)
 
   /** UPSERT a stream into a versioned GraftTable: each micro-batch is
     * one atomic copy-on-write MERGE commit keyed on `keyCols` — CDC
@@ -973,6 +979,12 @@ object EventStream {
     * sequence, not just within the batch). Without it, duplicate keys
     * in one batch fail loudly (merge cardinality check) and matched
     * keys take the batch's row unconditionally.
+    *
+    * Keys match NULL-safely in both modes ([[upsertKeyMatch]]): a NULL
+    * key is one key like any other, so a batch row with a NULL key
+    * updates the stored NULL-key row instead of inserting another. (The
+    * table API's keyed `merge` keeps SQL's `=`, where a NULL key never
+    * matches.)
     *
     * Exactly-once mirrors [[writeGraftTable]]: each merge commit
     * carries a (sink, batchId) label; a crash between the table commit
@@ -998,7 +1010,7 @@ object EventStream {
         if (!mark.alreadyCommitted(batchId) && !batch.isEmpty) {
           sequenceCol match {
             case None =>
-              table.merge(batch, keyCols, s"$prefix$batchId")
+              table.merge(batch, keyCols, s"$prefix$batchId", upsertKeyMatch)
             case Some(seq) =>
               // latest-per-key WITHIN the batch first (one window over
               // the batch — bounded by trigger size, never the table)
@@ -1012,7 +1024,7 @@ object EventStream {
               // sequence beats the stored one (late batches skip)
               val srcPfx = graft.store.GraftTable.MergeSourcePrefix
               val sch = table.schema
-              val cond = keyCols.map(k => col(k) <=> col(srcPfx + k)).reduce(_ && _)
+              val cond = keyCols.map(upsertKeyMatch).reduce(_ && _)
               val setAll = sch.fieldNames.map(n => n -> col(srcPfx + n)).toMap
               // NULL handling is explicit, not three-valued-accident: a
               // stored NULL sequence (e.g. an initial load before the

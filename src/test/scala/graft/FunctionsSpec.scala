@@ -70,7 +70,7 @@ class FunctionsSpec extends SparkSpec {
     val row = SparkEntry.queries("f19_hll_sketch_columns")(spark, sf()).head()
     val merged = row.getLong(0)
     val exact = spark.sql("SELECT COUNT(DISTINCT o_custkey) FROM orders").head().getLong(0)
-    // r13 (Probe14 hllexact): lgK=21 holds the exact coupon SET mode
+    // SCALE.md (y): lgK=21 holds the exact coupon SET mode
     // through >= 16k distinct — at entry cardinalities the union of
     // per-group sketches IS the exact distinct count (the device that
     // gives f19 its full DuckDB oracle)

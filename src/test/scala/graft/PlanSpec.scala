@@ -596,4 +596,96 @@ class PlanSpec extends SparkSpec {
     try assert(cacheShuffles() > 0, s"$key=true should re-shuffle the cached inputs")
     finally spark.conf.set(key, "false")
   }
+
+  /** Generated-code compilations so far, JVM-wide. */
+  private def compilations: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** The physical plan after execution (the final plan under AQE). */
+  private def executed(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+
+  /** Filter literals of every liftable kind become parameters of the
+    * generated code: for each column, the query runs with a first value,
+    * then with a second that must compile no new class and return its
+    * own rows. The plan explains exactly as if the literals were plain,
+    * the scan still pushes the value, and only Filter/Project hold
+    * ParamLiterals. `table` reads the rows; `k` is the row id. */
+  private def checkLiftedFilters(table: () => org.apache.spark.sql.DataFrame): Unit = {
+    import graft.engine.ParamLiteral
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+    // every column rises with k, so `c > value(k0)` holds exactly for k > k0
+    val kinds: Seq[(String, Int => Any)] = Seq(
+      "i" -> (k => k), "l" -> (k => k * 1000L), "d" -> (k => k * 0.5),
+      "dt" -> (k => liftDay0.plusDays(k)), "ts" -> (k => liftT0.plusSeconds(k * 3600L)))
+    for ((c, value) <- kinds) {
+      def run(k0: Int): (Seq[Int], org.apache.spark.sql.execution.SparkPlan) = {
+        val df = table().filter(col(c) > lit(value(k0))).select((col("k") + 1).as("k1"))
+        (df.collect().map(_.getInt(0) - 1).sorted.toSeq, executed(df))
+      }
+      run(10)
+      val before = compilations
+      val (rows, plan) = run(25)
+      assert(compilations - before == 0, s"$c: a second value compiled new classes\n$plan")
+      assert(rows == (26 until 40), s"$c: $rows")
+      val params = plan.collect {
+        case f: FilterExec => f.condition.collect { case p: ParamLiteral => p }
+        case p: ProjectExec => p.projectList.flatMap(_.collect { case p: ParamLiteral => p })
+      }.flatten
+      assert(params.size == 2, s"$c: expected the filter value and the projected +1\n$plan")
+      assert(plan.collectLeaves().forall(_.expressions.forall(_.find(_.isInstanceOf[ParamLiteral]).isEmpty)))
+      val plain = plan.transformAllExpressions { case p: ParamLiteral => p.literal }
+      assert(plan.toString == plain.toString)
+      assert(plan.toString.contains(s"PushedFilters: [IsNotNull($c), GreaterThan($c,"), plan.toString)
+    }
+  }
+
+  private val liftDay0 = java.time.LocalDate.of(2024, 1, 1)
+  private val liftT0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
+  private lazy val liftRows = {
+    import spark.implicits._
+    (0 until 40).map(k => (k, k, k * 1000L, k * 0.5, liftDay0.plusDays(k), liftT0.plusSeconds(k * 3600L)))
+      .toDF("k", "i", "l", "d", "dt", "ts")
+  }
+
+  test("raw parquet: filter literals are code parameters, the plan explains as before") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lift_pq").resolve("t").toString
+    liftRows.coalesce(1).write.parquet(dir)
+    checkLiftedFilters(() => spark.read.parquet(dir))
+  }
+
+  test("GraftScan: filter literals are code parameters, the plan explains as before") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_lift_wh").toString
+    spark.conf.set("spark.sql.catalog.lift", classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.lift.warehouse", wh)
+    spark.sql("CREATE NAMESPACE lift.db")
+    liftRows.writeTo("lift.db.t").create()
+    checkLiftedFilters(() => spark.table("lift.db.t"))
+  }
+
+  test("lifted literals under AQE: an aggregate's second value compiles nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lift_aqe").resolve("t").toString
+    liftRows.write.parquet(dir)
+    def run(k0: Int) = {
+      val df = spark.read.parquet(dir).filter(col("l") >= lit(k0 * 1000L))
+        .groupBy((col("k") % 3).as("m")).agg(count(lit(1)).as("n"), sum(col("d") * 2).as("s"))
+      (df.orderBy("m").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq, df)
+    }
+    run(5)
+    val before = compilations
+    val (rows, df) = run(30)
+    assert(compilations - before == 0, executed(df).toString)
+    val expect = (30 until 40).groupBy(_ % 3).toSeq.sortBy(_._1)
+      .map { case (m, ks) => (m, ks.size.toLong, ks.map(_ * 1.0).sum) }
+    assert(rows == expect, rows)
+    assert(df.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+    // the filter runs inside the map stage: search through query stages
+    object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    assert(Stages.find(df.queryExecution.executedPlan)(
+      _.expressions.exists(_.find(_.isInstanceOf[graft.engine.ParamLiteral]).isDefined)).isDefined)
+  }
 }

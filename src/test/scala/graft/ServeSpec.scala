@@ -717,7 +717,7 @@ class ServeSpec extends SparkSpec {
   test("service-rate soak: 100 submissions/s mixed entries, bounded state (r11)") {
     // the reference's SQL Lab executes async at 100 tasks/s with a
     // 300 s result-cache TTL; this drives the same shape for ~30 s
-    // (3000 submissions — the multi-minute run is Probe11 soak) with
+    // (3000 submissions — the multi-minute run is SCALE.md's soak) with
     // a mixed workload: relational agg + dedup + MATCH_RECOGNIZE
     // repeats (plan-fingerprint cache hits) and a stream of
     // fresh-literal misses. Asserts: the pool never starves (backlog
@@ -836,5 +836,81 @@ class ServeSpec extends SparkSpec {
       assert(!m2.fromCache, "TTL-expired entry served from cache")
       assert(m0.rows.toSet == m2.rows.toSet)
     } finally ttlSvc.close()
+  }
+
+  test("impersonated users share compiled code: a second user compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val svc = new QueryService(spark, onUserSession = (s, _) => Tables.registerAll(s, sf()))
+    try {
+      def run(q: String, user: String) = svc.sql(q, user) match {
+        case f: svc.Finished => assert(!f.fromCache); f.rows.map(_.toString).sorted
+        case o => fail(s"$o")
+      }
+      // open both sessions first: building one is not the statement's cost
+      Seq("alice", "bob").foreach(run("SELECT COUNT(*) AS n FROM region", _))
+      val q = "SELECT o_orderpriority, COUNT(*) AS n, SUM(o_totalprice) AS t FROM orders " +
+        "WHERE o_orderkey > 100 GROUP BY o_orderpriority"
+      val first = run(q, "alice")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(run(q, "bob") == first)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0,
+        "the second user's run compiled classes again")
+    } finally svc.close()
+  }
+
+  test("impersonated users may not add jars, files or archives") {
+    val svc = new QueryService(spark)
+    try {
+      val refused = Seq(
+        "ADD JAR /tmp/graft_no.jar", "add  jars /tmp/a.jar /tmp/b.jar", "ADD FILE /tmp/graft_no.txt",
+        "ADD ARCHIVE /tmp/graft_no.zip", "/* note */ ADD FILES /tmp/graft_no.txt",
+        "CREATE TEMPORARY FUNCTION graft_no AS 'x.Y' USING JAR '/tmp/graft_no.jar'",
+        "create or replace function graft_no as 'x.Y' using file '/tmp/graft_no.txt'")
+      refused.foreach { stmt =>
+        svc.sql(stmt, "mallory") match {
+          case f: svc.Failed => assert(f.error.contains("refused for impersonated users"), f.error)
+          case o => fail(s"$stmt: $o")
+        }
+      }
+      // the service identity runs on the embedder's own session: allowed
+      val f = java.nio.file.Files.createTempFile("graft_artifact", ".txt")
+      svc.sql(s"ADD FILE $f") match {
+        case _: svc.Finished =>
+        case o => fail(s"$o")
+      }
+      // a function without resources adds no artifact
+      svc.sql("CREATE TEMPORARY FUNCTION graft_upper AS " +
+        "'org.apache.spark.sql.catalyst.expressions.Upper'", "mallory") match {
+        case f: svc.Failed => assert(!f.error.contains("refused"), f.error)
+        case _ =>
+      }
+    } finally svc.close()
+  }
+
+  test("a served statement is optimized once: the fingerprint's plan is the one collected") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    object CountRuns extends Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = { runs.incrementAndGet(); plan }
+    }
+    val svc = new QueryService(spark, onUserSession = (s, _) => {
+      Tables.registerAll(s, sf())
+      s.experimental.extraOptimizations = Seq(CountRuns)
+    })
+    try {
+      svc.sql("SELECT COUNT(*) AS n FROM nation", "opt")
+      runs.set(0)
+      svc.sql("SELECT r_name FROM region WHERE r_regionkey >= 2", "opt") match {
+        case f: svc.Finished => assert(!f.fromCache && f.rows.size == 3)
+        case o => fail(s"$o")
+      }
+      assert(runs.get == 1, s"the optimizer ran ${runs.get} times for one statement")
+      // the repeat is a cache hit on the same fingerprint
+      svc.sql("SELECT r_name FROM region WHERE r_regionkey >= 2", "opt") match {
+        case f: svc.Finished => assert(f.fromCache)
+        case o => fail(s"$o")
+      }
+    } finally svc.close()
   }
 }

@@ -184,7 +184,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming sketch-stats table == batch per-day sketches; merge() reads it (r12)") {
-    // the Probe13 / SCALE.md (u) reporting pattern maintained AT INGEST:
+    // the SCALE.md (u) reporting pattern maintained AT INGEST:
     // per-day qdigest/setdigest rows upserted each trigger; parity is
     // bit-level in the exact regime because the streamed aggregation
     // state IS the batch sketch object.
@@ -401,6 +401,28 @@ class StreamingSpec extends SparkSpec {
     val got = table.read().orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq((1L, "cdc"), (2L, "x")), got)
+  }
+
+  test("upsert sink: a NULL key is one key, with and without a sequence column") {
+    for (sequenceCol <- Seq(None, Some("seq"))) {
+      val landing = Files.createTempDirectory("graft_landing_nullkey").toString
+      val ckpt = Files.createTempDirectory("graft_ckpt_nullkey").toString
+      val troot = Files.createTempDirectory("graft_nullkey").resolve("t").toString
+      val table = graft.store.GraftTable.create(spark, troot,
+        Seq((Option.empty[Long], "n0", 1L), (Some(1L), "a", 1L)).toDF("id", "v", "seq"))
+      // two batches: the NULL-key row is updated each time, never re-inserted
+      Seq((Option.empty[Long], "n1", 5L), (Some(2L), "b", 6L)).toDF("id", "v", "seq")
+        .coalesce(1).write.mode("append").parquet(landing)
+      Seq((Option.empty[Long], "n2", 7L)).toDF("id", "v", "seq")
+        .coalesce(1).write.mode("append").parquet(landing)
+      val q = EventStream.upsertGraftTable(
+        spark.readStream.schema("id LONG, v STRING, seq LONG")
+          .option("maxFilesPerTrigger", 1).parquet(landing),
+        table, Seq("id"), ckpt, sequenceCol = sequenceCol)
+      assert(q.awaitTermination(240000), "stream did not drain in 240s")
+      val got = table.read().collect().map(r => (Option(r.get(0)), r.getString(1))).toSet
+      assert(got == Set((None, "n2"), (Some(1L), "a"), (Some(2L), "b")), s"$sequenceCol: $got")
+    }
   }
 
   test("sessionization (batch twin over the stateful op's input shape)") {
@@ -710,7 +732,7 @@ class StreamingSpec extends SparkSpec {
         StructField("embedding", ArrayType(FloatType)))))
       .option("maxFilesPerTrigger", 1).parquet(landing)
     // maintainEvery = 2: the second batch (batchId 1) triggers the
-    // re-layout after its append (r14 — the cadence hook Probe15's
+    // re-layout after its append (the cadence hook SCALE.md (ab)'s
     // decay numbers justify)
     val q = EventStream.indexVectorsStream(stream, root, ckpt, maintainEvery = 2)
     assert(q.awaitTermination(240000), "stream did not drain in 240s")
