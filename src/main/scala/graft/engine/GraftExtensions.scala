@@ -34,13 +34,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.functions.GraftFunctions.injections.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
+        new ExpressionInfo(graft.functions.GraftFunctions.GraftInfoClass, name),
         builder))
     }
     graft.functions.GraftFunctions.tableInjections.foreach { case (name, builder) =>
       ext.injectTableFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo("graft", name),
+        new ExpressionInfo(graft.functions.GraftFunctions.GraftInfoClass, name),
         builder))
     }
     // SQL UPDATE / DELETE / MERGE INTO for graft catalog tables: rewrite the

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
 
@@ -695,16 +696,30 @@ object GraftFunctions {
       out.queryExecution.logical
     })
 
-  def register(spark: SparkSession): Unit = synchronized {
-    injections.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-    tableInjections.foreach { case (name, builder) =>
-      spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+  /** Give `spark` every graft function its registries do not already
+    * hold: a session built with [[graft.engine.GraftExtensions]] has
+    * them all and is left untouched; any other session gets each one,
+    * replacing a Spark built-in of the same name as the extension does. */
+  def register(spark: SparkSession): Unit =
+    registerInto(spark.sessionState.functionRegistry, spark.sessionState.tableFunctionRegistry)
+
+  /** Both registries' side of [[register]]. A graft function is known
+    * by its [[ExpressionInfo]] class name, "graft", which the extension
+    * gives every function it injects. */
+  private[graft] def registerInto(functions: FunctionRegistryBase[Expression],
+                                  tables: FunctionRegistryBase[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = synchronized {
+    def add[T](registry: FunctionRegistryBase[T], all: Seq[(String, Seq[Expression] => T)]): Unit =
+      all.foreach { case (name, builder) =>
+        val id = FunctionIdentifier(name)
+        if (!registry.lookupFunction(id).exists(_.getClassName == GraftInfoClass))
+          registry.registerFunction(id, new ExpressionInfo(GraftInfoClass, name), builder)
+      }
+    add(functions, injections)
+    add(tables, tableInjections)
   }
+
+  /** The class name of every graft function's [[ExpressionInfo]]. */
+  val GraftInfoClass = "graft"
 
   private def unitOf(e: Expression): String = e match {
     case Literal(u, _) => String.valueOf(u).toUpperCase

@@ -90,11 +90,13 @@ object GraphOps {
     // partitioning, so persisting the crossJoin keeps
     // HashPartitioning(node) visible to every round's left join.
     val nodesN = nodes.crossJoin(broadcast(n)).persist()
-    // Materialize both caches NOW (the checkpoints this replaces were
-    // eager too): an unmaterialized cache is an AdaptiveSparkPlan with
-    // isFinalPlan=false, whose output partitioning the outer planner
-    // cannot trust — the loop's plans would re-shuffle it every round.
-    ed.count(); nodesN.count()
+    // Materialize both caches NOW, in one action (the checkpoints this
+    // replaces were eager too): an unmaterialized cache is an
+    // AdaptiveSparkPlan with isFinalPlan=false, whose output
+    // partitioning the outer planner cannot trust — the loop's plans
+    // would re-shuffle it every round. Scanning a cache builds all of
+    // it, whichever columns the scan reads.
+    ed.select(lit(1)).union(nodesN.select(lit(1))).count()
     (ed, nodes, nodesN)
   }
 

@@ -419,6 +419,28 @@ final class QueryService(
   private val artifactStatement =
     "(add (jar|file|archive)|create (or replace )?(temporary )?function .* using (jar|file|archive)\\b)".r
 
+  /** The local paths an `ADD JAR` statement names that do not exist.
+    * Spark only logs such a jar (`SparkContext.addJar` catches its
+    * FileNotFoundException), so the statement would otherwise finish as
+    * if the jar had been added. Remote and ivy paths are not checked. */
+  private def missingJars(sql: String): Seq[String] =
+    addJarStatement.findFirstMatchIn(sql).toSeq.flatMap { m =>
+      "\"([^\"]*)\"|'([^']*)'|(\\S+)".r.findAllMatchIn(m.group(1).trim.stripSuffix(";"))
+        .map(p => Option(p.group(1)).orElse(Option(p.group(2))).getOrElse(p.group(3))).toSeq
+    }.filter { p =>
+      val local = scala.util.Try(new java.net.URI(p)).toOption match {
+        case Some(u) if u.getScheme == null => Some(p)
+        case Some(u) if u.getScheme == "file" => Some(u.getPath)
+        case Some(_) => None
+        case None => Some(p)
+      }
+      local.exists(l => !java.nio.file.Files.exists(java.nio.file.Paths.get(l)))
+    }
+
+  /** `ADD JAR(S) <paths>`, after any leading comments. */
+  private val addJarStatement =
+    "(?is)^\\s*(?:(?:/\\*.*?\\*/|--[^\\n]*\\n)\\s*)*add\\s+jars?\\s+(.*)$".r
+
   /** Classify a mainStatement(classify(...))-normalized statement. */
   private def ddlKind(n: String): Option[String] = {
     if (artifactStatement.findPrefixOf(n).isDefined) Some("artifact")
@@ -550,6 +572,10 @@ final class QueryService(
         case "artifact" if user != "anonymous" => throw new IllegalStateException(
           "ADD JAR/FILE/ARCHIVE and CREATE FUNCTION ... USING are refused for impersonated " +
             "users: user sessions share one classloader, so the artifact would reach every user")
+        case "artifact" => missingJars(sql).headOption.foreach { p =>
+          val e = new java.io.FileNotFoundException(s"Jar $p not found")
+          throw new IllegalArgumentException(s"Failed to add $p to Spark environment: $e", e)
+        }
         case _ =>
       }
       // conditional transition: a queued-cancel that won the race

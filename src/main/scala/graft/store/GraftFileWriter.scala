@@ -82,8 +82,15 @@ final class GraftFileWriterFactory private[store] (
     } catch { case _: Exception => () }
 
   /** Task side: write every row of one partition, commit or abort. */
-  private[store] def runTask(ctx: TaskContext, rows: Iterator[InternalRow]): WriterCommitMessage = {
-    val w = createWriter(ctx.partitionId(), ctx.taskAttemptId())
+  private[store] def runTask(ctx: TaskContext, rows: Iterator[InternalRow]): WriterCommitMessage =
+    writeAll(ctx.partitionId(), ctx.taskAttemptId(), rows)
+
+  /** Write `rows` into one file as write `partitionId` and commit it,
+    * or abort on failure: a task's partition, or rows the driver holds
+    * (a MERGE's inserts). */
+  private[store] def writeAll(partitionId: Int, taskId: Long,
+                              rows: Iterator[InternalRow]): WriterCommitMessage = {
+    val w = createWriter(partitionId, taskId)
     try {
       while (rows.hasNext) w.write(rows.next())
       w.commit()

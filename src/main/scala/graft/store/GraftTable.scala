@@ -28,7 +28,9 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *  - row-level DML is copy-on-write in ONE job: each task probes its
   *    stats-pruned candidate files for a matching row and rewrites only
   *    the files that hold one; the commit swaps them atomically.
-  *    Candidates without a match are read once, never rewritten.
+  *    Candidates without a match are read once, never rewritten. A MERGE
+  *    with a broadcastable source is the same one job, its source hashed
+  *    on the ON keys and matched inside the tasks.
   *  - commits race via atomic rename; losers retry on a fresh snapshot
   *    (optimistic concurrency, same contract as Iceberg/Nessie).
   */
@@ -855,10 +857,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * table schema, every column nullable ([[emptyFrame]]: a NOT NULL
     * column can hold NULLs), and bound to its attributes; the readers
     * come from GraftParquetReadShim (this session's SQLConf, field-id
-    * resolution). Whole candidate files are packed into tasks, never
-    * split: Spark's packing on a plain table, one task per file on a
-    * bucketed or clustered one, so each output keeps its victim's single
-    * `__bucket`, sort order and key range.
+    * resolution); [[runRewrite]] packs the candidates into tasks.
     *
     * Task: probe each file for a row where `cond` is TRUE; rewrite the
     * files that hit — DELETE keeps the rows where `NOT coalesce(cond,
@@ -873,8 +872,6 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * else a task cannot evaluate, fails before any file is written. */
   private def rewriteMatching(cond: Column, assign: Option[Map[String, Column]]): Rewrite = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression, Unevaluable}
-    import org.apache.spark.TaskContext
-    import org.apache.spark.sql.execution.datasources.PartitionedFile
     val base = currentVersion
     val sch = schemaAt(base)
     // the rows as the files hold them: every column nullable
@@ -917,9 +914,29 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
         GraftParquetReadShim.pushableFilters(exprs.head)),
       GraftParquetReadShim.buildReader(spark, format, fileSch, fileSch, Nil),
       BindReferences.bindReference(lifted.head, probeAttrs),
-      if (assign.isEmpty) Left(bound(1)) else Right(bound.tail),
+      if (assign.isEmpty) Some(bound(1)) else None,
+      if (assign.isEmpty) None else Some(bound.tail),
       writer)
+    val results = runRewrite(candidates, task, writer)
+    val victims = results.flatMap(_.victims)
+    val added = writer match {
+      case Some(w) => w.committed(results.map(_.written))
+      case None if victims.isEmpty => Nil
+      case None => writeFilesWith(
+        readData(victims.map(p => s"$root/$p"), sch).select(updated.get: _*), sch)
+    }
+    Rewrite(base, sch, victims, added)
+  }
 
+  /** Run `task` over `candidates` as ONE Spark job. Whole files are
+    * packed into tasks, never split: Spark's packing on a plain table,
+    * one task per file on a bucketed or clustered one, so each output
+    * keeps its victim's single `__bucket`, sort order and key range. A
+    * failed job leaves none of its files behind. */
+  private def runRewrite(candidates: Seq[FileStat], task: RewriteTask,
+                         writer: Option[GraftFileWriterFactory]): Seq[RewriteResult] = {
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
     val files = candidates.map(f => f.path -> GraftParquetReadShim.mkFile(s"$root/${f.path}", f.bytes))
     val groups =
       if (bucketSpec.isDefined || clusterFieldIds.nonEmpty) files.map(Seq(_))
@@ -930,23 +947,14 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           .map(_.files.toSeq.map(pf => relOf(pf.filePath) -> pf))
       }
     val sc = spark.sparkContext
-    val results =
-      try sc.runJob(sc.parallelize(groups, groups.size),
-        (ctx: TaskContext, it: Iterator[Seq[(String, PartitionedFile)]]) =>
-          task.run(ctx, it.next())).toSeq
-      catch {
-        case t: Throwable =>
-          writer.foreach(_.removeDir())
-          throw t
-      }
-    val victims = results.flatMap(_.victims)
-    val added = writer match {
-      case Some(w) => w.committed(results.map(_.written))
-      case None if victims.isEmpty => Nil
-      case None => writeFilesWith(
-        readData(victims.map(p => s"$root/$p"), sch).select(updated.get: _*), sch)
+    try sc.runJob(sc.parallelize(groups, groups.size),
+      (ctx: TaskContext, it: Iterator[Seq[(String, PartitionedFile)]]) =>
+        task.run(ctx, it.next())).toSeq
+    catch {
+      case t: Throwable =>
+        writer.foreach(_.removeDir())
+        throw t
     }
-    Rewrite(base, sch, victims, added)
   }
 
   /** `DELETE ... WHERE cond`: copy-on-write over the files holding a
@@ -972,7 +980,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * source's values (upsert); unmatched source rows are inserted. One
     * [[mergeInto]] with `===` on every key — so a NULL key never
     * matches and its source row inserts — one WHEN MATCHED UPDATE of
-    * every column and one WHEN NOT MATCHED INSERT of every column.
+    * every column and one WHEN NOT MATCHED INSERT of every column. A
+    * source holding one key twice is rejected.
     */
   def merge(source: DataFrame, keyCols: Seq[String]): Long =
     merge(source, keyCols, "merge")
@@ -987,16 +996,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
                              k => col(k) === col(GraftTable.MergeSourcePrefix + k)): Long = {
     import GraftTable.MergeSourcePrefix
     val names = schema.fieldNames.toSeq
-    val srcK = source.select(names.map(col): _*)
-    // SQL/Iceberg MERGE errors when one target row matches several
-    // source rows; checked on the source alone, before any target read
-    val dupKeys = srcK.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0,
-      s"merge source has duplicate keys on (${keyCols.mkString(",")}); deduplicate first")
     val every = Some(names.map(n => n -> col(MergeSourcePrefix + n)).toMap)
-    mergeInto(srcK, keyCols.map(keyMatch).reduce(_ && _),
-      Seq(MergeWhen(None, every)), Seq(MergeWhen(None, every)), Nil, op)
+    mergeInto(source.select(names.map(col): _*), keyCols.map(keyMatch).reduce(_ && _),
+      Seq(MergeWhen(None, every)), Seq(MergeWhen(None, every)), Nil, op, keyCols)
   }
 
   /** General MERGE with ordered WHEN clauses — the engine behind SQL
@@ -1019,14 +1021,20 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * writes against that contract; mergeInto renames the source side
     * internally so both namespaces coexist in one join).
     *
-    * Scale: copy-on-write on the affected files only. Victim discovery
-    * is ONE semi join of the target against the source on `condition`
-    * (AQE/broadcast pick the strategy) collecting file NAMES, not rows;
-    * only those files are rewritten via a left join + one codegen'd
-    * first-match-wins CASE chain per column; the insert side is one
-    * anti join. A `notMatchedBySource` clause inherently touches every
-    * target row, so it promotes ALL live files to victims — that is the
-    * operation's semantics, not an implementation shortcut. */
+    * Scale: copy-on-write on the files a clause changes. When the ON
+    * condition has equi-join keys and the source's estimated size is
+    * within the session's `spark.sql.autoBroadcastJoinThreshold`, the
+    * merge is ONE rewrite job with no shuffle ([[mergeByTasks]]): the
+    * source is collected and broadcast as a hash on those keys, each
+    * [[RewriteTask]] probes its candidate files (stats- and
+    * bucket-pruned on the source's key values; every live file under a
+    * `notMatchedBySource` clause), rewrites only the files where a
+    * clause acts, and reports the source rows it matched; the driver
+    * writes the inserts from the rest. Any other merge takes the join
+    * path ([[mergeByJoin]]): one join job finds the files holding a
+    * match and checks cardinality, one write job rewrites them (every
+    * live file under a `notMatchedBySource` clause) and anti-joins the
+    * source to the target for the inserts. Both paths commit once. */
   def mergeInto(source: DataFrame, condition: Column,
                 matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
                 notMatchedBySource: Seq[MergeWhen] = Nil): Long =
@@ -1037,12 +1045,18 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * [[appendAs]]). */
   private[graft] def mergeInto(source: DataFrame, condition: Column,
                                matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
-                               notMatchedBySource: Seq[MergeWhen],
-                               op: String): Long = {
+                               notMatchedBySource: Seq[MergeWhen], op: String): Long =
+    mergeInto(source, condition, matched, notMatched, notMatchedBySource, op, Nil)
+
+  /** As above, with `uniqueKeys`: source columns no two source rows may
+    * share (keyed [[merge]]'s contract, checked before any write). */
+  private def mergeInto(source: DataFrame, condition: Column,
+                        matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
+                        notMatchedBySource: Seq[MergeWhen],
+                        op: String, uniqueKeys: Seq[String]): Long = {
     import GraftTable.MergeSourcePrefix
     val base = currentVersion
-    val sch = schema
-    val tgt = read(asOfVersion = Some(base))
+    val sch = schemaAt(base)
     require(source.columns.toSet.size == source.columns.length,
       s"merge source has duplicate column names: ${source.columns.mkString(",")}")
     // the prefix is the namespace boundary: a TARGET column already
@@ -1066,67 +1080,310 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       .select(source.columns.map(c => col(c).as(MergeSourcePrefix + c)).toIndexedSeq: _*)
       .withColumn(marker, lit(true))
 
-    // first-match-wins CASE chain over the ordered WHEN clauses
+    // the clauses as expressions over one joined row: the target row and
+    // its source match, whose marker is NULL on a target row with none
     def firstWins(clauses: Seq[MergeWhen], out: MergeWhen => Column, default: Column): Column =
       clauses.reverse.foldLeft(default)((els, cl) =>
         when(cl.condition.getOrElse(lit(true)), out(cl)).otherwise(els))
+    val isM = col(marker).isNotNull
+    def byMatch(out: MergeWhen => Column, default: Column): Column =
+      when(isM, firstWins(matched, out, default))
+        .otherwise(firstWins(notMatchedBySource, out, default))
+    val clauses = MergeClauses(
+      acts = byMatch(_ => lit(true), lit(false)),
+      keep = byMatch(cl => lit(cl.set.isDefined), lit(true)),
+      updated = sch.fields.toSeq.map { f =>
+        byMatch(cl => cl.set.flatMap(_.get(f.name)).getOrElse(col(f.name)), col(f.name))
+          .cast(f.dataType).as(f.name)
+      },
+      inserts = firstWins(notMatched, _ => lit(true), lit(false)),
+      inserted = sch.fields.toSeq.map { f =>
+        firstWins(notMatched, cl => cl.set.flatMap(_.get(f.name)).getOrElse(lit(null)), lit(null))
+          .cast(f.dataType).as(f.name)
+      })
 
-    // ---- victims: files whose rows a matched / not-matched-by-source
-    // clause could touch
-    val live = log.snapshotFiles(base)
-    val victims: Seq[String] =
-      if (notMatchedBySource.nonEmpty) live.map(_.path)
-      else if (matched.isEmpty) Nil // insert-only merge never rewrites
+    val size = srcP.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = srcP.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val (victims, added) =
+      (if (size >= 0 && size <= threshold)
+        mergeByTasks(base, sch, srcP, condition, clauses, matched, notMatched,
+          notMatchedBySource, uniqueKeys)
+      else None).getOrElse(
+        mergeByJoin(base, sch, srcP, condition, clauses, matched, notMatched,
+          notMatchedBySource, uniqueKeys, freshName))
+    if (added.isEmpty && victims.isEmpty) return base // nothing to change
+    commitRetry(op, added, victims, SameSchema(sch.json), basedOn = base)
+  }
+
+  /** The WHEN clauses of one MERGE as columns over a joined row (target
+    * columns, then the prefixed source columns and the match marker):
+    * `acts` — a clause applies to the row; `keep` — the row survives;
+    * `updated` — its columns after the first applying clause; `inserts`
+    * and `inserted` — the same for an unmatched source row. */
+  private final case class MergeClauses(acts: Column, keep: Column, updated: Seq[Column],
+                                        inserts: Column, inserted: Seq[Column])
+
+  /** The MERGE rewrite job of [[mergeInto]]: None, before any job runs,
+    * when the ON condition has no equi-join key (split by Spark's
+    * `ExtractEquiJoinKeys`: `<=>` keys match NULL to NULL, `===` keys
+    * never match NULL), when a clause holds anything a task cannot
+    * evaluate, or when a clause moves rows across the bucket or cluster
+    * layout (an assignment to a layout column other than its own ON key
+    * value).
+    *
+    * Driver: the clauses are analyzed and optimized over an empty
+    * relation of the target's and the source's columns, all nullable;
+    * the source is collected once, checked against `uniqueKeys`,
+    * numbered and hashed on its keys ([[MergeSource]]). Candidates are
+    * the files [[planFiles]] keeps under `key IN (source key values)`
+    * on each plain-column equi key (a range past 1000 distinct values),
+    * or every live file when a `notMatchedBySource` clause exists.
+    *
+    * One job ([[runRewrite]]): each task probes its files for a row a
+    * clause acts on, rewrites the files that hold one through the
+    * first-match-wins clauses, fails on a cardinality violation, and
+    * reports the source rows it matched. The driver then writes the
+    * insert rows of the unmatched source rows itself, in the table's
+    * layout (one file per bucket, sorted on the bucket or cluster
+    * columns) into the job's write directory. A failure leaves none of
+    * the merge's files behind. Returns (victims, added files). */
+  private def mergeByTasks(base: Long, sch: StructType, srcP: DataFrame, condition: Column,
+                           clauses: MergeClauses, matched: Seq[MergeWhen],
+                           notMatched: Seq[MergeWhen], notMatchedBySource: Seq[MergeWhen],
+                           uniqueKeys: Seq[String]): Option[(Seq[String], Seq[FileStat])] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BindReferences, BoundReference, EqualNullSafe, EqualTo, GenericInternalRow, InterpretedOrdering, JoinedRow, Predicate, SortOrder, UnsafeProjection, UnsafeRow, Unevaluable}
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.execution.SQLExecution
+    val fileSch = GraftParquetReadShim.asNullable(sch)
+    val srcSch = GraftParquetReadShim.asNullable(srcP.schema)
+    val layoutCols = (bucketColumnAt(base).toSeq ++ clusterSpecNames(sch)).toSet
+    if (notMatchedBySource.exists(_.set.exists(_.keySet.exists(layoutCols))))
+      return None
+    val layoutSets = matched.flatMap(_.set.toSeq.flatMap(_.collect {
+      case (c, v) if layoutCols(c) => (c, v.cast(fileSch(c).dataType))
+    }))
+    // one relation holds both sides' columns: the prefix keeps their
+    // names apart
+    val frame = emptyFrame(StructType(fileSch.fields ++ srcSch.fields)).select(
+      Seq(condition, clauses.acts, clauses.keep, clauses.inserts) ++ clauses.updated ++
+        clauses.inserted ++ layoutSets.map(_._2): _*)
+    val (exprs, attrs) = frame.queryExecution.optimizedPlan match {
+      case logical.Project(list, child) =>
+        (list.map { case a: Alias => a.child; case e => e }, child.output)
+      case _ => return None // a subquery the optimizer turned into a join
+    }
+    val (tAttrs, sAttrs) = attrs.splitAt(fileSch.length)
+    val Seq(cond, acts, keep, inserts) = exprs.take(4)
+    val n = sch.length
+    val updated = exprs.slice(4, 4 + n)
+    val inserted = exprs.slice(4 + n, 4 + 2 * n)
+    val layoutVals = exprs.drop(4 + 2 * n)
+
+    val (tKeys, sKeys, residual) = ExtractEquiJoinKeys.unapply(logical.Join(
+      logical.LocalRelation(tAttrs), logical.LocalRelation(sAttrs), Inner, Some(cond),
+      logical.JoinHint.NONE)) match {
+      case Some((_, l, r, other, _, _, _, _)) if l.nonEmpty =>
+        (l.map(GraftParquetReadShim.joinKey), r.map(GraftParquetReadShim.joinKey), other)
+      case _ => return None
+    }
+    // plain target column = source expression conjuncts: what prunes the
+    // candidates, and the one value a layout column may be set to
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case org.apache.spark.sql.catalyst.expressions.And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val tSet = tAttrs.toSet[Attribute]
+    def sourceSide(e: Expression) = e.references.nonEmpty && e.references.forall(r => !tSet(r))
+    val equiCols: Seq[(String, Expression, Boolean)] = conjuncts(cond).flatMap {
+      case EqualTo(a: AttributeReference, e) if tSet(a) && sourceSide(e) => Some((a.name, e, false))
+      case EqualTo(e, a: AttributeReference) if tSet(a) && sourceSide(e) => Some((a.name, e, false))
+      case EqualNullSafe(a: AttributeReference, e) if tSet(a) && sourceSide(e) => Some((a.name, e, true))
+      case EqualNullSafe(e, a: AttributeReference) if tSet(a) && sourceSide(e) => Some((a.name, e, true))
+      case _ => None
+    }
+    val staysPut = layoutSets.map(_._1).zip(layoutVals).forall { case (c, v) =>
+      equiCols.exists { case (k, e, _) => k == c && e.canonicalized == v.canonicalized }
+    }
+    if (!staysPut) return None
+
+    val ordAttr = AttributeReference("__ordinal", IntegerType, nullable = false)()
+    val srcAttrs = sAttrs :+ ordAttr
+    val lift = graft.engine.ParamLiteral.lift _
+    def bind(e: Expression, over: Seq[Attribute]): Expression =
+      BindReferences.bindReference(e, over)
+    val full = tAttrs ++ srcAttrs
+    val probeAttrs = tAttrs.filter((tKeys ++ residual ++ Seq(acts)).flatMap(_.references).toSet)
+    val probeSchema = StructType(fileSch.fields.filter(f => probeAttrs.exists(_.name == f.name)))
+    def on(ts: Seq[Attribute]) = MergeSource.On(tKeys.map(bind(_, ts)),
+      residual.map(r => bind(lift(r), ts ++ srcAttrs)))
+    val probeOn = on(probeAttrs)
+    val fullOn = on(tAttrs)
+    val probeCond = bind(lift(acts), probeAttrs ++ srcAttrs)
+    val keepB = bind(lift(keep), full)
+    val updatedB = updated.map(e => bind(lift(e), full))
+    val insertsB = bind(lift(inserts), full)
+    val insertedB = inserted.map(e => bind(lift(e), full))
+    val sKeysB = sKeys.map(bind(_, srcAttrs))
+    val all = Seq(probeCond, keepB, insertsB) ++ updatedB ++ insertedB ++ sKeysB ++
+      probeOn.keys ++ probeOn.residual ++ fullOn.keys ++ fullOn.residual
+    if (all.exists(_.exists(_.isInstanceOf[Unevaluable]))) return None
+
+    // ---- the source, once: numbered rows on the driver
+    val qe = srcP.queryExecution
+    val collected = SQLExecution.withNewExecutionId(qe, Some("graft merge source"))(
+      qe.executedPlan.executeCollect())
+    if (uniqueKeys.nonEmpty) {
+      val key = UnsafeProjection.create(uniqueKeys.map { k =>
+        val i = srcSch.fieldIndex(GraftTable.MergeSourcePrefix + k)
+        BoundReference(i, srcSch(i).dataType, nullable = true)
+      })
+      val seen = scala.collection.mutable.HashSet.empty[UnsafeRow]
+      require(collected.forall(r => seen.add(key(r).copy())),
+        s"merge source has duplicate keys on (${uniqueKeys.mkString(",")}); deduplicate first")
+    }
+    val numbered = UnsafeProjection.create(srcAttrs.zipWithIndex.map { case (a, i) =>
+      BoundReference(i, a.dataType, a.nullable)
+    })
+    val rows: Array[InternalRow] = collected.zipWithIndex.map { case (r, i) =>
+      numbered(new JoinedRow(r, InternalRow(i))).copy()
+    }
+
+    // ---- candidates: live files that may hold a row a clause acts on
+    val candidates =
+      if (notMatchedBySource.nonEmpty) log.snapshotFiles(base)
+      else planFiles(base, equiCols.flatMap { case (c, e, nullSafe) =>
+        val dt = fileSch(c).dataType
+        val v = bind(e, srcAttrs)
+        val vals = rows.iterator.map(v.eval).toSeq
+        if (!StatsPruner.comparable(dt) || (nullSafe && vals.contains(null))) None
+        else {
+          val ord = TypeUtils.getInterpretedOrdering(dt)
+          val distinct = vals.filter(_ != null).distinct
+          def lit0(x: Any) = org.apache.spark.sql.GraftSparkInternals.column(Literal(x, dt))
+          if (distinct.size <= 1000) Some(col(c).isin(distinct.map(lit0): _*))
+          else Some(col(c).between(lit0(distinct.min(ord)), lit0(distinct.max(ord))))
+        }
+      })
+
+    val writer = fileWriterFactory(newWriteDir(), sch)
+    val results =
+      if (candidates.isEmpty) Nil
       else {
-        filesJoining(tgt, srcP, condition, live)
+        val hash = spark.sparkContext.broadcast(GraftParquetReadShim.rowHash(rows, sKeysB))
+        val task = new RewriteTask(
+          GraftParquetReadShim.buildReader(spark, format, fileSch, probeSchema, Nil),
+          GraftParquetReadShim.buildReader(spark, format, fileSch, fileSch, Nil),
+          probeCond, Some(keepB), Some(updatedB), Some(writer),
+          Some(new MergeSource(hash, srcAttrs.length, probeOn, fullOn,
+            oneMatch = matched.nonEmpty)))
+        try runRewrite(candidates, task, Some(writer))
+        catch {
+          case e: org.apache.spark.SparkException
+              if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+                .exists(_.getMessage == MergeSource.CardinalityViolation) =>
+            throw new IllegalArgumentException(MergeSource.CardinalityViolation, e)
+        } finally hash.destroy()
       }
 
-    // ---- rewrite the victim files
+    // ---- inserts: the source rows no target row matched, first clause wins
+    val insertRows: Seq[InternalRow] =
+      if (notMatched.isEmpty) Nil
+      else {
+        val hit = new java.util.BitSet
+        results.foreach(r => hit.or(r.matched))
+        val noTarget = new GenericInternalRow(tAttrs.length)
+        val p = Predicate.create(insertsB)
+        p.initialize(0)
+        val proj = UnsafeProjection.create(insertedB)
+        proj.initialize(0)
+        rows.indices.iterator.filterNot(hit.get).map(i => new JoinedRow(noTarget, rows(i)))
+          .filter(p.eval).map(r => proj(r).copy(): InternalRow).toSeq
+      }
+    val insertMsgs =
+      try {
+        def ref(c: String) = BoundReference(fileSch.fieldIndex(c), fileSch(c).dataType, nullable = true)
+        val (groups, sortBy) = bucketSpec match {
+          case Some((id, nb)) =>
+            val b = ref(fieldNameOf(id, sch))
+            (insertRows.groupBy(r => GraftTable.bucketOf(b.eval(r), nb)).toSeq.sortBy(_._1).map(_._2),
+              Seq(b))
+          case None => (if (insertRows.isEmpty) Nil else Seq(insertRows), clusterSpecNames(sch).map(ref))
+        }
+        val order = new InterpretedOrdering(sortBy.map(SortOrder(_, Ascending)))
+        groups.zipWithIndex.map { case (g, i) =>
+          writer.writeAll(i, 0L, (if (sortBy.isEmpty) g else g.sorted(order)).iterator)
+        }
+      } catch {
+        case t: Throwable =>
+          writer.removeDir()
+          throw t
+      }
+    Some((results.flatMap(_.victims), writer.committed(results.map(_.written) ++ insertMsgs)))
+  }
+
+  /** The MERGE join path of [[mergeInto]], for any source and ON
+    * condition: one join job collects the files holding a target row
+    * the source matches, with the most matches one target row has (the
+    * cardinality check, when a WHEN MATCHED clause exists); one write
+    * job rewrites those files — every live file under a
+    * `notMatchedBySource` clause — through a left join and the clause
+    * columns, and anti-joins the source to the target for the inserts.
+    * Returns (victims, added files). */
+  private def mergeByJoin(base: Long, sch: StructType, srcP: DataFrame, condition: Column,
+                          clauses: MergeClauses, matched: Seq[MergeWhen],
+                          notMatched: Seq[MergeWhen], notMatchedBySource: Seq[MergeWhen],
+                          uniqueKeys: Seq[String],
+                          freshName: String => String): (Seq[String], Seq[FileStat]) = {
+    import GraftTable.MergeSourcePrefix
+    if (uniqueKeys.nonEmpty) {
+      val dupKeys = srcP.groupBy(uniqueKeys.map(k => col(MergeSourcePrefix + k)): _*).count()
+        .filter(col("count") > 1).limit(1).count()
+      require(dupKeys == 0,
+        s"merge source has duplicate keys on (${uniqueKeys.mkString(",")}); deduplicate first")
+    }
+    val tgt = read(asOfVersion = Some(base))
+    val live = log.snapshotFiles(base)
     val rowId = freshName("rowid__")
+    val hitFiles: Seq[String] =
+      if (matched.isEmpty) Nil
+      else {
+        val file = freshName("file__")
+        val hits = tgt.withColumn(file, input_file_name())
+          .withColumn(rowId, monotonically_increasing_id())
+          .join(srcP, condition)
+          .groupBy(col(file), col(rowId)).count()
+          .groupBy(col(file)).agg(max(col("count")))
+          .collect()
+        if (hits.exists(_.getLong(1) > 1))
+          throw new IllegalArgumentException(MergeSource.CardinalityViolation)
+        val byName = live.map(f => f.path.split('/').last -> f.path).toMap
+        hits.toSeq.flatMap { r =>
+          val a = r.getString(0)
+          byName.get(a.substring(a.lastIndexOf('/') + 1))
+        }
+      }
+    val victims = if (notMatchedBySource.nonEmpty) live.map(_.path) else hitFiles
+
     val rewritten =
       if (victims.isEmpty) None
       else {
-        val vdf = readData(victims.map(p => s"$root/$p"), sch)
+        val joined = readData(victims.map(p => s"$root/$p"), sch)
           .withColumn(rowId, monotonically_increasing_id())
-        val joined = vdf.join(srcP, condition, "left")
-        val isM = col(marker).isNotNull
-        if (matched.nonEmpty) {
-          val dup = joined.filter(isM).groupBy(col(rowId)).count()
-            .filter(col("count") > 1).limit(1).count()
-          require(dup == 0,
-            "MERGE cardinality violation: a target row matches more than one " +
-              "source row; deduplicate the source or tighten the ON condition")
-        }
-        val keep =
-          when(isM, firstWins(matched, cl => lit(cl.set.isDefined), lit(true)))
-            .otherwise(firstWins(notMatchedBySource, cl => lit(cl.set.isDefined), lit(true)))
-        Some(joined.filter(keep).select(sch.fields.map { f =>
-          def upd(cl: MergeWhen): Column =
-            cl.set.flatMap(_.get(f.name)).getOrElse(col(f.name))
-          when(isM, firstWins(matched, upd, col(f.name)))
-            .otherwise(firstWins(notMatchedBySource, upd, col(f.name)))
-            .cast(f.dataType).as(f.name)
-        }.toIndexedSeq: _*))
+          .join(srcP, condition, "left")
+        // with no WHEN MATCHED clause a target row matching several
+        // source rows stays as it is, once
+        val once = if (matched.isEmpty) joined.dropDuplicates(rowId) else joined
+        Some(once.filter(clauses.keep).select(clauses.updated: _*))
       }
-
-    // ---- inserts: source rows with no target match, first clause wins
     val inserts =
       if (notMatched.isEmpty) None
-      else {
-        val srcOnly = srcP.join(tgt, condition, "left_anti")
-        Some(srcOnly.filter(firstWins(notMatched, _ => lit(true), lit(false)))
-          .select(sch.fields.map { f =>
-            firstWins(notMatched,
-              cl => cl.set.flatMap(_.get(f.name)).getOrElse(lit(null)),
-              lit(null)).cast(f.dataType).as(f.name)
-          }.toIndexedSeq: _*))
-      }
-
+      else Some(srcP.join(tgt, condition, "left_anti")
+        .filter(clauses.inserts).select(clauses.inserted: _*))
     val parts = rewritten.toSeq ++ inserts.toSeq
-    if (parts.isEmpty) return base
-    val added = writeFiles(parts.reduce(_ unionByName _))
-    if (added.isEmpty && victims.isEmpty) return base // nothing to change
-    commitRetry(op, added, victims, SameSchema(sch.json), basedOn = base)
+    (victims, if (parts.isEmpty) Nil else writeFiles(parts.reduce(_ unionByName _)))
   }
 
   /** Row-level changes between two snapshots (CDC — Delta "change data

@@ -11,9 +11,11 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.joins.{HashedRelation, HashedRelationBroadcastMode}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -43,6 +45,10 @@ import org.apache.spark.util.NextIterator
   *  - [[withInputMetrics]]: a task's reads counted in its input metrics
   *    the way `FileScanRDD` counts them.
   *  - [[asNullable]]: a table schema as its data files hold it.
+  *  - [[rowHash]], [[joinKey]]: the `HashedRelation` a broadcast hash
+  *    join builds, over rows the driver holds, and its keys as the
+  *    optimizer normalizes them — the source side of the store's
+  *    copy-on-write MERGE.
   */
 object GraftParquetReadShim {
 
@@ -153,4 +159,23 @@ object GraftParquetReadShim {
     try body(_.map { r => in.incRecordsRead(1); r })
     finally in.setBytesRead(before + bytesOnThread())
   }
+
+  /** Rows hashed on key expressions, serializable for a broadcast. A
+    * row whose key holds a NULL is left out, as in a hash join's build
+    * side. Tasks sharing one copy must each take [[readOnly]]. */
+  final class RowHash private[GraftParquetReadShim] (rel: HashedRelation) extends Serializable {
+    def readOnly: RowHash = new RowHash(rel.asReadOnlyCopy())
+    /** The rows whose key equals `key` (an `UnsafeRow` of the key
+      * types), or null when there are none; the returned rows are
+      * reused as the iterator advances. */
+    def get(key: InternalRow): Iterator[InternalRow] = rel.get(key)
+  }
+
+  /** A join key as a hash join compares it: floating-point NaN and -0.0
+    * normalized, as the optimizer does to every join's keys. */
+  def joinKey(key: Expression): Expression = NormalizeFloatingNumbers.normalize(key)
+
+  /** Hash `rows` (`UnsafeRow`s) on `keys`, bound to their columns. */
+  def rowHash(rows: Array[InternalRow], keys: Seq[Expression]): RowHash =
+    new RowHash(HashedRelationBroadcastMode(keys).transform(rows))
 }

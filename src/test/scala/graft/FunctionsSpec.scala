@@ -10,6 +10,35 @@ class FunctionsSpec extends SparkSpec {
   private def one(sqlText: String): Row =
     graft.sql.GraftSql.sql(spark, sqlText).collect().head
 
+  test("register leaves a session built with the extension as it is, and fills one built without") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TableFunctionRegistry}
+    import graft.functions.GraftFunctions
+    val names = GraftFunctions.injections.map(_._1)
+    val tableNames = GraftFunctions.tableInjections.map(_._1)
+    // the shared session is built with GraftExtensions: it already holds
+    // every graft function, so register replaces none of them
+    val fr = spark.sessionState.functionRegistry
+    val tfr = spark.sessionState.tableFunctionRegistry
+    def infos = names.map(n => fr.lookupFunction(FunctionIdentifier(n)).get) ++
+      tableNames.map(n => tfr.lookupFunction(FunctionIdentifier(n)).get)
+    val before = infos
+    assert(before.forall(_.getClassName == GraftFunctions.GraftInfoClass))
+    GraftFunctions.register(spark)
+    assert(infos.zip(before).forall { case (a, b) => a eq b },
+      "register replaced functions the extension had injected")
+    // registries holding Spark's built-ins only (a session built without
+    // the extension) get every graft function, built-in names included
+    val bare = FunctionRegistry.builtin.clone()
+    val bareTables = TableFunctionRegistry.builtin.clone()
+    assert(!names.forall(n => bare.functionExists(FunctionIdentifier(n))))
+    GraftFunctions.registerInto(bare, bareTables)
+    def graftOwned(r: org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase[_], n: String) =
+      r.lookupFunction(FunctionIdentifier(n)).exists(_.getClassName == GraftFunctions.GraftInfoClass)
+    assert(names.forall(graftOwned(bare, _)), names.filterNot(graftOwned(bare, _)))
+    assert(tableNames.forall(graftOwned(bareTables, _)), tableNames.filterNot(graftOwned(bareTables, _)))
+  }
+
   test("strpos is 1-based, 0 when absent") {
     assert(one("SELECT strpos('hello', 'l') a, strpos('hello', 'z') b") == Row(3, 0))
   }

@@ -486,32 +486,10 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   /** Jobs, stages, tasks, shuffle-write bytes and input bytes of one
-    * statement — counts of work, not time, read after draining the
-    * listener bus. */
+    * statement ([[WorkCount]]). */
   private def work(stmt: String): (Int, Int, Int, Long, Long) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    val input = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (e.taskMetrics != null) {
-          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          input.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-        }
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(l)
-    try { sql(stmt); org.apache.spark.ListenerDrain(sc) }
-    finally sc.removeSparkListener(l)
-    (jobs.get, stages.get, tasks.get, shuffled.get, input.get)
+    val w = WorkCount.of(spark.sparkContext)(sql(stmt))
+    (w.jobs, w.stages, w.tasks, w.shuffled, w.input)
   }
 
   test("work counts: INSERT, UPDATE and DELETE run no read-back stats job") {
@@ -550,6 +528,49 @@ class GraftCatalogSpec extends SparkSpec {
     assert(rInput > 0 && pInput > 0, s"input bytes: range $rInput, point $pInput")
     assert(gt.planFiles(gt.currentVersion).forall(_.min.contains(GraftTable.BucketStatKey)))
     assert(sql("SELECT count(*) FROM gcat.dbworkb.t").head().getLong(0) == 59L)
+  }
+
+  test("work counts: a broadcastable MERGE is one rewrite job with no shuffle; one bucket is one task") {
+    // the source is small enough to broadcast: its rows are hashed on the
+    // ON keys and the copy-on-write tasks match, update and report the
+    // matched source rows; the driver writes the inserts
+    sql("CREATE NAMESPACE gcat.dbworkm")
+    sql("CREATE TABLE gcat.dbworkm.t (id BIGINT, v STRING, n BIGINT)")
+    sql("INSERT INTO gcat.dbworkm.t SELECT id, concat('v', id), id FROM range(0, 20, 1, 1)")
+    sql("INSERT INTO gcat.dbworkm.t SELECT id, concat('v', id), id FROM range(20, 40, 1, 1)")
+    val upsert = """MERGE INTO gcat.dbworkm.t AS t
+      USING (SELECT * FROM VALUES (3, 'x'), (25, 'y'), (100, 'z') AS s(id, v)) AS s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v, n = t.n + 1
+      WHEN NOT MATCHED THEN INSERT (id, v, n) VALUES (s.id, s.v, 0)"""
+    val (jobs, stages, _, shuffled, _) = work(upsert)
+    assert(jobs <= 2 && stages <= 2 && shuffled == 0L,
+      s"MERGE: $jobs jobs, $stages stages, $shuffled shuffle bytes")
+    assert(sql("SELECT id, v, n FROM gcat.dbworkm.t WHERE id IN (3, 25, 100) ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
+      Seq((3L, "x", 4L), (25L, "y", 26L), (100L, "z", 0L)))
+    assert(sql("SELECT count(*) FROM gcat.dbworkm.t").head().getLong(0) == 41L)
+
+    // bucketed target: the source keys all hash into one bucket, so the
+    // candidates prune to that bucket's one file and the rewrite is one
+    // task; the insert lands in a file of its own bucket
+    sql("CREATE TABLE gcat.dbworkm.b (id BIGINT, v STRING) PARTITIONED BY (bucket(4, id))")
+    sql("INSERT INTO gcat.dbworkm.b SELECT id, concat('v', id) FROM range(0, 80)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbworkm/b")
+    assert(gt.planFiles(gt.currentVersion).size == 4)
+    val oneBucket = (0L until 200L).filter(k => GraftTable.bucketOf(k, 4) == GraftTable.bucketOf(7L, 4))
+    val (hit, miss) = (oneBucket.filter(_ < 80).take(2), oneBucket.filter(_ >= 80).head)
+    val (bJobs, _, bTasks, bShuffled, _) = work(s"""MERGE INTO gcat.dbworkm.b AS t
+      USING (SELECT * FROM VALUES (${hit(0)}, 'p'), (${hit(1)}, 'q'), ($miss, 'r') AS s(id, v)) AS s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT *""")
+    assert((bJobs, bTasks, bShuffled) == (1, 1, 0L),
+      s"bucketed MERGE: $bJobs jobs, $bTasks tasks, $bShuffled shuffle bytes")
+    val files = gt.planFiles(gt.currentVersion)
+    assert(files.forall(_.min.contains(GraftTable.BucketStatKey)), files)
+    assert(sql(s"SELECT v FROM gcat.dbworkm.b WHERE id IN (${hit(0)}, ${hit(1)}, $miss) ORDER BY id")
+      .collect().map(_.getString(0)).toSeq == Seq("p", "q", "r"))
   }
 
   test("correlated UPDATE assignments compute per-row SET values via the merge lowering") {

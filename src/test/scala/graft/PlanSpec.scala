@@ -597,6 +597,37 @@ class PlanSpec extends SparkSpec {
     finally spark.conf.set(key, "false")
   }
 
+  test("t30 pageRank inputs: one action builds both loop-invariant caches") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.operators.GraphOps
+    val edges = spark.range(0, 60)
+      .select((col("id") % 17).as("src"), ((col("id") * 7 + 3) % 17).as("dst"))
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+          actions.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val (ed, nodes, nodesN) =
+      try { val r = GraphOps.pageRankInputs(edges); org.apache.spark.ListenerDrain(sc); r }
+      finally sc.removeSparkListener(l)
+    try {
+      // the base relation's localCheckpoint, then one count over both caches
+      assert(actions.get == 2, s"${actions.get} actions")
+      for (df <- Seq(ed, nodesN)) {
+        val cached = spark.sharedState.cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        assert(cached.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded),
+          s"cache not built: ${df.queryExecution.logical}")
+      }
+    } finally Seq(ed, nodes, nodesN).foreach(_.unpersist())
+  }
+
   /** Generated-code compilations so far, JVM-wide. */
   private def compilations: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
