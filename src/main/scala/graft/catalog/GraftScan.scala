@@ -41,9 +41,13 @@ import graft.store.{FileStat, GraftTable}
   * (GraftParquetReadShim — column pruning including nested fields,
   * row-group/stripe filter pushdown, field-id resolution,
   * vectorization), built on the driver so it captures this session's
-  * SQLConf exactly like FileSourceScanExec. Statistics are the planned
-  * files' commit-log rows and bytes, which static join selection sees:
-  * a small catalog table broadcasts without waiting for AQE.
+  * SQLConf exactly like FileSourceScanExec. It is built once per scan,
+  * and a reader with no pushed filter once per table schema and
+  * projection (the shim keeps it for later scans); a reader with pushed
+  * filters holds their literals and is not kept past its scan.
+  * Statistics are the planned files' commit-log rows and bytes, which
+  * static join selection sees: a small catalog table broadcasts
+  * without waiting for AQE.
   */
 final class GraftScan(
     gt: GraftTable,
@@ -111,9 +115,14 @@ final class GraftScan(
     case _ => Array.empty
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(GraftParquetReadShim.buildReader(
-      gt.spark, gt.format, gt.schemaAt(version), required, pushed.toSeq))
+  /** Built once per scan: Spark asks a scan for its reader factory more
+    * than once per query (twice for a catalog point read). With no
+    * pushed filter the shim reuses one reader across scans; one
+    * carrying the pushed filters' literals is this scan's own. */
+  private lazy val readerFactory = new GraftReaderFactory(GraftParquetReadShim.buildReader(
+    gt.spark, gt.format, gt.schemaAt(version), required, pushed.toSeq))
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression}
@@ -34,10 +35,18 @@ private[store] final case class GraftFileMessage(stat: Option[FileStat])
   * the format's `OutputWriterFactory` (schema with field-id metadata,
   * codec, timezone and bloom options baked into the job conf, exactly
   * `FileFormatWriter`'s driver-side capture), the `data/<uuid8>` target
-  * directory, and the stats the tasks compute as rows go by. */
+  * directory, and the stats the tasks compute as rows go by.
+  *
+  * The `OutputWriterFactory` and the job conf are built once per
+  * distinct input — format, file schema, writer options and the content
+  * of the context's Hadoop conf with the session's SQL conf overlaid —
+  * and shared by every later write with the same inputs
+  * ([[GraftFileWriter.factory]]); the conf travels as a broadcast, so
+  * this factory stays a few KB in a task closure and a task reads the
+  * conf from its executor's copy instead of decoding its own. */
 final class GraftFileWriterFactory private[store] (
     owf: OutputWriterFactory,
-    conf: SerializableHadoopConf,
+    conf: Broadcast[SerializableHadoopConf],
     private[store] val schema: StructType,
     root: String,
     subdir: String,
@@ -52,7 +61,7 @@ final class GraftFileWriterFactory private[store] (
   private[store] def open(partitionId: Int, taskId: Long): (OutputWriter, String) = {
     val attempt = new TaskAttemptID(
       new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), (taskId & 0x7fffffff).toInt)
-    val ctx = new TaskAttemptContextImpl(conf.value, attempt)
+    val ctx = new TaskAttemptContextImpl(conf.value.value, attempt)
     val name = s"part-$partitionId-${UUID.randomUUID().toString.take(12)}${owf.getFileExtension(ctx)}"
     (owf.newInstance(s"$root/$subdir/$name", schema, ctx), s"$subdir/$name")
   }
@@ -62,14 +71,14 @@ final class GraftFileWriterFactory private[store] (
   private[store] def sizeOf(rel: String): Long =
     try {
       val p = fsPath(rel)
-      p.getFileSystem(conf.value).getFileStatus(p).getLen
+      p.getFileSystem(conf.value.value).getFileStatus(p).getLen
     } catch { case _: Exception => 0L }
 
   /** Best-effort delete of one written file (task abort). */
   private[store] def delete(rel: String): Unit =
     try {
       val p = fsPath(rel)
-      p.getFileSystem(conf.value).delete(p, false)
+      p.getFileSystem(conf.value.value).delete(p, false)
     } catch { case _: Exception => () }
 
   /** Best-effort removal of the whole write directory — for a failed or
@@ -78,7 +87,7 @@ final class GraftFileWriterFactory private[store] (
   private[graft] def removeDir(): Unit =
     try {
       val p = fsPath(subdir)
-      p.getFileSystem(conf.value).delete(p, true)
+      p.getFileSystem(conf.value.value).delete(p, true)
     } catch { case _: Exception => () }
 
   /** Task side: write every row of one partition, commit or abort. */
@@ -209,9 +218,25 @@ final class GraftFileWriter private[store] (f: GraftFileWriterFactory,
 }
 
 object GraftFileWriter {
+  /** The prepared part of a write, shared by writes with equal inputs:
+    * the format's `OutputWriterFactory` and its job conf, broadcast. */
+  private final case class PreparedWrite(owf: OutputWriterFactory,
+                                         conf: Broadcast[SerializableHadoopConf])
+
+  /** By format, file schema, writer options and the content of the job
+    * conf before `prepareWrite` (the context's Hadoop conf with the
+    * session's SQL conf and the options overlaid). A few tables' worth:
+    * each entry holds one conf. */
+  private val prepared =
+    new GraftParquetReadShim.Prepared[(String, StructType, Map[String, String],
+      java.util.Map[String, String]), PreparedWrite](8)
+
   /** Driver side: prepare the writer for one write of `sch`-shaped rows
     * into `root/subdir`. `options` are format writer options (bloom
-    * filters); `bucket` is the bucket column's name and count. */
+    * filters); `bucket` is the bucket column's name and count. The
+    * format's writer factory and the job conf come from [[prepared]]:
+    * built and broadcast on the first write with these inputs, reused
+    * by every later one. */
   private[store] def factory(spark: SparkSession, root: String, subdir: String,
                              format: String, tableSch: StructType, options: Map[String, String],
                              bucket: Option[(String, Int)]): GraftFileWriterFactory = {
@@ -225,9 +250,13 @@ object GraftFileWriter {
     // the session's hadoop-conf view, as every file-format writer expects
     for ((k, v) <- spark.conf.getAll if k.startsWith("spark.sql.")) hconf.set(k, v)
     for ((k, v) <- options) hconf.set(k, v)
-    val job = Job.getInstance(hconf)
-    val fmt = if (format == "orc") new OrcFileFormat() else new ParquetFileFormat()
-    val owf = fmt.prepareWrite(spark, job, options, sch)
+    val PreparedWrite(owf, conf) = prepared(spark.sparkContext,
+      (format, sch, options, GraftParquetReadShim.confEntries(hconf))) {
+      val job = Job.getInstance(hconf)
+      val fmt = if (format == "orc") new OrcFileFormat() else new ParquetFileFormat()
+      val owf = fmt.prepareWrite(spark, job, options, sch)
+      PreparedWrite(owf, spark.sparkContext.broadcast(new SerializableHadoopConf(job.getConfiguration)))
+    }
     val ords = sch.fields.indices.filter(i => StatsPruner.comparable(sch(i).dataType)).toArray
     // built here, on the driver, so the cast takes this session's
     // timezone and ANSI mode like the aggregate it replaces
@@ -240,7 +269,7 @@ object GraftFileWriter {
       }
       Cast(BoundReference(0, dt, nullable = true), StringType, tz, mode)
     }
-    new GraftFileWriterFactory(owf, new SerializableHadoopConf(job.getConfiguration), sch,
+    new GraftFileWriterFactory(owf, conf, sch,
       root, subdir, ords, render, bucket.map { case (c, n) => (sch.fieldIndex(c), n) })
   }
 
@@ -266,7 +295,12 @@ object GraftFileWriter {
 
 /** Hadoop Configuration is not Serializable; ship it the way Spark's
   * own `SerializableConfiguration` (private) does — via its
-  * Writable encoding. */
+  * Writable encoding. A write job's conf is a broadcast of one of these
+  * (about 110 KB encoded), built once per distinct input by
+  * [[GraftFileWriter.factory]]: it is encoded once, when broadcast, and
+  * a task on an executor that already holds it decodes nothing. Tasks
+  * share the decoded conf read-only; each opens its file through its
+  * own `TaskAttemptContext`, which copies it. */
 private[store] final class SerializableHadoopConf(@transient private var conf: Configuration)
   extends Serializable {
   def value: Configuration = conf

@@ -4,8 +4,9 @@ import java.io.Closeable
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -36,6 +37,8 @@ import org.apache.spark.util.NextIterator
   *    file split with column pruning (nested fields included) and
   *    row-group/stripe filter pushdown, as a [[FileRows]] its caller
   *    closes. Re-implementing a decoder would be both slower and wrong.
+  *    A reader with no pushed filters is built once per input and
+  *    reused by later statements ([[Prepared]]).
   *  - [[filePartitions]]: Spark's own split + bin-packing of a file list
   *    into read tasks (`FilePartition.maxSplitBytes` +
   *    `getFilePartitions`), so a catalog scan plans exactly as many
@@ -45,6 +48,8 @@ import org.apache.spark.util.NextIterator
   *  - [[withInputMetrics]]: a task's reads counted in its input metrics
   *    the way `FileScanRDD` counts them.
   *  - [[asNullable]]: a table schema as its data files hold it.
+  *  - [[Prepared]], [[confEntries]]: driver-side readers and writers
+  *    kept for reuse, keyed on everything they were built from.
   *  - [[rowHash]], [[joinKey]]: the `HashedRelation` a broadcast hash
   *    join builds, over rows the driver holds, and its keys as the
   *    optimizer normalizes them — the source side of the store's
@@ -86,25 +91,87 @@ object GraftParquetReadShim {
     }
   }
 
-  /** Build the serializable per-file reader. */
+  /** The content of `conf`, every string-valued entry: what a reader
+    * or writer prepared from `conf` depends on. Two confs with equal
+    * entries prepare equal objects. */
+  def confEntries(conf: Configuration): java.util.Map[String, String] = {
+    val m = new java.util.HashMap[String, String](conf.size() * 2)
+    conf.iterator().forEachRemaining(e => m.put(e.getKey, e.getValue))
+    m
+  }
+
+  /** Driver-side objects prepared once and reused by every later
+    * statement with the same inputs: a small least-recently-used map
+    * from a SparkContext and a key — which must hold everything the
+    * object was built from, the [[confEntries]] of its Hadoop conf
+    * included, so a `SET` or a change to the context's Hadoop conf
+    * builds a new one — to the object. At most `capacity` entries are
+    * kept; an evicted one is dropped (the ContextCleaner frees any
+    * broadcast it holds once nothing references it), and an entry whose
+    * SparkContext has stopped is dropped, never reused. Two threads
+    * missing the same key both build; the later object is kept. */
+  final class Prepared[K, V](capacity: Int) {
+    private val entries = new java.util.LinkedHashMap[(SparkContext, K), V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(SparkContext, K), V]): Boolean =
+        size() > capacity
+    }
+
+    def apply(sc: SparkContext, key: K)(build: => V): V = {
+      val k = (sc, key)
+      val hit = entries.synchronized {
+        entries.keySet.removeIf(_._1.isStopped)
+        Option(entries.get(k))
+      }
+      hit.getOrElse {
+        val v = build
+        entries.synchronized(entries.put(k, v))
+        v
+      }
+    }
+  }
+
+  /** Readers with no pushed filters ([[buildReader]]): a copy-on-write
+    * rewrite's full-file read, both reads of a MERGE, a catalog scan
+    * with no filter. */
+  private val unfilteredReaders =
+    new Prepared[(String, StructType, StructType, java.util.Map[String, String]),
+      PartitionedFile => FileRows](8)
+
+  /** Build the serializable per-file reader. The format broadcasts the
+    * Hadoop conf the reader opens files with, so each build encodes the
+    * whole conf once. A reader with no `filters` is built once per
+    * format, data schema, required schema and content of the session's
+    * Hadoop conf view ([[Prepared]]) and reused by later statements. A
+    * reader with pushed filters is built per call and not retained: its
+    * filters carry one statement's literals, so keeping it would hold
+    * one conf per distinct literal with no later reuse. */
   def buildReader(spark: SparkSession,
                   format: String,
                   dataSchema: StructType,
                   requiredSchema: StructType,
                   filters: Seq[Filter]): PartitionedFile => FileRows = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val readFile = fileFormat(format).buildReaderWithPartitionValues(
-      sparkSession = classic,
-      dataSchema = dataSchema,
-      partitionSchema = new StructType(),
-      requiredSchema = requiredSchema,
-      filters = filters,
-      // rows, never ColumnarBatch: this reader feeds a row-based
-      // PartitionReader (the vectorized decoder still runs underneath;
-      // it just hands rows off the batch)
-      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      hadoopConf = classic.sessionState.newHadoopConfWithOptions(Map.empty))
-    file => new FileRows(readFile(file))
+    // the session's Hadoop conf view: the context's conf with the SQL
+    // conf overlaid — its content keys every SQLConf value the format
+    // captures as well
+    val hadoopConf = classic.sessionState.newHadoopConfWithOptions(Map.empty)
+    def build(): PartitionedFile => FileRows = {
+      val readFile = fileFormat(format).buildReaderWithPartitionValues(
+        sparkSession = classic,
+        dataSchema = dataSchema,
+        partitionSchema = new StructType(),
+        requiredSchema = requiredSchema,
+        filters = filters,
+        // rows, never ColumnarBatch: this reader feeds a row-based
+        // PartitionReader (the vectorized decoder still runs underneath;
+        // it just hands rows off the batch)
+        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        hadoopConf = hadoopConf)
+      file => new FileRows(readFile(file))
+    }
+    if (filters.nonEmpty) build()
+    else unfilteredReaders(spark.sparkContext,
+      (format, dataSchema, requiredSchema, confEntries(hadoopConf)))(build())
   }
 
   /** Read tasks for `(absolute path, length)` files, planned the way

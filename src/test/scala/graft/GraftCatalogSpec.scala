@@ -573,6 +573,113 @@ class GraftCatalogSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("p", "q", "r"))
   }
 
+  /** Broadcasts `stmt` creates, task binaries included ([[WorkCount]]). */
+  private def broadcasts(stmt: String): Int =
+    WorkCount.of(spark.sparkContext)(sql(stmt).collect()).broadcasts
+
+  test("work counts: a repeated UPDATE or DELETE broadcasts no writer conf and no full-file reader") {
+    // the first statement of each shape builds the writer's job conf and
+    // the filter-free full-file reader; a later one with new literals
+    // reuses both and broadcasts only its one stage's task binary and
+    // its probe reader, which carries the statement's pushed filters
+    sql("CREATE NAMESPACE gcat.dbworkc")
+    sql("CREATE TABLE gcat.dbworkc.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbworkc.t SELECT id, concat('v', id) FROM range(0, 40, 1, 1)")
+    sql("UPDATE gcat.dbworkc.t SET v = 'a' WHERE id >= 1 AND id <= 3")
+    sql("DELETE FROM gcat.dbworkc.t WHERE id >= 4 AND id <= 5")
+    val counts = Seq(
+      "UPDATE" -> broadcasts("UPDATE gcat.dbworkc.t SET v = 'b' WHERE id >= 11 AND id <= 13"),
+      "DELETE" -> broadcasts("DELETE FROM gcat.dbworkc.t WHERE id >= 14 AND id <= 15"))
+    assert(counts == Seq("UPDATE" -> 2, "DELETE" -> 2), counts)
+    assert(sql("SELECT count(*), sum(CASE WHEN v = 'b' THEN 1 ELSE 0 END) FROM gcat.dbworkc.t")
+      .head().toSeq == Seq(36L, 3L))
+  }
+
+  test("work counts: a repeated MERGE broadcasts only its source and task binary") {
+    // both rewrite reads push nothing and the writer's conf is built
+    // once: the second MERGE broadcasts its source hash and its one
+    // stage's task binary, nothing else
+    sql("CREATE NAMESPACE gcat.dbworkr")
+    sql("CREATE TABLE gcat.dbworkr.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbworkr.t SELECT id, concat('v', id) FROM range(0, 40, 1, 1)")
+    def upsert(a: Int, b: Int): String = s"""MERGE INTO gcat.dbworkr.t AS t
+      USING (SELECT * FROM VALUES ($a, 'x'), ($b, 'y') AS s(id, v)) AS s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT *"""
+    sql(upsert(3, 100))
+    assert(broadcasts(upsert(7, 101)) == 2)
+    assert(sql("SELECT count(*) FROM gcat.dbworkr.t WHERE v IN ('x', 'y')").head().getLong(0) == 4L)
+  }
+
+  test("work counts: a catalog point read builds its reader once") {
+    // Spark asks the scan for its reader factory more than once; the
+    // reader (and its broadcast conf) is built on the first ask only
+    sql("CREATE NAMESPACE gcat.dbworkp")
+    sql("CREATE TABLE gcat.dbworkp.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbworkp.t SELECT id, concat('v', id) FROM range(0, 40, 1, 1)")
+    val w = WorkCount.of(spark.sparkContext)(
+      assert(sql("SELECT v FROM gcat.dbworkp.t WHERE id = 17").collect().map(_.getString(0)).toSeq ==
+        Seq("v17")))
+    // one for the reader, one for the read stage's task binary
+    assert((w.stages, w.broadcasts) == (1, 2), w)
+  }
+
+  test("a graft file writer serializes without its Hadoop conf") {
+    // the job conf (about 110 KB encoded) travels as a broadcast: the
+    // factory in a write task's closure holds only its handle
+    sql("CREATE NAMESPACE gcat.dbworks")
+    sql("CREATE TABLE gcat.dbworks.t (id BIGINT, v STRING, score DOUBLE)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbworks/t")
+    val bytes = new java.io.ByteArrayOutputStream
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(gt.fileWriterFactory(gt.newWriteDir(), gt.schema))
+    out.close()
+    assert(bytes.size < 16 * 1024, s"${bytes.size} bytes")
+  }
+
+  test("a SET or a Hadoop-conf change reaches the next write's files") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.column.Encoding
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    sql("CREATE NAMESPACE gcat.dbstale")
+    sql("CREATE TABLE gcat.dbstale.t (id BIGINT, v STRING)")
+    val gt = GraftTable.load(spark, s"$warehouse/dbstale/t")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    var seen = Set.empty[String]
+    /** The codecs and encodings of the files `stmt` added. */
+    def written(stmt: String): (Set[String], Set[Encoding]) = {
+      sql(stmt)
+      val files = gt.planFiles(gt.currentVersion).map(_.path).toSet -- seen
+      seen ++= files
+      assert(files.nonEmpty, stmt)
+      val cols = files.toSeq.flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(s"${gt.root}/$f"), hconf))
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq finally r.close()
+      }
+      (cols.map(_.getCodec.name).toSet, cols.flatMap(_.getEncodings.asScala).toSet)
+    }
+    def dictionary(es: Set[Encoding]) = es.exists(_.usesDictionary)
+    val rows = "SELECT id, concat('v', id % 3) FROM range(0, 30, 1, 1)"
+    try {
+      val (codec0, enc0) = written(s"INSERT INTO gcat.dbstale.t $rows")
+      assert(!codec0.contains("GZIP") && dictionary(enc0), (codec0, enc0))
+      sql("SET spark.sql.parquet.compression.codec=gzip")
+      val (codec1, _) = written(s"INSERT INTO gcat.dbstale.t $rows")
+      assert(codec1 == Set("GZIP"), codec1)
+      val (codec2, _) = written("UPDATE gcat.dbstale.t SET v = 'u' WHERE id >= 3 AND id <= 4")
+      assert(codec2 == Set("GZIP"), codec2)
+      hconf.set("parquet.enable.dictionary", "false")
+      val (codec3, enc3) = written(s"INSERT INTO gcat.dbstale.t $rows")
+      assert(codec3 == Set("GZIP") && !dictionary(enc3), (codec3, enc3))
+    } finally {
+      spark.conf.unset("spark.sql.parquet.compression.codec")
+      hconf.unset("parquet.enable.dictionary")
+    }
+    assert(sql("SELECT count(*) FROM gcat.dbstale.t").head().getLong(0) == 90L)
+  }
+
   test("correlated UPDATE assignments compute per-row SET values via the merge lowering") {
     sql("CREATE NAMESPACE gcat.db28")
     sql("CREATE TABLE gcat.db28.t (id BIGINT, v STRING, total DOUBLE)")

@@ -5,9 +5,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
-/** Jobs, stages, tasks, shuffle-write bytes and input bytes of one piece
-  * of work — counts of work, not time. */
-final case class WorkCount(jobs: Int, stages: Int, tasks: Int, shuffled: Long, input: Long)
+/** Jobs, stages, tasks, shuffle-write bytes, input bytes and broadcasts
+  * created of one piece of work — counts of work, not time. Every stage
+  * a job submits broadcasts its task binary, so `broadcasts` counts
+  * those too. */
+final case class WorkCount(jobs: Int, stages: Int, tasks: Int, shuffled: Long, input: Long,
+                           broadcasts: Int)
 
 object WorkCount {
   /** Count the work `body` runs, read after draining the listener bus. */
@@ -30,8 +33,16 @@ object WorkCount {
     }
     org.apache.spark.ListenerDrain(sc)
     sc.addSparkListener(l)
-    try { body; org.apache.spark.ListenerDrain(sc) }
-    finally sc.removeSparkListener(l)
-    WorkCount(jobs.get, stages.get, tasks.get, shuffled.get, input.get)
+    // broadcast ids come from one counter: the ids of two throwaway
+    // broadcasts around the body bound the ones it created
+    val first = sc.broadcast(0)
+    try {
+      val last =
+        try { body; org.apache.spark.ListenerDrain(sc); sc.broadcast(0) }
+        finally sc.removeSparkListener(l)
+      last.destroy()
+      WorkCount(jobs.get, stages.get, tasks.get, shuffled.get, input.get,
+        (last.id - first.id - 1).toInt)
+    } finally first.destroy()
   }
 }
