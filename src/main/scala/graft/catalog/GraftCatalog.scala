@@ -4,17 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Contains, EndsWith, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or, StartsWith}
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, ProcedureCatalog, SupportsNamespaces, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange, TableWritePrivilege}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.LocalScan
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.execution.datasources.GraftParquetReadShim
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -130,6 +131,13 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
 
   override def loadTable(ident: Identifier): Table = loadPinned(ident, None)
 
+  /** The target of an INSERT, UPDATE, DELETE or MERGE: the head
+    * snapshot with its stored schema, NOT NULL columns included, which
+    * Spark checks the written rows against. */
+  override def loadTable(ident: Identifier,
+                         writePrivileges: util.Set[TableWritePrivilege]): Table =
+    loadPinned(ident, None, forWrite = true)
+
   /** `VERSION AS OF` — a named branch/tag (walden's Nessie refs;
     * `FOR SYSTEM_VERSION AS OF` maps here too) or a numeric snapshot
     * id. Refs resolve FIRST: a digit-only string that is not a ref
@@ -163,10 +171,12 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
     GraftTable.load(SparkSession.active, tablePath(ident).toString)
   }
 
-  private def loadPinned(ident: Identifier, version: Option[Long]): Table = {
+  private def loadPinned(ident: Identifier, version: Option[Long],
+                         forWrite: Boolean = false): Table = {
     val gt = graftTable(ident)
     val pinned = version.getOrElse(gt.currentVersion)
-    new GraftV2Table(gt, s"$catalogName.${ident.toString}", pinned, timeTravel = version.isDefined)
+    new GraftV2Table(gt, s"$catalogName.${ident.toString}", pinned,
+      timeTravel = version.isDefined, forWrite)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -229,7 +239,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val gt = GraftTable.create(spark, dir.toString, empty, fmt, bloomCols,
       (clusterCols ++ propCluster).distinct, allBuckets.headOption)
-    new GraftV2Table(gt, s"$catalogName.${ident.toString}", gt.currentVersion, timeTravel = false)
+    new GraftV2Table(gt, s"$catalogName.${ident.toString}", gt.currentVersion,
+      timeTravel = false, forWrite = true)
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
@@ -481,9 +492,17 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
 
 /** One catalog table = one GraftTable pinned to a snapshot version
   * (resolved at load time → every query reads one consistent snapshot,
-  * Iceberg's isolation contract). */
+  * Iceberg's isolation contract).
+  *
+  * `schema` is the stored one only on a write target (`forWrite`):
+  * Spark then checks rows written into a NOT NULL column, as for any
+  * table. Read, every column is nullable: the store does not enforce a
+  * stored NOT NULL (`GraftTable.append` and `update` can write NULL
+  * there), and a relation declaring one would let the optimizer fold
+  * `IS NULL` over the column to false. */
 private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
-                                          pinned: Long, timeTravel: Boolean)
+                                          pinned: Long, timeTravel: Boolean,
+                                          forWrite: Boolean)
   extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
@@ -492,7 +511,8 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   private[catalog] def isTimeTravel: Boolean = timeTravel
 
   override def name(): String = fullName
-  override def schema(): StructType = gt.schemaAt(pinned)
+  override def schema(): StructType =
+    if (forWrite) gt.schemaAt(pinned) else GraftParquetReadShim.asNullable(gt.schemaAt(pinned))
   // The cluster spec round-trips through SHOW TBLPROPERTIES (and
   // createTable accepts TBLPROPERTIES('clusterBy'=...) back), NOT
   // through partitioning(): graft clustering is range-clustering
@@ -559,56 +579,66 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   * Pushdown contract: `pushFilters` returns ALL filters (Spark keeps
   * re-evaluating them above the scan); the translatable subset is
   * reported via `pushedFilters`, drives commit-log stats and bucket
-  * pruning (skip whole files) in [[GraftTable.planFiles]], and reaches
-  * the file reader for row-group pushdown. Double evaluation of a cheap
-  * predicate is noise; skipped IO at 100 TB is the win.
+  * pruning (skip whole files) in [[GraftTable.planResolved]], and
+  * reaches the file reader for row-group pushdown. Double evaluation of
+  * a cheap predicate is noise; skipped IO at 100 TB is the win.
   */
 private[catalog] final class GraftScanBuilder(gt: GraftTable, version: Long,
                                               fullSchema: StructType)
   extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
   private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[(Filter, Expression)] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftScanBuilder.toColumn(f, fullSchema).isDefined)
+    pushed = filters.flatMap(f => GraftScanBuilder.toExpression(f, fullSchema).map(f -> _))
     filters
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters(): Array[Filter] = pushed.map(_._1)
 
-  override def build(): Scan = {
-    val filterCols = pushed.flatMap(f => GraftScanBuilder.toColumn(f, fullSchema)).toSeq
-    new GraftScan(gt, version, required, pushed, gt.planFiles(version, filterCols))
-  }
+  override def build(): Scan =
+    new GraftScan(gt, version, required, pushedFilters(),
+      gt.planResolved(version, pushed.map(_._2).toSeq))
 }
 
 private[catalog] object GraftScanBuilder {
-  /** V1 Filter → Column, for the subset the stats pruner understands.
-    * Only top-level attributes translate (nested fields fall through —
-    * Spark still evaluates them above the scan). */
-  def toColumn(f: Filter, schema: StructType): Option[Column] = {
-    def top(a: String): Boolean = schema.fieldNames.contains(a)
+  /** V1 Filter → resolved predicate over `schema`'s top-level columns
+    * (attributes by name, literals in the column's type), for the
+    * subset the stats and bucket pruners understand. Nested fields, and
+    * a value that does not convert to its column's type, fall through:
+    * Spark still evaluates them above the scan. */
+  def toExpression(f: Filter, schema: StructType): Option[Expression] = {
+    def attr(a: String): Option[AttributeReference] =
+      schema.find(_.name == a).map(c => AttributeReference(c.name, c.dataType)())
+    def value(a: AttributeReference, v: Any): Option[Expression] =
+      scala.util.Try(Literal.create(v, a.dataType)).toOption
+    def cmp(a: String, v: Any)(mk: (Expression, Expression) => Expression): Option[Expression] =
+      for (x <- attr(a); l <- value(x, v)) yield mk(x, l)
     f match {
-      case sources.EqualTo(a, v) if top(a) => Some(col(a) === lit(v))
-      case sources.EqualNullSafe(a, v) if top(a) => Some(col(a) <=> lit(v))
-      case sources.GreaterThan(a, v) if top(a) => Some(col(a) > lit(v))
-      case sources.GreaterThanOrEqual(a, v) if top(a) => Some(col(a) >= lit(v))
-      case sources.LessThan(a, v) if top(a) => Some(col(a) < lit(v))
-      case sources.LessThanOrEqual(a, v) if top(a) => Some(col(a) <= lit(v))
-      case sources.In(a, vs) if top(a) => Some(col(a).isin(vs.toIndexedSeq: _*))
-      case sources.IsNull(a) if top(a) => Some(col(a).isNull)
-      case sources.IsNotNull(a) if top(a) => Some(col(a).isNotNull)
-      case sources.StringStartsWith(a, v) if top(a) => Some(col(a).startsWith(v))
-      case sources.StringEndsWith(a, v) if top(a) => Some(col(a).endsWith(v))
-      case sources.StringContains(a, v) if top(a) => Some(col(a).contains(v))
+      case sources.EqualTo(a, v) => cmp(a, v)(EqualTo)
+      case sources.EqualNullSafe(a, v) => cmp(a, v)(EqualNullSafe)
+      case sources.GreaterThan(a, v) => cmp(a, v)(GreaterThan)
+      case sources.GreaterThanOrEqual(a, v) => cmp(a, v)(GreaterThanOrEqual)
+      case sources.LessThan(a, v) => cmp(a, v)(LessThan)
+      case sources.LessThanOrEqual(a, v) => cmp(a, v)(LessThanOrEqual)
+      case sources.In(a, vs) =>
+        attr(a).flatMap { x =>
+          val ls = vs.toSeq.flatMap(value(x, _))
+          if (ls.length == vs.length) Some(In(x, ls)) else None
+        }
+      case sources.IsNull(a) => attr(a).map(IsNull)
+      case sources.IsNotNull(a) => attr(a).map(IsNotNull)
+      case sources.StringStartsWith(a, v) => cmp(a, v)(StartsWith)
+      case sources.StringEndsWith(a, v) => cmp(a, v)(EndsWith)
+      case sources.StringContains(a, v) => cmp(a, v)(Contains)
       case sources.And(l, r) =>
-        for (lc <- toColumn(l, schema); rc <- toColumn(r, schema)) yield lc && rc
+        for (lc <- toExpression(l, schema); rc <- toExpression(r, schema)) yield And(lc, rc)
       case sources.Or(l, r) =>
-        for (lc <- toColumn(l, schema); rc <- toColumn(r, schema)) yield lc || rc
-      case sources.Not(c) => toColumn(c, schema).map(!_)
+        for (lc <- toExpression(l, schema); rc <- toExpression(r, schema)) yield Or(lc, rc)
+      case sources.Not(c) => toExpression(c, schema).map(Not)
       case _ => None
     }
   }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.types._
 import graft.store.{FileStat, GraftTable}
 
 /** The catalog's one read path: a native DSv2 batch scan over the files
-  * [[GraftTable.planFiles]] kept for one pinned snapshot and the pushed
-  * filters (stats pruning + bucket pruning, metadata-only). The scan
-  * picks its layout from those files:
+  * [[GraftTable.planResolved]] kept for one pinned snapshot and the
+  * pushed filters (stats pruning + bucket pruning, metadata-only; the
+  * filters arrive as resolved predicates, so planning analyzes
+  * nothing). The scan picks its layout from those files:
   *
   *  - bucketed: the table has a bucket spec and every planned file
   *    records its single bucket id in the commit-log stats (`__bucket`,
@@ -82,7 +83,11 @@ final class GraftScan(
         files.map(f => (absPath(f), f.bytes))).toArray
   }
 
-  override def readSchema(): StructType = required
+  /** The columns as the files hold them: every one nullable (a stored
+    * NOT NULL is not enforced on the data). */
+  private val readCols = GraftParquetReadShim.asNullable(required)
+
+  override def readSchema(): StructType = readCols
   override def toBatch: Batch = this
 
   override def description(): String = {
@@ -120,7 +125,8 @@ final class GraftScan(
     * pushed filter the shim reuses one reader across scans; one
     * carrying the pushed filters' literals is this scan's own. */
   private lazy val readerFactory = new GraftReaderFactory(GraftParquetReadShim.buildReader(
-    gt.spark, gt.format, gt.schemaAt(version), required, pushed.toSeq))
+    gt.spark, gt.format, GraftParquetReadShim.asNullable(gt.schemaAt(version)), readCols,
+    pushed.toSeq))
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 

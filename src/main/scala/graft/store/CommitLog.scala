@@ -1,8 +1,11 @@
 package graft.store
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -48,6 +51,43 @@ private[store] final case class Checkpoint(version: Long, files: Seq[FileStat])
 object CommitLog {
   /** Publish a resolved-file-set checkpoint every Nth commit. */
   val CheckpointInterval: Int = 16
+
+  /** Log JSON texts (commits, checkpoints, schemas) parsed since the
+    * JVM started: what [[parsed]] did not already hold. */
+  private[graft] val parses = new AtomicLong
+
+  /** Parsed log JSON by its text, shared by every table in the JVM.
+    * A parse is a function of the text alone, so an entry is only ever
+    * served for a file holding exactly that text: a table dropped and
+    * re-created at the same path, whose files hold other commits,
+    * misses. Least recently used entries go once the texts held pass
+    * `maxChars` (commits are a few KB; a text over the bound is parsed
+    * and not kept). */
+  private final class ParseMemo(maxChars: Long) {
+    private var chars = 0L
+    private val entries = new java.util.LinkedHashMap[(Class[_], String), AnyRef](64, 0.75f, true)
+
+    def apply[T <: AnyRef](text: String, cls: Class[T])(parse: String => T): T = {
+      val key = (cls, text)
+      val hit = entries.synchronized(entries.get(key))
+      if (hit != null) return cls.cast(hit)
+      val v = parse(text)
+      parses.incrementAndGet()
+      if (text.length <= maxChars) entries.synchronized {
+        if (entries.put(key, v) == null) chars += text.length
+        val it = entries.keySet.iterator
+        while (chars > maxChars && it.hasNext) {
+          chars -= it.next()._2.length
+          it.remove()
+        }
+      }
+      v
+    }
+  }
+
+  /** 4M characters of JSON: about a thousand commits, or the
+    * checkpoints of tables with thousands of live files. */
+  private val parsed = new ParseMemo(4L << 20)
 }
 
 /** Append-only JSON commit log + named refs, with optimistic
@@ -88,25 +128,36 @@ final class CommitLog(tableRoot: String) {
 
   private def commitPath(v: Long): Path = logDir.resolve(f"$v%020d.json")
 
-  def versions: Seq[Long] =
-    if (!Files.isDirectory(logDir)) Seq.empty
+  /** One listing of the log directory: the sorted versions of each of
+    * `suffixes`' files. */
+  private def listing(suffixes: String*): Map[String, Seq[Long]] =
+    if (!Files.isDirectory(logDir)) suffixes.map(_ -> Seq.empty[Long]).toMap
     else {
       val s = Files.list(logDir)
-      try s.iterator.asScala
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(".json"))
-        .map(_.stripSuffix(".json").toLong)
-        .toSeq.sorted
-      finally s.close() // Files.list leaks the directory FD until GC
+      val names =
+        try s.iterator.asScala.map(_.getFileName.toString).toVector
+        finally s.close() // Files.list leaks the directory FD until GC
+      suffixes.map { x =>
+        x -> names.filter(_.endsWith(x)).map(_.stripSuffix(x).toLong).sorted
+      }.toMap
     }
+
+  def versions: Seq[Long] = listing(".json")(".json")
 
   def latestVersion: Long = versions.lastOption.getOrElse(0L)
 
+  private def text(p: Path): String = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+
+  /** One commit. The file is read on every call; its parse is shared
+    * with every earlier read of the same text ([[CommitLog.parsed]]). */
   def read(version: Long): Commit = {
-    require(Files.exists(commitPath(version)),
-      s"no version $version at $tableRoot (have: ${versions.mkString(",")})")
-    val txt = new String(Files.readAllBytes(commitPath(version)), StandardCharsets.UTF_8)
-    JsonMethods.parse(txt).extract[Commit]
+    val txt =
+      try text(commitPath(version))
+      catch {
+        case _: NoSuchFileException => throw new IllegalArgumentException(
+          s"requirement failed: no version $version at $tableRoot (have: ${versions.mkString(",")})")
+      }
+    CommitLog.parsed(txt, classOf[Commit])(JsonMethods.parse(_).extract[Commit])
   }
 
   /** Atomically publish `commit` as the next version. Returns false if
@@ -139,18 +190,6 @@ final class CommitLog(tableRoot: String) {
   def checkpointInterval: Int = CommitLog.CheckpointInterval
   private def ckptPath(v: Long): Path = logDir.resolve(f"$v%020d.ckpt")
 
-  private def checkpointVersions: Seq[Long] =
-    if (!Files.isDirectory(logDir)) Seq.empty
-    else {
-      val s = Files.list(logDir)
-      try s.iterator.asScala
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(".ckpt"))
-        .map(_.stripSuffix(".ckpt").toLong)
-        .toSeq.sorted
-      finally s.close()
-    }
-
   /** Best-effort: checkpoints are deterministic derived data, so a lost
     * race or an IO failure only costs replay length, never correctness. */
   private def maybeCheckpoint(v: Long): Unit =
@@ -168,12 +207,13 @@ final class CommitLog(tableRoot: String) {
     * checkpoint at or below it, replay only the commits after. */
   def snapshotFiles(version: Long): Seq[FileStat] = {
     val live = scala.collection.mutable.LinkedHashMap[String, FileStat]()
-    val base = checkpointVersions.filter(_ <= version).maxOption
+    val log = listing(".ckpt", ".json")
+    val base = log(".ckpt").filter(_ <= version).maxOption
     base.foreach { bv =>
-      val txt = new String(Files.readAllBytes(ckptPath(bv)), StandardCharsets.UTF_8)
-      JsonMethods.parse(txt).extract[Checkpoint].files.foreach(f => live(f.path) = f)
+      CommitLog.parsed(text(ckptPath(bv)), classOf[Checkpoint])(JsonMethods.parse(_).extract[Checkpoint])
+        .files.foreach(f => live(f.path) = f)
     }
-    versions.filter(v => v > base.getOrElse(0L) && v <= version).foreach { v =>
+    log(".json").filter(v => v > base.getOrElse(0L) && v <= version).foreach { v =>
       val c = read(v)
       if (c.op == "overwrite" || c.op == "create") live.clear()
       c.removed.foreach(live.remove)
@@ -183,6 +223,11 @@ final class CommitLog(tableRoot: String) {
   }
 
   def schemaJsonAt(version: Long): String = read(version).schemaJson
+
+  /** The schema commit `version` publishes, its JSON parsed once. */
+  def schemaAt(version: Long): StructType =
+    CommitLog.parsed(schemaJsonAt(version), classOf[StructType])(
+      DataType.fromJson(_).asInstanceOf[StructType])
 
   // ---- refs (branches / tags) ------------------------------------------
   def setRef(name: String, version: Long): Unit = {

@@ -78,8 +78,9 @@ private[store] object MergeSource {
 /** The task side of GraftTable's copy-on-write DML and MERGE: for each
   * candidate file of the task, in order,
   *  1. probe: read only the columns the probe needs (`probeRead`,
-  *     filters pushed down), stop at the first row where `probeCond` is
-  *     TRUE and close the read;
+  *     nothing pushed: the reader is shared by every statement of the
+  *     table's schema and projection), stop at the first row where
+  *     `probeCond` is TRUE and close the read;
   *  2. on a hit, stream the whole file (`fullRead`, nothing pushed)
   *     into the task's one output file, keeping the rows `keep`
   *     accepts and writing them through `project` (either may be

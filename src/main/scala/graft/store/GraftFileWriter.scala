@@ -3,7 +3,7 @@ package graft.store
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
@@ -34,8 +34,10 @@ private[store] final case class GraftFileMessage(stat: Option[FileStat])
   * Everything that must match between the two paths is fixed here:
   * the format's `OutputWriterFactory` (schema with field-id metadata,
   * codec, timezone and bloom options baked into the job conf, exactly
-  * `FileFormatWriter`'s driver-side capture), the `data/<uuid8>` target
-  * directory, and the stats the tasks compute as rows go by.
+  * `FileFormatWriter`'s driver-side capture), the file system files are
+  * created in ([[GraftLocalFileSystem]] for local tables), the
+  * `data/<uuid8>` target directory, and the stats the tasks compute as
+  * rows go by.
   *
   * The `OutputWriterFactory` and the job conf are built once per
   * distinct input — format, file schema, writer options and the content
@@ -68,27 +70,25 @@ final class GraftFileWriterFactory private[store] (
 
   private def fsPath(rel: String): Path = new Path(s"$root/$rel")
 
+  /** The file system this write's files are created in: for a `file:`
+    * root, [[GraftLocalFileSystem]] (the job conf pins it). */
+  private[graft] def fileSystem: FileSystem = new Path(root).getFileSystem(conf.value.value)
+
   private[store] def sizeOf(rel: String): Long =
-    try {
-      val p = fsPath(rel)
-      p.getFileSystem(conf.value.value).getFileStatus(p).getLen
-    } catch { case _: Exception => 0L }
+    try fileSystem.getFileStatus(fsPath(rel)).getLen
+    catch { case _: Exception => 0L }
 
   /** Best-effort delete of one written file (task abort). */
   private[store] def delete(rel: String): Unit =
-    try {
-      val p = fsPath(rel)
-      p.getFileSystem(conf.value.value).delete(p, false)
-    } catch { case _: Exception => () }
+    try fileSystem.delete(fsPath(rel), false)
+    catch { case _: Exception => () }
 
   /** Best-effort removal of the whole write directory — for a failed or
     * aborted write, none of whose files was committed. A crashed
     * driver's leftovers fall to vacuum's unreferenced-file sweep. */
   private[graft] def removeDir(): Unit =
-    try {
-      val p = fsPath(subdir)
-      p.getFileSystem(conf.value.value).delete(p, true)
-    } catch { case _: Exception => () }
+    try fileSystem.delete(fsPath(subdir), true)
+    catch { case _: Exception => () }
 
   /** Task side: write every row of one partition, commit or abort. */
   private[store] def runTask(ctx: TaskContext, rows: Iterator[InternalRow]): WriterCommitMessage =
@@ -250,6 +250,8 @@ object GraftFileWriter {
     // the session's hadoop-conf view, as every file-format writer expects
     for ((k, v) <- spark.conf.getAll if k.startsWith("spark.sql.")) hconf.set(k, v)
     for ((k, v) <- options) hconf.set(k, v)
+    // create files without forking a chmod per file
+    GraftLocalFileSystem.pin(hconf)
     val PreparedWrite(owf, conf) = prepared(spark.sparkContext,
       (format, sch, options, GraftParquetReadShim.confEntries(hconf))) {
       val job = Job.getInstance(hconf)

@@ -149,8 +149,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
 
   def schema: StructType = schemaAt(currentVersion)
 
-  def schemaAt(v: Long): StructType =
-    DataType.fromJson(log.schemaJsonAt(v)).asInstanceOf[StructType]
+  def schemaAt(v: Long): StructType = log.schemaAt(v)
 
   /** Resolve a version pin: explicit number wins, then a named
     * branch/tag, else the current head. The catalog layer uses this to
@@ -205,21 +204,25 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     filters.foldLeft(df)(_ filter _)
   }
 
-  /** The files a read of snapshot `v` under `filters` must open:
-    * the snapshot's live files, minus those whose min/max/null stats
-    * exclude a filter ([[StatsPruner]]), minus — on a bucketed table —
-    * those outside the buckets an equality/IN filter on the bucket key
-    * hashes into. Metadata-only (commit-log FileStats, no file IO); the
-    * one file-planning step behind [[read]], [[snapshotStats]] and the
-    * catalog scan. */
-  def planFiles(v: Long, filters: Seq[Column] = Nil): Seq[FileStat] = {
+  /** The files a read of snapshot `v` under `filters` must open
+    * ([[planResolved]] of the filters resolved against the snapshot's
+    * schema). The one file-planning step behind [[read]] and
+    * [[snapshotStats]]. */
+  def planFiles(v: Long, filters: Seq[Column] = Nil): Seq[FileStat] =
+    planResolved(v, if (filters.isEmpty) Nil else resolve(filters, schemaAt(v)))
+
+  /** The files a read of snapshot `v` under `conds` (predicates
+    * resolved against the snapshot's schema: attributes by name,
+    * literals in the column's type) must open: the snapshot's live
+    * files, minus those whose min/max/null stats exclude a predicate
+    * ([[StatsPruner]]), minus — on a bucketed table — those outside the
+    * buckets an equality/IN predicate on the bucket key hashes into.
+    * Metadata-only (commit-log FileStats, no file IO). The catalog scan
+    * and copy-on-write DML hand in the predicates they already hold. */
+  private[graft] def planResolved(v: Long, conds: Seq[Expression]): Seq[FileStat] = {
     val files = log.snapshotFiles(v)
-    if (filters.isEmpty) files
-    else {
-      val sch = schemaAt(v)
-      val resolved = resolve(filters, sch)
-      bucketPruneFiles(StatsPruner.prune(files, resolved, sch), resolved, v)
-    }
+    if (conds.isEmpty) files
+    else bucketPruneFiles(StatsPruner.prune(files, conds, schemaAt(v)), conds, v)
   }
 
   /** Bucket pruning: equality/IN conjuncts on the bucket column keep
@@ -851,13 +854,18 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * = the SET map) and the clustered dynamic overwrite: ONE Spark job,
     * one stage, no shuffle ([[RewriteTask]]).
     *
-    * Driver: candidates are [[planFiles]]' (stats + bucket pruning);
-    * `cond` — and for UPDATE the `CASE WHEN cond THEN v ELSE col`
-    * columns — are analyzed and optimized over an empty relation of the
+    * Driver: `cond` — and for UPDATE the `CASE WHEN cond THEN v ELSE
+    * col` columns — are analyzed once over an empty relation of the
     * table schema, every column nullable ([[emptyFrame]]: a NOT NULL
-    * column can hold NULLs), and bound to its attributes; the readers
-    * come from GraftParquetReadShim (this session's SQLConf, field-id
-    * resolution); [[runRewrite]] packs the candidates into tasks.
+    * column can hold NULLs); the analyzed `cond` picks the candidates
+    * ([[planResolved]]: stats + bucket pruning), and the optimized
+    * expressions are bound to the relation's attributes for the tasks.
+    * Both readers read without pushed filters, so each is built once
+    * per table schema and projection and reused by every later
+    * statement (GraftParquetReadShim.buildReader): the probe gives up
+    * row-group and bloom skipping inside the files stats pruning kept,
+    * as a MERGE's probe does. [[runRewrite]] packs the candidates into
+    * tasks.
     *
     * Task: probe each file for a row where `cond` is TRUE; rewrite the
     * files that hit — DELETE keeps the rows where `NOT coalesce(cond,
@@ -871,7 +879,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * moved rows. A `cond` or assignment holding a subquery, or anything
     * else a task cannot evaluate, fails before any file is written. */
   private def rewriteMatching(cond: Column, assign: Option[Map[String, Column]]): Rewrite = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression, Unevaluable}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, SubqueryExpression, Unevaluable}
     val base = currentVersion
     val sch = schemaAt(base)
     // the rows as the files hold them: every column nullable
@@ -883,15 +891,17 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     })
     val frame = emptyFrame(sch)
       .select(cond +: updated.getOrElse(Seq(!coalesce(cond, lit(false)))): _*)
-    if (frame.queryExecution.analyzed.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression])))
-      throw new UnsupportedOperationException(
-        s"copy-on-write DML at $root cannot evaluate a subquery in its condition or " +
-          "assignments; compute its value first (SQL DML does this itself)")
-    val (exprs, attrs) = frame.queryExecution.optimizedPlan match {
+    def projected(plan: logical.LogicalPlan): (Seq[Expression], Seq[Attribute]) = plan match {
       case logical.Project(list, child) =>
         (list.map { case a: Alias => a.child; case e => e }, child.output)
       case other => throw new IllegalStateException(s"unexpected rewrite plan:\n$other")
     }
+    val analyzed = projected(frame.queryExecution.analyzed)._1
+    if (analyzed.exists(_.exists(_.isInstanceOf[SubqueryExpression])))
+      throw new UnsupportedOperationException(
+        s"copy-on-write DML at $root cannot evaluate a subquery in its condition or " +
+          "assignments; compute its value first (SQL DML does this itself)")
+    val (exprs, attrs) = projected(frame.queryExecution.optimizedPlan)
     // the task-side expressions carry their comparison and arithmetic
     // literals as ParamLiterals: every statement of one shape then
     // reuses the same compiled predicate and projection classes
@@ -901,7 +911,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       throw new UnsupportedOperationException(
         s"copy-on-write DML at $root cannot evaluate '${e.sql}' inside a write task")
     }
-    val candidates = planFiles(base, Seq(cond))
+    val candidates = planResolved(base, analyzed.take(1))
     if (candidates.isEmpty) return Rewrite(base, sch, Nil, Nil)
 
     val layoutCols = bucketColumnAt(base).toSeq ++ clusterSpecNames(sch)
@@ -910,8 +920,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val probeSchema = StructType(fileSch.fields.filter(f => probeAttrs.exists(_.name == f.name)))
     val writer = if (moves) None else Some(fileWriterFactory(newWriteDir(), sch))
     val task = new RewriteTask(
-      GraftParquetReadShim.buildReader(spark, format, fileSch, probeSchema,
-        GraftParquetReadShim.pushableFilters(exprs.head)),
+      GraftParquetReadShim.buildReader(spark, format, fileSch, probeSchema, Nil),
       GraftParquetReadShim.buildReader(spark, format, fileSch, fileSch, Nil),
       BindReferences.bindReference(lifted.head, probeAttrs),
       if (assign.isEmpty) Some(bound(1)) else None,
@@ -1596,8 +1605,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * reads; DDL-rare. */
   private def maxFieldIdEver: Long =
     log.versions.iterator
-      .flatMap(v => DataType.fromJson(log.schemaJsonAt(v)).asInstanceOf[StructType]
-        .fields.flatMap(GraftTable.fieldId))
+      .flatMap(v => log.schemaAt(v).fields.flatMap(GraftTable.fieldId))
       .foldLeft(0L)(math.max)
 
   /** Has `name` named a column at ANY version? File stats are keyed by
@@ -1607,8 +1615,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * Schema evolution refuses retired names outright; conservative,
     * loud, and cheap (O(commits) metadata reads). */
   private def nameEverUsed(name: String): Boolean =
-    log.versions.exists(v => DataType.fromJson(log.schemaJsonAt(v))
-      .asInstanceOf[StructType].fieldNames.contains(name))
+    log.versions.exists(v => log.schemaAt(v).fieldNames.contains(name))
 
   /** Safe schema evolution: append a nullable column (Iceberg
     * `ALTER TABLE ... ADD COLUMN` parity). Metadata-only commit — no
@@ -1693,7 +1700,10 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     */
   def vacuum(graceMs: Long = 10 * 60 * 1000L): Int = {
     val versionsAtStart = log.versions
-    val referenced = versionsAtStart.flatMap(v => log.snapshotFiles(v).map(_.path)).toSet
+    // every file some snapshot holds was added by a commit at or before
+    // it, and every added file is live at its own version: the union of
+    // the commits' added paths is the union of every snapshot's files
+    val referenced = versionsAtStart.flatMap(v => log.read(v).added.map(_.path)).toSet
     val dataRoot = Paths.get(root, "data")
     if (!Files.isDirectory(dataRoot)) return 0
     val cutoff = System.currentTimeMillis() - graceMs

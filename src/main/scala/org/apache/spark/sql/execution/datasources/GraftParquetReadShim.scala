@@ -11,7 +11,7 @@ import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
@@ -38,13 +38,12 @@ import org.apache.spark.util.NextIterator
   *    row-group/stripe filter pushdown, as a [[FileRows]] its caller
   *    closes. Re-implementing a decoder would be both slower and wrong.
   *    A reader with no pushed filters is built once per input and
-  *    reused by later statements ([[Prepared]]).
+  *    reused by later statements ([[Prepared]]); the store's
+  *    copy-on-write reads all push none.
   *  - [[filePartitions]]: Spark's own split + bin-packing of a file list
   *    into read tasks (`FilePartition.maxSplitBytes` +
   *    `getFilePartitions`), so a catalog scan plans exactly as many
   *    tasks as a plain file read of the same files.
-  *  - [[pushableFilters]]: the data-source filters a predicate's
-  *    conjuncts translate to (`DataSourceStrategy.translateFilter`).
   *  - [[withInputMetrics]]: a task's reads counted in its input metrics
   *    the way `FileScanRDD` counts them.
   *  - [[asNullable]]: a table schema as its data files hold it.
@@ -130,9 +129,9 @@ object GraftParquetReadShim {
     }
   }
 
-  /** Readers with no pushed filters ([[buildReader]]): a copy-on-write
-    * rewrite's full-file read, both reads of a MERGE, a catalog scan
-    * with no filter. */
+  /** Readers with no pushed filters ([[buildReader]]): both reads of a
+    * copy-on-write UPDATE, DELETE or MERGE, a catalog scan with no
+    * filter. */
   private val unfilteredReaders =
     new Prepared[(String, StructType, StructType, java.util.Map[String, String]),
       PartitionedFile => FileRows](8)
@@ -142,9 +141,12 @@ object GraftParquetReadShim {
     * whole conf once. A reader with no `filters` is built once per
     * format, data schema, required schema and content of the session's
     * Hadoop conf view ([[Prepared]]) and reused by later statements. A
-    * reader with pushed filters is built per call and not retained: its
-    * filters carry one statement's literals, so keeping it would hold
-    * one conf per distinct literal with no later reuse. */
+    * reader with pushed filters (a catalog scan's) is built per call and
+    * not retained: its filters carry one statement's literals, so
+    * keeping it would hold one conf per distinct literal with no later
+    * reuse. Pushed filters buy row-group (and bloom) skipping inside a
+    * file; a read that stops at its first matching row, as a
+    * copy-on-write probe does, pushes none and takes the shared reader. */
   def buildReader(spark: SparkSession,
                   format: String,
                   dataSchema: StructType,
@@ -200,18 +202,6 @@ object GraftParquetReadShim {
   def mkFile(path: String, length: Long): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
       0L, length, Array.empty, 0L, length)
-
-  /** The data-source filters the deterministic conjuncts of `cond` (a
-    * predicate over top-level attributes) translate to — what a reader
-    * may push down without changing which rows satisfy `cond`. */
-  def pushableFilters(cond: Expression): Seq[Filter] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    conjuncts(cond).filter(_.deterministic)
-      .flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = false))
-  }
 
   /** Run a task's file reads (`body`) and add them to the task's input
     * metrics as `FileScanRDD` does: the bytes read on this thread

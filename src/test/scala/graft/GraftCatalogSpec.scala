@@ -579,9 +579,9 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("work counts: a repeated UPDATE or DELETE broadcasts no writer conf and no full-file reader") {
     // the first statement of each shape builds the writer's job conf and
-    // the filter-free full-file reader; a later one with new literals
-    // reuses both and broadcasts only its one stage's task binary and
-    // its probe reader, which carries the statement's pushed filters
+    // the two filter-free readers (probe and full file); a later one with
+    // new literals reuses all three and broadcasts only its one stage's
+    // task binary
     sql("CREATE NAMESPACE gcat.dbworkc")
     sql("CREATE TABLE gcat.dbworkc.t (id BIGINT, v STRING)")
     sql("INSERT INTO gcat.dbworkc.t SELECT id, concat('v', id) FROM range(0, 40, 1, 1)")
@@ -590,9 +590,55 @@ class GraftCatalogSpec extends SparkSpec {
     val counts = Seq(
       "UPDATE" -> broadcasts("UPDATE gcat.dbworkc.t SET v = 'b' WHERE id >= 11 AND id <= 13"),
       "DELETE" -> broadcasts("DELETE FROM gcat.dbworkc.t WHERE id >= 14 AND id <= 15"))
-    assert(counts == Seq("UPDATE" -> 2, "DELETE" -> 2), counts)
+    assert(counts == Seq("UPDATE" -> 1, "DELETE" -> 1), counts)
     assert(sql("SELECT count(*), sum(CASE WHEN v = 'b' THEN 1 ELSE 0 END) FROM gcat.dbworkc.t")
       .head().toSeq == Seq(36L, 3L))
+  }
+
+  test("a repeated UPDATE parses no commit-log JSON the log memo has already seen") {
+    sql("CREATE NAMESPACE gcat.dbmemo")
+    sql("CREATE TABLE gcat.dbmemo.t (id BIGINT, v STRING)")
+    // past a checkpoint, so resolution reads one and replays commits
+    (0 until 20).foreach(i => sql(s"INSERT INTO gcat.dbmemo.t VALUES ($i, 'v$i')"))
+    sql("UPDATE gcat.dbmemo.t SET v = 'a' WHERE id = 1")
+    val before = graft.store.CommitLog.parses.get
+    sql("UPDATE gcat.dbmemo.t SET v = 'b' WHERE id = 2")
+    // at most the one version this UPDATE commits is new to the memo
+    assert(graft.store.CommitLog.parses.get - before <= 1)
+    assert(sql("SELECT v FROM gcat.dbmemo.t WHERE id <= 2 ORDER BY id").collect()
+      .map(_.getString(0)).toSeq == Seq("v0", "a", "b"))
+  }
+
+  test("a table dropped and re-created at the same path reads its own schema and rows") {
+    sql("CREATE NAMESPACE gcat.dbrecreate")
+    sql("CREATE TABLE gcat.dbrecreate.t (id BIGINT, v STRING)")
+    sql("INSERT INTO gcat.dbrecreate.t VALUES (1, 'old')")
+    // the log memo has now seen versions 1 and 2 at this path
+    assert(sql("SELECT v FROM gcat.dbrecreate.t").collect().map(_.getString(0)).toSeq == Seq("old"))
+    sql("DROP TABLE gcat.dbrecreate.t")
+    sql("CREATE TABLE gcat.dbrecreate.t (k STRING, n INT)")
+    sql("INSERT INTO gcat.dbrecreate.t VALUES ('new', 7), ('x', 8)")
+    val df = sql("SELECT * FROM gcat.dbrecreate.t")
+    assert(df.schema.fieldNames.toSeq == Seq("k", "n"))
+    assert(df.collect().map(r => (r.getString(0), r.getInt(1))).toSet == Set(("new", 7), ("x", 8)))
+    assert(GraftTable.load(spark, s"$warehouse/dbrecreate/t").history.map(_.op) ==
+      Seq("create", "append"))
+  }
+
+  test("a NULL the store appended to a NOT NULL column reads as NULL through the catalog") {
+    sql("CREATE NAMESPACE gcat.dbnn")
+    // range's id is NOT NULL, and so is the stored column
+    val gt = GraftTable.create(spark, s"$warehouse/dbnn/t",
+      spark.range(3).selectExpr("id", "concat('v', id) AS v"))
+    assert(!gt.schema("id").nullable)
+    gt.append(spark.sql("SELECT CAST(NULL AS BIGINT) AS id, 'x' AS v"))
+    assert(sql("SELECT count(*) FROM gcat.dbnn.t WHERE id IS NULL").head().getLong(0) == 1L)
+    assert(sql("SELECT id FROM gcat.dbnn.t WHERE v = 'x'").head().isNullAt(0))
+    // SQL INSERT still checks the stored NOT NULL
+    val e = intercept[Exception](sql("INSERT INTO gcat.dbnn.t VALUES (NULL, 'y')").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null && m.contains("NOT_NULL_ASSERT_VIOLATION")), msgs)
+    assert(sql("SELECT count(*) FROM gcat.dbnn.t").head().getLong(0) == 4L)
   }
 
   test("work counts: a repeated MERGE broadcasts only its source and task binary") {

@@ -28,6 +28,46 @@ class StoreSpec extends SparkSpec {
     assert(t2.read().count() == 3)
   }
 
+  test("a graft write's data file, .crc file and write dir get the stock local FS's mode bits") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // a umask unlike the process's: bits only a permission change sets
+    val umask = "fs.permissions.umask-mode"
+    val prior = Option(hconf.get(umask))
+    hconf.set(umask, "027")
+    try {
+      val root = freshRoot
+      val t = GraftTable.create(spark, root, Seq((1L, "a")).toDF("id", "v"))
+      val data = java.nio.file.Paths.get(root, t.planFiles(t.currentVersion).head.path)
+      val stock = new LocalFileSystem()
+      stock.initialize(java.net.URI.create("file:///"), hconf)
+      val ref = Files.createTempDirectory("stock_fs")
+      val refFile = new HPath(new HPath(ref.toUri), "d/f")
+      stock.create(refFile).close()
+      def mode(p: java.nio.file.Path): String =
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      assert(mode(ref.resolve("d/f")) == "rw-r-----")
+      assert(mode(data) == mode(ref.resolve("d/f")))
+      assert(mode(data.resolveSibling(s".${data.getFileName}.crc")) == mode(ref.resolve("d/.f.crc")))
+      assert(mode(data.getParent) == mode(ref.resolve("d")))
+    } finally prior match {
+      case Some(v) => hconf.set(umask, v)
+      case None => hconf.unset(umask)
+    }
+  }
+
+  test("the write path resolves file: to the fork-free FS even with a stock one cached") {
+    // Hadoop's FS cache is keyed by scheme, authority and user, not by
+    // conf: a stock file: FS cached first would serve a plain fs.file.impl
+    val cached = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(!cached.isInstanceOf[graft.store.GraftLocalFileSystem])
+    val t = GraftTable.create(spark, freshRoot, Seq((1L, "a")).toDF("id", "v"))
+    assert(t.fileWriterFactory(t.newWriteDir(), t.schema).fileSystem
+      .isInstanceOf[graft.store.GraftLocalFileSystem])
+  }
+
   test("commit-log checkpoints bound snapshot resolution") {
     val root = freshRoot
     val t = GraftTable.create(spark, root, Seq((0L, "v")).toDF("id", "v"))
