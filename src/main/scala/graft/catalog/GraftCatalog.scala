@@ -510,6 +510,16 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   private[catalog] def underlying: GraftTable = gt
   private[catalog] def isTimeTravel: Boolean = timeTravel
 
+  /** Tables are equal when they read the same snapshot the same way:
+    * plans over them then match under Spark's `sameResult`, which the
+    * CacheManager and the query service's result cache key on. */
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftV2Table => t.identity == identity
+    case _ => false
+  }
+  override def hashCode: Int = identity.hashCode
+  private def identity = (gt.root, fullName, pinned, timeTravel, forWrite)
+
   override def name(): String = fullName
   override def schema(): StructType =
     if (forWrite) gt.schemaAt(pinned) else GraftParquetReadShim.asNullable(gt.schemaAt(pinned))

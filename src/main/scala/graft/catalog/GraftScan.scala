@@ -87,6 +87,16 @@ final class GraftScan(
     * NOT NULL is not enforced on the data). */
   private val readCols = GraftParquetReadShim.asNullable(required)
 
+  /** Scans are equal when they read the same columns of the same
+    * snapshot under the same pushed filters (the planned files follow
+    * from those): Spark's `sameResult` and exchange reuse compare scans. */
+  override def equals(o: Any): Boolean = o match {
+    case s: GraftScan => s.identity == identity
+    case _ => false
+  }
+  override def hashCode: Int = identity.hashCode
+  private def identity = (gt.root, version, required, pushed.toSeq)
+
   override def readSchema(): StructType = readCols
   override def toBatch: Batch = this
 
@@ -120,15 +130,24 @@ final class GraftScan(
     case _ => Array.empty
   }
 
-  /** Built once per scan: Spark asks a scan for its reader factory more
-    * than once per query (twice for a catalog point read). With no
-    * pushed filter the shim reuses one reader across scans; one
-    * carrying the pushed filters' literals is this scan's own. */
-  private lazy val readerFactory = new GraftReaderFactory(GraftParquetReadShim.buildReader(
-    gt.spark, gt.format, GraftParquetReadShim.asNullable(gt.schemaAt(version)), readCols,
-    pushed.toSeq))
+  /** Built once per scan while its query runs: Spark asks a scan for its
+    * reader factory more than once per query (twice for a catalog point
+    * read). With no pushed filter the shim reuses one reader across
+    * scans; one carrying the pushed filters' literals is this scan's own.
+    * Held weakly: a reader holds a copy of the Hadoop conf (about 150 KB),
+    * and a scan outlives its query inside the query service's
+    * result-cache keys, which compare plans. */
+  private var readerFactory = new java.lang.ref.WeakReference[PartitionReaderFactory](null)
 
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory
+  override def createReaderFactory(): PartitionReaderFactory = synchronized {
+    Option(readerFactory.get).getOrElse {
+      val f = new GraftReaderFactory(GraftParquetReadShim.buildReader(
+        gt.spark, gt.format, GraftParquetReadShim.asNullable(gt.schemaAt(version)), readCols,
+        pushed.toSeq))
+      readerFactory = new java.lang.ref.WeakReference(f)
+      f
+    }
+  }
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =

@@ -4,18 +4,30 @@ import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledExecutorServ
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSparkInternals, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CreateFunction, CreateTableAsSelect,
+  CreateView, DeleteFromTable, InsertIntoDir, InsertIntoStatement, LogicalPlan, MergeIntoTable,
+  ObjectConsumer, ParsedStatement, ReplaceTableAsSelect, SingleStatement, UpdateTable}
+import org.apache.spark.sql.execution.command.{AddArchivesCommand, AddFilesCommand, AddJarsCommand,
+  CreateFunctionCommand, CreateViewCommand, ExplainCommand}
 import org.apache.spark.sql.internal.SQLConf
+
+import graft.sql.SqlScan
 
 /** Async SQL execution service — the engine-side equivalent of walden's
   * Superset SQL Lab async path (browser -> Celery queue -> worker ->
   * Redis result cache; `tf/superset/superset.tf:52-70`,
   * `tf/superset/superset_config.py:36-75`). One process, same
   * semantics: bounded worker pool, query status lifecycle, TTL'd
-  * result cache keyed by a canonicalized analyzed-plan fingerprint
-  * (whitespace/comment/alias variants hit; different literals miss),
-  * per-service feature flags (allow_ctas / allow_cvas / allow_dml
-  * parity).
+  * result cache, per-service feature flags (allow_ctas / allow_cvas /
+  * allow_dml parity).
+  *
+  * Both the gate and the cache read Spark's plan, never the statement's
+  * text. Each statement is parsed once; the flags gate the classes of
+  * the parsed plan (an INSERT, a CTAS, a view), and that same plan runs
+  * in the user's session. The cache key is the canonicalized optimized
+  * plan, so whitespace, comment and alias variants hit, while a
+  * different literal or a different table misses.
   *
   * User impersonation (walden sets `impersonate_user: true` on the
   * Superset DB — `tf/superset/superset.tf:60`): every submission
@@ -55,12 +67,12 @@ final class QueryService(
   require(maxUserSessions > 0, s"maxUserSessions must be positive, got $maxUserSessions")
   require(maxTrackedQueries > 0, s"maxTrackedQueries must be positive, got $maxTrackedQueries")
 
-  // Policy routing (round 12, r11 verdict #5): a DOTTED policy key
+  // Policy routing: a DOTTED policy key
   // names a catalog table (`g.db.t`) — a temp view cannot shadow that
   // name, so those policies enforce through the analyzer rule
   // (PolicyEnforcementRule, registered JVM-wide, scoped to this
-  // service's namespace). Undotted keys keep the round-11 per-user
-  // VIEW rewrite. Both paths push the predicate into the scan.
+  // service's namespace). Undotted keys keep the per-user VIEW
+  // rewrite ([[applyPolicies]]). Both paths push the predicate into the scan.
   private val (catalogPolicies, viewPolicies) =
     policies.partition { case (name, _) => name.contains(".") }
   private val policyNamespace = s"graft-service-${QueryService.nextServiceId.incrementAndGet()}"
@@ -79,9 +91,10 @@ final class QueryService(
   private val pool = Executors.newFixedThreadPool(workers)
   private val nextId = new AtomicLong(0)
   private val statuses = new ConcurrentHashMap[Long, Status]()
-  private val cache = new ConcurrentHashMap[String, (Long, Finished)]() // key -> (expiryMs, result)
+  import QueryService.CacheKey
+  private val cache = new ConcurrentHashMap[CacheKey, (Long, Finished)]() // key -> (expiryMs, result)
 
-  /** Terminal-status retention (round 11, r10 verdict #7): the
+  /** Terminal-status retention: the
     * reference stores async results in a TTL'd backend — an unbounded
     * status map would leak one Finished (up to maxResultRows rows) per
     * query FOREVER at the 100-task/s service rate. Terminal statuses
@@ -93,7 +106,7 @@ final class QueryService(
   private val terminalOrder = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
   // counted separately: statuses.size() includes Queued/Running, and
   // sizing eviction from it would let a backlog >= cap evict every
-  // result the instant it lands (review r11); ConcurrentLinkedQueue
+  // result the instant it lands; ConcurrentLinkedQueue
   // .size() is O(n), hence the explicit counter
   private val terminalCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val lastCacheSweepMs = new AtomicLong(0)
@@ -136,10 +149,8 @@ final class QueryService(
     * was computed from. Cleared on close(). */
   private val userSessions =
     new java.util.LinkedHashMap[String, SparkSession](16, 0.75f, true)
-  private def dropUserCache(user: String): Unit = {
-    val prefix = s"${user.length}:$user:"
-    cache.keySet.asScala.filter(_.startsWith(prefix)).foreach(cache.remove)
-  }
+  private def dropUserCache(user: String): Unit =
+    cache.keySet.asScala.filter(_.user == user).foreach(cache.remove)
   // per-user creation locks: session build runs the embedder's
   // onUserSession callback (arbitrarily slow) — holding the single map
   // monitor there would serialize every not-yet-resident user's first
@@ -171,7 +182,7 @@ final class QueryService(
               s.conf.set(PolicyEnforcement.NamespaceConf, policyNamespace)
             onUserSession(s, user)
             applyPolicies(s, user)
-            // fail CLOSED, not silent-open (round-12 review finding): a
+            // fail CLOSED, not silent-open: a
             // dotted policy that never matches a DSv2 relation (catalog
             // typo, Hive/session-catalog table) would otherwise leave
             // the table readable RAW by every impersonated user
@@ -257,177 +268,98 @@ final class QueryService(
   private def stillResident(user: String, sess: SparkSession): Boolean =
     user == "anonymous" || (userSessions.synchronized(userSessions.get(user)) eq sess)
 
-  /** Lowercased/collapsed form for PREFIX CLASSIFICATION ONLY — never
-    * a cache key: collapsing inside string literals would make
-    * `name='ALICE'` and `name='alice'` collide. Comments are stripped
-    * FIRST (quote-aware): collapsing `-- note (\n` into one line would
-    * otherwise let comment text (and its parens) corrupt the
-    * classification that the DML gate hangs off. */
-  private def classify(sql: String): String =
-    stripComments(sql).trim.replaceAll("\\s+", " ").toLowerCase
+  /** The statement classes the service flags gate, read from Spark's
+    * parsed plan (a SQL script's statements included), so a spelling the
+    * parser accepts cannot slip past the gate. */
+  private def gate(plan: LogicalPlan, user: String): Unit = {
+    val nodes = statementNodes(plan)
+    def holds(pf: PartialFunction[LogicalPlan, Unit]): Boolean = nodes.exists(pf.isDefinedAt)
+    if (!allowDml && holds { case _: InsertIntoStatement | _: InsertIntoDir | _: UpdateTable |
+        _: DeleteFromTable | _: MergeIntoTable => })
+      throw new IllegalStateException("DML disabled (allow_dml=false)")
+    if (!allowCtas && holds { case _: CreateTableAsSelect | _: ReplaceTableAsSelect => })
+      throw new IllegalStateException("CTAS disabled (allow_ctas=false)")
+    if (!allowCvas && holds { case _: CreateView | _: CreateViewCommand => })
+      throw new IllegalStateException("CVAS disabled (allow_cvas=false)")
+    val artifacts = nodes.collect {
+      case a: AddJarsCommand => a.paths
+      case _: AddFilesCommand | _: AddArchivesCommand => Nil
+      case f: CreateFunction if f.resources.nonEmpty => Nil
+      case f: CreateFunctionCommand if f.resources.nonEmpty => Nil
+    }
+    if (artifacts.nonEmpty && user != "anonymous") throw new IllegalStateException(
+      "ADD JAR/FILE/ARCHIVE and CREATE FUNCTION ... USING are refused for impersonated " +
+        "users: user sessions share one classloader, so the artifact would reach every user")
+    missingJars(artifacts.flatten).headOption.foreach { p =>
+      val e = new java.io.FileNotFoundException(s"Jar $p not found")
+      throw new IllegalArgumentException(s"Failed to add $p to Spark environment: $e", e)
+    }
+  }
 
-  /** Remove `-- ...\n` and balanced `/* ... */` comments outside string
-    * literals / quoted identifiers, honoring backslash escapes (Spark's
-    * default string literal syntax). Twin scanner:
-    * `TrinoDialect.splitStatements` lexes the same comment grammar but
-    * PRESERVES text instead of removing it — a comment-lexing fix here
-    * usually applies there too. */
-  private def stripComments(sql: String): String = {
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    var quote = ' '
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (quote != ' ') {
-        out.append(c)
-        if (c == '\\' && quote != '`' && i + 1 < sql.length) {
-          out.append(sql.charAt(i + 1)); i += 1 // escaped char inside literal
-        } else if (c == quote) quote = ' '
-        i += 1
-      } else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        while (i < sql.length && sql.charAt(i) != '\n') i += 1 // line comment
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        // bracketed comments NEST in Spark's lexer (SQL standard), so
-        // track depth — stopping at the first */ would leave a tail
-        // like `c */ INSERT ...` that Spark still treats as comment,
-        // hiding the INSERT from the DML gate
-        var cdepth = 1
-        i += 2
-        while (i < sql.length && cdepth > 0) {
-          if (i + 1 < sql.length && sql.charAt(i) == '/' && sql.charAt(i + 1) == '*') {
-            cdepth += 1; i += 2
-          } else if (i + 1 < sql.length && sql.charAt(i) == '*' && sql.charAt(i + 1) == '/') {
-            cdepth -= 1; i += 2
-          } else i += 1
+  /** Every node of a parsed statement; a SQL script's statements hold
+    * their plans outside the node tree. */
+  private def statementNodes(plan: LogicalPlan): Seq[LogicalPlan] =
+    plan.collect {
+      case s: SingleStatement => s +: statementNodes(s.parsedPlan)
+      case p => Seq(p)
+    }.flatten
+
+  /** Only a read may be served from the cache: a query, or a SHOW,
+    * DESCRIBE or EXPLAIN command. Anything else (DML, DDL, SET, a
+    * script) runs every time, since serving it would skip its side
+    * effects. */
+  private def cacheable(plan: LogicalPlan): Boolean = plan match {
+    case _: ExplainCommand => true
+    case p if p.nodeName.startsWith("Show") || p.nodeName.startsWith("Describe") => true
+    case p => !p.exists(n => n.isInstanceOf[Command] || n.isInstanceOf[ParsedStatement])
+  }
+
+  /** Two statements share a cache entry only when Spark's `sameResult`
+    * would match their plans: the key holds the canonicalized plan, whose
+    * relations compare by location and table identity, as Spark's
+    * CacheManager matches cached data. Canonicalization strips alias
+    * names and normalizes attribute ids, so whitespace, comment and alias
+    * variants of a query share a key; different literals do not. Views
+    * are inlined, so a per-user view resolving differently yields a
+    * different plan. The OPTIMIZED plan: CTERelationDef ids are fresh per
+    * query and survive canonicalization, but the optimizer inlines CTEs.
+    *
+    * A typed operator (MATCH_RECOGNIZE's matcher) holds a function
+    * instance, which compares by identity, so such a plan never equals a
+    * repeat's. Those statements key on their text instead: comments
+    * dropped, code lowercased with its whitespace collapsed, literals and
+    * quoted identifiers as written ('Bob' and 'bob' differ). */
+  private def cacheKey(user: String, df: DataFrame, sql: String): CacheKey = {
+    val canon = df.queryExecution.optimizedPlan.canonicalized
+    CacheKey(user, if (canon.exists(_.isInstanceOf[ObjectConsumer])) textKey(sql) else canon)
+  }
+
+  private def textKey(sql: String): String = {
+    val b = new StringBuilder(sql.length)
+    var space = false // whitespace or a comment since the last token
+    def put(s: String): Unit = {
+      if (space && b.nonEmpty) b.append(' ')
+      space = false
+      b.append(s)
+    }
+    SqlScan.spans(sql).foreach {
+      case SqlScan.Span(SqlScan.Code, from, to) =>
+        for (i <- from until to) {
+          val c = sql.charAt(i)
+          if (c.isWhitespace) space = true else put(c.toLower.toString)
         }
-        out.append(' ')
-      } else {
-        if (c == '\'' || c == '"' || c == '`') quote = c
-        out.append(c)
-        i += 1
-      }
+      case SqlScan.Span(SqlScan.Comment, _, _) => space = true
+      case SqlScan.Span(_, from, to) => put(sql.substring(from, to))
     }
-    out.toString
+    b.toString
   }
 
-  /** Cache key body: a fingerprint of the CANONICALIZED ANALYZED plan
-    * (SURVEY §4's normalized-plan key — r6 verdict #5). Whitespace,
-    * comment, and alias variants of the same query share a fingerprint
-    * (canonicalization strips alias names and normalizes attribute
-    * ids); different literals produce different plans and miss. Views
-    * are already inlined in the analyzed plan, so a per-user view
-    * resolving differently yields a different fingerprint by
-    * construction — on top of the per-user key prefix. MD5 plus the
-    * canonical text's length: a 128-bit digest collision would serve
-    * another query's rows, so the length rides along as a second
-    * independent check. */
-  private def planFingerprint(df: DataFrame, original: String): String = {
-    // OPTIMIZED plan, not analyzed: CTERelationDef ids are fresh per
-    // query and survive canonicalization, so an analyzed-plan key
-    // would never hit for `WITH ...` statements — the optimizer
-    // inlines CTEs (and folds constants, which only widens the hit
-    // class to value-identical plans)
-    val canon = df.queryExecution.optimizedPlan.canonicalized.toString
-    val body =
-      if (opaquePlanState.matcher(canon).find()) {
-        // the plan embeds object state whose toString is an instance
-        // identity hash — typed-operator lambdas (MATCH_RECOGNIZE's
-        // matcher MapPartitions), Array/binary literals. The canonical
-        // text is then UNSTABLE across submissions of the same query
-        // (no repeat ever hits), and with the hashes stripped it could
-        // COLLIDE across different queries sharing a lambda call site
-        // but capturing different closure state (two MR specs over the
-        // same input). Key on normalized TEXT instead: comment-strip +
-        // keyword-case-fold + whitespace-collapse OUTSIDE literals
-        // (classify() also folds literal case/whitespace, fine for a
-        // gate but a cache key must distinguish 'Bob' from 'bob').
-        "txt:" + normalizeOutsideLiterals(stripComments(original).trim)
-      } else canon
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"$md5:${body.length}"
-  }
-
-  /** Instance-identity toStrings inside a canonical plan: `...@hex`. */
-  private val opaquePlanState = java.util.regex.Pattern.compile("@[0-9a-f]{4,}")
-
-  /** Lowercase and collapse whitespace runs OUTSIDE string literals /
-    * quoted identifiers (same quote grammar as [[stripComments]]), so
-    * keyword-case and whitespace variants of an opaque-plan query share
-    * a text key without merging case- or space-distinct literals. */
-  private[graft] def normalizeOutsideLiterals(sql: String): String = {
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    var quote = ' '
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (quote != ' ') {
-        out.append(c)
-        if (c == '\\' && quote != '`' && i + 1 < sql.length) {
-          out.append(sql.charAt(i + 1)); i += 1
-        } else if (c == quote) quote = ' '
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out.append(c); i += 1
-      } else if (c.isWhitespace) {
-        out.append(' ')
-        while (i < sql.length && sql.charAt(i).isWhitespace) i += 1
-      } else {
-        out.append(c.toLower); i += 1
-      }
-    }
-    out.toString
-  }
-
-  /** Strip a leading CTE list from a classify()-normalized statement so
-    * `WITH t AS (...) INSERT INTO ...` classifies (and gates, and
-    * caches) as its MAIN statement, not as a read-only `with`. Walks
-    * parens outside string literals; a `name (cols) AS (...)` column
-    * list is recognized by the `as` that follows its closing paren. */
-  private[graft] def mainStatement(n: String): String = {
-    if (!n.startsWith("with ")) return n
-    var i = 5
-    var depth = 0
-    var quote = ' ' // inside '…', "…" (identifier) or `…` when non-NUL
-    while (i < n.length) {
-      val c = n.charAt(i)
-      if (quote != ' ') {
-        if (c == '\\' && quote != '`') i += 1 // escaped char inside literal
-        else if (c == quote) quote = ' '
-      }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) {
-            var j = i + 1
-            while (j < n.length && n.charAt(j) == ' ') j += 1
-            val rest = n.substring(j)
-            if (rest.startsWith(",")) i = j // next CTE in the list
-            else if (rest.startsWith("as ") || rest.startsWith("as(")) () // was a column list
-            else return rest // the main statement
-          }
-        case _ =>
-      }
-      i += 1
-    }
-    n
-  }
-
-  /** Statements that add a jar, file or archive to the session. */
-  private val artifactStatement =
-    "(add (jar|file|archive)|create (or replace )?(temporary )?function .* using (jar|file|archive)\\b)".r
-
-  /** The local paths an `ADD JAR` statement names that do not exist.
+  /** The local paths among an `ADD JAR` statement's that do not exist.
     * Spark only logs such a jar (`SparkContext.addJar` catches its
     * FileNotFoundException), so the statement would otherwise finish as
     * if the jar had been added. Remote and ivy paths are not checked. */
-  private def missingJars(sql: String): Seq[String] =
-    addJarStatement.findFirstMatchIn(sql).toSeq.flatMap { m =>
-      "\"([^\"]*)\"|'([^']*)'|(\\S+)".r.findAllMatchIn(m.group(1).trim.stripSuffix(";"))
-        .map(p => Option(p.group(1)).orElse(Option(p.group(2))).getOrElse(p.group(3))).toSeq
-    }.filter { p =>
+  private def missingJars(paths: Seq[String]): Seq[String] =
+    paths.filter { p =>
       val local = scala.util.Try(new java.net.URI(p)).toOption match {
         case Some(u) if u.getScheme == null => Some(p)
         case Some(u) if u.getScheme == "file" => Some(u.getPath)
@@ -436,21 +368,6 @@ final class QueryService(
       }
       local.exists(l => !java.nio.file.Files.exists(java.nio.file.Paths.get(l)))
     }
-
-  /** `ADD JAR(S) <paths>`, after any leading comments. */
-  private val addJarStatement =
-    "(?is)^\\s*(?:(?:/\\*.*?\\*/|--[^\\n]*\\n)\\s*)*add\\s+jars?\\s+(.*)$".r
-
-  /** Classify a mainStatement(classify(...))-normalized statement. */
-  private def ddlKind(n: String): Option[String] = {
-    if (artifactStatement.findPrefixOf(n).isDefined) Some("artifact")
-    else if (n.startsWith("create table") && n.contains(" as ")) Some("ctas")
-    else if (n.startsWith("create view") || n.startsWith("create or replace view") ||
-      n.startsWith("create temp view") || n.startsWith("create or replace temp view")) Some("cvas")
-    else if (n.startsWith("update ") || n.startsWith("delete ") || n.startsWith("merge ") ||
-      n.startsWith("insert ")) Some("dml")
-    else None
-  }
 
   /** Submit; returns a query id immediately (Celery-task parity).
     * `user` is the impersonated execution identity. */
@@ -465,7 +382,7 @@ final class QueryService(
 
   def status(id: Long): Option[Status] = Option(statuses.get(id))
 
-  // ---- cancellation (round 11; SQL Lab STOP + the async time limit) --
+  // ---- cancellation (SQL Lab STOP + the async time limit) ----------
   // every query's Spark jobs run under the thread-scoped group
   // "graft-q-<id>", so cancel() can kill exactly that query's jobs on
   // the SHARED context without touching neighbors.
@@ -552,32 +469,10 @@ final class QueryService(
   /** Synchronous convenience (SQL Lab sync path). */
   def sql(text: String, user: String = "anonymous"): Status = await(submit(text, user))
 
-  /** Read-only statement prefixes — the ONLY cacheable class. An
-    * unrecognized statement (DROP, ALTER, REFRESH, plain CREATE ...)
-    * must re-execute every time: serving it from cache would silently
-    * skip its side effects. */
-  private val readPrefixes =
-    Seq("select", "with", "values", "show", "describe", "desc ", "explain", "table ")
-
   private def execute(id: Long, sql: String, user: String): Unit = {
     // cancelled while queued: cancel() already went terminal; no-op
     if (cancelRequested.remove(id)) { cancelReasons.remove(id); return }
     try {
-      // one normalization pass feeds both the gate and cache-eligibility
-      val main = mainStatement(classify(sql))
-      ddlKind(main).foreach {
-        case "ctas" if !allowCtas => throw new IllegalStateException("CTAS disabled (allow_ctas=false)")
-        case "cvas" if !allowCvas => throw new IllegalStateException("CVAS disabled (allow_cvas=false)")
-        case "dml" if !allowDml => throw new IllegalStateException("DML disabled (allow_dml=false)")
-        case "artifact" if user != "anonymous" => throw new IllegalStateException(
-          "ADD JAR/FILE/ARCHIVE and CREATE FUNCTION ... USING are refused for impersonated " +
-            "users: user sessions share one classloader, so the artifact would reach every user")
-        case "artifact" => missingJars(sql).headOption.foreach { p =>
-          val e = new java.io.FileNotFoundException(s"Jar $p not found")
-          throw new IllegalArgumentException(s"Failed to add $p to Spark environment: $e", e)
-        }
-        case _ =>
-      }
       // conditional transition: a queued-cancel that won the race
       // already went terminal — never overwrite Cancelled with Running
       if (!statuses.replace(id, Queued, Running)) {
@@ -593,27 +488,19 @@ final class QueryService(
       // closed the register-then-cancel race: a cancel() that saw
       // Running but missed runningSince finds it on the recheck
       if (cancelRequested.contains(id)) throw new InterruptedException("cancelled")
-      // cache only provably read-only statements (positive whitelist);
-      // the MAIN statement so a CTE-prefixed INSERT/UPDATE/DELETE/MERGE
-      // is never served from cache (its side effect must run every
-      // time). The key runs analysis + OPTIMIZATION (planFingerprint
-      // reads the optimized plan — see its doc for why analyzed-plan
-      // keys can never hit for CTEs): a deliberate trade — optimizer
-      // milliseconds buy alias/CTE/constant-fold-invariant hits, and
-      // the cache exists for queries whose EXECUTION dwarfs planning.
-      // Neither triggers execution for the whitelisted prefixes (read
-      // statements are lazy; SHOW/DESCRIBE command execution is itself
-      // read-only).
-      // Cache keyed per user besides the fingerprint: one user's rows
-      // must never serve another's even for an identical plan.
-      // Length-prefixed so no (user, key) pair can collide.
-      val cacheable = readPrefixes.exists(main.startsWith)
+      // parsed once: the plan the gate reads is the plan that runs (a
+      // command executes as its Dataset is made, so the gate goes first)
+      val parsed = sess.sessionState.sqlParser.parsePlan(sql)
+      gate(parsed, user)
       // the limited Dataset is the one that runs: its optimized plan is
-      // both the fingerprint's input and what collect() executes, so the
-      // statement is optimized once
-      val df: DataFrame = sess.sql(sql).limit(maxResultRows)
-      val key = if (cacheable) s"${user.length}:$user:${planFingerprint(df, sql)}" else ""
-      if (cacheable) {
+      // both the cache key's input and what collect() executes, so the
+      // statement is optimized once. The key trades optimizer
+      // milliseconds for alias/CTE/constant-fold-invariant hits; the
+      // cache exists for queries whose execution dwarfs planning.
+      val df: DataFrame = GraftSparkInternals.ofRows(sess, parsed).limit(maxResultRows)
+      val cached = cacheable(parsed)
+      val key = if (cached) cacheKey(user, df, sql) else null
+      if (cached) {
         val hit = cache.get(key)
         if (hit != null && hit._1 > System.currentTimeMillis()) {
           // canonical-plan equality guarantees value-identical rows but
@@ -622,7 +509,7 @@ final class QueryService(
           putTerminal(id, hit._2.copy(fromCache = true, columns = df.columns.toSeq))
           return
         }
-        // stampede coalescing (round 11): at the 100-task/s service
+        // stampede coalescing: at the 100-task/s service
         // rate a cold/expired popular key draws a herd of identical
         // misses; only the FIRST becomes the leader, the rest await
         // its in-flight result. Deadlock-free by construction: the
@@ -636,7 +523,7 @@ final class QueryService(
         if (leader != null) {
           // a follower runs no Spark jobs, so a cancel() on it cannot
           // be delivered through job tags — poll the leader in short
-          // slices and honor the request directly (review r11)
+          // slices and honor the request directly
           val sliceMs = 200L
           val limitMs = if (maxQuerySeconds > 0) maxQuerySeconds * 1000 else Long.MaxValue
           val start = System.currentTimeMillis()
@@ -667,9 +554,9 @@ final class QueryService(
       // a side-effecting statement (DDL/DML/CTAS/CVAS — everything
       // non-cacheable) invalidates this user's cached reads: a
       // replaced temp view or mutated table must not keep serving
-      // pre-statement rows for the rest of the TTL (review r11 — the
-      // opaque TEXT key cannot see a view redefinition, and even a
-      // plan key cannot see DML'd table contents)
+      // pre-statement rows for the rest of the TTL (the text key of a
+      // typed plan cannot see a view redefinition, and even a plan key
+      // cannot see DML'd table contents)
       dropUserCache(user)
       putTerminal(id, Finished(rows, df.columns.toSeq,
         (System.nanoTime() - t0) / 1000000L, fromCache = false))
@@ -694,7 +581,7 @@ final class QueryService(
     * if the session we ran on is still the user's resident one —
     * results computed on an evicted session must not outlive the
     * eviction's cache purge). */
-  private def runAndCache(df: DataFrame, key: String, user: String,
+  private def runAndCache(df: DataFrame, key: CacheKey, user: String,
       sess: SparkSession, t0: Long): Finished = {
     executions.incrementAndGet()
     val rows = df.collect().toSeq
@@ -708,7 +595,7 @@ final class QueryService(
   /** Leader futures for in-flight cacheable misses, keyed like the
     * cache. Entries live only for the leader's execution. */
   private val inflight =
-    new ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Finished]]()
+    new ConcurrentHashMap[CacheKey, java.util.concurrent.CompletableFuture[Finished]]()
 
   /** Actual plan executions (not cache/coalesced serves) — the
     * stampede spec's observable. */
@@ -733,7 +620,12 @@ final class QueryService(
 object QueryService {
   private[serve] val nextServiceId = new AtomicLong(0)
 
-  /** Declarative per-table security policy (round 11): `rowFilter`
+  /** A result-cache key: the user, then the statement's canonicalized
+    * optimized plan, or the text of a statement whose plan holds a
+    * typed operator. */
+  private final case class CacheKey(user: String, statement: AnyRef)
+
+  /** Declarative per-table security policy: `rowFilter`
     * maps the impersonated user to a SQL predicate over the table's
     * columns (None = unrestricted — a role check lives inside the
     * function), `columnMasks` maps a column name to a SQL expression

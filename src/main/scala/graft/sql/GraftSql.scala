@@ -1,5 +1,7 @@
 package graft.sql
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Trino-dialect SQL entry point — the role trino-cli / the Python
@@ -15,199 +17,108 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TrinoDialect {
 
-  private val dateDiff = """(?i)\bdate_diff\(\s*'(\w+)'\s*,""".r
-  private val dateAddU = """(?i)\bdate_add\(\s*'(\w+)'\s*,""".r
+  private val dateDiff = """(?i)\bdate_diff\(\s*'( +)'\s*,""".r
+  private val dateAddU = """(?i)\bdate_add\(\s*'( +)'\s*,""".r
   private val approxPct = """(?i)\bapprox_percentile\(""".r
-  // Trino type/relation spellings Spark's parser rejects (probed r12):
-  // bare VARCHAR needs a length in Spark (parameterized VARCHAR(n)
-  // passes through untouched), VARBINARY/DOUBLE PRECISION don't exist,
-  // TABLESAMPLE takes (n PERCENT) not BERNOULLI/SYSTEM(n) — SYSTEM
-  // (block sampling) downgrades to row sampling, which is the
-  // approximation a sample already is — and the ROW constructor is
-  // Spark's struct (field names col1.. instead of anonymous).
+  // Trino type/relation spellings Spark's parser rejects: bare VARCHAR
+  // needs a length in Spark (parameterized VARCHAR(n) passes through
+  // untouched), VARBINARY/DOUBLE PRECISION don't exist, TABLESAMPLE
+  // takes (n PERCENT) not BERNOULLI/SYSTEM(n) — SYSTEM (block
+  // sampling) downgrades to row sampling, which is the approximation a
+  // sample already is — and the ROW constructor is Spark's struct
+  // (field names col1.. instead of anonymous).
   private val bareVarchar = """(?i)\bVARCHAR\b(?!\s*\()""".r
   private val varbinary = """(?i)\bVARBINARY\b""".r
   private val doublePrec = """(?i)\bDOUBLE\s+PRECISION\b""".r
   private val sampleRx =
     """(?i)\bTABLESAMPLE\s+(?:BERNOULLI|SYSTEM)\s*\(\s*([0-9]+(?:\.[0-9]+)?)\s*\)""".r
   private val rowCtor = """(?i)\bROW\s*\(""".r
-  // Trino SQL routines (round 14): `CREATE [OR REPLACE] FUNCTION
-  // f(x T) RETURNS T [LANGUAGE SQL] [DETERMINISTIC] RETURN expr` is
-  // Spark 4's native SQL-UDF grammar — but Trino routines live in a
-  // catalog while the session-scoped parity here is a TEMPORARY
-  // function, so an UNQUALIFIED name gains TEMPORARY (a qualified
-  // name passes through to the named catalog untouched). Compound
-  // BEGIN...END bodies stay loud parser rejections (Spark supports
-  // single-expression RETURN only).
+  // Trino SQL routines: `CREATE [OR REPLACE] FUNCTION f(x T) RETURNS T
+  // [LANGUAGE SQL] [DETERMINISTIC] RETURN expr` is Spark 4's native
+  // SQL-UDF grammar — but Trino routines live in a catalog while the
+  // session-scoped parity here is a TEMPORARY function, so an
+  // UNQUALIFIED name gains TEMPORARY (a qualified name passes through
+  // to the named catalog untouched). Compound BEGIN...END bodies stay
+  // loud parser rejections (Spark supports single-expression RETURN
+  // only).
   private val createFn =
     """(?i)\bCREATE\s+(OR\s+REPLACE\s+)?FUNCTION\s+([A-Za-z_][A-Za-z0-9_]*)\s*\(""".r
 
   /** Rewrite Trino spellings Spark's parser reserves. Conservative,
-    * token-local rewrites only — anything else goes through untouched.
-    * Rewrites apply ONLY outside string literals: a literal containing
-    * "approx_percentile(" is user DATA and must survive verbatim.
+    * token-local rewrites of code only: a literal, quoted identifier or
+    * comment containing "approx_percentile(" is user text and survives
+    * verbatim. The one literal a rewrite reads is the quoted unit of
+    * `date_diff`/`date_add`, which becomes a keyword.
     */
   def rewrite(sql: String): String = {
-    val named = mapOutsideLiterals(sql) { code =>
+    def unit(s: String, m: Regex.Match): Option[String] =
+      Some(s.substring(m.start(1), m.end(1))).filter(_.matches("\\w+")).map(_.toUpperCase)
+    val steps: Seq[(Regex, (String, Regex.Match) => Option[String])] = Seq(
       // Trino date_diff('day', a, b) -> Spark date_diff(DAY, a, b)
-      val s1 = dateDiff.replaceAllIn(code, m => s"date_diff(${m.group(1).toUpperCase},")
+      dateDiff -> ((s, m) => unit(s, m).map(u => s"date_diff($u,")),
       // Trino date_add('day', n, ts) -> Spark timestampadd(DAY, n, ts)
-      val s2 = dateAddU.replaceAllIn(s1, m => s"timestampadd(${m.group(1).toUpperCase},")
+      dateAddU -> ((s, m) => unit(s, m).map(u => s"timestampadd($u,")),
       // Trino approx_percentile(x, p) == Spark percentile_approx(x, p)
-      val s3 = approxPct.replaceAllIn(s2, _ => "percentile_approx(")
-      val s4 = bareVarchar.replaceAllIn(s3, _ => "STRING")
-      val s5 = varbinary.replaceAllIn(s4, _ => "BINARY")
-      val s6 = doublePrec.replaceAllIn(s5, _ => "DOUBLE")
-      val s7a = sampleRx.replaceAllIn(s6, m => s"TABLESAMPLE (${m.group(1)} PERCENT)")
-      val s7 = createFn.replaceAllIn(s7a, m =>
-        s"CREATE ${Option(m.group(1)).getOrElse("")}TEMPORARY FUNCTION ${m.group(2)}(")
-      // ROW in a TYPE position first (CAST(x AS ROW(a INT))): Spark
-      // spells struct TYPES as STRUCT<...>, so the constructor rewrite
-      // below must not fire there (r12 advice — struct(a INT) is
-      // unparseable). Then every remaining ROW( is a constructor.
-      rowCtor.replaceAllIn(rewriteRowTypes(s7), _ => "struct(")
-    }
-    // Trino MATCH_RECOGNIZE clause -> graft_match_recognize TVF (its
-    // own literal-aware scanner; no-op without the keyword). LAST: the
-    // rewrite quotes DEFINE/MEASURES into TVF string literals, where
-    // the function-name rewrites above could no longer reach them.
-    // JSON_TABLE and UNNEST (round 12) lower after it for the same
-    // reason — their own scanners are literal-aware.
-    UnnestSql.rewrite(JsonTableSql.rewrite(MatchRecognizeSql.rewrite(named)))
+      approxPct -> ((_, _) => Some("percentile_approx(")),
+      bareVarchar -> ((_, _) => Some("STRING")),
+      varbinary -> ((_, _) => Some("BINARY")),
+      doublePrec -> ((_, _) => Some("DOUBLE")),
+      sampleRx -> ((_, m) => Some(s"TABLESAMPLE (${m.group(1)} PERCENT)")),
+      createFn -> ((_, m) =>
+        Some(s"CREATE ${Option(m.group(1)).getOrElse("")}TEMPORARY FUNCTION ${m.group(2)}(")))
+    val named = steps.foldLeft(sql) { case (s, (rx, to)) => replaceInCode(s, rx)(to(s, _)) }
+    // ROW in a TYPE position first (CAST(x AS ROW(a INT))): Spark
+    // spells struct TYPES as STRUCT<...>, so the constructor rewrite
+    // must not fire there (struct(a INT) is unparseable). Then every
+    // remaining ROW( is a constructor.
+    val rows = replaceInCode(rowTypes(named, asRowType, "AS STRUCT<"), rowCtor)(_ => Some("struct("))
+    // Trino MATCH_RECOGNIZE clause -> graft_match_recognize TVF (no-op
+    // without the keyword). LAST: the rewrite quotes DEFINE/MEASURES
+    // into TVF string literals, where the function-name rewrites above
+    // could no longer reach them. JSON_TABLE and UNNEST lower after it
+    // for the same reason.
+    UnnestSql.rewrite(JsonTableSql.rewrite(MatchRecognizeSql.rewrite(rows)))
   }
 
-  /** Trino's ROW TYPE spelling -> Spark's STRUCT<...> (r12 advice).
-    * The one type position token-local context can prove is `AS ROW(`
-    * — CAST/TRY_CAST type arguments (an alias named ROW followed by a
-    * paren is not valid SQL, so the pattern cannot misfire on
-    * aliases). Inside the converted span every nested ROW( is also a
-    * type and converts recursively; field-name/type pairs pass through
-    * unchanged (Spark's STRUCT<a INT> colon is optional, and VARCHAR
-    * etc. were already rewritten upstream). Unbalanced parens are left
-    * for the parser to reject. */
+  /** Replace each match of `rx` in the code of `sql`: matches are found
+    * in [[SqlScan.mask]], so no literal, quoted identifier or comment
+    * takes part. `to` gets the match (offsets into `sql`) and may
+    * return None to leave it. */
+  private def replaceInCode(sql: String, rx: Regex)(to: Regex.Match => Option[String]): String = {
+    val out = new java.lang.StringBuilder
+    var last = 0
+    rx.findAllMatchIn(SqlScan.mask(sql)).foreach { m =>
+      to(m).foreach { r => out.append(sql, last, m.start).append(r); last = m.end }
+    }
+    out.append(sql, last, sql.length).toString
+  }
+
+  /** Trino's ROW TYPE spelling -> Spark's STRUCT<...>. The one type
+    * position token-local context can prove is `AS ROW(` — CAST/TRY_CAST
+    * type arguments (an alias named ROW followed by a paren is not valid
+    * SQL, so the pattern cannot misfire on aliases). Inside the
+    * converted span every nested ROW( is also a type and converts
+    * recursively; field-name/type pairs pass through unchanged (Spark's
+    * STRUCT<a INT> colon is optional, and VARCHAR etc. were already
+    * rewritten upstream). */
   private val asRowType = """(?i)\bAS\s+ROW\s*\(""".r
   private val rowTypeInner = """(?i)\bROW\s*\(""".r
 
-  private def matchingParen(s: String, open: Int): Int = {
-    var d = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  private def convertRowTypeBody(s: String): String =
-    rowTypeInner.findFirstMatchIn(s) match {
+  private def rowTypes(s: String, rx: Regex, to: String): String =
+    rx.findFirstMatchIn(SqlScan.mask(s)) match {
       case None => s
       case Some(m) =>
-        val open = m.end - 1
-        val close = matchingParen(s, open)
-        if (close < 0) s
-        else s.substring(0, m.start) + "STRUCT<" +
-          convertRowTypeBody(s.substring(open + 1, close)) + ">" +
-          convertRowTypeBody(s.substring(close + 1))
+        val close = SqlScan.closeParen(s, m.end - 1, "ROW type")
+        s.substring(0, m.start) + to + rowTypes(s.substring(m.end, close), rowTypeInner, "STRUCT<") +
+          ">" + rowTypes(s.substring(close + 1), rx, to)
     }
 
-  private def rewriteRowTypes(code: String): String =
-    asRowType.findFirstMatchIn(code) match {
-      case None => code
-      case Some(m) =>
-        val open = m.end - 1
-        val close = matchingParen(code, open)
-        if (close < 0) code
-        else code.substring(0, m.start) + "AS STRUCT<" +
-          convertRowTypeBody(code.substring(open + 1, close)) + ">" +
-          rewriteRowTypes(code.substring(close + 1))
-    }
-
-  /** Apply `f` to the non-literal segments of `sql`, passing
-    * single-quoted literals (with '' escapes) through untouched.
-    *
-    * Caveat: the date_diff/date_add unit rewrites intentionally consume
-    * a leading `'unit',` — those regexes carry enough left context
-    * (`date_diff(`) that they can only fire where the quoted token IS
-    * the unit argument, so the unit quote is included in the code
-    * segment by splitting literals lazily: a literal immediately
-    * preceded by `date_diff(`/`date_add(` stays in the code segment.
-    */
-  private def mapOutsideLiterals(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val code = new StringBuilder
-    var i = 0
-    val unitCallTail = """(?is).*\b(date_diff|date_add)\(\s*$""".r
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        // find literal end (handling '' escape)
-        var j = i + 1
-        var done = false
-        while (j < sql.length && !done) {
-          if (sql.charAt(j) == '\'') {
-            if (j + 1 < sql.length && sql.charAt(j + 1) == '\'') j += 2
-            else done = true
-          } else j += 1
-        }
-        val end = math.min(j + 1, sql.length)
-        val lit = sql.substring(i, end)
-        if (unitCallTail.findFirstIn(code).isDefined) {
-          // unit argument of date_diff/date_add: part of the rewrite site
-          code.append(lit)
-        } else {
-          out.append(f(code.toString)); code.clear()
-          out.append(lit)
-        }
-        i = end
-      } else { code.append(c); i += 1 }
-    }
-    out.append(f(code.toString))
-    out.toString
-  }
-
-  /** Split a multi-statement script on ';' outside quotes/comments —
-    * trino-cli `--execute` scripted mode (`tf/test-hive.sh:14-24`).
-    * Twin scanner: `QueryService.stripComments` lexes the same comment
-    * grammar but REMOVES comments — a comment-lexing fix here usually
-    * applies there too. */
+  /** Split a multi-statement script on the `;`s in its code —
+    * trino-cli `--execute` scripted mode (`tf/test-hive.sh:14-24`). */
   def splitStatements(script: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var i = 0
-    var inS = false // 'string'
-    var inD = false // "ident"
-    var inLineComment = false
-    var blockDepth = 0 // /* ... */ nests in Spark's lexer (SQL standard)
-    while (i < script.length) {
-      val c = script.charAt(i)
-      val next = if (i + 1 < script.length) script.charAt(i + 1) else '\u0000'
-      if (inLineComment) {
-        if (c == '\n') inLineComment = false
-        cur.append(c)
-      } else if (blockDepth > 0) {
-        cur.append(c)
-        if (c == '/' && next == '*') { blockDepth += 1; cur.append(next); i += 1 }
-        else if (c == '*' && next == '/') { blockDepth -= 1; cur.append(next); i += 1 }
-      } else if (inS) {
-        cur.append(c)
-        if (c == '\'' && next == '\'') { cur.append(next); i += 1 } // escaped ''
-        else if (c == '\'') inS = false
-      } else if (inD) {
-        cur.append(c); if (c == '"') inD = false
-      } else c match {
-        case '\'' => inS = true; cur.append(c)
-        case '"' => inD = true; cur.append(c)
-        case '-' if next == '-' => inLineComment = true; cur.append(c)
-        case '/' if next == '*' => blockDepth = 1; cur.append(c); cur.append(next); i += 1
-        case ';' => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
+    val m = SqlScan.mask(script)
+    val cuts = -1 +: m.indices.filter(m.charAt(_) == ';') :+ script.length
+    cuts.sliding(2).map(w => script.substring(w(0) + 1, w(1)).trim).filter(_.nonEmpty).toSeq
   }
 }
 

@@ -27,14 +27,14 @@ package graft.sql
   *  - `<colpath>`: `[lax|strict] $.x...` evaluated against each array
   *    element; `<type>` maps Trino names onto Spark CAST targets.
   *  - `FOR ORDINALITY` is the 1-based row number within its array.
-  *  - NESTED COLUMNS blocks nest to ARBITRARY depth (chains, round 13)
+  *  - NESTED COLUMNS blocks nest to ARBITRARY depth (chains)
   *    and any block may carry MULTIPLE sibling NESTED paths — including
   *    siblings below the outermost level and siblings that themselves
-  *    nest (round 14). The default plan is SQL:2016's (Trino 468's
+  *    nest. The default plan is SQL:2016's (Trino 468's
   *    too): OUTER parent/child (a parent element whose every child
   *    block is empty emits one row with NULL child columns) and UNION
   *    siblings (per-sibling rows, the other siblings' columns NULL).
-  *  - PLAN (round 14): `PLAN DEFAULT (OUTER|INNER [, UNION|CROSS])`
+  *  - PLAN: `PLAN DEFAULT (OUTER|INNER [, UNION|CROSS])`
   *    sets the plan for every edge/sibling group; `PLAN (<expr>)` with
   *    `parent OUTER|INNER child`, `a UNION b`, `a CROSS b` and
   *    parentheses sets them per edge — path names come from the
@@ -52,7 +52,7 @@ package graft.sql
   *    present-but-JSON-null value (which Trino keeps as NULL — it is
   *    neither empty nor error) is ALSO filled by the default: all
   *    three NULL sources are indistinguishable at this seam. Pinned
-  *    dialect gap (r13 advice).
+  *    dialect gap.
   *  - Table-level ERROR ON ERROR / EMPTY ... ON EMPTY stay named
   *    rejections; default NULL ON ERROR semantics is what the
   *    lowering produces naturally.
@@ -72,7 +72,7 @@ package graft.sql
   * (Trino's default inner semantics at the row path).
   */
 object JsonTableSql {
-  import SqlScan.{maskLiterals, splitTop}
+  import SqlScan.{mask, splitTop}
 
   def rewrite(sql: String): String = {
     if (!sql.toUpperCase.contains("JSON_TABLE")) return sql
@@ -90,7 +90,7 @@ object JsonTableSql {
   /** First JSON_TABLE keyword position OUTSIDE string literals. */
   private def findKeyword(sql: String): Option[Int] = {
     val rx = """(?i)\bJSON_TABLE\s*\(""".r
-    rx.findAllMatchIn(maskLiterals(sql)).map(_.start).toSeq.headOption
+    rx.findFirstMatchIn(mask(sql)).map(_.start)
   }
 
   private def closeParen(sql: String, open: Int): Int =
@@ -123,7 +123,7 @@ object JsonTableSql {
     // Spark spellings pass through too: on the SCRIPTED path the
     // TrinoDialect type rewrites (bare VARCHAR -> STRING, VARBINARY ->
     // BINARY) run BEFORE this lowering, so the COLUMNS block may
-    // already carry Spark names (r12 review)
+    // already carry Spark names
     "STRING" -> "STRING", "BINARY" -> "BINARY", "FLOAT" -> "FLOAT")
 
   private def mapType(t: String): String = {
@@ -135,7 +135,7 @@ object JsonTableSql {
   }
 
   /** Clause keywords that can follow `JSON_TABLE(...)` when the alias
-    * is omitted — never valid aliases (r12 advice). */
+    * is omitted — never valid aliases. */
   private val aliasReserved = Set(
     "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET", "FETCH",
     "JOIN", "ON", "USING", "CROSS", "LEFT", "RIGHT", "FULL", "INNER",
@@ -158,7 +158,7 @@ object JsonTableSql {
   private val nestedRx =
     ("""(?is)^\s*NESTED\s+(?:PATH\s+)?'((?:[^']|'')*)'\s*""" +
       """(?:AS\s+([A-Za-z_][A-Za-z0-9_]*)\s+)?COLUMNS\s*\((.*)\)\s*$""").r
-  // column-level SQL/JSON behaviors (round 13): `NULL ON EMPTY/ERROR`
+  // column-level SQL/JSON behaviors: `NULL ON EMPTY/ERROR`
   // is the default the lowering already produces (accepted, no-op);
   // `DEFAULT <literal> ON EMPTY/ERROR` coalesces over the NULL. The
   // lowering cannot DISTINGUISH empty from error (get_json_object
@@ -204,7 +204,7 @@ object JsonTableSql {
   }
 
   /** A COLUMNS block: leaf and NESTED entries, DECLARATION ORDER kept
-    * (Trino preserves it in the output schema — r13 advice). */
+    * (Trino preserves it in the output schema). */
   private def parseBlock(block: String): Block = {
     val entries = splitTop(block).map { e =>
       nestedRx.findFirstMatchIn(e) match {
@@ -287,7 +287,7 @@ object JsonTableSql {
     val root = rootName.getOrElse(throw new IllegalArgumentException(
       "JSON_TABLE PLAN: the row path needs a name — '<rowpath>' AS <name>"))
     // unquoted SQL identifiers case-fold (SQL:2016 / Trino): PLAN
-    // names match AS names case-insensitively (r14 review)
+    // names match AS names case-insensitively
     def fold(n: String): String = n.toUpperCase
     def nameOf(p: Plan): String = p match {
       case PName(n) => fold(n)
@@ -409,7 +409,7 @@ object JsonTableSql {
             // ONCE via the transform(array(x), v -> ...)[0] device —
             // inlining it under the per-left-row lambda would re-parse
             // and re-assemble that sibling's whole subtree once per
-            // left row (r14 review).
+            // left row.
             parts.map { case (n, rowsExpr) =>
               (rowsExpr, subtreeCols(n.block))
             }.reduceLeft[(String, Seq[(String, String)])] {
@@ -447,8 +447,7 @@ object JsonTableSql {
     // alias after the closing paren: [AS] ident. A bare identifier
     // regex would capture a following clause keyword (WHERE/GROUP/...)
     // as the alias when the alias is omitted, silently reshaping the
-    // query — reject keywords so the alias-required error fires
-    // (r12 advice).
+    // query — reject keywords so the alias-required error fires.
     val aliasRx = """(?is)^\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)""".r
     val tailText = sql.substring(close + 1)
     val aliasM = aliasRx.findFirstMatchIn(tailText)
@@ -476,8 +475,8 @@ object JsonTableSql {
     val colsClose = closeParen(pathCols, colsOpen)
     val colsBlock = pathCols.substring(colsOpen + 1, colsClose)
 
-    // trailing clauses after COLUMNS(...): PLAN is supported (round
-    // 14); ON ERROR / ON EMPTY stay honest dialect gaps, pinned
+    // trailing clauses after COLUMNS(...): PLAN is supported; ON ERROR
+    // / ON EMPTY stay honest dialect gaps, pinned
     var clauseTail = pathCols.substring(colsClose + 1).trim
     var planDefault: Option[(Option[Boolean], Option[Boolean])] = None
     var planExpr: Option[Plan] = None
@@ -492,7 +491,7 @@ object JsonTableSql {
       if (isDefault) {
         var outerD: Option[Boolean] = None
         var unionD: Option[Boolean] = None
-        splitTop(inner).map(_.trim.toUpperCase).foreach {
+        splitTop(inner).map(_.toUpperCase).foreach {
           case m @ ("OUTER" | "INNER") =>
             require(outerD.isEmpty,
               s"JSON_TABLE PLAN DEFAULT: duplicate edge modifier in '$inner'")

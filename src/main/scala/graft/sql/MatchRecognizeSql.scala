@@ -3,7 +3,7 @@ package graft.sql
 import scala.collection.mutable.LinkedHashMap
 import scala.util.matching.Regex
 
-/** Trino-syntax `MATCH_RECOGNIZE` as SQL TEXT (r7 verdict #2): a
+/** Trino-syntax `MATCH_RECOGNIZE` as SQL TEXT: a
   * source-to-source rewrite lowering the SQL:2016 clause onto the
   * `graft_match_recognize` table function, which runs
   * [[graft.operators.PatternMatch]] — same NFA, measures and skip
@@ -41,11 +41,11 @@ import scala.util.matching.Regex
   * window hash-clusters and sorts by the same keys, the matcher skips
   * its own exchange (prePartitioned), keeping the SQL spelling at ONE
   * shuffle like the hand-written operator calls. FIRST/LAST(sym.col)
-  * inside DEFINE (round 10) is classifier-history navigation — it
+  * inside DEFINE is classifier-history navigation — it
   * reads the match-so-far's classification, so it CANNOT precompute
   * as a window column: each distinct reference becomes a placeholder
   * the matcher binds during the NFA walk
-  * ([[graft.operators.PatternMatch.NavRef]]). Round 10 also closed:
+  * ([[graft.operators.PatternMatch.NavRef]]). Also supported:
   * NULLS FIRST/LAST ordering (threaded through the matcher sort AND
   * the nav windows), SKIP TO a SUBSET variable (member-union resume
   * point), PERMUTE(e1, ..., en) (lexicographic-preference
@@ -54,10 +54,10 @@ import scala.util.matching.Regex
   * ({- -} — output suppression, measures still fed), the FIRST/LAST
   * occurrence argument in both DEFINE and MEASURES, and PREV/NEXT in
   * MEASURES (lowered to [RUNNING|FINAL] LAST over the nav window
-  * column — the SQL:2016 physical-navigation-at-LAST semantics).
-  * Round 9 closed: DESC ordering, SKIP TO NEXT ROW (overlapping
-  * matches), SKIP TO FIRST/LAST symbol, SUBSET in MEASURES, MEASURES
-  * under ALL ROWS with RUNNING/FINAL semantics, CLASSIFIER().
+  * column — the SQL:2016 physical-navigation-at-LAST semantics),
+  * DESC ordering, SKIP TO NEXT ROW (overlapping matches), SKIP TO
+  * FIRST/LAST symbol, SUBSET in MEASURES, MEASURES under ALL ROWS
+  * with RUNNING/FINAL semantics, and CLASSIFIER().
   * Cross-symbol and SUBSET references in DEFINE carry the standard's
   * RUNNING LAST semantics through the same machinery; bare ALL ROWS
   * defaults to SHOW EMPTY MATCHES and ONE ROW always summarizes empty
@@ -66,9 +66,8 @@ import scala.util.matching.Regex
   * history anchors the row, the lag/lead column supplies the physical
   * offset. Navigation over arbitrary expressions (PREV(A.v + 1),
   * FIRST(D.a * 1.02), SUM(CAST(D.v < 50 AS INT)) in MEASURES) lowers
-  * each one-symbol expression onto a synthetic source column (round
-  * 10) — see xlateExprArgs. CLASSIFIER() and MATCH_NUMBER() inside
-  * DEFINE (round 11, closing the dialect's last named rejection) lower
+  * each one-symbol expression onto a synthetic source column — see
+  * xlateExprArgs. CLASSIFIER() and MATCH_NUMBER() inside DEFINE lower
   * onto the same matcher-bound placeholder pool — CLASSIFIER() folds
   * to the defining symbol's name (RUNNING LAST = the candidate row's
   * tentative label), CLASSIFIER(S) / FIRST/LAST(CLASSIFIER([S])[, k])
@@ -87,12 +86,13 @@ import scala.util.matching.Regex
   * expression. MatchRecognizeSqlSpec pins each rejection message.
   */
 object MatchRecognizeSql {
+  import SqlScan.{closeParen, mask, openParen, splitTop}
 
   /** Rewrite every `MATCH_RECOGNIZE` clause in `sql`; text without the
     * keyword passes through untouched (one cheap uppercase scan). */
   def rewrite(sql: String): String = {
     if (!sql.toUpperCase.contains("MATCH_RECOGNIZE")) return sql
-    val m = maskedUpper(sql)
+    val m = mask(sql)
     KwRx.findFirstMatchIn(m) match {
       case None => sql
       case Some(k) =>
@@ -100,19 +100,15 @@ object MatchRecognizeSql {
         while (open < m.length && m.charAt(open).isWhitespace) open += 1
         require(open < m.length && m.charAt(open) == '(',
           "MATCH_RECOGNIZE must be followed by a parenthesized clause body")
-        val close = closeParen(m, open)
-        require(close > 0, "unbalanced parens in MATCH_RECOGNIZE body")
+        val close = closeParen(sql, open, "MATCH_RECOGNIZE body")
         // the source sits immediately left of the keyword: either a
         // parenthesized subquery or a (possibly qualified) identifier
         var srcEnd = k.start
         while (srcEnd > 0 && m.charAt(srcEnd - 1).isWhitespace) srcEnd -= 1
         require(srcEnd > 0, "MATCH_RECOGNIZE has no source table")
         val srcStart =
-          if (m.charAt(srcEnd - 1) == ')') {
-            val o = openParen(m, srcEnd - 1)
-            require(o >= 0, "unbalanced parens before MATCH_RECOGNIZE")
-            o
-          } else {
+          if (m.charAt(srcEnd - 1) == ')') openParen(sql, srcEnd - 1, "MATCH_RECOGNIZE source")
+          else {
             var i = srcEnd
             while (i > 0 && (m.charAt(i - 1).isLetterOrDigit ||
               "_.`\"".indexOf(sql.charAt(i - 1)) >= 0)) i -= 1
@@ -127,11 +123,11 @@ object MatchRecognizeSql {
     }
   }
 
-  private val KwRx = """\bMATCH_RECOGNIZE\b""".r
+  private val KwRx = """(?i)\bMATCH_RECOGNIZE\b""".r
   private val Ident = """[A-Za-z_][A-Za-z0-9_]*"""
 
   private def translate(src: String, body: String): String = {
-    val m = maskedUpper(body)
+    val m = mask(body)
     val depth = {
       val d = new Array[Int](m.length)
       var cur = 0
@@ -145,15 +141,15 @@ object MatchRecognizeSql {
       d
     }
     val clauseRx: Seq[(String, Regex)] = Seq(
-      "PARTITION" -> """\bPARTITION\s+BY\b""".r,
-      "ORDER" -> """\bORDER\s+BY\b""".r,
-      "MEASURES" -> """\bMEASURES\b""".r,
-      "ONEROW" -> """\bONE\s+ROW\s+PER\s+MATCH\b""".r,
-      "ALLROWS" -> """\bALL\s+ROWS\s+PER\s+MATCH\b""".r,
-      "AFTER" -> """\bAFTER\s+MATCH\b""".r,
-      "PATTERN" -> """\bPATTERN\b""".r,
-      "SUBSET" -> """\bSUBSET\b""".r,
-      "DEFINE" -> """\bDEFINE\b""".r)
+      "PARTITION" -> """(?i)\bPARTITION\s+BY\b""".r,
+      "ORDER" -> """(?i)\bORDER\s+BY\b""".r,
+      "MEASURES" -> """(?i)\bMEASURES\b""".r,
+      "ONEROW" -> """(?i)\bONE\s+ROW\s+PER\s+MATCH\b""".r,
+      "ALLROWS" -> """(?i)\bALL\s+ROWS\s+PER\s+MATCH\b""".r,
+      "AFTER" -> """(?i)\bAFTER\s+MATCH\b""".r,
+      "PATTERN" -> """(?i)\bPATTERN\b""".r,
+      "SUBSET" -> """(?i)\bSUBSET\b""".r,
+      "DEFINE" -> """(?i)\bDEFINE\b""".r)
     val hits = clauseRx.flatMap { case (name, rx) =>
       rx.findAllMatchIn(m).filter(h => depth(h.start) == 0)
         .map(h => (h.start, h.end, name))
@@ -162,7 +158,7 @@ object MatchRecognizeSql {
     val names = hits.map(_._3)
     require(names.distinct.length == names.length,
       s"duplicate MATCH_RECOGNIZE clause: ${names.diff(names.distinct).mkString(",")}")
-    // SUBSET (round 9): union variables usable in MEASURES — each
+    // SUBSET: union variables usable in MEASURES — each
     // expands to the matcher's "A|B" union spelling. DEFINE/PATTERN may
     // not reference them (a subset never classifies rows).
     val seg: Map[String, String] = hits.zipWithIndex.map { case ((_, e, name), i) =>
@@ -173,7 +169,7 @@ object MatchRecognizeSql {
       throw new IllegalArgumentException(s"MATCH_RECOGNIZE needs a $what clause"))
 
     // ---- PARTITION BY / ORDER BY: identifier lists; ORDER BY entries
-    // may carry ASC/DESC (per-column direction, round 9 — the matcher
+    // may carry ASC/DESC (per-column direction — the matcher
     // reads each key group in exactly the declared order, so DESC
     // reverses the stream the NFA walks); NULLS FIRST/LAST named loudly
     def colList(text: String, what: String): Seq[String] =
@@ -186,8 +182,8 @@ object MatchRecognizeSql {
       }
     // (column, ascending, explicit-nulls-first) triples — rendered back
     // as "col DESC NULLS LAST" etc. for the TVF and the nav windows,
-    // which must sort the SAME way. NULLS FIRST/LAST supported since
-    // round 10; absent, the engine default applies (ASC = NULLS FIRST,
+    // which must sort the SAME way. Without NULLS FIRST/LAST the
+    // engine default applies (ASC = NULLS FIRST,
     // DESC = NULLS LAST — Spark's sort order).
     def orderList(text: String): Seq[(String, Boolean, Option[Boolean])] =
       splitTop(text).map { c0 =>
@@ -217,7 +213,7 @@ object MatchRecognizeSql {
       })
     }
 
-    // ---- mode + skip. ALL ROWS sub-modes (round 10): bare ALL ROWS
+    // ---- mode + skip. ALL ROWS sub-modes: bare ALL ROWS
     // PER MATCH defaults to SHOW EMPTY MATCHES — the SQL:2016/Trino
     // default (the sub-modes differ only on patterns that can match
     // empty); ONE ROW always shows empty matches (the standard's
@@ -233,7 +229,7 @@ object MatchRecognizeSql {
             "supported: SHOW EMPTY MATCHES (default), OMIT EMPTY MATCHES, " +
             "WITH UNMATCHED ROWS")
       }
-    // AFTER MATCH: all four SQL:2016 forms (round 9). SKIP TO
+    // AFTER MATCH: all four SQL:2016 forms. SKIP TO
     // FIRST/LAST symbol validates against the pattern symbols below
     // (after PATTERN parses) and passes through as the TVF skip spec.
     val skipToRx = ("""^SKIP TO (FIRST|LAST) (""" + Ident + """)$""").r
@@ -251,13 +247,13 @@ object MatchRecognizeSql {
     // ---- PATTERN ( ... ): inner text feeds the operator's pattern
     // parser; symbols normalize to upper case (SQL identifiers)
     val patSeg = segOf("PATTERN", "PATTERN").trim
-    require(patSeg.startsWith("(") && closeParen(maskedUpper(patSeg), 0) == patSeg.length - 1,
+    require(patSeg.startsWith("(") && closeParen(patSeg, 0, "PATTERN") == patSeg.length - 1,
       s"PATTERN must be parenthesized: '$patSeg'")
     val pattern = patSeg.substring(1, patSeg.length - 1).trim.toUpperCase
-    // PERMUTE is a pattern-language keyword (round 10), not a symbol
+    // PERMUTE is a pattern-language keyword, not a symbol
     val patSyms = Ident.r.findAllIn(pattern).toSeq.distinct.filterNot(_ == "PERMUTE")
 
-    // ---- SUBSET U = (A, B): union variables for MEASURES (round 9) —
+    // ---- SUBSET U = (A, B): union variables for MEASURES —
     // each expands to the matcher's "A|B" union spelling; DEFINE /
     // PATTERN / SKIP TO may not reference them (a subset never
     // classifies rows or anchors a restart here)
@@ -280,7 +276,7 @@ object MatchRecognizeSql {
       }.toMap).getOrElse(Map.empty)
 
     // skip-to symbol: a PATTERN symbol passes through; a SUBSET
-    // variable (round 10) expands to the matcher's member-union
+    // variable expands to the matcher's member-union
     // spelling — SKIP TO FIRST U with U = (A, B) resumes at the first
     // row the match classified as A OR B (SQL:2016 subset semantics)
     val skipSpec: String =
@@ -314,7 +310,7 @@ object MatchRecognizeSql {
     }
     val navRx = ("""(?i)\b(PREV|NEXT)\s*\(\s*(""" + Ident +
       """)\s*\.\s*(""" + Ident + """)\s*(?:,\s*(\d+)\s*)?\)""").r
-    // FIRST/LAST(sym.col) = classifier-history navigation (round 10):
+    // FIRST/LAST(sym.col) = classifier-history navigation:
     // each distinct reference becomes a __mrh_N placeholder column the
     // matcher binds DURING matching (PatternMatch.NavRef) — unlike
     // PREV/NEXT it cannot precompute as a window column, because the
@@ -328,8 +324,7 @@ object MatchRecognizeSql {
     // the symbol. For the symbol BEING DEFINED that last row IS the
     // current row (read directly, codegen-friendly); for any OTHER
     // symbol or a subset it lowers to a last-navigation placeholder
-    // (round 10 — previously cross-symbol refs silently read the
-    // current row, a semantic delta from Trino).
+    // (reading the current row there would differ from Trino).
     val symRefRx = ("""\b(?i:(""" +
       (symSet ++ subsets.keys).map(Regex.quote).mkString("|") +
       """))\s*\.\s*(""" + Ident + """)""").r
@@ -347,8 +342,7 @@ object MatchRecognizeSql {
           u
       }
     }
-    // ---- navigation over ARBITRARY EXPRESSIONS (round 10, closing
-    // the dialect's last named rejection): FN(expr [, n]) where expr
+    // ---- navigation over ARBITRARY EXPRESSIONS: FN(expr [, n]) where expr
     // is any scalar expression whose symbol-qualified column refs all
     // name ONE pattern variable — the SQL:2016 single-variable rule.
     // The expression is row-local, so it materializes as a synthetic
@@ -369,13 +363,12 @@ object MatchRecognizeSql {
       var again = true
       while (again) {
         again = false
-        val m = maskedUpper(text)
+        val m = mask(text)
         val it = rx.findAllMatchIn(m).iterator
         while (it.hasNext && !again) {
           val h = it.next()
           val open = h.end - 1
-          val close = closeParen(m, open)
-          require(close > 0, s"unbalanced parens in $where: '$text0'")
+          val close = closeParen(text, open, where)
           // innermost-first: a call whose argument still holds another
           // nav/agg call resolves on a later sweep
           if (rx.findFirstIn(m.substring(open + 1, close)).isEmpty) {
@@ -391,16 +384,16 @@ object MatchRecognizeSql {
                 s"'${text.substring(h.start, close + 1)}'")
               val expr = parts.head
               // in DEFINE, aggregates are banned INSIDE a navigated
-              // expression too (there is no grouping to aggregate over
-              // — r10-ADVICE: FIRST(MIN(D.v)) used to lower the MIN
-              // into the source projection and die opaquely later);
+              // expression too (there is no grouping to aggregate over:
+              // FIRST(MIN(D.v)) would lower the MIN into the source
+              // projection and die opaquely later);
               // in MEASURES they are legal top-level aggs, handled by
               // the innermost-first sweep
               val banned =
                 if (where.startsWith("DEFINE"))
                   """(?i)\b(CLASSIFIER|MATCH_NUMBER|PREV|NEXT|FIRST|LAST|MIN|MAX|SUM|AVG|COUNT)\s*\("""
                 else """(?i)\b(CLASSIFIER|MATCH_NUMBER|PREV|NEXT|FIRST|LAST)\s*\("""
-              banned.r.findFirstIn(maskedUpper(expr)).foreach { f =>
+              banned.r.findFirstIn(mask(expr)).foreach { f =>
                 throw new IllegalArgumentException(
                   s"${f.trim}...) may not appear inside a navigated " +
                     s"expression in $where: '$expr'")
@@ -429,7 +422,7 @@ object MatchRecognizeSql {
       text
     }
 
-    // nested navigation (round 10): PREV/NEXT(FIRST/LAST(S.f [, k])
+    // nested navigation: PREV/NEXT(FIRST/LAST(S.f [, k])
     // [, n]) — the ANCHOR row comes from classifier history, the
     // physical offset from the lag/lead window column read AT that
     // row, so the two existing lowerings compose:
@@ -450,8 +443,7 @@ object MatchRecognizeSql {
           (fl, target, cname + (if (occ > 0) s":$occ" else "")),
           s"__mrh_${histNavs.size}"))
       })
-    // ---- CLASSIFIER() / MATCH_NUMBER() inside DEFINE (round 11, the
-    // dialect's last named rejection): the matcher already threads the
+    // ---- CLASSIFIER() / MATCH_NUMBER() inside DEFINE: the matcher already threads the
     // in-flight classification and match count through predicate
     // evaluation (PatternMatch.NavCtx), so these lower onto the same
     // __mrh_N placeholder pool —
@@ -467,9 +459,9 @@ object MatchRecognizeSql {
     // under evaluation are not yet classified.
     def xlateClassifier(defSym: String, cond: String): String = {
       if (("""(?i)\b(CLASSIFIER|MATCH_NUMBER)\b""").r
-          .findFirstIn(maskedUpper(cond)).isEmpty) return cond
+          .findFirstIn(mask(cond)).isEmpty) return cond
       var c = cond
-      ("""(?i)\bNEXT\s*\(\s*CLASSIFIER\b""").r.findFirstIn(maskedUpper(c)).foreach { _ =>
+      ("""(?i)\bNEXT\s*\(\s*CLASSIFIER\b""").r.findFirstIn(mask(c)).foreach { _ =>
         throw new IllegalArgumentException(
           s"NEXT(CLASSIFIER(...)) in DEFINE is not supported — rows after " +
             s"the one under evaluation are not yet classified; condition: '$cond'")
@@ -504,11 +496,11 @@ object MatchRecognizeSql {
       // bare folds below could silently change its meaning (folding
       // CLASSIFIER() to the defining symbol is only correct at the
       // candidate row, not under PREV/FIRST/...)
-      val m0 = maskedUpper(c)
+      val m0 = mask(c)
       ("""(?i)\b(PREV|NEXT|FIRST|LAST|MIN|MAX|SUM|AVG|COUNT)\s*\(""").r
         .findAllMatchIn(m0).foreach { h =>
-          val close = closeParen(m0, h.end - 1)
-          if (close > 0 && ("""\b(CLASSIFIER|MATCH_NUMBER)\b""").r
+          val close = closeParen(c, h.end - 1, s"DEFINE $defSym")
+          if (("""(?i)\b(CLASSIFIER|MATCH_NUMBER)\b""").r
               .findFirstIn(m0.substring(h.end, close)).isDefined)
             throw new IllegalArgumentException(
               s"${h.group(1)}(...) over an expression containing CLASSIFIER/" +
@@ -545,7 +537,7 @@ object MatchRecognizeSql {
       })
       val c2 = histRx.replaceAllIn(c1, h => {
         val fn = h.group(1).toLowerCase
-        // the SQL:2016 occurrence argument (round 10): FIRST(D.v, 2)
+        // the SQL:2016 occurrence argument: FIRST(D.v, 2)
         // reads the 3rd row the match-so-far classified D; a SUBSET
         // variable navigates its member union
         val occ = Option(h.group(4)).map(_.toInt).getOrElse(0)
@@ -554,7 +546,7 @@ object MatchRecognizeSql {
           (fn, target, h.group(3) + (if (occ > 0) s":$occ" else "")),
           s"__mrh_${histNavs.size}"))
       })
-      ("""(?i)\b(PREV|NEXT|FIRST|LAST)\s*\(""").r.findFirstIn(maskedUpper(c2)).foreach { f =>
+      ("""(?i)\b(PREV|NEXT|FIRST|LAST)\s*\(""").r.findFirstIn(mask(c2)).foreach { f =>
         throw new IllegalArgumentException(
           s"unsupported navigation '${f.trim}...' in DEFINE condition '$cond' — " +
             "navigation takes SYMBOL.column or a one-symbol expression " +
@@ -566,7 +558,7 @@ object MatchRecognizeSql {
       // don't parse, and would otherwise surface as an opaque
       // unresolved-function error
       ("""(?i)\b(CLASSIFIER|MATCH_NUMBER)\s*\(""").r
-        .findFirstIn(maskedUpper(c2)).foreach { f =>
+        .findFirstIn(mask(c2)).foreach { f =>
           throw new IllegalArgumentException(
             s"unsupported ${f.trim}...) form in DEFINE condition '$cond' — " +
               "supported: CLASSIFIER() (= the symbol being defined), " +
@@ -592,7 +584,7 @@ object MatchRecognizeSql {
       .map { case (s, c) => s"$s:$c" }.mkString(";")
 
     // ---- MEASURES: the [run_]agg(SYM.field) grammar of
-    // PatternMatch.Measure. Allowed in BOTH modes since round 9: under
+    // PatternMatch.Measure. Allowed in BOTH modes: under
     // ALL ROWS PER MATCH the SQL default is RUNNING semantics (the
     // aggregate over the match's rows up to each output row); a FINAL
     // keyword pins the whole-match value; under ONE ROW both keywords
@@ -615,7 +607,7 @@ object MatchRecognizeSql {
           case semRx(k, rest) => (k.toUpperCase, rest.trim)
           case _              => ("", ex0)
         }
-        // expression arguments (round 10) lower to synthetic-column
+        // expression arguments lower to synthetic-column
         // plain forms first — see xlateExprArgs; MEASURES additionally
         // admits computed MIN/MAX/SUM arguments this way
         val ex = xlateExprArgs(exRaw, "PREV|NEXT|FIRST|LAST|MIN|MAX|SUM|AVG",
@@ -643,7 +635,7 @@ object MatchRecognizeSql {
           else subsets.getOrElse(u, throw new IllegalArgumentException(
             s"unknown pattern symbol '$s' in MEASURES")).mkString("|")
         }
-        // PREV/NEXT navigation in MEASURES (round 10, r9 verdict #6):
+        // PREV/NEXT navigation in MEASURES:
         // SQL:2016 evaluates PREV(S.f, n) at the row LAST(S) resolves
         // to (RUNNING: the latest S so far), stepping n rows back in
         // PARTITION order — exactly the lag/lead window column read at
@@ -651,7 +643,7 @@ object MatchRecognizeSql {
         // the DEFINE navigation's window wrapper.
         val measNavRx = ("""(?i)^(PREV|NEXT)\s*\(\s*(""" + Ident +
           """)\s*\.\s*(""" + Ident + """)\s*(?:,\s*(\d+)\s*)?\)$""").r
-        // nested navigation (round 10): the explicit-anchor spelling —
+        // nested navigation: the explicit-anchor spelling —
         // PREV(FIRST(S.f, k), n) anchors at the k-th S row and offsets
         // n physical rows via the lag/lead column read there
         val measNestedRx = ("""(?i)^(PREV|NEXT)\s*\(\s*(FIRST|LAST)\s*\(\s*(""" +
@@ -671,14 +663,14 @@ object MatchRecognizeSql {
             val cname = navs.getOrElseUpdate((fn, f, n), s"__mr_${fn}_${f}_$n")
             Some(s"$name:${pfx}last:${sym(s)}:$cname")
           case other if ("""(?i)\b(PREV|NEXT)\s*\(""").r
-              .findFirstIn(maskedUpper(other)).isDefined =>
+              .findFirstIn(mask(other)).isDefined =>
             throw new IllegalArgumentException(
               s"unsupported MEASURES navigation '${other.trim}' — supported: " +
                 "[RUNNING|FINAL] PREV/NEXT(SYMBOL.column-or-expression [, n]) " +
                 "and PREV/NEXT(FIRST/LAST(SYMBOL.column-or-expression [, k]) " +
                 "[, n]); deeper nesting is not")
           case aggRx(agg, s, f, n0) =>
-            // optional SQL:2016 occurrence argument (round 10),
+            // optional SQL:2016 occurrence argument,
             // FIRST/LAST only
             val occ = Option(n0).map(_.toInt).getOrElse(0)
             require(occ == 0 || agg.equalsIgnoreCase("first") ||
@@ -733,7 +725,7 @@ object MatchRecognizeSql {
       }
 
     def q(s: String): String = "'" + s.replace("'", "''") + "'"
-    // classifier-history nav spec (round 10): placeholder:first|last:SYM:col
+    // classifier-history nav spec: placeholder:first|last:SYM:col
     val histSpec = histNavs.map { case ((fn, sym, f), nm) =>
       s"$nm:$fn:$sym:$f" }.mkString(";")
     val call = s"graft_match_recognize(${q(srcArg)}, ${q(parts.mkString(","))}, " +
@@ -752,102 +744,5 @@ object MatchRecognizeSql {
         if (mnAliases.contains(n)) s"match_num AS $n" else n)
       s"(SELECT ${outs.mkString(", ")} FROM $call)"
     }
-  }
-
-  /** Split on top-level commas (outside parens; `s` may contain
-    * literals — commas inside them don't split because the scan walks
-    * the masked twin). */
-  private def splitTop(s: String): Seq[String] = {
-    val m = maskedUpper(s)
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < m.length) {
-      m.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Uppercased copy with quoted regions (single/double/backtick,
-    * with '' escapes) blanked to spaces — same length, so indexes map
-    * 1:1 onto the original text. */
-  private def maskedUpper(s: String): String = {
-    val out = s.toCharArray
-    var i = 0
-    while (i < out.length) {
-      val c = out(i)
-      val next = if (i + 1 < out.length) out(i + 1) else ' '
-      if (c == '\'' || c == '"' || c == '`') {
-        // TWIN SCANNER of SqlScan.maskLiterals (same comment/quote
-        // grammar; this one also blanks delimiters and uppercases) —
-        // a lexing fix here usually applies there too
-        out(i) = ' '
-        var j = i + 1
-        var done = false
-        while (j < out.length && !done) {
-          if (c != '`' && out(j) == '\\' && j + 1 < out.length) {
-            // Spark's default lexer honors backslash escapes in
-            // quoted literals (r12 review): '\'' stays inside
-            out(j) = ' '; out(j + 1) = ' '; j += 2
-          } else if (out(j) == c) {
-            if (c == '\'' && j + 1 < out.length && out(j + 1) == '\'') {
-              out(j) = ' '; out(j + 1) = ' '; j += 2
-            } else { out(j) = ' '; done = true }
-          } else { out(j) = ' '; j += 1 }
-        }
-        i = j + 1
-      } else if (c == '-' && next == '-') {
-        // line comment: the rewriter sees EVERY statement through the
-        // injected parser, so a comment mentioning MATCH_RECOGNIZE must
-        // not look like the clause (r12 property test)
-        var j = i
-        while (j < out.length && out(j) != '\n') { out(j) = ' '; j += 1 }
-        i = j
-      } else if (c == '/' && next == '*') {
-        var j = i + 2
-        var depth = 1 // Spark's lexer nests block comments
-        out(i) = ' '; out(i + 1) = ' '
-        while (j < out.length && depth > 0) {
-          if (out(j) == '/' && j + 1 < out.length && out(j + 1) == '*') {
-            depth += 1; out(j) = ' '; out(j + 1) = ' '; j += 2
-          } else if (out(j) == '*' && j + 1 < out.length && out(j + 1) == '/') {
-            depth -= 1; out(j) = ' '; out(j + 1) = ' '; j += 2
-          } else { out(j) = ' '; j += 1 }
-        }
-        i = j
-      } else { out(i) = c.toUpper; i += 1 }
-    }
-    new String(out)
-  }
-
-  private def closeParen(m: String, open: Int): Int = {
-    var d = 0
-    var i = open
-    while (i < m.length) {
-      if (m.charAt(i) == '(') d += 1
-      else if (m.charAt(i) == ')') { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  private def openParen(m: String, close: Int): Int = {
-    var d = 0
-    var i = close
-    while (i >= 0) {
-      if (m.charAt(i) == ')') d += 1
-      else if (m.charAt(i) == '(') { d -= 1; if (d == 0) return i }
-      i -= 1
-    }
-    -1
   }
 }

@@ -31,7 +31,7 @@ package graft.sql
   * zero rows.
   */
 object UnnestSql {
-  import SqlScan.{maskLiterals, splitTop}
+  import SqlScan.{mask, splitTop}
 
   def rewrite(sql: String): String = {
     if (!sql.toUpperCase.contains("UNNEST")) return sql
@@ -47,12 +47,12 @@ object UnnestSql {
   }
 
   private def findKeyword(sql: String): Option[Int] =
-    """(?i)\bUNNEST\s*\(""".r.findAllMatchIn(maskLiterals(sql)).map(_.start).toSeq.headOption
+    """(?i)\bUNNEST\s*\(""".r.findFirstMatchIn(mask(sql)).map(_.start)
 
   private def rewriteOne(sql: String, kwStart: Int): String = {
     val open = sql.indexOf('(', kwStart)
     val close = SqlScan.closeParen(sql, open, "UNNEST")
-    val args = splitTop(sql.substring(open + 1, close)).map(_.trim)
+    val args = splitTop(sql.substring(open + 1, close))
     require(args.nonEmpty && args.forall(_.nonEmpty),
       "UNNEST takes one or more array/map expressions")
 
@@ -85,12 +85,11 @@ object UnnestSql {
         // accepts UNNEST(array(row(...))) AS t(a, b) here — a shape a
         // type-blind rewriter cannot distinguish from a map column, and
         // whose map lowering would die later in analysis. Reject the
-        // provable constructor spelling by name (r12 advice); a
-        // NON-LITERAL array-of-rows column with a 2-name alias still
-        // reaches analysis, where the distinctive __un_map_k marker in
-        // the failure names this map/array-of-rows ambiguity (r13
-        // advice) — the fix is a 1-column alias + struct-field SELECT,
-        // or >= 3 alias columns.
+        // provable constructor spelling by name; a NON-LITERAL
+        // array-of-rows column with a 2-name alias still reaches
+        // analysis, where the distinctive __un_map_k marker in the
+        // failure names this map/array-of-rows ambiguity — the fix is
+        // a 1-column alias + struct-field SELECT, or >= 3 alias columns.
         require(!args.head.matches("""(?is)^\s*array\s*\(.*"""),
           s"UNNEST(array(row(...))) AS $alias(a, b) is not supported — " +
             "a one-argument two-column UNNEST is lowered as a MAP " +
@@ -112,7 +111,7 @@ object UnnestSql {
         // (`__un_e.*`) and the alias's POSITIONAL COLUMN LIST does the
         // renaming (appended below); a field-count mismatch fails in
         // analysis with the alias arity named. The 2-field shape stays
-        // a named rejection (map ambiguity — r12 advice).
+        // a named rejection (map ambiguity).
         val sel = ("__un_e.*" +: ordSel("__un_p + 1")).mkString(", ")
         s"(SELECT $sel FROM (SELECT posexplode(${args.head}) AS (__un_p, __un_e)))"
       } else if (args.length == 1) {

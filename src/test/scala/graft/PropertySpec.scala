@@ -25,44 +25,100 @@ class PropertySpec extends SparkSpec {
   private def draw(i: Int): List[(Long, Long, String)] =
     rowsGen.pureApply(Gen.Parameters.default, Seed(42L + i))
 
-  test("mainStatement strips any generated CTE prefix down to the main verb") {
-    // the DML gate and cache-eligibility both hang off this parser, so
-    // fuzz it: arbitrary CTE lists (nested parens, quoted strings with
-    // parens/quotes inside, optional column lists, 1..3 CTEs) must
-    // never hide the main statement's verb.
-    val svc = new graft.serve.QueryService(spark)
+  test("the service gate refuses any CTE-prefixed DML and caches any CTE-prefixed read") {
+    // the gate and cache eligibility read Spark's parsed plan, so fuzz
+    // them: arbitrary CTE lists (nested parens, quoted strings with
+    // parens/quotes inside, optional column lists, 1..3 CTEs) must never
+    // hide the main statement's verb
+    spark.range(3).selectExpr("CAST(id AS INT) AS x").createOrReplaceTempView("prop_t")
+    val gated = new graft.serve.QueryService(spark, allowDml = false)
     try {
-      val bodyGen: Gen[String] = Gen.oneOf(
-        "select 1",
-        "select count(*) from t where x in (1, (2))",
-        "select 'lit with ) paren', \"id(\" from t",
-        "select f(g(x), ') as', h(')'))", // nested + quoted parens
-        "select * from (select 1) q")
+      val bodyGen: Gen[String] = Gen.oneOf( // two columns each
+        "select 1, 2",
+        "select count(*), 0 from prop_t where x in (1, (2))",
+        "select 'lit with ) paren', \"id(\" from prop_t",
+        "select concat(lower(cast(x as string)), ') as'), substr(')', 1) from prop_t", // nested + quoted parens
+        "select * from (select 1, 2) q")
       val cteGen: Gen[String] = for {
-        name <- Gen.oneOf("a", "b", "cte1")
-        cols <- Gen.oneOf("", "(c1, c2)", " (c1)")
+        cols <- Gen.oneOf("", "(c1, c2)", " (c1, c2)")
         body <- bodyGen
-      } yield s"$name$cols as ($body)"
-      val mainGen: Gen[(String, String)] = Gen.oneOf(
-        "select * from a" -> "select",
-        "insert into t select * from a" -> "insert",
-        "update t set x = 1" -> "update",
-        "merge into t using a on t.id = a.id" -> "merge",
-        "delete from t where x in (select 1)" -> "delete")
-      val caseGen: Gen[(String, String)] = for {
+      } yield s"$cols as ($body)"
+      val mainGen: Gen[(String, Boolean)] = Gen.oneOf(
+        "select * from a" -> false,
+        "insert into prop_t select 1 from a" -> true,
+        "update prop_t set x = 1" -> true,
+        "merge into prop_t using a on prop_t.x = 1 when matched then delete" -> true,
+        "delete from prop_t where x in (select 1)" -> true)
+      val caseGen: Gen[(String, Boolean)] = for {
         n <- Gen.chooseNum(1, 3)
         ctes <- Gen.listOfN(n, cteGen)
         m <- mainGen
-      } yield (s"with ${ctes.mkString(", ")} ${m._1}", m._2)
+      } yield (s"with ${Seq("a", "b", "cte1").zip(ctes).map(c => c._1 + c._2).mkString(", ")} ${m._1}",
+        m._2)
       (0 until 200).foreach { i =>
-        val (sql, verb) = caseGen.pureApply(Gen.Parameters.default, Seed(99L + i))
-        val main = svc.mainStatement(sql)
-        assert(main.startsWith(verb), s"sql=<$sql> main=<$main> want=<$verb>")
+        val seed = 99L + i
+        val (sql, dml) = caseGen.pureApply(Gen.Parameters.default, Seed(seed))
+        if (dml) gated.sql(sql) match {
+          case f: gated.Failed => assert(f.error.contains("DML disabled"), s"seed $seed <$sql>: ${f.error}")
+          case o => fail(s"seed $seed <$sql>: $o")
+        }
+        else {
+          assert(gated.sql(sql).isInstanceOf[gated.Finished], s"seed $seed <$sql>")
+          gated.sql(sql) match {
+            case f: gated.Finished => assert(f.fromCache, s"seed $seed <$sql>: the repeat missed the cache")
+            case o => fail(s"seed $seed <$sql>: $o")
+          }
+        }
       }
-      // non-CTE statements pass through untouched
-      assert(svc.mainStatement("select 1") == "select 1")
-      assert(svc.mainStatement("insert into t values (1)") == "insert into t values (1)")
-    } finally svc.close()
+      assert(spark.table("prop_t").count() == 3L)
+    } finally {
+      gated.close()
+      spark.catalog.dropTempView("prop_t")
+    }
+  }
+
+  test("SqlScan: spans tile the text; ; ( ) UNNEST( approx_percentile( inside literals and comments change no cut and no rewrite") {
+    import graft.sql.{SqlScan, TrinoDialect}
+    val hole = "\u00a7" // stands for a payload in the generated text
+    val codeGen: Gen[String] = Gen.oneOf("SELECT a", "FROM t", ",", "WHERE x = 1", ";",
+      "approx_percentile(v, 0.5)", "CAST(c AS VARCHAR)", "date_diff('day', d1, d2)",
+      "CROSS JOIN UNNEST(t.xs) AS u(e)", "ROW(1, 2)", "(a + (b))")
+    // (text with a hole, kind): literals with '' and backslash escapes,
+    // raw literals, quoted identifiers, line and nested block comments
+    val holderGen: Gen[(String, SqlScan.Kind)] = Gen.oneOf(
+      s"'a${hole}b'" -> SqlScan.Literal, s"'it''s $hole'" -> SqlScan.Literal,
+      s"'it\\'s $hole'" -> SqlScan.Literal, s"'$hole\\\\'" -> SqlScan.Literal,
+      s"R'$hole\\'" -> SqlScan.Literal,
+      s"\"x\\\"$hole\"" -> SqlScan.Literal, s"\"a\"\"$hole\"" -> SqlScan.Literal,
+      s"`id$hole`" -> SqlScan.Ident, s"`a``$hole`" -> SqlScan.Ident,
+      s"-- note $hole\n" -> SqlScan.Comment, s"/* a $hole */" -> SqlScan.Comment,
+      s"/* a /* $hole */ b */" -> SqlScan.Comment)
+    val pieceGen: Gen[Either[String, (String, SqlScan.Kind)]] =
+      Gen.frequency(3 -> codeGen.map(Left(_)), 2 -> holderGen.map(Right(_)))
+    val payloads = Seq(";", "(", ")", "UNNEST(", "approx_percentile(", "x")
+    (0 until 300).foreach { i =>
+      val seed = 7L + i
+      val pieces = Gen.listOfN(12, pieceGen).pureApply(Gen.Parameters.default, Seed(seed))
+      val text = pieces.map(_.fold(identity, _._1)).mkString(" ")
+      val spans = SqlScan.spans(text)
+      assert(spans.map(s => text.substring(s.start, s.end)).mkString == text, s"seed $seed <$text>")
+      assert(spans.sliding(2).forall(w => w.size < 2 || w(0).end == w(1).start), s"seed $seed <$text>")
+      val quoted = pieces.flatMap {
+        case Left(c) => "'day'".r.findAllIn(c).map(_ -> SqlScan.Literal)
+        case Right(h) => Seq(h)
+      }
+      assert(spans.filter(_.kind != SqlScan.Code).map(s => (text.substring(s.start, s.end), s.kind)) ==
+        quoted, s"seed $seed <$text>")
+      val base = text.replace(hole, "")
+      payloads.foreach { p =>
+        val filled = text.replace(hole, p)
+        assert(TrinoDialect.splitStatements(filled) ==
+          TrinoDialect.splitStatements(text).map(_.replace(hole, p)), s"seed $seed payload $p <$filled>")
+        assert(TrinoDialect.rewrite(filled) == TrinoDialect.rewrite(text).replace(hole, p),
+          s"seed $seed payload $p <$filled>")
+      }
+      assert(TrinoDialect.rewrite(base) == TrinoDialect.rewrite(text).replace(hole, ""), s"seed $seed")
+    }
   }
 
   test("filter partitions rows: count(p) + count(!p) == count") {

@@ -915,4 +915,100 @@ class ServeSpec extends SparkSpec {
       }
     } finally svc.close()
   }
+
+  test("allow_cvas=false refuses every temporary-view spelling") {
+    val svc = new QueryService(spark, allowCvas = false)
+    try {
+      Seq("CREATE TEMPORARY VIEW gate_v AS SELECT 1 AS x",
+          "CREATE OR REPLACE TEMPORARY VIEW gate_v AS SELECT 1 AS x",
+          "CREATE GLOBAL TEMP VIEW gate_v AS SELECT 1 AS x").foreach { stmt =>
+        svc.sql(stmt) match {
+          case f: svc.Failed => assert(f.error.contains("CVAS disabled"), f.error)
+          case o => fail(s"$stmt: $o")
+        }
+      }
+      assert(!spark.catalog.tableExists("gate_v"))
+    } finally {
+      spark.catalog.dropTempView("gate_v")
+      spark.catalog.dropGlobalTempView("gate_v")
+      svc.close()
+    }
+  }
+
+  test("allow_ctas=false refuses CTAS without AS or with AS( and CREATE OR REPLACE ... AS; a plain CREATE TABLE runs") {
+    val svc = new QueryService(spark, allowCtas = false)
+    try {
+      Seq("CREATE TABLE gate_ctas USING parquet SELECT 1",
+          "CREATE TABLE gate_ctas USING parquet AS(SELECT 1)",
+          "CREATE OR REPLACE TABLE gate_ctas USING parquet AS SELECT 1").foreach { stmt =>
+        svc.sql(stmt) match {
+          case f: svc.Failed => assert(f.error.contains("CTAS disabled"), f.error)
+          case o => fail(s"$stmt: $o")
+        }
+      }
+      assert(!spark.catalog.tableExists("gate_ctas"))
+      // no query: the ' as ' inside the comment literal makes it no CTAS
+      svc.sql("CREATE TABLE gate_plain (a INT) USING parquet COMMENT 'x as y'") match {
+        case _: svc.Finished => assert(spark.catalog.tableExists("gate_plain"))
+        case o => fail(s"$o")
+      }
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS gate_plain")
+      spark.sql("DROP TABLE IF EXISTS gate_ctas")
+      svc.close()
+    }
+  }
+
+  test("allow_dml=false refuses FROM ... INSERT and a script's INSERT; the table keeps its rows") {
+    spark.sql("CREATE TABLE gate_dml (c INT) USING parquet")
+    val svc = new QueryService(spark, allowDml = false)
+    try {
+      spark.sql("INSERT INTO gate_dml VALUES (1)")
+      Seq("FROM (SELECT 3 AS c) s INSERT INTO gate_dml SELECT c",
+          "BEGIN INSERT INTO gate_dml VALUES (4); END").foreach { stmt =>
+        svc.sql(stmt) match {
+          case f: svc.Failed => assert(f.error.contains("DML disabled"), f.error)
+          case o => fail(s"$stmt: $o")
+        }
+      }
+      assert(spark.table("gate_dml").count() == 1L)
+    } finally {
+      svc.close()
+      spark.sql("DROP TABLE IF EXISTS gate_dml")
+    }
+  }
+
+  test("the result cache never serves another table's rows: plans match by relation identity") {
+    // two tables (and two path reads) whose canonical plans print the
+    // same text: only the relation's location tells them apart
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_rel")
+    spark.sql("CREATE TABLE c_t1 (a INT) USING parquet")
+    spark.sql("CREATE TABLE c_t2 (b INT) USING parquet")
+    val svc = new QueryService(spark)
+    try {
+      spark.sql("INSERT INTO c_t1 VALUES (1), (2), (3)")
+      spark.sql("INSERT INTO c_t2 VALUES (7)")
+      spark.range(5).write.parquet(s"$dir/p5")
+      spark.range(2).write.parquet(s"$dir/p2")
+      def run(q: String) = svc.sql(q) match {
+        case f: svc.Finished => f
+        case o => fail(s"$q: $o")
+      }
+      for ((first, second, want) <- Seq(
+          ("SELECT count(*) AS n FROM c_t1", "SELECT count(*) AS n FROM c_t2", Seq("[1]")),
+          ("SELECT * FROM c_t1", "SELECT * FROM c_t2", Seq("[7]")),
+          (s"SELECT count(*) AS n FROM parquet.`$dir/p5`", s"SELECT count(*) AS n FROM parquet.`$dir/p2`",
+            Seq("[2]")))) {
+        run(first)
+        val f = run(second)
+        assert(!f.fromCache, s"$second was served $first's cached rows")
+        assert(f.rows.map(_.toString) == want, f.rows)
+        assert(run(second).fromCache, s"$second must still hit its own entry")
+      }
+    } finally {
+      svc.close()
+      spark.sql("DROP TABLE IF EXISTS c_t1")
+      spark.sql("DROP TABLE IF EXISTS c_t2")
+    }
+  }
 }

@@ -155,6 +155,16 @@ class SqlSpec extends SparkSpec {
     assert(stmts(0).endsWith("AS x") && stmts(1) == "SELECT 2 AS y", stmts.mkString("||"))
   }
 
+  test("statement splitter keeps escaped quotes and quoted identifiers inside one statement") {
+    // Spark's lexer honors backslash escapes in '..' and ".." (not in a
+    // raw R'..'), and a backtick identifier may hold a ';'
+    Seq("SELECT 'it\\'s; fine' AS s", "SELECT 1 AS `a;b`", "SELECT \"x\\\";y\" AS s",
+        "SELECT R'C:\\' AS p").foreach { stmt =>
+      val stmts = TrinoDialect.splitStatements(s"$stmt; SELECT 2 AS y")
+      assert(stmts == Seq(stmt, "SELECT 2 AS y"), stmts.mkString("||"))
+    }
+  }
+
   test("scripted execution end-to-end (test-hive.sh shape)") {
     val results = GraftSql.execute(spark,
       """DROP TABLE IF EXISTS sql_spec_foo;
@@ -182,6 +192,15 @@ class SqlSpec extends SparkSpec {
     assert(out.contains("'uses approx_percentile(x) and date_diff(''day'', a, b)'"), out)
     assert(out.contains("percentile_approx(v, 0.5)"), out)
     assert(out.contains("date_diff(HOUR, t1, t2)"), out)
+  }
+
+  test("dialect rewrites never touch backslash-escaped or double-quoted literals") {
+    Seq("'it\\'s approx_percentile(x)'", "\"approx_percentile(x)\"").foreach { lit =>
+      val in = s"SELECT $lit AS doc, approx_percentile(v, 0.5) AS p FROM t"
+      assert(TrinoDialect.rewrite(in) == s"SELECT $lit AS doc, percentile_approx(v, 0.5) AS p FROM t")
+      assert(GraftSql.sql(spark, s"SELECT $lit AS doc").collect().head.getString(0) ==
+        lit.substring(1, lit.length - 1).replace("\\'", "'"), lit)
+    }
   }
 
   test("EXPLAIN ANALYZE returns the FINAL adaptive plan with real runtime metrics") {
