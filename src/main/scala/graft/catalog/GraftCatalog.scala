@@ -21,7 +21,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.GraftTable
+import graft.store.{FileSet, GraftTable}
 
 /** Name-addressed catalog over GraftTable roots — walden's model of
   * versioned tables living in a NAMED catalog (`tf/main.tf:93-98`
@@ -47,13 +47,14 @@ import graft.store.GraftTable
   * reads); data stays distributed.
   *
   * Read path: every table, in either format, is read by one native
-  * DSv2 scan, [[GraftScan]]. The scan builder plans the snapshot's
-  * files once ([[GraftTable.planFiles]]: commit-log stats pruning plus
-  * bucket pruning for the translatable filter subset), and Spark's own
+  * DSv2 scan, [[GraftScan]] — the same scan `GraftTable.read` and the
+  * store's own reads plan. The scan builder plans the snapshot's files
+  * once ([[GraftTable.plan]]: commit-log stats pruning plus bucket
+  * pruning for the translatable filter subset), and Spark's own
   * Parquet/ORC reader reads them with the pruned columns and row-group
-  * pushdown — no second DataFrame, no Row conversion. Spark
-  * re-evaluates every filter above the scan, so the translation is an
-  * IO optimization, never a correctness dependency.
+  * pushdown, as columnar batches whenever the format can batch the
+  * projection. Spark re-evaluates every filter above the scan, so the
+  * translation is an IO optimization, never a correctness dependency.
   *
   * Write path: native DSv2 BATCH_WRITE ([[GraftBatchWrite]]) —
   * INSERT INTO appends, INSERT OVERWRITE truncates (static) or
@@ -386,8 +387,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces with Proce
 
   /** `CALL c.system.optimize(table [, num_files, cluster_by, zorder_by,
     * where])` — Trino `ALTER TABLE ... EXECUTE optimize [WHERE ...]` /
-    * Delta `OPTIMIZE [WHERE] [ZORDER]`. `where` (round 14) is a SQL
-    * predicate scoping the rewrite to stats-matching files
+    * Delta `OPTIMIZE [WHERE] [ZORDER]`. `where` is a SQL predicate
+    * scoping the rewrite to stats-matching files
     * ([[graft.store.GraftTable.compact]]'s file-granular semantics). */
   private final class OptimizeProcedure extends UnboundProcedure with BoundProcedure {
     override def name(): String = "optimize"
@@ -534,7 +535,8 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   // replaced-partition identity is the connector's to define — see
   // GraftTable.adoptBatchWrite). The BUCKET spec is the opposite: it
   // IS discrete one-key-per-partition layout, and advertising it is
-  // what lets the planner see co-bucketed tables (round 12, SPJ).
+  // what lets the planner see co-bucketed tables (storage-partitioned
+  // joins).
   override def partitioning(): Array[Transform] = gt.bucketSpec match {
     case Some((_, n)) =>
       Array(org.apache.spark.sql.connector.expressions.Expressions
@@ -571,7 +573,7 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(gt, pinned, schema())
+    new GraftScanBuilder(gt, gt.snapshotSet(pinned))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(!timeTravel, s"cannot write to a time-travelled snapshot of $fullName")
@@ -584,19 +586,43 @@ private[catalog] final class GraftV2Table(gt: GraftTable, fullName: String,
   override def truncateTable(): Boolean = { gt.truncate(); true }
 }
 
-/** Column pruning + filter pushdown into the [[GraftScan]].
+/** The relation a store read plans (`GraftTable.read` and every read
+  * the store makes of its own files): one [[FileSet]] of `gt`, read by
+  * a [[GraftScan]] like a catalog table. Tables over equal sets are
+  * equal, so plans over them match under Spark's `sameResult`. */
+private[graft] final class GraftFileSetTable(gt: GraftTable, set: FileSet)
+  extends Table with SupportsRead {
+
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftFileSetTable => t.identity == identity
+    case _ => false
+  }
+  override def hashCode: Int = identity.hashCode
+  private def identity = (gt.root, set)
+
+  override def name(): String =
+    gt.root + set.version.fold(s" (${set.listed.size} listed files)")(v => s"@v$v")
+  override def schema(): StructType = GraftParquetReadShim.asNullable(set.schema)
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(gt, set)
+}
+
+/** Column pruning + filter pushdown into the [[GraftScan]] of one
+  * [[FileSet]].
   *
   * Pushdown contract: `pushFilters` returns ALL filters (Spark keeps
   * re-evaluating them above the scan); the translatable subset is
-  * reported via `pushedFilters`, drives commit-log stats and bucket
-  * pruning (skip whole files) in [[GraftTable.planResolved]], and
-  * reaches the file reader for row-group pushdown. Double evaluation of
-  * a cheap predicate is noise; skipped IO at 100 TB is the win.
+  * reported via `pushedFilters`, prunes the set's files by commit-log
+  * stats and buckets in [[GraftTable.plan]], and reaches the file
+  * reader for row-group pushdown. Double evaluation of a cheap
+  * predicate is noise; skipped IO at 100 TB is the win.
   */
-private[catalog] final class GraftScanBuilder(gt: GraftTable, version: Long,
-                                              fullSchema: StructType)
+private[catalog] final class GraftScanBuilder(gt: GraftTable, set: FileSet)
   extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
+  private val fullSchema = GraftParquetReadShim.asNullable(set.schema)
   private var required: StructType = fullSchema
   private var pushed: Array[(Filter, Expression)] = Array.empty
 
@@ -610,8 +636,7 @@ private[catalog] final class GraftScanBuilder(gt: GraftTable, version: Long,
   override def pushedFilters(): Array[Filter] = pushed.map(_._1)
 
   override def build(): Scan =
-    new GraftScan(gt, version, required, pushedFilters(),
-      gt.planResolved(version, pushed.map(_._2).toSeq))
+    new GraftScan(gt, set, required, pushedFilters(), gt.plan(set, pushed.map(_._2).toSeq))
 }
 
 private[catalog] object GraftScanBuilder {

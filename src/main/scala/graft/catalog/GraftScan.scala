@@ -9,11 +9,15 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.execution.datasources.{FilePartition, GraftParquetReadShim, PartitionedFile}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.store.{FileStat, GraftTable}
+import graft.store.{FileSet, FileStat, GraftTable}
 
-/** The catalog's one read path: a native DSv2 batch scan over the files
-  * [[GraftTable.planResolved]] kept for one pinned snapshot and the
+/** The one scan behind every DataFrame that reads graft data files: a
+  * catalog query, `GraftTable.read` and every store-internal read
+  * (staged files, a change feed's commit range, copy-on-write victims,
+  * compaction, a streaming micro-batch). It is a native DSv2 batch scan
+  * over the files [[GraftTable.plan]] keeps of one [[FileSet]] under the
   * pushed filters (stats pruning + bucket pruning, metadata-only; the
   * filters arrive as resolved predicates, so planning analyzes
   * nothing). The scan picks its layout from those files:
@@ -34,28 +38,30 @@ import graft.store.{FileStat, GraftTable}
   *  - packed: anything else (not bucketed, or files of an explicit
   *    compact re-layout that straddle buckets). Files are split and
   *    bin-packed exactly as `FileSourceScanExec` packs a plain file
-  *    read, so task counts match `GraftTable.read` of the same snapshot.
-  *    No files means zero partitions. A layout downgrade is a
+  *    read. No files means zero partitions. A layout downgrade is a
   *    performance event, never a correctness one.
   *
-  * Reading: the per-file closure is Spark's own Parquet or ORC reader
+  * Reading: the per-file reader is Spark's own Parquet or ORC reader
   * (GraftParquetReadShim — column pruning including nested fields,
   * row-group/stripe filter pushdown, field-id resolution,
   * vectorization), built on the driver so it captures this session's
-  * SQLConf exactly like FileSourceScanExec. It is built once per scan,
-  * and a reader with no pushed filter once per table schema and
-  * projection (the shim keeps it for later scans); a reader with pushed
-  * filters holds their literals and is not kept past its scan.
-  * Statistics are the planned files' commit-log rows and bytes, which
-  * static join selection sees: a small catalog table broadcasts
-  * without waiting for AQE.
+  * SQLConf exactly like FileSourceScanExec. It hands whole-stage codegen
+  * columnar batches whenever the format can batch the projection, and
+  * rows otherwise (the format's own `supportBatch`, as in Spark's file
+  * scan). It is built once per scan, and a reader with no pushed filter
+  * once per schema and projection (the shim keeps it for later scans); a
+  * reader with pushed filters holds their literals and is not kept past
+  * its scan. Statistics are the planned files' commit-log rows and
+  * bytes, which static join selection sees: a small table broadcasts
+  * without waiting for AQE. The description names the planned file
+  * count, the quickest check of what pruning kept.
   */
 final class GraftScan(
     gt: GraftTable,
-    version: Long,
+    set: FileSet,
     required: StructType,
     pushed: Array[Filter],
-    files: Seq[FileStat]) extends Scan with Batch
+    private[graft] val files: Seq[FileStat]) extends Scan with Batch
   with SupportsReportPartitioning with SupportsReportStatistics
   with SupportsReportOrdering {
 
@@ -65,7 +71,7 @@ final class GraftScan(
   private val buckets: Option[(String, Int, Seq[(Int, Seq[FileStat])])] =
     gt.bucketCount
       .filter(_ => files.nonEmpty && files.forall(_.min.contains(GraftTable.BucketStatKey)))
-      .map(n => (gt.bucketColumnAt(version).get, n,
+      .map(n => (gt.bucketColumnIn(set.schema).get, n,
         files.groupBy(_.min(GraftTable.BucketStatKey).toInt).toSeq.sortBy(_._1)))
 
   private def absPath(f: FileStat): String = s"${gt.root}/${f.path}"
@@ -87,25 +93,28 @@ final class GraftScan(
     * NOT NULL is not enforced on the data). */
   private val readCols = GraftParquetReadShim.asNullable(required)
 
-  /** Scans are equal when they read the same columns of the same
-    * snapshot under the same pushed filters (the planned files follow
-    * from those): Spark's `sameResult` and exchange reuse compare scans. */
+  /** Scans are equal when they read the same columns of the same file
+    * set under the same pushed filters (the planned files follow from
+    * those): Spark's `sameResult` and exchange reuse compare scans, so
+    * two snapshots, or two different listed sets, never compare equal. */
   override def equals(o: Any): Boolean = o match {
     case s: GraftScan => s.identity == identity
     case _ => false
   }
-  override def hashCode: Int = identity.hashCode
-  private def identity = (gt.root, version, required, pushed.toSeq)
+  override lazy val hashCode: Int = identity.hashCode
+  private def identity = (gt.root, set, required, pushed.toSeq)
 
   override def readSchema(): StructType = readCols
   override def toBatch: Batch = this
 
   override def description(): String = {
     val layout = buckets match {
-      case Some((c, n, groups)) => s"bucket($n, $c), ${groups.size} occupied buckets"
+      case Some((c, n, groups)) =>
+        s"bucket($n, $c), ${groups.size} occupied buckets, ${files.size} files"
       case None => s"${files.size} files"
     }
-    s"GraftScan(${gt.root}@v$version, ${gt.format}, $layout, " +
+    val at = set.version.fold("")(v => s"@v$v")
+    s"GraftScan(${gt.root}$at, ${gt.format}, $layout, " +
       s"PushedFilters: [${pushed.mkString(", ")}])"
   }
 
@@ -142,7 +151,7 @@ final class GraftScan(
   override def createReaderFactory(): PartitionReaderFactory = synchronized {
     Option(readerFactory.get).getOrElse {
       val f = new GraftReaderFactory(GraftParquetReadShim.buildReader(
-        gt.spark, gt.format, GraftParquetReadShim.asNullable(gt.schemaAt(version)), readCols,
+        gt.spark, gt.format, GraftParquetReadShim.asNullable(set.schema), readCols,
         pushed.toSeq))
       readerFactory = new java.lang.ref.WeakReference(f)
       f
@@ -166,30 +175,44 @@ final case class GraftBucketPartition(bucketId: Int, files: Array[PartitionedFil
 
 /** Reads a partition of either layout: its files, one after another,
   * each file's reader closed before the next opens (as `FileScanRDD`
-  * does) and the open one closed with the partition reader. */
-final class GraftReaderFactory(readFile: PartitionedFile => GraftParquetReadShim.FileRows)
+  * does) and the open one closed with the partition reader. A reader
+  * that returns batches serves them to whole-stage codegen as they come
+  * (`ColumnarToRow` above the scan); one that cannot batch the
+  * projection serves rows. */
+final class GraftReaderFactory(readFile: GraftParquetReadShim.FileReader)
   extends PartitionReaderFactory {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val files = p match {
+  override def supportColumnarReads(p: InputPartition): Boolean = readFile.batch
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new FilesReader(p, (rows: GraftParquetReadShim.FileRows) => rows)
+
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
+    new FilesReader(p, (rows: GraftParquetReadShim.FileRows) => rows.batches)
+
+  private final class FilesReader[T](p: InputPartition,
+                                     items: GraftParquetReadShim.FileRows => Iterator[T])
+    extends PartitionReader[T] {
+    private val pending = (p match {
       case fp: FilePartition => fp.files
       case bp: GraftBucketPartition => bp.files
-    }
-    new PartitionReader[InternalRow] {
-      private val pending = files.iterator
-      private var rows: GraftParquetReadShim.FileRows = _
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        while (rows == null || !rows.hasNext) {
-          close()
-          if (!pending.hasNext) return false
-          rows = readFile(pending.next())
-        }
-        cur = rows.next()
-        true
+    }).iterator
+    private var open: GraftParquetReadShim.FileRows = _
+    private var it: Iterator[T] = Iterator.empty
+    private var cur: T = _
+    override def next(): Boolean = {
+      while (!it.hasNext) {
+        close()
+        if (!pending.hasNext) return false
+        open = readFile(pending.next())
+        it = items(open)
       }
-      override def get(): InternalRow = cur
-      override def close(): Unit = if (rows != null) { rows.close(); rows = null }
+      cur = it.next()
+      true
+    }
+    override def get(): T = cur
+    override def close(): Unit = if (open != null) {
+      open.close(); open = null; it = Iterator.empty
     }
   }
 }

@@ -114,12 +114,41 @@ object TrinoDialect {
     }
 
   /** Split a multi-statement script on the `;`s in its code —
-    * trino-cli `--execute` scripted mode (`tf/test-hive.sh:14-24`). */
+    * trino-cli `--execute` scripted mode (`tf/test-hive.sh:14-24`). A
+    * SQL-script compound statement, `BEGIN ... END` with its nested
+    * blocks, stays one statement: a statement that starts with BEGIN
+    * (after an optional `label:`) opens a body, and inside it every
+    * BEGIN and CASE opens one more level that its END (or `END CASE`)
+    * closes; `END IF`, `END WHILE`, `END LOOP`, `END REPEAT` and
+    * `END FOR` close constructs that open no level. Only `;`s outside
+    * every body cut. */
   def splitStatements(script: String): Seq[String] = {
-    val m = SqlScan.mask(script)
-    val cuts = -1 +: m.indices.filter(m.charAt(_) == ';') :+ script.length
-    cuts.sliding(2).map(w => script.substring(w(0) + 1, w(1)).trim).filter(_.nonEmpty).toSeq
+    val tokens = """[A-Za-z_][A-Za-z0-9_]*|[;:]""".r
+      .findAllMatchIn(SqlScan.mask(script)).toVector
+    def word(i: Int): String = if (i < tokens.size) tokens(i).matched.toUpperCase else ""
+    val cuts = Vector.newBuilder[Int]
+    var depth = 0
+    var atStart = true // no word of the current statement seen yet
+    var i = 0
+    while (i < tokens.size) {
+      word(i) match {
+        case ";" => if (depth == 0) { cuts += tokens(i).start; atStart = true }
+        case ":" => ()
+        case "BEGIN" if depth > 0 || atStart => depth += 1; atStart = false
+        case "CASE" if depth > 0 => depth += 1
+        case "END" if depth > 0 && !BlockEnds(word(i + 1)) =>
+          depth -= 1
+          if (word(i + 1) == "CASE") i += 1 // END CASE closes the CASE level
+        case _ => if (word(i + 1) != ":") atStart = false
+      }
+      i += 1
+    }
+    val at = -1 +: cuts.result() :+ script.length
+    at.sliding(2).map(w => script.substring(w(0) + 1, w(1)).trim).filter(_.nonEmpty).toSeq
   }
+
+  /** The words after END that close a construct opening no level. */
+  private val BlockEnds = Set("IF", "WHILE", "LOOP", "REPEAT", "FOR")
 }
 
 object GraftSql {

@@ -102,8 +102,8 @@ private[store] object MergeSource {
   * the compiled classes are shared by every statement of one shape;
   * both reads count in the task's input metrics. */
 private[store] final class RewriteTask(
-    probeRead: PartitionedFile => GraftParquetReadShim.FileRows,
-    fullRead: PartitionedFile => GraftParquetReadShim.FileRows,
+    probeRead: GraftParquetReadShim.FileReader,
+    fullRead: GraftParquetReadShim.FileReader,
     probeCond: Expression,
     keep: Option[Expression],
     project: Option[Seq[Expression]],

@@ -279,18 +279,16 @@ object GraftFileWriter {
     * listeners see it like any other — and return the committed files.
     * No file is read back: the stats arrive in the task commit
     * messages. On failure the write directory is removed (nothing in it
-    * was committed). */
+    * was committed) once every task of the job has ended. */
   private[store] def write(df: DataFrame, factory: GraftFileWriterFactory): Seq[FileStat] = {
     val qe = df.queryExecution
-    val messages =
-      try SQLExecution.withNewExecutionId(qe, Some("graft write")) {
-        df.sparkSession.sparkContext.runJob(qe.toRdd,
+    val sc = df.sparkSession.sparkContext
+    val messages = GraftParquetReadShim.afterTasksEnd(sc) {
+      SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+        sc.runJob(qe.toRdd,
           (ctx: TaskContext, rows: Iterator[InternalRow]) => factory.runTask(ctx, rows))
-      } catch {
-        case t: Throwable =>
-          factory.removeDir()
-          throw t
       }
+    }(factory.removeDir())
     factory.committed(messages.toSeq)
   }
 }

@@ -21,10 +21,13 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *    stats are computed by the write tasks themselves as rows go by
   *    ([[GraftFileWriter]]) and arrive in their commit messages — no
   *    file is read back, and no row reaches the driver;
-  *  - reads resolve a snapshot (metadata-only log replay) and prune
-  *    files by stats before Spark ever lists them — the same
-  *    manifest-pruning shape Iceberg uses, so a 100 TB table with a
-  *    selective predicate touches only matching files;
+  *  - every read of table files — a snapshot, staged files, a commit
+  *    range, copy-on-write victims — is one columnar scan
+  *    (graft.catalog.GraftScan) over a [[FileSet]]: the files are
+  *    resolved from the commit log (metadata-only) and pruned by stats
+  *    before any is opened — the same manifest-pruning shape Iceberg
+  *    uses, so a 100 TB table with a selective predicate touches only
+  *    matching files;
   *  - row-level DML is copy-on-write in ONE job: each task probes its
   *    stats-pruned candidate files for a matching row and rewrites only
   *    the files that hold one; the commit swaps them atomically.
@@ -38,7 +41,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   private val log = new CommitLog(root)
 
   // Field-id column resolution must be on for this session (see
-  // readData's doc); GraftSession sets both at build time — this covers
+  // readFiles' doc); GraftSession sets both at build time — this covers
   // tables loaded into sessions built elsewhere. Read side is inert for
   // id-less schemas (external parquet reads unchanged); write side is
   // Spark's default, re-pinned because a session that disabled it would
@@ -98,8 +101,11 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   /** The bucket column's CURRENT name (follows renames). */
   def bucketColumn: Option[String] = bucketColumnAt(currentVersion)
 
-  def bucketColumnAt(v: Long): Option[String] =
-    bucketSpec.map { case (id, _) => fieldNameOf(id, schemaAt(v)) }
+  def bucketColumnAt(v: Long): Option[String] = bucketColumnIn(schemaAt(v))
+
+  /** The bucket column's name in `sch`. */
+  private[graft] def bucketColumnIn(sch: StructType): Option[String] =
+    bucketSpec.map { case (id, _) => fieldNameOf(id, sch) }
 
   def bucketCount: Option[Int] = bucketSpec.map(_._2)
 
@@ -119,23 +125,26 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   def clusterColumnsAt(v: Long): Seq[String] =
     if (clusterFieldIds.isEmpty) Nil else clusterSpecNames(schemaAt(v))
 
-  /** Snapshot-schema read. `fieldId.read.enabled` (a SESSION conf —
-    * Spark's parquet reader takes it from SQLConf, not per-read
-    * options; GraftSession sets it and load()/create() set it
-    * defensively for foreign sessions) makes the reader match columns
-    * by the `parquet.field.id` metadata the write path stamps —
-    * Iceberg's resolution rule, and what makes column RENAME a
-    * metadata-only commit: pre-rename files still resolve the renamed
-    * column by id. Schemas without ids (pre-rename-support tables, or
-    * external parquet) fall back to ordinary name matching. */
-  private def readData(paths: Seq[String], sch: StructType): DataFrame =
-    spark.read.schema(sch).format(format).load(paths: _*)
+  /** A DataFrame over the files of `set`, read with its schema through
+    * the one scan every read of table files takes (graft.catalog.GraftScan:
+    * columnar, stats- and bucket-pruned by the filters Spark pushes into
+    * it). `fieldId.read.enabled` (a SESSION conf — Spark's parquet reader
+    * takes it from SQLConf, not per-read options; GraftSession sets it
+    * and load()/create() set it defensively for foreign sessions) makes
+    * the reader match columns by the `parquet.field.id` metadata the
+    * write path stamps — Iceberg's resolution rule, and what makes column
+    * RENAME a metadata-only commit: pre-rename files still resolve the
+    * renamed column by id. Schemas without ids (pre-rename-support
+    * tables) fall back to ordinary name matching. An empty set plans no
+    * read task. */
+  private[graft] def readFiles(set: FileSet): DataFrame =
+    org.apache.spark.sql.GraftSparkInternals.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.catalog.GraftFileSetTable(this, set), None, None))
 
-  /** Read specific committed files under this table's root (paths are
-    * commit-log-relative) with field-id resolution — the streaming
-    * source's per-commit-range read path. */
-  private[graft] def readCommittedFiles(paths: Seq[String], sch: StructType): DataFrame =
-    readData(paths.map(p => s"$root/$p"), sch)
+  /** `files` of this table (commit-log-relative paths), read with `sch`. */
+  private[graft] def readFiles(files: Seq[FileStat], sch: StructType): DataFrame =
+    readFiles(FileSet(sch, None, files))
 
   // ------------------------------------------------------------------
   // read path
@@ -187,42 +196,39 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   def truncate(): Long = commitRetry("overwrite", Nil, Nil, InheritSchema(schema.json))
 
   /** Snapshot read (optionally time-travel to `asOfVersion` or a named
-    * branch/tag), reading only the files [[planFiles]] keeps for
-    * `filters`. The filters are ALSO re-applied by Spark (parquet
-    * row-group pushdown + codegen), so pruning is purely an IO
-    * optimization — never a correctness dependency.
+    * branch/tag) with `filters` applied. Spark pushes the filters into
+    * the scan, which opens only the files [[planFiles]] keeps for them;
+    * Spark also re-applies them above the scan (parquet row-group
+    * pushdown + codegen), so pruning is purely an IO optimization —
+    * never a correctness dependency.
     */
   def read(asOfVersion: Option[Long] = None,
            ref: Option[String] = None,
-           filters: Seq[Column] = Nil): DataFrame = {
-    val v = resolveVersion(asOfVersion, ref)
-    val sch = schemaAt(v)
-    val kept = planFiles(v, filters)
-    val df =
-      if (kept.isEmpty) emptyFrame(sch)
-      else readData(kept.map(f => s"$root/${f.path}"), sch)
-    filters.foldLeft(df)(_ filter _)
-  }
+           filters: Seq[Column] = Nil): DataFrame =
+    filters.foldLeft(readFiles(snapshotSet(resolveVersion(asOfVersion, ref))))(_ filter _)
+
+  /** The live files of snapshot `v`, read with its schema. */
+  private[graft] def snapshotSet(v: Long): FileSet = FileSet(schemaAt(v), Some(v), Nil)
 
   /** The files a read of snapshot `v` under `filters` must open
-    * ([[planResolved]] of the filters resolved against the snapshot's
-    * schema). The one file-planning step behind [[read]] and
-    * [[snapshotStats]]. */
+    * ([[plan]] of the snapshot's set under the filters resolved against
+    * its schema): what [[read]]'s scan plans, and what [[snapshotStats]]
+    * sums. */
   def planFiles(v: Long, filters: Seq[Column] = Nil): Seq[FileStat] =
-    planResolved(v, if (filters.isEmpty) Nil else resolve(filters, schemaAt(v)))
+    plan(snapshotSet(v), if (filters.isEmpty) Nil else resolve(filters, schemaAt(v)))
 
-  /** The files a read of snapshot `v` under `conds` (predicates
-    * resolved against the snapshot's schema: attributes by name,
-    * literals in the column's type) must open: the snapshot's live
-    * files, minus those whose min/max/null stats exclude a predicate
-    * ([[StatsPruner]]), minus — on a bucketed table — those outside the
-    * buckets an equality/IN predicate on the bucket key hashes into.
-    * Metadata-only (commit-log FileStats, no file IO). The catalog scan
-    * and copy-on-write DML hand in the predicates they already hold. */
-  private[graft] def planResolved(v: Long, conds: Seq[Expression]): Seq[FileStat] = {
-    val files = log.snapshotFiles(v)
+  /** The files of `set` a read under `conds` (predicates resolved
+    * against the set's schema: attributes by name, literals in the
+    * column's type) must open: the set's files, minus those
+    * whose min/max/null stats exclude a predicate ([[StatsPruner]]),
+    * minus — on a bucketed table — those outside the buckets an
+    * equality/IN predicate on the bucket key hashes into. Metadata-only
+    * (commit-log FileStats, no file IO). The scan plans with it, and
+    * copy-on-write DML hands in the predicates it already holds. */
+  private[graft] def plan(set: FileSet, conds: Seq[Expression]): Seq[FileStat] = {
+    val files = set.version.fold(set.listed)(log.snapshotFiles)
     if (conds.isEmpty) files
-    else bucketPruneFiles(StatsPruner.prune(files, conds, schemaAt(v)), conds, v)
+    else bucketPruneFiles(StatsPruner.prune(files, conds, set.schema), conds, set.schema)
   }
 
   /** Bucket pruning: equality/IN conjuncts on the bucket column keep
@@ -232,8 +238,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * lacks the __bucket stat (explicit re-layout: fall back to the full
     * scan, same answers). */
   private def bucketPruneFiles(kept: Seq[FileStat], resolved: Seq[Expression],
-                               v: Long): Seq[FileStat] =
-    (bucketSpec, bucketColumnAt(v)) match {
+                               sch: StructType): Seq[FileStat] =
+    (bucketSpec, bucketColumnIn(sch)) match {
       case (Some((_, n)), Some(colName))
           if kept.forall(_.min.contains(GraftTable.BucketStatKey)) =>
         val targetSets = resolved.flatMap(e => bucketTargets(e, colName, n))
@@ -288,7 +294,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
 
   /** A frame of `sch` with no rows and no files: the relation user
     * Columns are analyzed against. Every column is nullable, as in
-    * [[readData]]'s frames: a stored NOT NULL is not enforced on the
+    * [[readFiles]]' frames: a stored NOT NULL is not enforced on the
     * data, and the optimizer would otherwise fold `IsNull` over such a
     * column to false and bind it as never NULL. */
   private def emptyFrame(sch: StructType): DataFrame =
@@ -492,14 +498,26 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * a row that `cond` joins to a row of `other`: ONE semi join (AQE /
     * broadcast pick the strategy) collecting file NAMES, not rows,
     * mapped back to commit-log-relative paths (file names are
-    * UUID-part-named — unique per table). */
+    * UUID-part-named — unique per table). The scan names each file it
+    * opens as the task's input file, which `input_file_name()` reads. */
   private def filesJoining(tgt: DataFrame, other: DataFrame, cond: Column,
                            live: Seq[FileStat]): Seq[String] = {
     val hitAbs = tgt.withColumn("__f", input_file_name())
       .join(other, cond, "left_semi")
       .select("__f").distinct().collect().map(_.getString(0))
+    livePaths(hitAbs.toSeq, live)
+  }
+
+  /** The files of `from` at `paths` (commit-log-relative). */
+  private def filesAt(paths: Seq[String], from: Seq[FileStat]): Seq[FileStat] = {
+    val ps = paths.toSet
+    from.filter(f => ps(f.path))
+  }
+
+  /** The files of `live` that `input_file_name()` values name. */
+  private def livePaths(names: Seq[String], live: Seq[FileStat]): Seq[String] = {
     val byName = live.map(f => f.path.split('/').last -> f.path).toMap
-    hitAbs.toSeq.flatMap(a => byName.get(a.substring(a.lastIndexOf('/') + 1)))
+    names.flatMap(a => byName.get(a.substring(a.lastIndexOf('/') + 1)))
   }
 
   /** Align an incoming frame to the table schema: columns resolve by
@@ -539,8 +557,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   /** WAP step 2 — AUDIT: read exactly the staged rows (run quality
     * gates, count checks, dedup probes) before anything is published. */
   def readStaged(staged: StagedAppend): DataFrame =
-    readData(staged.files.map(f => s"$root/${f.path}"),
-      DataType.fromJson(staged.schemaJson).asInstanceOf[StructType])
+    readFiles(staged.files, DataType.fromJson(staged.schemaJson).asInstanceOf[StructType])
 
   /** WAP step 3 — PUBLISH: one atomic commit making every staged set
     * visible together (all-or-nothing across batches). Publishing
@@ -718,13 +735,14 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     require(missing.isEmpty,
       s"batch write $subdir: committed file(s) vanished before adoption " +
         s"(${missing.take(3).mkString(",")}); aborting instead of losing rows")
-    // BUCKETED dynamic overwrite (round-12 review finding: the generic
-    // branch below would have replaced the WHOLE table): the partition
-    // identity is the bucket — replace exactly the buckets this write
-    // touches, Iceberg's bucket-transform semantics. Files without a
-    // __bucket stat (pre-bucket history, explicit re-layouts) may hold
-    // rows of touched buckets, so their untouched-bucket rows are
-    // rewritten as survivors, same device as the cluster path.
+    // BUCKETED dynamic overwrite: the partition identity is the bucket
+    // (the cluster-spec branch below would replace the whole table, as
+    // a bucketed table has no cluster spec) — replace exactly the
+    // buckets this write touches, Iceberg's bucket-transform semantics.
+    // Files without a __bucket stat (pre-bucket history, explicit
+    // re-layouts) may hold rows of touched buckets, so their
+    // untouched-bucket rows are rewritten as survivors, same device as
+    // the cluster path.
     if (dynamicPartitions && bucketSpec.isDefined) {
       if (written.isEmpty) return currentVersion
       require(written.forall(_.min.contains(GraftTable.BucketStatKey)),
@@ -739,7 +757,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       val unstatted = candidates.filter(!_.min.contains(GraftTable.BucketStatKey))
       val survivors =
         if (unstatted.isEmpty) Nil
-        else writeFiles(readData(unstatted.map(f => s"$root/${f.path}"), sch)
+        else writeFiles(readFiles(unstatted, sch)
           .filter(!pmod(hash(col(name)), lit(n)).isin(touched.toSeq: _*)))
       return commitRetry("overwrite-dynamic", written ++ survivors,
         candidates.map(_.path), SameSchema(sch.json), basedOn = base)
@@ -759,7 +777,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     // scan is COLUMN-PRUNED to the cluster columns (parquet reads just
     // those pages). Min/max stats cannot stand in for it: a file's
     // range may span partitions it holds no row of.
-    val tuples = readData(committedFiles.map(n => s"$absDir/$n"), sch)
+    val tuples = readFiles(written, sch)
       .select(parts.map(col): _*).distinct().collect()
     require(tuples.length <= 1000,
       s"dynamic overwrite would replace ${tuples.length} partitions in one commit " +
@@ -821,11 +839,11 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           val joinCond = sch.fieldNames.map(n => col(n) <=> col(s"__del_$n")).reduce(_ && _)
           filesJoining(tgt, delP, joinCond, live)
         }
+      val victimFiles = filesAt(victims, live)
       val survivorFiles =
         if (victims.isEmpty) Nil
-        else writeFiles(readData(victims.map(p => s"$root/$p"), sch).exceptAll(del))
-      val victimSet = victims.toSet
-      val victimRows = live.filter(f => victimSet(f.path)).map(_.rows).sum
+        else writeFiles(readFiles(victimFiles, sch).exceptAll(del))
+      val victimRows = victimFiles.map(_.rows).sum
       val matched = victimRows - survivorFiles.map(_.rows).sum
       if (matched != delCount) {
         discardWrittenFiles(survivorFiles)
@@ -858,7 +876,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * col` columns — are analyzed once over an empty relation of the
     * table schema, every column nullable ([[emptyFrame]]: a NOT NULL
     * column can hold NULLs); the analyzed `cond` picks the candidates
-    * ([[planResolved]]: stats + bucket pruning), and the optimized
+    * ([[plan]]: stats + bucket pruning), and the optimized
     * expressions are bound to the relation's attributes for the tasks.
     * Both readers read without pushed filters, so each is built once
     * per table schema and projection and reused by every later
@@ -911,7 +929,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       throw new UnsupportedOperationException(
         s"copy-on-write DML at $root cannot evaluate '${e.sql}' inside a write task")
     }
-    val candidates = planResolved(base, analyzed.take(1))
+    val candidates = plan(snapshotSet(base), analyzed.take(1))
     if (candidates.isEmpty) return Rewrite(base, sch, Nil, Nil)
 
     val layoutCols = bucketColumnAt(base).toSeq ++ clusterSpecNames(sch)
@@ -931,8 +949,8 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val added = writer match {
       case Some(w) => w.committed(results.map(_.written))
       case None if victims.isEmpty => Nil
-      case None => writeFilesWith(
-        readData(victims.map(p => s"$root/$p"), sch).select(updated.get: _*), sch)
+      case None =>
+        writeFilesWith(readFiles(filesAt(victims, candidates), sch).select(updated.get: _*), sch)
     }
     Rewrite(base, sch, victims, added)
   }
@@ -941,7 +959,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     * packed into tasks, never split: Spark's packing on a plain table,
     * one task per file on a bucketed or clustered one, so each output
     * keeps its victim's single `__bucket`, sort order and key range. A
-    * failed job leaves none of its files behind. */
+    * failed job leaves none of its files behind: the write directory is
+    * removed once every task the job launched has ended, so a sibling
+    * task still running when the job failed cannot recreate it. */
   private def runRewrite(candidates: Seq[FileStat], task: RewriteTask,
                          writer: Option[GraftFileWriterFactory]): Seq[RewriteResult] = {
     import org.apache.spark.TaskContext
@@ -956,14 +976,11 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           .map(_.files.toSeq.map(pf => relOf(pf.filePath) -> pf))
       }
     val sc = spark.sparkContext
-    try sc.runJob(sc.parallelize(groups, groups.size),
-      (ctx: TaskContext, it: Iterator[Seq[(String, PartitionedFile)]]) =>
-        task.run(ctx, it.next())).toSeq
-    catch {
-      case t: Throwable =>
-        writer.foreach(_.removeDir())
-        throw t
-    }
+    GraftParquetReadShim.afterTasksEnd(sc) {
+      sc.runJob(sc.parallelize(groups, groups.size),
+        (ctx: TaskContext, it: Iterator[Seq[(String, PartitionedFile)]]) =>
+          task.run(ctx, it.next())).toSeq
+    }(writer.foreach(_.removeDir()))
   }
 
   /** `DELETE ... WHERE cond`: copy-on-write over the files holding a
@@ -1368,18 +1385,14 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
           .collect()
         if (hits.exists(_.getLong(1) > 1))
           throw new IllegalArgumentException(MergeSource.CardinalityViolation)
-        val byName = live.map(f => f.path.split('/').last -> f.path).toMap
-        hits.toSeq.flatMap { r =>
-          val a = r.getString(0)
-          byName.get(a.substring(a.lastIndexOf('/') + 1))
-        }
+        livePaths(hits.toSeq.map(_.getString(0)), live)
       }
     val victims = if (notMatchedBySource.nonEmpty) live.map(_.path) else hitFiles
 
     val rewritten =
       if (victims.isEmpty) None
       else {
-        val joined = readData(victims.map(p => s"$root/$p"), sch)
+        val joined = readFiles(filesAt(victims, live), sch)
           .withColumn(rowId, monotonically_increasing_id())
           .join(srcP, condition, "left")
         // with no WHEN MATCHED clause a target row matching several
@@ -1413,12 +1426,13 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     // fromVersion == 0 is the empty pre-create snapshot: every row at
     // toVersion diffs as an insert (the CDC base case a first-ever
     // incremental refresh over a DML-bearing source needs)
-    val beforeFiles = log.snapshotFiles(fromVersion).map(_.path).toSet
-    val afterFiles = log.snapshotFiles(toVersion).map(_.path).toSet
+    val beforeFiles = log.snapshotFiles(fromVersion)
+    val afterFiles = log.snapshotFiles(toVersion)
+    def only(files: Seq[FileStat], other: Seq[FileStat]): Seq[FileStat] = {
+      val drop = other.map(_.path).toSet
+      files.filterNot(f => drop(f.path))
+    }
     val sch = schemaAt(toVersion)
-    def readOrEmpty(paths: Set[String], readSch: StructType): DataFrame =
-      if (paths.isEmpty) emptyFrame(readSch)
-      else readData(paths.toSeq.map(p => s"$root/$p"), readSch)
     // align the before side to the AFTER schema: match columns by FIELD
     // ID when both schemas carry them (so a rename between the versions
     // does not masquerade as a drop+add — Iceberg resolution), by name
@@ -1430,14 +1444,14 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     def sourceName(f: StructField): Option[String] =
       if (bothIds) fromSch.fields.find(g => GraftTable.fieldId(g) == GraftTable.fieldId(f)).map(_.name)
       else Some(f.name).filter(fromSch.fieldNames.contains)
-    val before0 = readOrEmpty(beforeFiles -- afterFiles, fromSch)
+    val before0 = readFiles(only(beforeFiles, afterFiles), fromSch)
     val before = before0.select(sch.fields.map { f =>
       sourceName(f) match {
         case Some(n) => col(n).cast(f.dataType).as(f.name)
         case None => lit(null).cast(f.dataType).as(f.name)
       }
     }.toIndexedSeq: _*)
-    val after = readOrEmpty(afterFiles -- beforeFiles, sch)
+    val after = readFiles(only(afterFiles, beforeFiles), sch)
     after.exceptAll(before).withColumn("_change_type", lit("insert"))
       .unionByName(before.exceptAll(after).withColumn("_change_type", lit("delete")))
   }
@@ -1486,7 +1500,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
               numFiles: Option[Int] = None, zorderBy: Seq[String] = Nil,
               onlyFilesSmallerMB: Option[Int] = None,
               where: Seq[Column] = Nil): Long = {
-    // `where` (round 14): PREDICATE-SCOPED compaction — rewrite only
+    // `where`: PREDICATE-SCOPED compaction — rewrite only
     // the files whose commit-log STATS may hold matching rows (the
     // same StatsPruner the read path uses), leave the rest untouched.
     // This is the hot-partition maintenance shape at 100 TB: a table
@@ -1501,7 +1515,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     require(where.isEmpty || (clusterBy.isEmpty && zorderBy.isEmpty),
       "where is a scoped rewrite — it cannot combine with an explicit " +
         "clusterBy/zorderBy re-layout (run those over the full table)")
-    // `onlyFilesSmallerMB` (round 11): INCREMENTAL small-file
+    // `onlyFilesSmallerMB`: INCREMENTAL small-file
     // consolidation — rewrite only the files under the threshold
     // (streaming appends), leave full-size outputs untouched. This is
     // the maintenance mode a continuously-appending sink needs: a full
@@ -1527,7 +1541,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     val totalBytes = files.map(_.bytes).sum
     val n = numFiles.getOrElse(
       math.max(1, (totalBytes / (targetFileMB.toLong << 20)).toInt))
-    val data = readData(files.map(f => s"$root/${f.path}"), sch)
+    val data = readFiles(files, sch)
     // compact shapes its own layout, so the write below BYPASSES the
     // create-time cluster spec: an explicit clusterBy/zorderBy is the
     // caller's deliberate re-layout choice (a zorder tiling re-ranged
@@ -1751,6 +1765,13 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   * by plain name, source columns as `GraftTable.MergeSourcePrefix +
   * name`. */
 final case class MergeWhen(condition: Option[Column], set: Option[Map[String, Column]])
+
+/** The files one read of a table may open, read with `schema`: the
+  * live files of snapshot `version`, or — with no version — the files
+  * `listed` (staged files, a commit range, copy-on-write victims). Equal
+  * sets read equal rows, so the scans and relations over them compare
+  * by it: a snapshot by its version, a list by its files. */
+final case class FileSet(schema: StructType, version: Option[Long], listed: Seq[FileStat])
 
 object GraftTable {
   /** Prefix under which [[GraftTable.mergeInto]] exposes SOURCE columns

@@ -169,10 +169,7 @@ final class GraftTableSource(table: GraftTable, parameters: Map[String, String])
           s"${rewrites.map(c => s"v${c.version}(${c.op})").mkString(", ")} at ${tableRoot}; " +
           "use .option(\"cdc\", true) for the row-level change feed, or " +
           ".option(\"ignoreChanges\", true) to re-emit carried rows (dedup downstream)")
-    val files = commits.flatMap(_.added).map(_.path)
-    if (files.isEmpty) emptyBatch()
-    else alignToPinned(
-      table.readCommittedFiles(files, table.schemaAt(e)), table.schemaAt(e))
+    alignToPinned(table.readFiles(commits.flatMap(_.added), table.schemaAt(e)), table.schemaAt(e))
   }
 
   /** Per-commit change feed over (s, e]: each commit diffs against its

@@ -9,7 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *
   *  - [[ofRows]]: materialize an already-analyzed LogicalPlan as a
   *    DataFrame — how the MERGE command turns the statement's USING
-  *    source plan into the store's merge input without re-parsing SQL;
+  *    source plan into the store's merge input without re-parsing SQL,
+  *    and how the store reads its files (a DSv2 relation over the
+  *    graft scan);
   *  - [[column]]: wrap a Catalyst Expression as a public Column — how
   *    translated assignment/condition expressions cross back into the
   *    public DataFrame API the store is built on;
@@ -27,8 +29,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * sibling exception, [[org.apache.spark.sql.execution.datasources
   * .GraftParquetReadShim]], which re-exports the per-file Parquet/ORC
   * reader, the file-split packing, the task input metrics and the
-  * nullable file schema that the catalog's native scan
-  * (graft.catalog.GraftScan) and the store's file reads and writes need.
+  * nullable file schema that the one scan of table files
+  * (graft.catalog.GraftScan) and the store's copy-on-write rewrites need.
   */
 object GraftSparkInternals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.{InterruptibleIterator, SparkContext, TaskContext}
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.InputFileBlockHolder
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -22,18 +24,20 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.util.NextIterator
 
-/** The one `private[sql]` seam graft's file reads need — the catalog
-  * scan (graft.catalog.GraftScan) and the store's copy-on-write rewrite
-  * (graft.store.GraftTable's DML) — re-exported from inside the package
-  * (same shim pattern as [[org.apache.spark.sql.GraftSparkInternals]],
-  * which documents the rule: every other Spark touchpoint goes through
-  * public APIs). Pieces of `FileSourceScanExec`/`FileScanRDD`'s
-  * machinery:
+/** The one `private[sql]` seam graft's file reads need — the scan
+  * behind every read of table files (graft.catalog.GraftScan) and the
+  * store's copy-on-write rewrite (graft.store.GraftTable's DML) —
+  * re-exported from inside the package (same shim pattern as
+  * [[org.apache.spark.sql.GraftSparkInternals]], which documents the
+  * rule: every other Spark touchpoint goes through public APIs). Pieces
+  * of `FileSourceScanExec`/`FileScanRDD`'s machinery:
   *
   *  - [[buildReader]]: the format's (Parquet or ORC `FileFormat`)
   *    `buildReaderWithPartitionValues`, built ON THE DRIVER (it captures
   *    SQLConf — field-id resolution, rebase modes, vectorization — at
-  *    build time); the returned closure is serializable and reads one
+  *    build time). It returns columnar batches exactly when the format's
+  *    `supportBatch` accepts the projection, as `FileSourceScanExec`
+  *    decides; the returned [[FileReader]] is serializable and reads one
   *    file split with column pruning (nested fields included) and
   *    row-group/stripe filter pushdown, as a [[FileRows]] its caller
   *    closes. Re-implementing a decoder would be both slower and wrong.
@@ -42,10 +46,12 @@ import org.apache.spark.util.NextIterator
   *    copy-on-write reads all push none.
   *  - [[filePartitions]]: Spark's own split + bin-packing of a file list
   *    into read tasks (`FilePartition.maxSplitBytes` +
-  *    `getFilePartitions`), so a catalog scan plans exactly as many
-  *    tasks as a plain file read of the same files.
+  *    `getFilePartitions`), so a scan plans exactly as many tasks as a
+  *    plain file read of the same files.
   *  - [[withInputMetrics]]: a task's reads counted in its input metrics
   *    the way `FileScanRDD` counts them.
+  *  - [[afterTasksEnd]]: clean up after a failed job only once every
+  *    task it launched has ended.
   *  - [[asNullable]]: a table schema as its data files hold it.
   *  - [[Prepared]], [[confEntries]]: driver-side readers and writers
   *    kept for reuse, keyed on everything they were built from.
@@ -74,19 +80,36 @@ object GraftParquetReadShim {
     * a read that runs to its end has already released it. */
   final class FileRows private[GraftParquetReadShim] (raw: Iterator[_])
       extends Iterator[InternalRow] with Closeable {
-    // a vectorized read may hand ColumnarBatch objects disguised as
+    // a batch reader hands ColumnarBatch objects disguised as
     // InternalRow (the FileFormat contract whole-stage codegen
-    // exploits); unwrap them, so callers always see true InternalRows
-    private val rows = raw.flatMap {
+    // exploits); unwrap them, so row callers always see true InternalRows
+    private lazy val rows = raw.flatMap {
       case b: ColumnarBatch => b.rowIterator().asScala
       case r: InternalRow => Iterator.single(r)
     }
     override def hasNext: Boolean = rows.hasNext
     override def next(): InternalRow = rows.next()
-    override def close(): Unit = raw match {
-      case it: NextIterator[_] => it.closeIfNeeded()
-      case c: Closeable => c.close()
-      case _ => ()
+    /** The read's batches, for a reader built with `batch` set. */
+    def batches: Iterator[ColumnarBatch] = raw.asInstanceOf[Iterator[ColumnarBatch]]
+    override def close(): Unit = {
+      raw match {
+        case it: NextIterator[_] => it.closeIfNeeded()
+        case c: Closeable => c.close()
+        case _ => ()
+      }
+      InputFileBlockHolder.unset()
+    }
+  }
+
+  /** A serializable per-file reader ([[buildReader]]): `batch` says
+    * whether its reads return columnar batches. Opening a file names it
+    * as the task's input file, as `FilePartitionReader` does, so
+    * `input_file_name()` above the read sees it. */
+  final class FileReader private[GraftParquetReadShim] (
+      read: PartitionedFile => Iterator[InternalRow], val batch: Boolean) extends Serializable {
+    def apply(file: PartitionedFile): FileRows = {
+      InputFileBlockHolder.set(file.urlEncodedPath, file.start, file.length)
+      new FileRows(read(file))
     }
   }
 
@@ -134,42 +157,44 @@ object GraftParquetReadShim {
     * filter. */
   private val unfilteredReaders =
     new Prepared[(String, StructType, StructType, java.util.Map[String, String]),
-      PartitionedFile => FileRows](8)
+      FileReader](8)
 
-  /** Build the serializable per-file reader. The format broadcasts the
-    * Hadoop conf the reader opens files with, so each build encodes the
-    * whole conf once. A reader with no `filters` is built once per
-    * format, data schema, required schema and content of the session's
-    * Hadoop conf view ([[Prepared]]) and reused by later statements. A
-    * reader with pushed filters (a catalog scan's) is built per call and
-    * not retained: its filters carry one statement's literals, so
-    * keeping it would hold one conf per distinct literal with no later
-    * reuse. Pushed filters buy row-group (and bloom) skipping inside a
-    * file; a read that stops at its first matching row, as a
-    * copy-on-write probe does, pushes none and takes the shared reader. */
+  /** Build the serializable per-file reader. It returns columnar
+    * batches when the format can batch `requiredSchema` (its own
+    * `supportBatch`: vectorization on, flat or supported nested types,
+    * no more columns than `spark.sql.codegen.maxFields`), rows
+    * otherwise. The format broadcasts the Hadoop conf the reader opens
+    * files with, so each build encodes the whole conf once. A reader
+    * with no `filters` is built once per format, data schema, required
+    * schema and content of the session's Hadoop conf view
+    * ([[Prepared]]) and reused by later statements. A reader with
+    * pushed filters (a scan's) is built per call and not retained: its
+    * filters carry one statement's literals, so keeping it would hold
+    * one conf per distinct literal with no later reuse. Pushed filters
+    * buy row-group (and bloom) skipping inside a file; a read that stops
+    * at its first matching row, as a copy-on-write probe does, pushes
+    * none and takes the shared reader. */
   def buildReader(spark: SparkSession,
                   format: String,
                   dataSchema: StructType,
                   requiredSchema: StructType,
-                  filters: Seq[Filter]): PartitionedFile => FileRows = {
+                  filters: Seq[Filter]): FileReader = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     // the session's Hadoop conf view: the context's conf with the SQL
     // conf overlaid — its content keys every SQLConf value the format
     // captures as well
     val hadoopConf = classic.sessionState.newHadoopConfWithOptions(Map.empty)
-    def build(): PartitionedFile => FileRows = {
-      val readFile = fileFormat(format).buildReaderWithPartitionValues(
+    def build(): FileReader = {
+      val fmt = fileFormat(format)
+      val batch = fmt.supportBatch(classic, requiredSchema)
+      new FileReader(fmt.buildReaderWithPartitionValues(
         sparkSession = classic,
         dataSchema = dataSchema,
         partitionSchema = new StructType(),
         requiredSchema = requiredSchema,
         filters = filters,
-        // rows, never ColumnarBatch: this reader feeds a row-based
-        // PartitionReader (the vectorized decoder still runs underneath;
-        // it just hands rows off the batch)
-        options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        hadoopConf = hadoopConf)
-      file => new FileRows(readFile(file))
+        options = Map(FileFormat.OPTION_RETURNING_BATCH -> batch.toString),
+        hadoopConf = hadoopConf), batch)
     }
     if (filters.nonEmpty) build()
     else unfilteredReaders(spark.sparkContext,
@@ -206,16 +231,63 @@ object GraftParquetReadShim {
   /** Run a task's file reads (`body`) and add them to the task's input
     * metrics as `FileScanRDD` does: the bytes read on this thread
     * (Hadoop FileSystem statistics) and the rows of every read `body`
-    * passes through the counter it is handed. InputMetrics' setters are
-    * `private[spark]`. */
+    * passes through the counter it is handed. The counter also checks
+    * the task's kill flag at every row, as `FileScanRDD` does, so a
+    * task of a failed or cancelled job stops at its next row.
+    * InputMetrics' setters are `private[spark]`. */
   def withInputMetrics[T](ctx: TaskContext)(
       body: (Iterator[InternalRow] => Iterator[InternalRow]) => T): T = {
     val in = ctx.taskMetrics().inputMetrics
     val before = in.bytesRead
     val bytesOnThread = SparkHadoopUtil.get.getFSBytesReadOnThreadCallback()
-    try body(_.map { r => in.incRecordsRead(1); r })
+    try body(rows => new InterruptibleIterator(ctx, rows.map { r => in.incRecordsRead(1); r }))
     finally in.setBytesRead(before + bytesOnThread())
   }
+
+  /** Run `jobs` (Spark jobs this thread submits); when it throws, run
+    * `cleanup` only after every task those jobs launched has ended, then
+    * rethrow. A job fails as soon as one task fails, while its other
+    * running tasks are only flagged for kill: one of them can still
+    * write after a cleanup run at once. The job's task starts and ends
+    * are counted by a listener; the bus is drained before the count is
+    * read, because task ends reach the listener asynchronously. */
+  def afterTasksEnd[T](sc: SparkContext)(jobs: => T)(cleanup: => Unit): T = {
+    val tag = java.util.UUID.randomUUID().toString
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(JobTagProperty) == tag)
+          e.stageIds.foreach(stages.add)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) running.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) running.decrementAndGet()
+    }
+    val previous = sc.getLocalProperty(JobTagProperty)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(JobTagProperty, tag)
+    try jobs
+    catch {
+      case t: Throwable =>
+        def settled: Boolean = {
+          try sc.listenerBus.waitUntilEmpty()
+          catch { case _: java.util.concurrent.TimeoutException => () }
+          running.get <= 0
+        }
+        try {
+          while (!settled) Thread.sleep(10)
+          cleanup
+        } catch { case e: Throwable => t.addSuppressed(e) }
+        throw t
+    } finally {
+      sc.setLocalProperty(JobTagProperty, previous)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The local property naming the jobs of one [[afterTasksEnd]] call. */
+  private val JobTagProperty = "graft.cleanupTag"
 
   /** Rows hashed on key expressions, serializable for a broadcast. A
     * row whose key holds a NULL is left out, as in a hash join's build

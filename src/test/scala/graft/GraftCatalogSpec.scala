@@ -302,10 +302,10 @@ class GraftCatalogSpec extends SparkSpec {
     // OPTIMIZE ... WHERE shape); an out-of-range scope is a no-op
     sql("INSERT INTO gcat.db11.t VALUES (20001, 99, 0), (20002, 99, 0)")
     val gt0 = GraftTable.load(spark, s"$warehouse/db11/t")
-    val beforeScoped = gt0.read().inputFiles.length
+    val beforeScoped = GraftScans.inputFiles(gt0.read()).length
     val scoped = sql("CALL gcat.system.optimize('db11.t', 4, '', '', 'x = 99')").collect()
     assert(scoped.head.getInt(1) >= 1, scoped.mkString)
-    assert(gt0.read().inputFiles.length < beforeScoped)
+    assert(GraftScans.inputFiles(gt0.read()).length < beforeScoped)
     val noScope = sql("CALL gcat.system.optimize('db11.t', 4, '', '', 'x = -5')").collect()
     assert(noScope.head.getInt(1) == 0, noScope.mkString)
     assert(sql("SELECT count(*) FROM gcat.db11.t WHERE x = 99").head().getLong(0) >= 2)
@@ -1346,5 +1346,73 @@ class GraftCatalogSpec extends SparkSpec {
       assert(viaCatalog == viaStore, s"$key=$openCost: catalog $viaCatalog vs read $viaStore tasks")
       if (openCost == "1") assert(viaCatalog < nFiles, s"$viaCatalog tasks for $nFiles files")
     } finally spark.conf.set(key, prev)
+  }
+
+  // ---- columnar reads ----
+
+  /** Whether `q`'s scan feeds whole-stage codegen columnar batches
+    * (`ColumnarToRow` right above the GraftScan); runs `q` and returns
+    * its rows too. */
+  private def columnar(q: org.apache.spark.sql.DataFrame): (Boolean, Seq[String]) = {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val rows = q.collect().map(_.toString).sorted.toSeq
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = nodes(q.queryExecution.executedPlan)
+    val scans = plan.collect { case b: BatchScanExec if b.scan.isInstanceOf[graft.catalog.GraftScan] => b }
+    assert(scans.nonEmpty, q.queryExecution.executedPlan)
+    val batched = plan.collect { case c: ColumnarToRowExec => c.child }
+      .map { case i: InputAdapter => i.child; case c => c }
+      .exists(c => scans.exists(_ eq c))
+    (batched, rows)
+  }
+
+  test("flat Parquet and ORC catalog reads plan ColumnarToRow over the GraftScan") {
+    sql("CREATE NAMESPACE gcat.dbcol")
+    sql("CREATE TABLE gcat.dbcol.p (id BIGINT, v STRING, d DOUBLE)")
+    sql("CREATE TABLE gcat.dbcol.o (id BIGINT, v STRING, d DOUBLE) TBLPROPERTIES('format'='orc')")
+    Seq("p", "o").foreach { t =>
+      sql(s"INSERT INTO gcat.dbcol.$t SELECT id, CAST(id AS STRING), id * 0.5 FROM range(0, 100)")
+      val (batched, rows) = columnar(sql(s"SELECT id, v, d FROM gcat.dbcol.$t WHERE id >= 95"))
+      assert(batched, s"$t: expected a columnar read")
+      assert(rows == (95 until 100).map(i => s"[$i,$i,${i * 0.5}]"), rows)
+      val n = sql(s"SELECT count(*), sum(id), sum(d) FROM gcat.dbcol.$t").head()
+      assert((n.getLong(0), n.getLong(1), n.getDouble(2)) == (100L, 4950L, 2475.0))
+    }
+  }
+
+  test("a projection the format cannot batch reads rows, with the same answers") {
+    sql("CREATE NAMESPACE gcat.dbnest")
+    sql("CREATE TABLE gcat.dbnest.t (id BIGINT, s STRUCT<a: INT, b: STRING>)")
+    sql("INSERT INTO gcat.dbnest.t SELECT id, named_struct('a', CAST(id AS INT), 'b', " +
+      "CAST(id * 2 AS STRING)) FROM range(0, 50)")
+    val q = "SELECT id, s FROM gcat.dbnest.t WHERE id < 5"
+    val key = "spark.sql.parquet.enableNestedColumnVectorizedReader"
+    val prior = spark.conf.getOption(key)
+    val (batched, onBatches) = { spark.conf.set(key, "true"); columnar(sql(q)) }
+    val (rowsOnly, onRows) =
+      try { spark.conf.set(key, "false"); columnar(sql(q)) }
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(batched && !rowsOnly)
+    assert(onRows == onBatches && onRows == (0 until 5).map(i => s"[$i,[$i,${i * 2}]]"), onRows)
+  }
+
+  test("a columnar read at a version before a column rename resolves the old name by field id") {
+    sql("CREATE NAMESPACE gcat.dbren")
+    sql("CREATE TABLE gcat.dbren.t (id BIGINT, name STRING)")
+    sql("INSERT INTO gcat.dbren.t VALUES (1, 'a'), (2, 'b')") // v2
+    sql("ALTER TABLE gcat.dbren.t RENAME COLUMN name TO label") // v3
+    sql("INSERT INTO gcat.dbren.t VALUES (3, 'c')") // v4
+    val old = sql("SELECT * FROM gcat.dbren.t VERSION AS OF 2")
+    assert(old.columns.toSeq == Seq("id", "name"))
+    val (b1, before) = columnar(old)
+    assert(b1 && before == Seq("[1,a]", "[2,b]"), before)
+    val (b2, after) = columnar(sql("SELECT id, label FROM gcat.dbren.t"))
+    assert(b2 && after == Seq("[1,a]", "[2,b]", "[3,c]"), after)
   }
 }

@@ -176,6 +176,27 @@ class SqlSpec extends SparkSpec {
     spark.sql("DROP TABLE sql_spec_foo")
   }
 
+  test("statement splitter keeps a BEGIN ... END compound body, nested blocks included, whole") {
+    assert(TrinoDialect.splitStatements("BEGIN SELECT 1; SELECT 2; END") ==
+      Seq("BEGIN SELECT 1; SELECT 2; END"))
+    val nested =
+      """lbl: BEGIN
+        |  DECLARE x INT DEFAULT 0;
+        |  IF x = 0 THEN BEGIN SELECT CASE WHEN x = 0 THEN 'a' END; END; END IF;
+        |  WHILE x < 2 DO SET x = x + 1; END WHILE;
+        |  CASE x WHEN 2 THEN SELECT 'two'; ELSE SELECT 'other'; END CASE;
+        |END""".stripMargin
+    assert(TrinoDialect.splitStatements(s"SELECT 0 AS begin; $nested; SELECT 3") ==
+      Seq("SELECT 0 AS begin", nested, "SELECT 3"))
+  }
+
+  test("scripted execution runs a BEGIN ... END script as one statement") {
+    val results = GraftSql.execute(spark,
+      "SELECT 0 AS a; BEGIN SELECT 1 AS b; SELECT 2 AS c; END")
+    assert(results.size == 2)
+    assert(results.map(_.collect().head.getInt(0)) == Seq(0, 2))
+  }
+
   test("parameterized statements bind named args") {
     Tables.registerAll(spark, sf())
     val n = GraftSql.sqlWith(spark,

@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.store.{GraftTable, StatsPruner}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.catalog.GraftScan
+import graft.store.{FileStat, GraftTable, MergeWhen, StatsPruner}
 
 /** Versioned-table layer: snapshots, time travel, branches, row-level
   * DML (copy-on-write), compaction, vacuum, stats pruning — the
@@ -171,12 +175,12 @@ class StoreSpec extends SparkSpec {
     assert(bigBytes > (1L << 20), s"test premise: big file is $bigBytes B <= 1 MB")
     for (i <- 0 until 3)
       t.append(Seq((10000L + i, "x")).toDF("id", "s").coalesce(1))
-    assert(t.read().inputFiles.length == 4)
+    assert(GraftScans.inputFiles(t.read()).length == 4)
     // sweep at 1 MB: the three appends merge into ONE file, the big
     // file is untouched (same path survives in the new snapshot)
     val vPartial = t.compact(onlyFilesSmallerMB = Some(1))
-    assert(t.read().inputFiles.length == 2, t.read().inputFiles.mkString(","))
-    assert(t.read().inputFiles.exists(_.endsWith(bigPath)),
+    assert(GraftScans.inputFiles(t.read()).length == 2, GraftScans.inputFiles(t.read()).mkString(","))
+    assert(GraftScans.inputFiles(t.read()).exists(_.endsWith(bigPath)),
       "the big file must survive a small-file sweep un-rewritten")
     assert(t.read().count() == 60003)
     assert(t.history.last.op == "compact")
@@ -199,17 +203,17 @@ class StoreSpec extends SparkSpec {
     val t = GraftTable.create(spark, root,
       spark.range(0, 1000).selectExpr("id % 10 AS day", "id AS v"))
     t.compact(clusterBy = Seq("day"), numFiles = Some(10))
-    val coldFiles = t.read(filters = Seq(col("day") === 0)).inputFiles.toSet
+    val coldFiles = GraftScans.inputFiles(t.read(filters = Seq(col("day") === 0))).toSet
     for (i <- 0 until 3)
       t.append(Seq((9L, 10000L + i)).toDF("day", "v").coalesce(1))
-    val before = t.read().inputFiles.length
+    val before = GraftScans.inputFiles(t.read()).length
     // scope the sweep to the hot day: its files consolidate, every
     // day-0 file survives at its ORIGINAL path (never rewritten)
     val v = t.compact(where = Seq(col("day") === 9))
     assert(t.history.last.op == "compact")
-    assert(t.read().inputFiles.length < before,
-      s"scoped compact did not consolidate: $before -> ${t.read().inputFiles.length}")
-    assert(t.read(filters = Seq(col("day") === 0)).inputFiles.toSet == coldFiles,
+    assert(GraftScans.inputFiles(t.read()).length < before,
+      s"scoped compact did not consolidate: $before -> ${GraftScans.inputFiles(t.read()).length}")
+    assert(GraftScans.inputFiles(t.read(filters = Seq(col("day") === 0))).toSet == coldFiles,
       "a scoped compact must not rewrite out-of-scope files")
     // file-granular semantics: every row survives, any scope
     assert(t.read().count() == 1003)
@@ -1079,5 +1083,263 @@ class StoreSpec extends SparkSpec {
       assert(GraftTable.load(spark, s"$warehouse/db/b").history.flatMap(_.added)
         .forall(_.min.contains(GraftTable.BucketStatKey)))
     } finally spark.conf.set("spark.sql.session.timeZone", tz0)
+  }
+
+  // ---- the one read path: every read of table files is a GraftScan ----
+
+  private def graftScans(plan: SparkPlan): Seq[GraftScan] = GraftScans.of(plan)
+
+  private def graftScans(df: DataFrame): Seq[GraftScan] = GraftScans.of(df)
+
+  private def paths(fs: Seq[FileStat]): Set[String] = fs.map(_.path).toSet
+
+  /** The physical plans of every SQL execution `body` runs (store writes
+    * included: each runs as a SQL execution), read after draining the
+    * listener bus. */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.sparkPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.ListenerDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq
+  }
+
+  /** Rows read by every task `body` runs (input metrics), after draining
+    * the listener bus. */
+  private def rowsRead(body: => Unit): Long = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) n.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  /** A table clustered on `id` with one file per append: ids
+    * 100*i .. 100*i+9 for i in 0 until 12. */
+  private def twelveFiles(): GraftTable = {
+    val t = GraftTable.create(spark, freshRoot,
+      spark.range(0, 10, 1, 1).select($"id", ($"id" % 3).as("g")), clusterBy = Seq("id"))
+    (1 until 12).foreach { i =>
+      t.append(spark.range(100L * i, 100L * i + 10, 1, 1).select($"id", ($"id" % 3).as("g")))
+    }
+    assert(t.planFiles(t.currentVersion).size == 12)
+    t
+  }
+
+  test("read(filters) plans exactly the files planFiles keeps: range, small and large isin") {
+    val t = twelveFiles()
+    val v = t.currentVersion
+    val cases = Seq(
+      ($"id" >= 200 && $"id" < 450, 3),
+      ($"id".isin(5L, 305L, 705L), 3),
+      // more than 10 values: the optimizer turns the IN into an InSet
+      ($"id".isin((300L until 312L) ++ (900L until 905L): _*), 2))
+    cases.foreach { case (f, n) =>
+      val df = t.read(filters = Seq(f))
+      val Seq(scan) = graftScans(df)
+      val kept = t.planFiles(v, Seq(f))
+      assert(kept.size == n, s"$f: ${kept.size}")
+      assert(paths(scan.files) == paths(kept), s"$f: ${scan.description()}")
+      assert(scan.description().contains(s"$n files"), scan.description())
+      assert(df.count() == t.read().filter(f).count())
+    }
+    assert(df2Count(t.read(filters = Seq($"id" > 5000L))) == 0)
+  }
+
+  private def df2Count(df: DataFrame): Long = {
+    val Seq(scan) = graftScans(df)
+    assert(scan.planInputPartitions().isEmpty, "an empty file list plans no read task")
+    df.count()
+  }
+
+  test("readStaged, changes, compact and a streaming append batch read exactly their files") {
+    val t = twelveFiles()
+    // staged: only the staged files
+    val st = t.stageAppend(spark.range(5000, 5005).select($"id", lit(0L).as("g")))
+    val Seq(staged) = graftScans(t.readStaged(st))
+    assert(paths(staged.files) == paths(st.files))
+    assert(t.readStaged(st).count() == 5)
+    t.discardStaged(st)
+    // changes: the files added and removed between the versions only
+    val v0 = t.currentVersion
+    t.delete($"id" === 305L)
+    t.append(spark.range(6000, 6003).select($"id", lit(1L).as("g")))
+    val before = paths(t.planFiles(v0))
+    val after = paths(t.planFiles(t.currentVersion))
+    val diff = t.changes(v0, t.currentVersion)
+    assert(graftScans(diff).map(s => paths(s.files)).toSet == Set(before -- after, after -- before))
+    // the rewrite's carried rows cancel: one delete, the three appended rows
+    assert(diff.filter($"_change_type" === "delete").count() == 1)
+    assert(diff.filter($"_change_type" === "insert").count() == 3)
+    // compact WHERE: one write whose scan reads the scoped files only
+    val scoped = paths(t.planFiles(t.currentVersion, Seq($"id" < 300L)))
+    assert(scoped.size == 3)
+    val compacted = plansOf(t.compact(where = Seq($"id" < 300L))).flatMap(graftScans)
+    assert(compacted.map(s => paths(s.files)) == Seq(scoped), compacted.map(_.description()))
+    // a streaming append batch: the rows of its commits' files only
+    val s0 = t.currentVersion
+    t.append(spark.range(7000, 7004).select($"id", lit(2L).as("g")))
+    t.append(spark.range(8000, 8003).select($"id", lit(2L).as("g")))
+    val ckpt = Files.createTempDirectory("gts_rows").toString
+    val read = rowsRead {
+      val q = spark.readStream.format("graft-table").option("startingVersion", s0.toString)
+        .load(t.root).writeStream.format("memory").queryName("store_spec_batch")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(240000), "stream did not drain in 240s")
+    }
+    assert(spark.table("store_spec_batch").count() == 7)
+    assert(read == 7)
+  }
+
+  test("filesJoining and the MERGE join path find exactly the victim files") {
+    val t = twelveFiles()
+    def fileOf(id: Long): String =
+      t.planFiles(t.currentVersion).find(f => f.min("id").toLong <= id && id <= f.max("id").toLong).get.path
+    // filesJoining: a replace whose delete rows sit in two files
+    val victims = Set(fileOf(105L), fileOf(707L))
+    val dels = Seq((105L, 0L), (707L, 2L)).toDF("id", "g")
+    t.replaceRowsAs("replace-1", dels, dels.limit(0), _.startsWith("replace-"), _ => false)
+    assert(t.history.last.removed.toSet == victims)
+    assert(t.read().count() == 118)
+    // the MERGE join path (broadcast disabled): victims are the matched files
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val hit = Set(fileOf(201L), fileOf(1101L))
+      val src = Seq((201L, 9L), (1101L, 9L)).toDF("id", "g")
+      t.mergeInto(src, $"id" === col(GraftTable.MergeSourcePrefix + "id"),
+        Seq(MergeWhen(None, Some(Map("g" -> col(GraftTable.MergeSourcePrefix + "g"))))), Nil)
+      assert(t.history.last.removed.toSet == hit)
+      assert(t.read().filter($"g" === 9L).count() == 2)
+    } finally spark.conf.set(key, prior)
+  }
+
+  test("no former file-relation read plans a FileSourceScanExec") {
+    val t = twelveFiles()
+    val bucketed = GraftTable.create(spark, freshRoot,
+      spark.range(0, 40).select($"id", ($"id" % 5).as("g")), bucketBy = Some(("id", 4)))
+    val st = t.stageAppend(spark.range(9000, 9002).select($"id", lit(0L).as("g")))
+    val frames = Seq(t.read(), t.read(filters = Seq($"id" < 150L)), t.readStaged(st),
+      t.changes(1, t.currentVersion))
+    frames.foreach(df => assert(graftScans(df).nonEmpty, df.queryExecution.sparkPlan))
+    val plans = frames.map(_.queryExecution.sparkPlan) ++ plansOf {
+      t.discardStaged(st)
+      t.replaceRowsAs("replace-1", Seq((105L, 0L)).toDF("id", "g"),
+        Seq((106L, 0L)).toDF("id", "g").limit(0), _.startsWith("replace-"), _ => false)
+      bucketed.update($"id" === 3L, Map("id" -> lit(1003L))) // re-bucketing UPDATE
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prior = spark.conf.get(key)
+      spark.conf.set(key, "-1")
+      try t.merge(Seq((201L, 7L)).toDF("id", "g"), Seq("id"))
+      finally spark.conf.set(key, prior)
+      t.compact()
+    }
+    assert(plans.exists(p => graftScans(p).nonEmpty))
+    plans.foreach { p =>
+      assert(p.collect { case f: FileSourceScanExec => f }.isEmpty, p)
+    }
+  }
+
+  test("scans of different staged sets or snapshots are not equal") {
+    val t = twelveFiles()
+    val a = t.stageAppend(spark.range(5000, 5003).select($"id", lit(0L).as("g")))
+    val b = t.stageAppend(spark.range(6000, 6004).select($"id", lit(0L).as("g")))
+    val Seq(sa) = graftScans(t.readStaged(a))
+    val Seq(sb) = graftScans(t.readStaged(b))
+    assert(sa != sb)
+    assert(graftScans(t.readStaged(a)) == Seq(sa))
+    // a union of the two keeps both: neither read is reused for the other
+    assert(t.readStaged(a).union(t.readStaged(b)).count() == 7)
+    val v1 = t.currentVersion
+    t.append(spark.range(7000, 7002).select($"id", lit(0L).as("g")))
+    val Seq(s1) = graftScans(t.read(asOfVersion = Some(v1)))
+    val Seq(s2) = graftScans(t.read())
+    assert(s1 != s2)
+    assert(t.read(asOfVersion = Some(v1)).union(t.read()).count() == 120 + 122)
+    assert(t.read().queryExecution.analyzed.sameResult(t.read().queryExecution.analyzed))
+    assert(!t.read(asOfVersion = Some(v1)).queryExecution.analyzed
+      .sameResult(t.read().queryExecution.analyzed))
+  }
+
+  test("a failed rewrite job leaves no write directory, even from a task still running") {
+    assume(spark.sparkContext.defaultParallelism >= 2, "needs two concurrent tasks")
+    // clustered: one rewrite task per file
+    val t = GraftTable.create(spark, freshRoot,
+      spark.range(0, 10, 1, 1).select($"id", lit("v").as("v")), clusterBy = Seq("id"))
+    t.append(spark.range(100, 110, 1, 1).select($"id", lit("v").as("v")))
+    assert(t.planFiles(t.currentVersion).size == 2)
+    val data = java.nio.file.Paths.get(t.root, "data")
+    def writeDirs: Set[String] = {
+      val s = Files.list(data)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+        .map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+    val (v, dirs) = (t.currentVersion, writeDirs)
+    val running = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskStart(e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        running.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        running.decrementAndGet()
+    }
+    RewriteGate.reset()
+    val gate = udf((id: Long) => RewriteGate.pass(id))
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(tasks)
+    try {
+      // the task of file 0..9 fails once the task of file 100..109 is
+      // inside its first row; that task then waits for the statement to
+      // return (at most 5 s) before it writes
+      val e = intercept[Exception](t.update(lit(true), Map("v" -> gate($"id"))))
+      RewriteGate.statementReturned.countDown()
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains(RewriteGate.Failure)), e)
+      assert(RewriteGate.slowEntered.getCount == 0, "the slow task never ran")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      while (running.get > 0 && System.nanoTime() < deadline) {
+        Thread.sleep(20)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+      }
+      assert(running.get == 0, "a rewrite task did not end")
+    } finally spark.sparkContext.removeSparkListener(tasks)
+    assert(t.currentVersion == v)
+    assert(writeDirs == dirs, writeDirs -- dirs)
+  }
+}
+
+/** Latches shared by the rewrite tasks of one test (local mode: one JVM). */
+private object RewriteGate {
+  val Failure = "rewrite task fails on purpose"
+  @volatile var slowEntered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var statementReturned = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    slowEntered = new java.util.concurrent.CountDownLatch(1)
+    statementReturned = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def pass(id: Long): String = {
+    import java.util.concurrent.TimeUnit.SECONDS
+    if (id == 100L) {
+      slowEntered.countDown()
+      statementReturned.await(5, SECONDS)
+    } else if (id == 0L) {
+      slowEntered.await(60, SECONDS)
+      throw new IllegalStateException(Failure)
+    }
+    "x"
   }
 }

@@ -740,8 +740,8 @@ class StreamingSpec extends SparkSpec {
     // the cadence maintain() ran: the assignments layout is back to
     // the compacted file count (2 appends would otherwise each add
     // their own files on top of the build's 2)
-    assert(graft.store.GraftTable.load(spark, s"$root/assignments")
-      .read().inputFiles.length <= 2,
+    assert(GraftScans.inputFiles(graft.store.GraftTable.load(spark, s"$root/assignments")
+      .read()).length <= 2,
       "maintainEvery=2 did not re-cluster the assignments after batch 1")
 
     // both arrivals searchable through BOTH paths (exact copies: cell
@@ -808,8 +808,8 @@ class StreamingSpec extends SparkSpec {
     // = 9 shingles, it bands too: 6 appends) + 3 compacts; live files
     // collapse to the last sweep's output + at most one post-sweep
     // append (batch 5's compact runs AFTER its append)
-    assert(idxT.read().inputFiles.length <= 2,
-      s"index not consolidated: ${idxT.read().inputFiles.length} files")
+    assert(GraftScans.inputFiles(idxT.read()).length <= 2,
+      s"index not consolidated: ${GraftScans.inputFiles(idxT.read()).length} files")
     assert(idxT.history.count(_.op == "compact") == 3,
       idxT.history.map(_.op).mkString(","))
     // index content survives the sweeps byte-exact: one band row set

@@ -37,11 +37,11 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.build(spark, Tables(spark, sf("sf0.01"), "documents"), root,
       buckets = 16)
     val post = GraftTable.load(spark, s"$root/postings")
-    val all = post.read().inputFiles.length
+    val all = GraftScans.inputFiles(post.read()).length
     val hs = query.toDF("term").select(xxhash64(col("term"))).collect()
       .map(_.getLong(0)).toIndexedSeq
-    val pruned = post.read(filters = Seq(col("term_h").isin(hs: _*)))
-      .inputFiles.length
+    val pruned = GraftScans.inputFiles(post.read(filters = Seq(col("term_h").isin(hs: _*))))
+      .length
     assert(all > 3 && pruned < all, s"expected bucket pruning, got $pruned/$all files")
     // the term-string equality guard keeps a colliding hash from
     // contributing rows: filtering the pruned read to the real terms
@@ -77,10 +77,10 @@ class TextIndexSpec extends SparkSpec {
     assert(GraftTable.load(spark, s"$root/postings").currentVersion == pv)
     assert(GraftTable.load(spark, s"$root/stats").currentVersion == sv)
     // maintain(): bucket-preserving; answers and pruning survive
-    val before = GraftTable.load(spark, s"$root/postings").read().inputFiles.length
+    val before = GraftScans.inputFiles(GraftTable.load(spark, s"$root/postings").read()).length
     idx.maintain()
     val post = GraftTable.load(spark, s"$root/postings")
-    assert(post.read().inputFiles.length < before, "maintain did not consolidate")
+    assert(GraftScans.inputFiles(post.read()).length < before, "maintain did not consolidate")
     assert(idx.bm25TopK(query, k = 10).collect().map(_.getLong(0)).toSet
       .contains(900001L), "post-maintain retrieval broke")
   }

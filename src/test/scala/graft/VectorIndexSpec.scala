@@ -78,8 +78,8 @@ class VectorIndexSpec extends SparkSpec {
     // probes' cent_id IN conjunct (GraftTable.read's direct-load twin
     // of the catalog scan's static pruning)
     val codes = GraftTable.load(spark, s"$root/pq_codes")
-    val all = codes.read().inputFiles.length
-    val pruned = codes.read(filters = Seq(col("cent_id").isin(0L, 1L))).inputFiles.length
+    val all = GraftScans.inputFiles(codes.read()).length
+    val pruned = GraftScans.inputFiles(codes.read(filters = Seq(col("cent_id").isin(0L, 1L)))).length
     assert(all > 2 && pruned < all, s"expected bucket pruning, got $pruned/$all files")
     // and a probe on an EMPTY bucket set reads nothing but stays correct
     assert(codes.read(filters = Seq(col("cent_id") === -1L)).count() == 0L)
@@ -185,8 +185,8 @@ class VectorIndexSpec extends SparkSpec {
 
     // the bucket layout survives the append: pruning still strict
     val codes = GraftTable.load(spark, s"$root/pq_codes")
-    val all = codes.read().inputFiles.length
-    val pruned = codes.read(filters = Seq(col("cent_id") === asg(7L))).inputFiles.length
+    val all = GraftScans.inputFiles(codes.read()).length
+    val pruned = GraftScans.inputFiles(codes.read(filters = Seq(col("cent_id") === asg(7L)))).length
     assert(pruned < all, s"append degraded bucket pruning: $pruned/$all")
 
     // labeled replays are exactly-once on BOTH tables independently,
@@ -204,14 +204,14 @@ class VectorIndexSpec extends SparkSpec {
     // maintenance consolidates the append-era small files; answers and
     // the codes table's bucket pruning survive (plain compact is
     // bucket-preserving by the store contract)
-    val filesBefore = codes.read().inputFiles.length
+    val filesBefore = GraftScans.inputFiles(codes.read()).length
     idx.maintain()
-    assert(codes.read().inputFiles.length < filesBefore,
+    assert(GraftScans.inputFiles(codes.read()).length < filesBefore,
       "maintain() did not consolidate the codes files")
     val pq2 = idx.searchPq(q, k = 3, nprobe = 3).collect().map(_.getLong(0)).toSet
     assert(pq2.contains(9001L) && pq2.contains(7L), s"post-maintain search broke: $pq2")
-    val prunedAfter = codes.read(filters = Seq(col("cent_id") === asg(7L))).inputFiles.length
-    assert(prunedAfter < codes.read().inputFiles.length,
+    val prunedAfter = GraftScans.inputFiles(codes.read(filters = Seq(col("cent_id") === asg(7L)))).length
+    assert(prunedAfter < GraftScans.inputFiles(codes.read()).length,
       "post-compact bucket pruning lost")
   }
 }
