@@ -134,15 +134,13 @@ final class TextIndex private[operators] (spark: SparkSession, root: String) {
     * Returns the number of documents appended (0 on a full replay). */
   def append(newDocs: DataFrame, op: Option[String] = None,
              opFamily: Option[String] = None): Long = {
+    val label = GraftTable.BatchLabel.of(op, opFamily)
+    if (label.exists(l => postings.hasCommitted(l) && stats.hasCommitted(l)))
+      return 0L // full replay: no job
     val post = TextIndex.postingsOf(newDocs).localCheckpoint()
     val n = post.select(col("doc_id")).distinct().count()
     val inc = TextIndex.statsOf(newDocs)
-    def commit(t: GraftTable, df: DataFrame): Boolean = (op, opFamily) match {
-      case (Some(o), Some(fam)) =>
-        t.appendAsOnce(o, df, _.startsWith(fam), _ == o)._2
-      case _ => t.append(df); true
-    }
-    val applied = commit(postings, post) | commit(stats, inc)
+    val applied = postings.appendLabeled(post, label) | stats.appendLabeled(inc, label)
     if (applied) n else 0L
   }
 

@@ -276,8 +276,9 @@ final class VectorIndex private[operators] (spark: SparkSession, root: String) {
     * store's bucket-clustered writer, so [[searchPq]]'s static pruning
     * survives ingestion forever.
     *
-    * `op` labels the commits for exactly-once streaming replays: each
-    * table dedups independently (appendAsOnce), so a crash between the
+    * `op` (`opFamily` followed by a micro-batch id) labels the commits
+    * for exactly-once streaming replays: each table dedups
+    * independently ([[GraftTable.BatchLabel]]), so a crash between the
     * two appends re-applies only the missing one. Input needs
     * (vec_id, embedding); duplicate vec_ids are the caller's contract.
     * Returns the number of vectors appended — 0 when EVERY table
@@ -285,6 +286,9 @@ final class VectorIndex private[operators] (spark: SparkSession, root: String) {
     * that re-applies one table still returns the batch size). */
   def append(newVectors: DataFrame, op: Option[String] = None,
              opFamily: Option[String] = None): Long = {
+    val label = GraftTable.BatchLabel.of(op, opFamily)
+    val tables = table +: (if (hasPq) Seq(codesTable) else Nil)
+    if (label.exists(l => tables.forall(_.hasCommitted(l)))) return 0L // full replay: no job
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val centsDf = broadcast(
@@ -305,12 +309,7 @@ final class VectorIndex private[operators] (spark: SparkSession, root: String) {
       "embedding")
       .localCheckpoint() // assignments append + PQ encode read ONE computation
     val n = assignedNew.count()
-    def commit(t: GraftTable, df: DataFrame): Boolean = (op, opFamily) match {
-      case (Some(o), Some(fam)) =>
-        t.appendAsOnce(o, df, _.startsWith(fam), _ == o)._2
-      case _ => t.append(df); true
-    }
-    var anyApplied = commit(table, assignedNew)
+    var anyApplied = table.appendLabeled(assignedNew, label)
     if (hasPq) {
       val codes = VectorOps.pqEncode(
           assignedNew.selectExpr("vec_id",
@@ -318,7 +317,7 @@ final class VectorIndex private[operators] (spark: SparkSession, root: String) {
           pqCodebookDf, dim = pqM * pqW, m = pqM)
         .join(assignedNew.select(col("vec_id"), col("cent_id")), Seq("vec_id"))
         .select(col("cent_id"), col("vec_id"), col("j"), col("c").cast("int").as("c"))
-      anyApplied = commit(codesTable, codes) || anyApplied
+      anyApplied = codesTable.appendLabeled(codes, label) || anyApplied
     }
     if (anyApplied) n else 0L
   }

@@ -391,6 +391,13 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   private def newestCommitIn(domain: String => Boolean): Option[Commit] =
     log.versions.reverseIterator.map(log.read).find(c => domain(c.op))
 
+  /** The newest `domain` commit, when it satisfies `conflicts`: the
+    * dedup check of [[commitOnce]], also run by every labeled write
+    * before its first job. */
+  private def committedAlready(domain: String => Boolean,
+                               conflicts: String => Boolean): Option[Commit] =
+    newestCommitIn(domain).filter(c => conflicts(c.op))
+
   /** What schema a commit publishes — and, critically, what happens
     * when a schema-evolution commit lands BETWEEN an operation reading
     * the schema and its tryCommit. A retry must never replay a captured
@@ -450,9 +457,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     var attempts = 0
     while (attempts < 20) {
       val parent = log.latestVersion
-      dedup.flatMap { case (domain, conflicts) =>
-        newestCommitIn(domain).filter(c => conflicts(c.op))
-      } match {
+      dedup.flatMap { case (domain, conflicts) => committedAlready(domain, conflicts) } match {
         case Some(c) =>
           discardWrittenFiles(added)
           return (c.version, false)
@@ -632,12 +637,6 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Append recorded under a caller-chosen op label — the idempotence
-    * hook for streaming sinks: a replayed micro-batch re-presents the
-    * same label, the sink sees it in `history`, and skips. */
-  private[graft] def appendAs(op: String, df: DataFrame): Long =
-    commitRetry(op, writeFiles(aligned(df)), Nil, InheritSchema(schema.json))
-
   /** Exactly-once labeled append: commit `df` under `op` UNLESS the
     * newest commit in `domain` satisfies `conflicts` — then skip,
     * delete the just-written files, and return that commit's version
@@ -647,13 +646,27 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   private[graft] def appendAsOnce(op: String, df: DataFrame,
                                   domain: String => Boolean,
                                   conflicts: String => Boolean): (Long, Boolean) = {
-    newestCommitIn(domain).filter(c => conflicts(c.op)) match {
+    committedAlready(domain, conflicts) match {
       case Some(c) => return (c.version, false) // fast path: skip before writing
       case None => ()
     }
     commitOnce(op, writeFiles(aligned(df)), Nil, InheritSchema(schema.json), -1L,
       Some((domain, conflicts)))
   }
+
+  /** Whether micro-batch `label` (or a later batch of its sink) has
+    * committed here. */
+  private[graft] def hasCommitted(label: GraftTable.BatchLabel): Boolean =
+    committedAlready(label.inDomain, label.conflicts).isDefined
+
+  /** Append `df`; with a micro-batch `label`, exactly once per batch
+    * ([[appendAsOnce]] under the label's rule). Returns whether it
+    * committed. */
+  private[graft] def appendLabeled(df: DataFrame, label: Option[GraftTable.BatchLabel]): Boolean =
+    label match {
+      case Some(l) => appendAsOnce(l.op, df, l.inDomain, l.conflicts)._2
+      case None => append(df); true
+    }
 
   def overwrite(df: DataFrame): Long =
     commitRetry("overwrite", writeFiles(aligned(df)), Nil, InheritSchema(schema.json))
@@ -821,7 +834,7 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   private[graft] def replaceRowsAs(op: String, deletes: DataFrame, inserts: DataFrame,
                                    domain: String => Boolean,
                                    conflicts: String => Boolean): (Long, Boolean) = {
-    newestCommitIn(domain).filter(c => conflicts(c.op)) match {
+    committedAlready(domain, conflicts) match {
       case Some(c) => return (c.version, false)
       case None => ()
     }
@@ -1012,19 +1025,26 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
   def merge(source: DataFrame, keyCols: Seq[String]): Long =
     merge(source, keyCols, "merge")
 
-  /** As [[merge]], with a caller-chosen commit label — the idempotence
-    * hook for streaming upsert sinks (the label records the batch id,
-    * exactly like [[appendAs]] for append sinks) — and a caller-chosen
-    * per-key match condition over the key's target and prefixed source
-    * columns (streaming upserts match NULL keys too). */
-  private[graft] def merge(source: DataFrame, keyCols: Seq[String], op: String,
-                           keyMatch: String => Column =
-                             k => col(k) === col(GraftTable.MergeSourcePrefix + k)): Long = {
+  /** As [[merge]], committed under `op`. */
+  private[graft] def merge(source: DataFrame, keyCols: Seq[String], op: String): Long =
+    keyedMerge(source, keyCols, k => col(k) === col(GraftTable.MergeSourcePrefix + k), op, None)._1
+
+  /** As [[merge]], exactly once per micro-batch `label` (the dedup of
+    * the labeled [[mergeInto]]), with a caller-chosen per-key match
+    * condition over the key's target and prefixed source columns
+    * (streaming upserts match NULL keys too). */
+  private[graft] def merge(source: DataFrame, keyCols: Seq[String],
+                           label: GraftTable.BatchLabel,
+                           keyMatch: String => Column): (Long, Boolean) =
+    keyedMerge(source, keyCols, keyMatch, label.op, Some(label))
+
+  private def keyedMerge(source: DataFrame, keyCols: Seq[String], keyMatch: String => Column,
+                         op: String, label: Option[GraftTable.BatchLabel]): (Long, Boolean) = {
     import GraftTable.MergeSourcePrefix
     val names = schema.fieldNames.toSeq
     val every = Some(names.map(n => n -> col(MergeSourcePrefix + n)).toMap)
     mergeInto(source.select(names.map(col): _*), keyCols.map(keyMatch).reduce(_ && _),
-      Seq(MergeWhen(None, every)), Seq(MergeWhen(None, every)), Nil, op, keyCols)
+      Seq(MergeWhen(None, every)), Seq(MergeWhen(None, every)), Nil, op, label, keyCols)
   }
 
   /** General MERGE with ordered WHEN clauses — the engine behind SQL
@@ -1066,21 +1086,39 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
                 notMatchedBySource: Seq[MergeWhen] = Nil): Long =
     mergeInto(source, condition, matched, notMatched, notMatchedBySource, "merge")
 
-  /** As the public [[mergeInto]], with a caller-chosen commit label
-    * (streaming upsert sinks record the batch id — same hook as
-    * [[appendAs]]). */
+  /** As the public [[mergeInto]], committed under `op` (the SQL
+    * statement a lowered UPDATE or DELETE came from). */
   private[graft] def mergeInto(source: DataFrame, condition: Column,
                                matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
                                notMatchedBySource: Seq[MergeWhen], op: String): Long =
-    mergeInto(source, condition, matched, notMatched, notMatchedBySource, op, Nil)
+    mergeInto(source, condition, matched, notMatched, notMatchedBySource, op, None, Nil)._1
+
+  /** As the public [[mergeInto]], exactly once per micro-batch `label`,
+    * with the dedup of [[appendAsOnce]]: when the label's batch (or a
+    * later one) has committed, the merge returns that commit's version
+    * with `applied = false` before any job runs; otherwise the commit
+    * re-checks the label atomically ([[commitOnce]]) and, on a hit,
+    * discards the files it wrote. `applied` is also false when the
+    * merge changes no row (nothing is committed). */
+  private[graft] def mergeInto(source: DataFrame, condition: Column,
+                               matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
+                               notMatchedBySource: Seq[MergeWhen],
+                               label: GraftTable.BatchLabel): (Long, Boolean) =
+    mergeInto(source, condition, matched, notMatched, notMatchedBySource,
+      label.op, Some(label), Nil)
 
   /** As above, with `uniqueKeys`: source columns no two source rows may
     * share (keyed [[merge]]'s contract, checked before any write). */
   private def mergeInto(source: DataFrame, condition: Column,
                         matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
-                        notMatchedBySource: Seq[MergeWhen],
-                        op: String, uniqueKeys: Seq[String]): Long = {
+                        notMatchedBySource: Seq[MergeWhen], op: String,
+                        label: Option[GraftTable.BatchLabel],
+                        uniqueKeys: Seq[String]): (Long, Boolean) = {
     import GraftTable.MergeSourcePrefix
+    label.flatMap(l => committedAlready(l.inDomain, l.conflicts)) match {
+      case Some(c) => return (c.version, false)
+      case None => ()
+    }
     val base = currentVersion
     val sch = schemaAt(base)
     require(source.columns.toSet.size == source.columns.length,
@@ -1137,8 +1175,9 @@ final class GraftTable private (val spark: SparkSession, val root: String) {
       else None).getOrElse(
         mergeByJoin(base, sch, srcP, condition, clauses, matched, notMatched,
           notMatchedBySource, uniqueKeys, freshName))
-    if (added.isEmpty && victims.isEmpty) return base // nothing to change
-    commitRetry(op, added, victims, SameSchema(sch.json), basedOn = base)
+    if (added.isEmpty && victims.isEmpty) return (base, false) // nothing to change
+    commitOnce(op, added, victims, SameSchema(sch.json), base,
+      label.map(l => (l.inDomain(_), l.conflicts(_))))
   }
 
   /** The WHEN clauses of one MERGE as columns over a joined row (target
@@ -1777,6 +1816,32 @@ object GraftTable {
   /** Prefix under which [[GraftTable.mergeInto]] exposes SOURCE columns
     * to clause expressions (target columns keep their plain names). */
   val MergeSourcePrefix = "__graft_src__"
+
+  /** The commit label of micro-batch `batchId` of a streaming sink:
+    * `<prefix><batchId>` under the first of `prefixes`; the others are
+    * earlier spellings of the same sink's prefix, still honored. A
+    * labeled commit is skipped when the newest commit labeled under any
+    * of `prefixes` carries this batch id or a later one. A sink commits
+    * its batches in order, so the newest such commit carries the
+    * highest id: the rule is monotone, as [[GraftTable.commitOnce]]
+    * requires. */
+  private[graft] final case class BatchLabel(prefixes: Seq[String], batchId: Long) {
+    def op: String = s"${prefixes.head}$batchId"
+    def inDomain(label: String): Boolean = prefixes.exists(label.startsWith)
+    def conflicts(label: String): Boolean = prefixes.exists(p =>
+      label.startsWith(p) && label.substring(p.length).toLongOption.exists(_ >= batchId))
+  }
+
+  private[graft] object BatchLabel {
+    /** The label `op` of a sink labeling under `family`, when both are
+      * given: `op` must be `family` followed by a batch id. */
+    def of(op: Option[String], family: Option[String]): Option[BatchLabel] =
+      for (o <- op; f <- family) yield {
+        val id = if (o.startsWith(f)) o.substring(f.length).toLongOption else None
+        require(id.isDefined, s"commit label '$o' is not '$f' followed by a batch id")
+        BatchLabel(Seq(f), id.get)
+      }
+  }
 
   /** StructField metadata key Spark's parquet reader/writer use for
     * field-id column resolution (the Iceberg resolution model). */

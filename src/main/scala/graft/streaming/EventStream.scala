@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+
+import graft.store.GraftTable
 
 /** Structured Streaming ingestion + analytics over the `events` shape.
   *
@@ -182,8 +184,9 @@ object EventStream {
       .drop("__graft_dct_ws", "__graft_dct_grams")
   }
 
-  /** Streaming decontamination sized by the SUITE, not the caller
-    * (round 10, r9 verdict #7): counts the eval grams once and routes —
+  /** Streaming decontamination sized by the SUITE, not the caller, so
+    * a suite that outgrows the inline kernel degrades instead of
+    * failing: counts the eval grams once and routes —
     * at or under `maxInlineGrams` the stateless exact-kernel tier
     * ([[decontaminateDocs]]) lands each micro-batch through the normal
     * parquet sink; past it the stream DEGRADES to the batch bloom
@@ -202,14 +205,12 @@ object EventStream {
     * construction (distinct + count + bloom build — the batch regime's
     * own contract) and pays one bloom-thinned shuffled join per
     * micro-batch, so at 100M grams a LONG trigger interval is the
-    * right operating point. Exactly-once: the parquet writes ride
-    * foreachBatch idempotently per batch id via overwrite-by-batch
-    * being unnecessary — the file sink path is only used by the inline
-    * tier; this tier appends and relies on the checkpoint's batch
-    * replay landing identical rows (at-least-once into an
-    * append-dedupable landing zone; route into a GraftTable with
-    * [[writeGraftTable]]'s labeled commits when exactly-once is
-    * required). */
+    * right operating point. Delivery: the inline tier lands through
+    * Spark's exactly-once file sink; this tier appends from
+    * foreachBatch, which is at-least-once (a replayed batch lands its
+    * identical rows again, into an append-dedupable landing zone);
+    * route into a GraftTable with [[writeGraftTable]]'s labeled
+    * commits when exactly-once is required. */
   def decontaminateDocsToParquet(
       docs: DataFrame, evalGrams: DataFrame,
       outDir: String, checkpointDir: String,
@@ -218,10 +219,9 @@ object EventStream {
     import graft.operators.TextOps
     val spark = docs.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    // reserved-column guard for BOTH tiers (r10-ADVICE: the inline
-    // tier rejected collisions at construction via decontaminateDocs,
-    // the bloom tier produced an ambiguous-reference AnalysisException
-    // at the first micro-batch instead)
+    // reserved-column guard for BOTH tiers at construction: without
+    // it the bloom tier would fail only at the first micro-batch, with
+    // an ambiguous-reference AnalysisException
     val taken = docs.columns.filter(c =>
       c.startsWith("__graft_") || c == "n_overlap" || c == "contaminated")
     require(taken.isEmpty,
@@ -231,7 +231,7 @@ object EventStream {
     val eg = evalGrams.select("g").where(col("g").isNotNull).distinct()
     val n = eg.count()
     val tier = if (n <= maxInlineGrams) "inline" else "bloom"
-    // tier pin (r10-ADVICE): the tier is chosen from the SUITE SIZE at
+    // tier pin: the tier is chosen from the SUITE SIZE at
     // construction, but the two tiers deliver differently (exactly-once
     // file sink vs at-least-once foreachBatch append). Restarting a
     // checkpoint whose suite has since crossed the ceiling would
@@ -285,9 +285,9 @@ object EventStream {
             .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
           // INT n_overlap — the routing entry point's schema must not
           // depend on which tier ran (the inline kernel emits int) —
-          // and neither must the COLUMN ORDER (r10-ADVICE: the
-          // using-join moved doc_id first, so one outDir could mix
-          // orderings across tiers): input columns in input order,
+          // and neither must the COLUMN ORDER (the using-join moves
+          // doc_id first, so one outDir could mix orderings across
+          // tiers): input columns in input order,
           // then the two outputs, exactly like the inline tier
           batch.join(hits, Seq("doc_id"), "left")
             .withColumn("n_overlap",
@@ -324,7 +324,7 @@ object EventStream {
     *
     * Output: input columns + `n_hits` (eval vectors at or past the
     * threshold), `first_hit` (smallest hitting eval vec_id, null when
-    * clean), `max_eval_cos` (strongest cosine, round 6, null when
+    * clean), `max_eval_cos` (strongest cosine, null when
     * clean), `contaminated`. Unlike the batch operator — whose output
     * is the contaminated set only — every row passes through flagged,
     * the ingest-filter contract. Arithmetic matches the batch regime
@@ -377,7 +377,7 @@ object EventStream {
   }
 
   /** Incremental EXACT near-dup at ingest against a GROWING signature
-    * index (round 10) — the streaming twin of the batch LSH sweep
+    * index — the streaming twin of the batch LSH sweep
     * (t02), not just the signature-equality thinning of
     * [[nearDedupDocs]]: each micro-batch's documents compute the t02
     * fused signature (`shingle_sig`: shingle count, sorted xxhash
@@ -413,9 +413,9 @@ object EventStream {
     * commits (the [[writeGraftTable]] mechanism); the index append is
     * LAST, so a replayed batch re-probes the same pre-batch index and
     * re-lands identical flags before (re)committing the index rows —
-    * each side skips if its label already exists.
+    * each table skips the batch if it already holds it.
     *
-    * Index maintenance (round 11, r10 verdict #3): every
+    * Index maintenance: every
     * `compactEvery` batches the band index runs an INCREMENTAL
     * small-file sweep ([[graft.store.GraftTable.compact]] with
     * `onlyFilesSmallerMB`) — per-trigger appends are tiny files, and
@@ -425,10 +425,9 @@ object EventStream {
     * only sub-threshold files (a byte is re-touched only until its
     * file first crosses the threshold — O(index) total over the
     * stream's life, not O(index) per cadence), its "compact" commit
-    * sits outside the labeled-append domain so replay dedup is
-    * untouched, and it runs only when this batch's append actually
-    * applied (a replayed batch never re-compacts). `compactEvery = 0`
-    * disables. */
+    * carries no batch label so replay dedup is untouched, and it runs
+    * only when this batch's append actually applied (a replayed batch
+    * never re-compacts). `compactEvery = 0` disables. */
   def nearDupDocsIndexed(
       docs: DataFrame,
       indexRoot: String,
@@ -438,7 +437,6 @@ object EventStream {
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 16,
       compactSmallFileMB: Int = 64): StreamingQuery = {
-    import graft.store.GraftTable
     val spark = docs.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val taken = docs.columns.filter(c =>
@@ -446,105 +444,74 @@ object EventStream {
     require(taken.isEmpty,
       s"nearDupDocsIndexed: input columns ${taken.mkString(",")} collide with " +
         "the op's output/plumbing names — rename them first")
-    val prefix = s"stream-neardup:${sinkId(checkpointDir)}:"
     val indexSchema = StructType(Seq(
       StructField("band_key", StringType), StructField("doc_id", LongType),
       StructField("n", IntegerType), StructField("hs", ArrayType(LongType))))
-    // create only on a genuinely ABSENT root (no commit log) — a
-    // corrupt existing table must fail loudly in load, not be papered
-    // over by a fresh create on top of it
-    def loadOrCreate(root: String, schema: StructType): GraftTable =
-      try GraftTable.load(spark, root)
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("no graft table") =>
-          GraftTable.create(spark, root, spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
-      }
-    var idxMark: BatchMark = null
-    var outMark: BatchMark = null
     val bandExpr =
       """explode(transform(sequence(0, 3),
            b -> concat(b, ':', sl[b], '|', sl[b+4], '|', sl[b+8], '|', sl[b+12]))) AS band_key"""
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigs = batch
-          .withColumn("ws", split(lower(col("text")), " "))
-          .withColumn("__graft_sh", expr(graft.operators.TextOps.shingleSql))
-          .drop("ws")
-          .withColumn("__graft_sig",
-            when(size(col("__graft_sh")) > 0,
-              call_function("shingle_sig", col("__graft_sh"), lit(false), lit(true))))
-          .drop("__graft_sh")
-          .localCheckpoint() // probe + bands + flags read ONE computation
-        val bands = sigs
-          .filter(col("__graft_sig").isNotNull)
-          .selectExpr("doc_id", "__graft_sig.n AS n", "__graft_sig.hs AS hs",
-            "__graft_sig.sl AS sl")
-          .selectExpr("doc_id", "n", "hs", bandExpr)
-          .select("band_key", "doc_id", "n", "hs")
-        val outT = loadOrCreate(outRoot, sigs.drop("__graft_sig").schema
-          .add("is_dup", BooleanType).add("dup_of", LongType)
-          .add("jaccard", DoubleType))
-        val idxT = loadOrCreate(indexRoot, indexSchema)
-        if (outMark == null) { outMark = new BatchMark(outT, Seq(prefix))
-                               idxMark = new BatchMark(idxT, Seq(prefix)) }
-        def verify(cand: DataFrame): DataFrame = cand
-          .withColumn("__graft_ni",
-            call_function("sorted_intersect_size", col("hs"), col("hs_e")))
-          .withColumn("jaccard", col("__graft_ni").cast("double") /
-            (col("n") + col("n_e") - col("__graft_ni")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("doc_id"), col("doc_e").as("dup_of"), col("jaccard"))
-        if (!outMark.alreadyCommitted(batchId)) {
-          // earlier = previous batches (the index) OR smaller doc_id in
-          // THIS batch; candidates dedup per (doc, earlier-doc) pair
-          val idxSide = idxT.read()
-            .select(col("band_key"), col("doc_id").as("doc_e"),
-              col("n").as("n_e"), col("hs").as("hs_e"))
-          val fromIndex = bands.hint("shuffle_hash")
-            .join(idxSide, "band_key")
-            .select("doc_id", "n", "hs", "doc_e", "n_e", "hs_e").distinct()
-          val fromBatch = bands.hint("shuffle_hash")
-            .join(bands.select(col("band_key"), col("doc_id").as("doc_e"),
-              col("n").as("n_e"), col("hs").as("hs_e")), "band_key")
-            .filter(col("doc_e") < col("doc_id"))
-            .select("doc_id", "n", "hs", "doc_e", "n_e", "hs_e").distinct()
-          val dups = verify(fromIndex.union(fromBatch))
-            .withColumn("__graft_rk", row_number().over(
-              org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-                .orderBy(col("jaccard").desc, col("dup_of"))))
-            .filter(col("__graft_rk") === 1).drop("__graft_rk")
-          val flagged = sigs.drop("__graft_sig")
-            .join(dups, Seq("doc_id"), "left")
-            .withColumn("is_dup", col("dup_of").isNotNull)
-          outT.appendAsOnce(s"$prefix$batchId", flagged,
-            _.startsWith(prefix), _ == s"$prefix$batchId")
-          outMark.advance(batchId)
-        }
-        if (!idxMark.alreadyCommitted(batchId)) {
-          if (!bands.isEmpty) {
-            val (_, applied) = idxT.appendAsOnce(s"$prefix$batchId", bands,
-              _.startsWith(prefix), _ == s"$prefix$batchId")
-            if (applied && compactEvery > 0 &&
-                batchId % compactEvery == compactEvery - 1)
-              idxT.compact(onlyFilesSmallerMB = Some(compactSmallFileMB))
-          }
-          idxMark.advance(batchId)
-        }
-      }
-      .start()
+    labeledSink(docs, "neardup", checkpointDir, trigger) { (batch, label) =>
+      val sigs = batch
+        .withColumn("ws", split(lower(col("text")), " "))
+        .withColumn("__graft_sh", expr(graft.operators.TextOps.shingleSql))
+        .drop("ws")
+        .withColumn("__graft_sig",
+          when(size(col("__graft_sh")) > 0,
+            call_function("shingle_sig", col("__graft_sh"), lit(false), lit(true))))
+        .drop("__graft_sh")
+        .localCheckpoint() // probe + bands + flags read ONE computation
+      val bands = sigs
+        .filter(col("__graft_sig").isNotNull)
+        .selectExpr("doc_id", "__graft_sig.n AS n", "__graft_sig.hs AS hs",
+          "__graft_sig.sl AS sl")
+        .selectExpr("doc_id", "n", "hs", bandExpr)
+        .select("band_key", "doc_id", "n", "hs")
+      val outT = loadOrCreate(spark, outRoot, sigs.drop("__graft_sig").schema
+        .add("is_dup", BooleanType).add("dup_of", LongType)
+        .add("jaccard", DoubleType))
+      val idxT = loadOrCreate(spark, indexRoot, indexSchema)
+      def verify(cand: DataFrame): DataFrame = cand
+        .withColumn("__graft_ni",
+          call_function("sorted_intersect_size", col("hs"), col("hs_e")))
+        .withColumn("jaccard", col("__graft_ni").cast("double") /
+          (col("n") + col("n_e") - col("__graft_ni")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_id"), col("doc_e").as("dup_of"), col("jaccard"))
+      // earlier = previous batches (the index) OR smaller doc_id in
+      // THIS batch; candidates dedup per (doc, earlier-doc) pair
+      val idxSide = idxT.read()
+        .select(col("band_key"), col("doc_id").as("doc_e"),
+          col("n").as("n_e"), col("hs").as("hs_e"))
+      val fromIndex = bands.hint("shuffle_hash")
+        .join(idxSide, "band_key")
+        .select("doc_id", "n", "hs", "doc_e", "n_e", "hs_e").distinct()
+      val fromBatch = bands.hint("shuffle_hash")
+        .join(bands.select(col("band_key"), col("doc_id").as("doc_e"),
+          col("n").as("n_e"), col("hs").as("hs_e")), "band_key")
+        .filter(col("doc_e") < col("doc_id"))
+        .select("doc_id", "n", "hs", "doc_e", "n_e", "hs_e").distinct()
+      val dups = verify(fromIndex.union(fromBatch))
+        .withColumn("__graft_rk", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
+            .orderBy(col("jaccard").desc, col("dup_of"))))
+        .filter(col("__graft_rk") === 1).drop("__graft_rk")
+      val flagged = sigs.drop("__graft_sig")
+        .join(dups, Seq("doc_id"), "left")
+        .withColumn("is_dup", col("dup_of").isNotNull)
+      outT.appendLabeled(flagged, Some(label))
+      if (!bands.isEmpty && idxT.appendLabeled(bands, Some(label)) &&
+          compactEvery > 0 && label.batchId % compactEvery == compactEvery - 1)
+        idxT.compact(onlyFilesSmallerMB = Some(compactSmallFileMB))
+    }
   }
 
-  /** STREAMING VECTOR-INDEX MAINTENANCE (round 13): append arriving
+  /** STREAMING VECTOR-INDEX MAINTENANCE: append arriving
     * (vec_id, embedding) rows into a built [[graft.operators.VectorIndex]]
     * at ingest — cell assignment against the index's frozen centroids,
     * int8 codes, and (when the index carries a PQ layer) PQ codes into
     * the bucketed codes table, all per micro-batch. Exactly-once by
     * labeled commits: each of the index's tables dedups a replayed
-    * batch independently (appendAsOnce inside [[VectorIndex.append]]),
+    * batch independently (inside [[graft.operators.VectorIndex.append]]),
     * so a crash between the two appends re-applies only the missing
     * one. Stateless — no watermark, no aggregation state; the index
     * tables ARE the state, versioned and time-travelable like every
@@ -553,56 +520,29 @@ object EventStream {
     * and searchPq's bucket pruning survives because appends route
     * through the store's bucket-clustered writer.
     *
-    * `maintainEvery > 0` (round 14, the near-dup index's compactEvery
-    * pattern): every N APPLIED batches, run [[VectorIndex.maintain]] —
+    * `maintainEvery > 0` (the near-dup index's compactEvery pattern):
+    * every N APPLIED batches, run [[VectorIndex.maintain]] —
     * re-cluster the assignments layout on cent_id and compact the
     * codes buckets — because each micro-batch lands its own files and
     * probe-time file pruning decays with the append count (measured:
     * SCALE.md (ab)). Maintenance is idempotent and versioned like
-    * any commit, so a replayed batch that skips its append also skips
-    * the re-layout. */
+    * any commit, and a replayed batch that appends nothing skips the
+    * re-layout. */
   def indexVectorsStream(
       vectors: DataFrame,
       indexRoot: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       maintainEvery: Int = 0): StreamingQuery = {
-    val spark = vectors.sparkSession
-    val prefix = s"stream-vecidx:${sinkId(checkpointDir)}:"
-    val idx = graft.operators.VectorIndex.load(spark, indexRoot)
-    // ONE mark PER index table (r13 review): append commits into
-    // assignments and then pq_codes; a crash between the two leaves
-    // the assignments label committed, and a single assignments-seeded
-    // mark would skip the replay that appendAsOnce's per-table dedup
-    // exists to repair — the codes batch would be missing forever.
-    var marks: Seq[BatchMark] = null
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (marks == null) {
-          val roots = Seq(s"$indexRoot/assignments") ++
-            (if (java.nio.file.Files.exists(
-                   java.nio.file.Paths.get(s"$indexRoot/pq_codebook")))
-               Seq(s"$indexRoot/pq_codes") else Nil)
-          marks = roots.map(r =>
-            new BatchMark(graft.store.GraftTable.load(spark, r), Seq(prefix)))
-        }
-        if (marks.exists(!_.alreadyCommitted(batchId))) {
-          // an empty micro-batch must not commit empty versions into
-          // both index tables (replays skip it the same way)
-          if (!batch.isEmpty) {
-            idx.append(batch, op = Some(s"$prefix$batchId"), opFamily = Some(prefix))
-            if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
-              idx.maintain()
-          }
-          marks.foreach(_.advance(batchId))
-        }
-      }
-      .start()
+    val idx = graft.operators.VectorIndex.load(vectors.sparkSession, indexRoot)
+    labeledSink(vectors, "vecidx", checkpointDir, trigger) { (batch, label) =>
+      val n = idx.append(batch, op = Some(label.op), opFamily = Some(label.prefixes.head))
+      if (n > 0 && maintainEvery > 0 && label.batchId % maintainEvery == maintainEvery - 1)
+        idx.maintain()
+    }
   }
 
-  /** STREAMING TEXT-INDEX MAINTENANCE (round 14): append arriving
+  /** STREAMING TEXT-INDEX MAINTENANCE: append arriving
     * (doc_id, text) rows into a built [[graft.operators.TextIndex]] at
     * ingest — postings through the bucket-clustered writer (query-time
     * bucket pruning survives), one corpus-stats increment row per
@@ -618,27 +558,12 @@ object EventStream {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       maintainEvery: Int = 0): StreamingQuery = {
-    val spark = docs.sparkSession
-    val prefix = s"stream-txtidx:${sinkId(checkpointDir)}:"
-    val idx = graft.operators.TextIndex.load(spark, indexRoot)
-    var marks: Seq[BatchMark] = null
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (marks == null)
-          marks = Seq(s"$indexRoot/postings", s"$indexRoot/stats").map(r =>
-            new BatchMark(graft.store.GraftTable.load(spark, r), Seq(prefix)))
-        if (marks.exists(!_.alreadyCommitted(batchId))) {
-          if (!batch.isEmpty) {
-            idx.append(batch, op = Some(s"$prefix$batchId"), opFamily = Some(prefix))
-            if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
-              idx.maintain()
-          }
-          marks.foreach(_.advance(batchId))
-        }
-      }
-      .start()
+    val idx = graft.operators.TextIndex.load(docs.sparkSession, indexRoot)
+    labeledSink(docs, "txtidx", checkpointDir, trigger) { (batch, label) =>
+      val n = idx.append(batch, op = Some(label.op), opFamily = Some(label.prefixes.head))
+      if (n > 0 && maintainEvery > 0 && label.batchId % maintainEvery == maintainEvery - 1)
+        idx.maintain()
+    }
   }
 
   /** Stream-static enrichment join: the static dimension is re-planned
@@ -794,35 +719,6 @@ object EventStream {
       }
   }
 
-  /** Tail a GraftTable as a STREAM: new data files land in
-    * `root/data/<uuid>/` per commit and the file source discovers them
-    * incrementally — the lakehouse "table as stream" capability (Delta/
-    * Iceberg streaming-source analog), with the same contract those
-    * sources impose:
-    *
-    *  - APPEND-ONLY tables. A copy-on-write rewrite (UPDATE/DELETE/
-    *    MERGE/compact) lands new files whose carried rows would
-    *    re-emit; tail ingest tables, or dedup downstream on a key
-    *    (dedupEvents). Delta refuses non-append sources the same way.
-    *  - File landing slightly precedes commit publish, so a writer
-    *    that crashes between write and commit leaves orphans the
-    *    stream may read; `vacuum()` clears them. Exactly-once
-    *    consumers key on record ids, as with any at-least-once source.
-    *
-    * Scale: discovery is a directory listing per trigger (the source's
-    * own file index, no commit-log replay); reads are ordinary parquet
-    * scans bounded by maxFilesPerTrigger.
-    */
-  def readGraftTableStream(spark: SparkSession, root: String,
-                           maxFilesPerTrigger: Int = 16): DataFrame = {
-    val t = graft.store.GraftTable.load(spark, root)
-    spark.readStream
-      .schema(t.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .format(t.format)
-      .load(s"$root/data/*")
-  }
-
   /** Land a stream into parquet with checkpointing (exactly-once file
     * sink). Partitioned by event_type so downstream scans prune. */
   def writeParquet(df: DataFrame, outDir: String, checkpointDir: String,
@@ -843,29 +739,46 @@ object EventStream {
     * Exactly-once: foreachBatch alone is at-least-once (a crash after
     * the table commit but before the checkpoint records the batch
     * replays it). Each commit therefore carries the (sink, batchId)
-    * label; a replayed batch finds its label already in the commit
-    * history and skips — the same batch-id dedup Spark's file sink
-    * keeps in _spark_metadata.
+    * label, and the store skips a replayed batch whose label has
+    * committed — checked before the batch is written and again
+    * atomically with the commit ([[labeledSink]]) — the same batch-id
+    * dedup Spark's file sink keeps in _spark_metadata.
     */
-  def writeGraftTable(df: DataFrame, table: graft.store.GraftTable,
+  def writeGraftTable(df: DataFrame, table: GraftTable,
                       checkpointDir: String,
                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val prefix = s"stream-append:${sinkId(checkpointDir)}:"
     // tables written before the SHA-256 sink id carried labels keyed by
-    // the checkpoint path's 32-bit hashCode; honor them when seeding or
-    // a replayed batch on an upgraded pipeline would append twice
+    // the checkpoint path's 32-bit hashCode; they stay in the dedup
+    // domain, or a replayed batch on an upgraded pipeline would append
+    // twice
     val legacyPrefix =
       s"stream-append:${java.lang.Integer.toHexString(checkpointDir.hashCode)}:"
-    val mark = new BatchMark(table, Seq(prefix, legacyPrefix))
+    labeledSink(df, "append", checkpointDir, trigger, legacyPrefixes = Seq(legacyPrefix)) {
+      (batch, label) => table.appendLabeled(batch, Some(label))
+    }
+  }
+
+  /** Start a foreachBatch sink whose commits are exactly-once per
+    * micro-batch: `commit` receives each non-empty batch with its
+    * [[GraftTable.BatchLabel]] (`stream-<kind>:<sinkId>:<batchId>`,
+    * `legacyPrefixes` also honored) and makes its table commits under
+    * that label. The store skips a labeled commit when the batch, or a
+    * later one of the same sink, has committed: once before the write
+    * or merge runs a job, and again atomically with the commit, so a
+    * batch Spark replays after a crash between the table commit and
+    * the checkpoint lands nothing twice. An empty micro-batch commits
+    * nothing. */
+  private def labeledSink(df: DataFrame, kind: String, checkpointDir: String,
+                          trigger: Trigger, mode: OutputMode = OutputMode.Append(),
+                          legacyPrefixes: Seq[String] = Nil)(
+      commit: (DataFrame, GraftTable.BatchLabel) => Unit): StreamingQuery = {
+    val prefixes = s"stream-$kind:${sinkId(checkpointDir)}:" +: legacyPrefixes
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .outputMode(OutputMode.Append())
+      .outputMode(mode)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!mark.alreadyCommitted(batchId) && !batch.isEmpty) {
-          table.appendAs(s"$prefix$batchId", batch)
-          mark.advance(batchId)
-        }
+        if (!batch.isEmpty) commit(batch, GraftTable.BatchLabel(prefixes, batchId))
       }
       .start()
   }
@@ -878,27 +791,17 @@ object EventStream {
       .digest(checkpointDir.getBytes("UTF-8"))
       .take(8).map(b => f"$b%02x").mkString
 
-  /** Batch high-water mark for exactly-once sinks: replays only ever
-    * arrive at or below the last committed batch, so ONE history scan
-    * at (re)start seeds the mark and steady-state batches skip the
-    * O(commits) log replay entirely. */
-  private final class BatchMark(table: graft.store.GraftTable, prefixes: Seq[String]) {
-    private val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
-    private val seeded = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def alreadyCommitted(batchId: Long): Boolean = {
-      if (!seeded.getAndSet(true)) {
-        val high = table.history.iterator
-          .flatMap(c => prefixes.collectFirst {
-            case p if c.op.startsWith(p) => c.op.stripPrefix(p).toLong
-          })
-          .foldLeft(-1L)(math.max)
-        seen.set(high)
-      }
-      batchId <= seen.get()
+  /** The graft table at `root`, created empty with `schema` only when no
+    * table exists there: a corrupt existing table fails loudly in load
+    * instead of being papered over by a fresh create on top of it. */
+  private def loadOrCreate(spark: SparkSession, root: String, schema: StructType): GraftTable =
+    try GraftTable.load(spark, root)
+    catch {
+      case e: IllegalArgumentException
+          if e.getMessage != null && e.getMessage.contains("no graft table") =>
+        GraftTable.create(spark, root,
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
     }
-    def advance(batchId: Long): Unit =
-      seen.updateAndGet(s => math.max(s, batchId))
-  }
 
   /** STREAMING SKETCH-STATS TABLE: maintain the per-day sketch-column
     * table (the SCALE.md (u) reporting pattern) AT INGEST —
@@ -911,9 +814,9 @@ object EventStream {
     *
     * Runs in UPDATE output mode: each trigger emits only the days whose
     * sketches changed, and the merge-by-day replaces exactly those rows
-    * (the same exactly-once BatchMark discipline and NULL-safe key rule
-    * as [[upsertGraftTable]] — a replayed batch finds its label and
-    * skips; a NULL day is one row). No watermark by
+    * (the same labeled exactly-once merge and NULL-safe key rule as
+    * [[upsertGraftTable]] — the store skips a replayed batch's merge
+    * before any job; a NULL day is one row). No watermark by
     * design: a late fact must still fold into its day's sketch, so the
     * aggregation state is O(days × sketch size) — bounded by the
     * calendar, not the stream (document: ~1 MB/day at the default ks).
@@ -935,33 +838,16 @@ object EventStream {
       .agg(expr(s"qdigest_agg($valueCol, $qdigestK)").as("value_qd"),
         expr(s"make_set_digest($idCol, $setK)").as("id_sd"),
         count(lit(1)).as("n"))
-    val table =
-      try graft.store.GraftTable.load(spark, tableRoot)
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("no graft table") =>
-          graft.store.GraftTable.create(spark, tableRoot, spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), agg.schema))
-      }
-    val prefix = s"stream-stats:${sinkId(checkpointDir)}:"
-    val mark = new BatchMark(table, Seq(prefix))
-    agg.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!mark.alreadyCommitted(batchId) && !batch.isEmpty) {
-          table.merge(batch, Seq("day"), s"$prefix$batchId", upsertKeyMatch)
-          mark.advance(batchId)
-        }
-      }
-      .start()
+    val table = loadOrCreate(spark, tableRoot, agg.schema)
+    labeledSink(agg, "stats", checkpointDir, trigger, OutputMode.Update()) { (batch, label) =>
+      table.merge(batch, Seq("day"), label, upsertKeyMatch)
+    }
   }
 
   /** The key rule of the streaming upsert sinks: target key `k` matches
     * the prefixed source key NULL-safely (`<=>`). */
   private def upsertKeyMatch(k: String): Column =
-    col(k) <=> col(graft.store.GraftTable.MergeSourcePrefix + k)
+    col(k) <=> col(GraftTable.MergeSourcePrefix + k)
 
   /** UPSERT a stream into a versioned GraftTable: each micro-batch is
     * one atomic copy-on-write MERGE commit keyed on `keyCols` — CDC
@@ -988,11 +874,12 @@ object EventStream {
     *
     * Exactly-once mirrors [[writeGraftTable]]: each merge commit
     * carries a (sink, batchId) label; a crash between the table commit
-    * and the checkpoint replays the batch, which finds its label at or
-    * below the seeded high-water mark and skips. Merge commits REMOVE
-    * files, which is fine for the mark: labels stay monotone in
+    * and the checkpoint replays the batch, whose merge the store skips
+    * before any job because the newest commit of this sink already
+    * carries its batch id. Merge commits REMOVE files, which does not
+    * matter to the dedup: it reads labels, and they stay monotone in
     * batchId along the history. */
-  def upsertGraftTable(df: DataFrame, table: graft.store.GraftTable,
+  def upsertGraftTable(df: DataFrame, table: GraftTable,
                        keyCols: Seq[String], checkpointDir: String,
                        sequenceCol: Option[String] = None,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
@@ -1000,48 +887,38 @@ object EventStream {
     sequenceCol.foreach(s => require(table.schema.fieldNames.contains(s),
       s"sequenceCol '$s' must be a table column (the ordering guarantee " +
         "compares incoming rows against the STORED sequence)"))
-    val prefix = s"stream-merge:${sinkId(checkpointDir)}:"
-    val mark = new BatchMark(table, Seq(prefix))
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!mark.alreadyCommitted(batchId) && !batch.isEmpty) {
-          sequenceCol match {
-            case None =>
-              table.merge(batch, keyCols, s"$prefix$batchId", upsertKeyMatch)
-            case Some(seq) =>
-              // latest-per-key WITHIN the batch first (one window over
-              // the batch — bounded by trigger size, never the table)
-              import org.apache.spark.sql.expressions.Window
-              val rn = Iterator.from(0).map(i => s"__graft_rn$i")
-                .find(n => !batch.columns.contains(n)).get
-              val latest = batch.withColumn(rn, row_number().over(
-                  Window.partitionBy(keyCols.map(col): _*).orderBy(col(seq).desc)))
-                .filter(col(rn) === 1).drop(rn)
-              // then a CONDITIONAL merge: update only when the incoming
-              // sequence beats the stored one (late batches skip)
-              val srcPfx = graft.store.GraftTable.MergeSourcePrefix
-              val sch = table.schema
-              val cond = keyCols.map(upsertKeyMatch).reduce(_ && _)
-              val setAll = sch.fieldNames.map(n => n -> col(srcPfx + n)).toMap
-              // NULL handling is explicit, not three-valued-accident: a
-              // stored NULL sequence (e.g. an initial load before the
-              // CDC feed) is always updatable; an incoming NULL never
-              // beats a stored non-null (and a bare `src > tgt` would
-              // evaluate NULL and silently freeze the row forever)
-              table.mergeInto(latest, cond,
-                matched = Seq(graft.store.MergeWhen(
-                  Some(col(seq).isNull || col(srcPfx + seq) > col(seq)), Some(setAll))),
-                notMatched = Seq(graft.store.MergeWhen(None, Some(setAll))),
-                notMatchedBySource = Nil,
-                op = s"$prefix$batchId")
-          }
-          mark.advance(batchId)
-        }
+    labeledSink(df, "merge", checkpointDir, trigger) { (batch, label) =>
+      sequenceCol match {
+        case None =>
+          table.merge(batch, keyCols, label, upsertKeyMatch)
+        case Some(seq) =>
+          // latest-per-key WITHIN the batch first (one window over
+          // the batch — bounded by trigger size, never the table)
+          import org.apache.spark.sql.expressions.Window
+          val rn = Iterator.from(0).map(i => s"__graft_rn$i")
+            .find(n => !batch.columns.contains(n)).get
+          val latest = batch.withColumn(rn, row_number().over(
+              Window.partitionBy(keyCols.map(col): _*).orderBy(col(seq).desc)))
+            .filter(col(rn) === 1).drop(rn)
+          // then a CONDITIONAL merge: update only when the incoming
+          // sequence beats the stored one (late batches skip)
+          val srcPfx = GraftTable.MergeSourcePrefix
+          val sch = table.schema
+          val cond = keyCols.map(upsertKeyMatch).reduce(_ && _)
+          val setAll = sch.fieldNames.map(n => n -> col(srcPfx + n)).toMap
+          // NULL handling is explicit, not three-valued-accident: a
+          // stored NULL sequence (e.g. an initial load before the
+          // CDC feed) is always updatable; an incoming NULL never
+          // beats a stored non-null (and a bare `src > tgt` would
+          // evaluate NULL and silently freeze the row forever)
+          table.mergeInto(latest, cond,
+            matched = Seq(graft.store.MergeWhen(
+              Some(col(seq).isNull || col(srcPfx + seq) > col(seq)), Some(setAll))),
+            notMatched = Seq(graft.store.MergeWhen(None, Some(setAll))),
+            notMatchedBySource = Nil,
+            label = label)
       }
-      .start()
+    }
   }
 
   /** TABLE-TO-TABLE REPLICATION: apply a row-level change feed (the
@@ -1064,46 +941,36 @@ object EventStream {
     * (keyed replication — the standard CDC-apply assumption; multiset
     * tables replicate with [[upsertGraftTable]] semantics instead).
     * Exactly-once mirrors the other sinks via labeled commits. */
-  def applyCdcGraftTable(df: DataFrame, table: graft.store.GraftTable,
+  def applyCdcGraftTable(df: DataFrame, table: GraftTable,
                          keyCols: Seq[String], checkpointDir: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(keyCols.nonEmpty, "CDC apply needs at least one key column")
-    val prefix = s"stream-cdc:${sinkId(checkpointDir)}:"
-    val mark = new BatchMark(table, Seq(prefix))
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!mark.alreadyCommitted(batchId) && !batch.isEmpty) {
-          require(batch.columns.contains("_change_type")
-              && batch.columns.contains("_commit_version"),
-            "applyCdcGraftTable expects a change feed with _change_type and " +
-              "_commit_version (spark.readStream.format(\"graft-table\").option(\"cdc\", true))")
-          import org.apache.spark.sql.expressions.Window
-          val rn = Iterator.from(0).map(i => s"__graft_rn$i")
-            .find(n => !batch.columns.contains(n)).get
-          val net = batch.withColumn(rn, row_number().over(
-              Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col("_commit_version").desc,
-                  when(col("_change_type") === "insert", 1).otherwise(0).desc)))
-            .filter(col(rn) === 1).drop(rn)
-          val srcPfx = graft.store.GraftTable.MergeSourcePrefix
-          val sch = table.schema
-          val cond = keyCols.map(k => col(k) <=> col(srcPfx + k)).reduce(_ && _)
-          val setAll = sch.fieldNames.map(n => n -> col(srcPfx + n)).toMap
-          table.mergeInto(net, cond,
-            matched = Seq(
-              graft.store.MergeWhen( // net delete: remove the target row
-                Some(col(srcPfx + "_change_type") === "delete"), None),
-              graft.store.MergeWhen(None, Some(setAll))),
-            notMatched = Seq(graft.store.MergeWhen( // never insert a net delete
-              Some(col(srcPfx + "_change_type") === "insert"), Some(setAll))),
-            notMatchedBySource = Nil,
-            op = s"$prefix$batchId")
-          mark.advance(batchId)
-        }
-      }
-      .start()
+    labeledSink(df, "cdc", checkpointDir, trigger) { (batch, label) =>
+      require(batch.columns.contains("_change_type")
+          && batch.columns.contains("_commit_version"),
+        "applyCdcGraftTable expects a change feed with _change_type and " +
+          "_commit_version (spark.readStream.format(\"graft-table\").option(\"cdc\", true))")
+      import org.apache.spark.sql.expressions.Window
+      val rn = Iterator.from(0).map(i => s"__graft_rn$i")
+        .find(n => !batch.columns.contains(n)).get
+      val net = batch.withColumn(rn, row_number().over(
+          Window.partitionBy(keyCols.map(col): _*)
+            .orderBy(col("_commit_version").desc,
+              when(col("_change_type") === "insert", 1).otherwise(0).desc)))
+        .filter(col(rn) === 1).drop(rn)
+      val srcPfx = GraftTable.MergeSourcePrefix
+      val sch = table.schema
+      val cond = keyCols.map(k => col(k) <=> col(srcPfx + k)).reduce(_ && _)
+      val setAll = sch.fieldNames.map(n => n -> col(srcPfx + n)).toMap
+      table.mergeInto(net, cond,
+        matched = Seq(
+          graft.store.MergeWhen( // net delete: remove the target row
+            Some(col(srcPfx + "_change_type") === "delete"), None),
+          graft.store.MergeWhen(None, Some(setAll))),
+        notMatched = Seq(graft.store.MergeWhen( // never insert a net delete
+          Some(col(srcPfx + "_change_type") === "insert"), Some(setAll))),
+        notMatchedBySource = Nil,
+        label = label)
+    }
   }
 }

@@ -16,10 +16,9 @@ import graft.store.GraftTable
   * source over the Nessie catalog, `tf/main.tf:94`).
   *
   * Offsets are commit versions, so micro-batches align exactly with
-  * commit boundaries: unlike the glob-listing tail
-  * ([[EventStream.readGraftTableStream]]), a file landed by a writer
-  * that crashed before publishing its commit is NEVER read, and
-  * replays are exact (version ranges come from the checkpoint).
+  * commit boundaries: a file landed by a writer that crashed before
+  * publishing its commit is NEVER read, and replays are exact (version
+  * ranges come from the checkpoint).
   *
   * Options:
   *  - `path` — table root (or pass to `.load(root)`)

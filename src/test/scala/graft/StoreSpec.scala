@@ -588,6 +588,34 @@ class StoreSpec extends SparkSpec {
     assert(e.getMessage.contains("63"), e.getMessage)
   }
 
+  test("labeled mergeInto: a re-presented batch label commits once, runs no job, writes nothing") {
+    val root = freshRoot
+    val t = GraftTable.create(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val p = GraftTable.MergeSourcePrefix
+    val set = Some(Map("id" -> col(p + "id"), "v" -> col(p + "v")))
+    def run(batchId: Long) = t.mergeInto(Seq((2L, "B"), (3L, "c")).toDF("id", "v"),
+      col("id") === col(p + "id"), Seq(MergeWhen(None, set)), Seq(MergeWhen(None, set)), Nil,
+      GraftTable.BatchLabel(Seq("stream-merge:spec:"), batchId))
+    def writeDirs = Option(new java.io.File(s"$root/data").list()).map(_.toSet).getOrElse(Set.empty)
+    val (v1, applied1) = run(1L)
+    assert(applied1 && t.currentVersion == v1)
+    val dirs = writeDirs
+    // the same batch again, and an earlier one: both already committed
+    for (batchId <- Seq(1L, 0L)) {
+      var again: (Long, Boolean) = null
+      val work = WorkCount.of(spark.sparkContext) { again = run(batchId) }
+      assert(again == ((v1, false)), s"batch $batchId: $again")
+      assert(work.jobs == 0, s"batch $batchId ran $work")
+    }
+    assert(t.currentVersion == v1)
+    assert(t.history.count(_.op.startsWith("stream-merge:spec:")) == 1, t.history.map(_.op))
+    assert(writeDirs == dirs, s"new write directories: ${writeDirs -- dirs}")
+    assert(t.read().orderBy("id").as[(Long, String)].collect().toSeq
+      == Seq((1L, "a"), (2L, "B"), (3L, "c")))
+    // the next batch applies
+    assert(run(2L)._2 && t.currentVersion == v1 + 1)
+  }
+
   test("appendAsOnce: a re-presented label is skipped atomically, files cleaned") {
     val t = GraftTable.create(spark, freshRoot,
       Seq((1L, "a", 1.0)).toDF("id", "name", "score"))

@@ -20,6 +20,29 @@ class StreamingSpec extends SparkSpec {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 
+  /** Rewind a drained checkpoint by its newest batch n: delete
+    * `commits/<n>` (and the checksum sibling the local file system keeps,
+    * which would block Spark's rename when the batch re-commits it). A
+    * restart on the same checkpoint then re-runs batch n — the window
+    * between a sink's table commit and Spark's checkpoint commit. */
+  private def forgetNewestBatch(ckpt: String): Long = {
+    val last = new java.io.File(s"$ckpt/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    assert(last.delete())
+    new java.io.File(last.getParentFile, s".${last.getName}.crc").delete()
+    last.getName.toLong
+  }
+
+  /** The per-write `data/<uuid8>` directories of the table at `root`. */
+  private def writeDirs(root: String): Set[String] =
+    Option(new java.io.File(s"$root/data").list()).map(_.toSet).getOrElse(Set.empty)
+
+  /** Version, row count and write directories of the table at `root`. */
+  private def tableState(root: String): (Long, Long, Set[String]) = {
+    val t = graft.store.GraftTable.load(spark, root)
+    (t.currentVersion, t.read().count(), writeDirs(root))
+  }
+
   test("file-source stream -> hourly counts == batch twin") {
     val landing = Files.createTempDirectory("graft_landing").toString
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
@@ -306,7 +329,7 @@ class StreamingSpec extends SparkSpec {
 
     // CRASH REPLAY: simulate dying between the table commit and the
     // checkpoint commit by deleting the last batch's checkpoint commit
-    // marker — Spark re-runs that batch; the label high-water mark must
+    // marker — Spark re-runs that batch; the store's label dedup must
     // skip it (this is the dedup the labels exist for; a plain restart
     // would test only Spark's own checkpoint)
     val lastCommit = new java.io.File(s"$ckpt/commits").listFiles()
@@ -828,6 +851,113 @@ class StreamingSpec extends SparkSpec {
       "restart re-committed or re-compacted the index")
   }
 
+  test("crash-window replay: writeGraftTable re-runs its newest batch and commits nothing") {
+    val landing = Files.createTempDirectory("graft_cw_landing").toString
+    val ckpt = Files.createTempDirectory("graft_cw_ckpt").toString
+    val troot = Files.createTempDirectory("graft_cw").resolve("t").toString
+    mkEvents(20).coalesce(1).write.mode("append").parquet(landing)
+    mkEvents(40).filter($"event_id" >= 20).coalesce(1).write.mode("append").parquet(landing)
+    val table = graft.store.GraftTable.create(spark, troot,
+      mkEvents(0).withColumn("ts", expr("timestamp_micros(ts div 1000)")).limit(0))
+    def drain(): Unit = assert(EventStream.writeGraftTable(
+      EventStream.readEvents(spark, landing, maxFilesPerTrigger = 1), table, ckpt)
+      .awaitTermination(240000), "stream did not drain in 240s")
+    drain()
+    val before = tableState(troot)
+    assert(before._2 == 40)
+    val n = forgetNewestBatch(ckpt)
+    drain()
+    assert(new java.io.File(s"$ckpt/commits/$n").exists(), s"batch $n was not re-run")
+    assert(tableState(troot) == before, "the replayed batch committed or left files")
+  }
+
+  test("crash-window replay: a batch committed under the legacy hashCode label is not appended again") {
+    val landing = Files.createTempDirectory("graft_cwl_landing").toString
+    val ckpt = Files.createTempDirectory("graft_cwl_ckpt").toString
+    val dir = Files.createTempDirectory("graft_cwl")
+    val drops = Seq(mkEvents(20), mkEvents(40).filter($"event_id" >= 20))
+    drops.foreach(_.coalesce(1).write.mode("append").parquet(landing))
+    val empty = mkEvents(0).withColumn("ts", expr("timestamp_micros(ts div 1000)")).limit(0)
+    def drain(t: graft.store.GraftTable): Unit = assert(EventStream.writeGraftTable(
+      EventStream.readEvents(spark, landing, maxFilesPerTrigger = 1), t, ckpt)
+      .awaitTermination(240000), "stream did not drain in 240s")
+    // the checkpoint's batches 0 and 1 ran against a scratch table; the
+    // table under test holds the same batches as an earlier pipeline
+    // labeled them, keyed by the checkpoint path's 32-bit hashCode
+    drain(graft.store.GraftTable.create(spark, dir.resolve("scratch").toString, empty))
+    val troot = dir.resolve("t").toString
+    val table = graft.store.GraftTable.create(spark, troot, empty)
+    val legacy = s"stream-append:${Integer.toHexString(ckpt.hashCode)}:"
+    for ((d, batchId) <- drops.zipWithIndex)
+      table.appendAsOnce(s"$legacy$batchId",
+        d.withColumn("ts", expr("timestamp_micros(ts div 1000)")), _ => false, _ => false)
+    val before = tableState(troot)
+    assert(before._2 == 40)
+    val n = forgetNewestBatch(ckpt)
+    drain(table)
+    assert(new java.io.File(s"$ckpt/commits/$n").exists(), s"batch $n was not re-run")
+    assert(tableState(troot) == before, "the replayed batch was appended again")
+  }
+
+  test("crash-window replay: upsertGraftTable with a sequence column re-runs its newest batch and commits nothing") {
+    val landing = Files.createTempDirectory("graft_cwu_landing").toString
+    val ckpt = Files.createTempDirectory("graft_cwu_ckpt").toString
+    val troot = Files.createTempDirectory("graft_cwu").resolve("t").toString
+    Seq((1L, "a", Some(10L)), (2L, "b", Some(11L))).toDF("id", "v", "seq")
+      .coalesce(1).write.mode("append").parquet(landing)
+    // the sequence guard alone would absorb most of a replay: only the
+    // NULL-sequence row 4, always updatable, would be rewritten again
+    Seq((2L, "b2", Some(20L)), (3L, "c", Some(21L)), (4L, "d", None)).toDF("id", "v", "seq")
+      .coalesce(1).write.mode("append").parquet(landing)
+    val table = graft.store.GraftTable.create(spark, troot,
+      Seq.empty[(Long, String, Option[Long])].toDF("id", "v", "seq"))
+    def drain(): Unit = assert(EventStream.upsertGraftTable(
+      spark.readStream.schema("id LONG, v STRING, seq LONG")
+        .option("maxFilesPerTrigger", 1).parquet(landing),
+      table, Seq("id"), ckpt, sequenceCol = Some("seq"))
+      .awaitTermination(240000), "stream did not drain in 240s")
+    def rows() = table.read().orderBy("id").collect().map(_.toString).toSeq
+    drain()
+    val before = tableState(troot)
+    assert(rows() == Seq("[1,a,10]", "[2,b2,20]", "[3,c,21]", "[4,d,null]"), rows())
+    val n = forgetNewestBatch(ckpt)
+    drain()
+    assert(new java.io.File(s"$ckpt/commits/$n").exists(), s"batch $n was not re-run")
+    assert(tableState(troot) == before, "the replayed batch committed or left files")
+    assert(rows() == Seq("[1,a,10]", "[2,b2,20]", "[3,c,21]", "[4,d,null]"))
+  }
+
+  test("crash-window replay: indexVectorsStream re-runs its newest batch, commits nothing, skips maintain") {
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft_cwv_idx").toString + "/index"
+    val landing = Files.createTempDirectory("graft_cwv_landing").toString
+    val ckpt = Files.createTempDirectory("graft_cwv_ckpt").toString
+    val emb = Tables(spark, sf(), "embeddings")
+    graft.operators.VectorIndex.build(spark, emb, root, nCentroids = 8,
+      pqSubspaces = Some(8), pqCodewords = 16, codeBuckets = 8)
+    emb.filter(col("vec_id") === 7L).selectExpr("9001L AS vec_id", "embedding")
+      .coalesce(1).write.mode("append").parquet(landing)
+    emb.filter(col("vec_id") === 3L).selectExpr("9002L AS vec_id", "embedding")
+      .coalesce(1).write.mode("append").parquet(landing)
+    val stream = spark.readStream
+      .schema(StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType)))))
+      .option("maxFilesPerTrigger", 1).parquet(landing)
+    // maintainEvery = 2: batch 1 maintains after its append, so a replay
+    // of batch 1 that ran maintain() again would add a compact commit
+    def drain(): Unit = assert(EventStream.indexVectorsStream(stream, root, ckpt,
+      maintainEvery = 2).awaitTermination(240000), "stream did not drain in 240s")
+    drain()
+    val tables = Seq(s"$root/assignments", s"$root/pq_codes")
+    val before = tables.map(tableState)
+    val n = forgetNewestBatch(ckpt)
+    assert(n == 1L)
+    drain()
+    assert(new java.io.File(s"$ckpt/commits/$n").exists(), s"batch $n was not re-run")
+    assert(tables.map(tableState) == before,
+      "the replayed batch committed, re-ran maintain() or left files")
+  }
+
   test("streaming pattern detection: session-scoped MATCH_RECOGNIZE, batch parity") {
     import graft.streaming.PatternStream
     import graft.operators.PatternMatch
@@ -958,7 +1088,9 @@ class StreamingSpec extends SparkSpec {
     t.append(Seq((3L, "c")).toDF("id", "v"))
     t.append(Seq((4L, "d"), (5L, "e")).toDF("id", "v"))
 
-    val stream = EventStream.readGraftTableStream(spark, troot, maxFilesPerTrigger = 1)
+    def tail() = spark.readStream.format("graft-table")
+      .option("maxCommitsPerTrigger", 1).load(troot)
+    val stream = tail()
     assert(stream.isStreaming)
     val q = EventStream.writeParquet(stream, out, ckpt)
     assert(q.awaitTermination(240000), "stream did not drain in 240s")
@@ -967,8 +1099,7 @@ class StreamingSpec extends SparkSpec {
 
     // a LATER commit is picked up by a resumed stream from the same checkpoint
     t.append(Seq((6L, "f")).toDF("id", "v"))
-    val q2 = EventStream.writeParquet(
-      EventStream.readGraftTableStream(spark, troot, maxFilesPerTrigger = 1), out, ckpt)
+    val q2 = EventStream.writeParquet(tail(), out, ckpt)
     assert(q2.awaitTermination(240000), "resumed stream did not drain")
     val ids2 = spark.read.parquet(out).select("id").as[Long].collect().sorted.toSeq
     assert(ids2 == (1L to 6L), s"resume must deliver ONLY the new commit once: $ids2")
